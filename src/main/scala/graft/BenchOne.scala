@@ -19,8 +19,6 @@ object BenchOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_MEMO_LEVEL").foreach(v =>
-      spark.conf.set(graft.core.Memo.LevelKey, v))
     val q = SparkEntry.all(name)
     // noop sink, not count(): count() lets Catalyst prune columns (and
     // sometimes whole subtrees) so it can time a cheaper plan than the

@@ -72,7 +72,9 @@ object Flags {
   * float aggregates must be rounded identically on both sides.
   *
   * Cache contract: a build may `persist()` an intermediate its plan
-  * references more than once (shingle tables, SRP bands). Those entries
+  * references more than once (shingle tables, SRP bands) — always
+  * no-arg, so the level is Spark's `spark.sql.defaultCacheStorageLevel`
+  * (default MEMORY_AND_DISK; CacheHygieneSpec pins it). Those entries
   * CANNOT be unpersisted inside the build (the returned plan is lazy and
   * still needs them), so they are session-scoped memos: Spark's
   * CacheManager dedups by canonicalized plan, re-building the same query

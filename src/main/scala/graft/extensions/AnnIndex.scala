@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PhaseLog.timed
 import graft.sources.TsdbStorage
 
 /** What the persisted index knows about itself, from `_meta`:
@@ -475,11 +476,7 @@ object AnnIndex {
   def rebuildGrown(spark: SparkSession, corpus: DataFrame, dir: String): Unit =
     build(spark, corpus, dir, kCells = grownK(readMeta(spark, dir)))
 
-  /** Session conf key: when "true", [[build]] prints a per-component
-    * wall-clock breakdown (fingerprint / quantizer / PQ training /
-    * codes pass) — the [[TextIndex.TimingConfKey]] analog, so scale
-    * smokes can attribute the ingest cost. */
-  val TimingConfKey = "spark.graft.ann.buildTiming"
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Build (or rebuild) the index from a full corpus: derive the
     * quantizer (label centroids when the corpus carries labels, else
@@ -498,15 +495,6 @@ object AnnIndex {
   def build(spark: SparkSession, raw: DataFrame, dir: String,
             planes: Int = SimilarityQueries.N_PLANES,
             bandBits: Int = 0, kCells: Int = 0): Unit = locked(spark, dir) {
-    val timing = spark.conf.get(TimingConfKey, "false") == "true"
-    def timed[T](name: String)(f: => T): T =
-      if (!timing) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[aindex-build] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     recoverCompact(spark, dir)
     // Fingerprint (round 12): the content-xor term is the build's only
     // purpose for a dedicated full-vector scan (48.5 s of the 10M
@@ -521,17 +509,17 @@ object AnnIndex {
     // the contentProofs identity): sound for the build's own immutable
     // frame, and post-build queries serve from the certified index,
     // never from these memo entries.
-    val (n, idMin, idMax, idSum) = timed("id stats (pruned vec_id scan)")(idStats(raw))
+    val (n, idMin, idMax, idSum) = timed(logger, "id stats (pruned vec_id scan)")(idStats(raw))
     val fused = n >= fusedFingerprintMinRows(spark)
     val cxorPre: Option[Long] =
       if (fused) None
-      else Some(timed("fingerprint content term (1 hash scan)")(fingerprint(raw)._5))
+      else Some(timed(logger, "fingerprint content term (1 hash scan)")(fingerprint(raw)._5))
     val fp = (n, idMin, idMax, idSum, cxorPre.getOrElse(provisionalXor(raw)))
     val bb = if (bandBits > 0) bandBits else advisedBandBits(n, planes)
     require(planes % bb == 0, s"planes ($planes) must be a multiple of bandBits ($bb)")
     val kind = if (raw.columns.contains("label")) "label" else "kmeans"
     TsdbStorage.markStatsOutOfSync(spark, dir)
-    timed(s"quantizer ($kind centroids, corpus aggregation + write)") {
+    timed(logger, s"quantizer ($kind centroids, corpus aggregation + write)") {
       // n known (the id stats just counted): the label path switches
       // to the one-pass vector-mean aggregate past its gate; the
       // kmeans path reuses the build's fingerprint for its memo key
@@ -558,7 +546,7 @@ object AnnIndex {
     // entries from under their owners (the round-11 CacheHygiene flake)
     val eS = PqQueries.trainSampleFor(spark, rawNoLabel, n)
     graft.core.TransientCache.borrowCached(eS) {
-      timed(s"PQ codebooks (${PqQueries.ITERS}-iter per-subspace Lloyd + write)") {
+      timed(logger, s"PQ codebooks (${PqQueries.ITERS}-iter per-subspace Lloyd + write)") {
         PqQueries.pqCodebooks(spark, rawNoLabel, Some(eS), Some(fp))
           .coalesce(1).write.mode("overwrite").parquet(pqPath(dir))
       }
@@ -567,7 +555,7 @@ object AnnIndex {
       // clustered corpora (VectorScaleSmoke respq), so the index
       // persists both: direct codes serve sim_pq/sim_ivfpq (the
       // oracle-replayed scheme), residual codes serve sim_ivfpq_res
-      timed(s"residual PQ codebooks (${PqQueries.ITERS}-iter Lloyd over residuals + write)") {
+      timed(logger, s"residual PQ codebooks (${PqQueries.ITERS}-iter Lloyd over residuals + write)") {
         val cent = readCentroids(spark, dir)
         PqQueries.pqResCodebooks(spark, rawNoLabel, cent,
             SimilarityQueries.assignCells(eS, cent), Some(eS), Some(fp))
@@ -588,7 +576,7 @@ object AnnIndex {
       if (fused)
         e.observe(obs, coalesce(bit_xor(xxhash64(col("vec_id"), col("v"))), lit(0L)).as("cxor"))
       else e
-    timed("codes (ONE projection: SRP + cell + packed PQ + residual PQ, map-side write)") {
+    timed(logger, "codes (ONE projection: SRP + cell + packed PQ + residual PQ, map-side write)") {
       codesFrame(eForCodes, planes, readCentroids(spark, dir), Some(readPqCodebooks(spark, dir)),
           Some(readPqResCodebooks(spark, dir)))
         .write.mode("overwrite").parquet(codesPath(dir))

@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -251,7 +250,7 @@ object DedupQueries {
       // persisted: the derivation feeds three consumers (the sizing
       // count, the bit aggregation, and the content hashes) — without
       // the memo each would re-scan the corpus for the batch slice
-      val batchT = bloomBatch(docs(s, d)).memo()
+      val batchT = bloomBatch(docs(s, d)).persist()
       val batchH = batchT.select(col("batch_id"), sha2(col("text"), 256).as("h"))
       // keyed on the RAW text: the corpus-scan probes pay 3 xxhash64
       // calls per row, and sha256 only runs on prune survivors
@@ -560,7 +559,7 @@ object DedupQueries {
     }
     // persists here are session-scoped memos (QueryDef cache contract;
     // CacheHygieneSpec proves re-runs reuse rather than grow them)
-    val sh = if (lean) null else shingleDocs(corpus).memo()
+    val sh = if (lean) null else shingleDocs(corpus).persist()
     // signatures from the persisted text index when one is certified
     // AND fingerprint-matched (TextIndex) — the corpus-wide md5 pass
     // happens at ingest, not per query; identical expressions either
@@ -575,7 +574,7 @@ object DedupQueries {
     }
     val bands = sig.select(col("doc_id"), posexplode(minhashBandArray))
       .toDF("doc_id", "band", "bucket")
-      .memo()
+      .persist()
     // hot-bucket guard: a template flood puts every copy in the same
     // band buckets → |bucket|² candidates; capped buckets are dropped
     // from candidate generation (accounting via hotBuckets)
@@ -587,11 +586,11 @@ object DedupQueries {
       .dropDuplicates("doc_a", "doc_b")
     // lean: the pair list is read once for ids and once for scoring —
     // candidate-mass-sized, the RIGHT thing to cache at scale
-    val cand = if (lean) cand0.memo() else cand0
+    val cand = if (lean) cand0.persist() else cand0
     val shv = if (!lean) sh else {
       val candIds = cand.select(col("doc_a").as("doc_id"))
         .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-      shingleDocs(corpus.join(candIds, Seq("doc_id"), "left_semi")).memo()
+      shingleDocs(corpus.join(candIds, Seq("doc_id"), "left_semi")).persist()
     }
     cand
       .join(shv.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
@@ -718,7 +717,7 @@ object DedupQueries {
     }
     val bands = sig.select(col("doc_id"), col("simhash"), explode(expr("sequence(0, 3)")).as("k"))
       .withColumn("byte", expr("shiftright(simhash, k * 8) & 255"))
-      .memo() // session-scoped memo (QueryDef cache contract)
+      .persist() // session-scoped memo (QueryDef cache contract)
     bands.as("a").join(bands.as("b"),
         col("a.k") === col("b.k") && col("a.byte") === col("b.byte")
           && col("a.doc_id") < col("b.doc_id"))
@@ -795,7 +794,7 @@ object DedupQueries {
         explode(array(tables: _*)).as("tb"))
       .select(col("doc_id"), col("simhash64"),
         col("tb.k").as("k"), col("tb.band").as("band"))
-      .memo() // session-scoped memo (QueryDef cache contract)
+      .persist() // session-scoped memo (QueryDef cache contract)
     val keep = capHotBuckets(s, bands, Seq("k", "band"), n)
     keep.as("a").join(keep.as("b"),
         col("a.k") === col("b.k") && col("a.band") === col("b.band")
@@ -1037,22 +1036,25 @@ object DedupQueries {
       // contract). Persisted (round 12): three consumers (the df
       // aggregate, the rare-blocking join, the frequent-shingle leg)
       // otherwise each re-explode the shingle arrays from the sh cache.
-      val sh = if (lean) sh0 else sh0.memo()
+      val sh = if (lean) sh0 else sh0.persist()
       val post0 = sh.select(col("doc_id"), explode(col("sh")).as("x"))
-      val post = if (lean) post0 else post0.memo()
+      val post = if (lean) post0 else post0.persist()
       val dfx = if (lean) null
-        else post.groupBy("x").agg(count(lit(1)).as("df")).memo()
+        else post.groupBy("x").agg(count(lit(1)).as("df")).persist()
       // the frequent-shingle set is tiny by definition (df > DF_MAX
       // over the whole corpus) — the one thing ALWAYS safe to persist
       val freq = if (lean)
         post.groupBy("x").agg(count(lit(1)).as("df"))
-          .filter(col("df") > DF_MAX).select("x").memo()
+          .filter(col("df") > DF_MAX).select("x").persist()
         else dfx.filter(col("df") > DF_MAX).select("x")
-      // lean: rare-blocked ≡ post minus frequent occurrences (dfx
-      // partitions shingles at DF_MAX, so inner-join-rare and
-      // anti-join-frequent keep the same rows)
+      // lean: rare-blocked ≈ post minus frequent occurrences (dfx
+      // partitions non-NULL shingles at DF_MAX). NOT row-identical: a
+      // NULL shingle is dropped by the inner join but KEPT by the anti
+      // join. pairCounts is unaffected (NULL never satisfies a.x = b.x
+      // in the self-join below); a new consumer of `blocked` must filter
+      // x IS NOT NULL first.
       val blocked = if (lean) post.join(freq, Seq("x"), "left_anti")
-        else post.join(dfx.filter(col("df") <= DF_MAX).select("x"), "x").memo()
+        else post.join(dfx.filter(col("df") <= DF_MAX).select("x"), "x").persist()
       val pairCounts = blocked.as("a").join(blocked.as("b"),
           col("a.x") === col("b.x") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -1064,7 +1066,7 @@ object DedupQueries {
         .withColumn("fr", coalesce(col("fr"), emptyArr))
       // lean: meta is read three times (slim bound ×2 sides + exact
       // fr join) — narrow per-doc rows, the RIGHT thing to cache
-      val meta = if (lean) meta0.memo() else meta0
+      val meta = if (lean) meta0.persist() else meta0
       // two-stage verification: the 1M+ candidate pairs first join only
       // COUNT scalars (no arrays shuffle) and die against the upper
       // bound inter ≤ rare_shared + min(|fr_a|, |fr_b|) (Jaccard is
@@ -1149,7 +1151,7 @@ object DedupQueries {
       val (resolved, shStr) = TextIndex.resolveFor(s, docs(s, d)) match {
         case some @ Some(_) => (some, None)
         case None => (None, Some(shingled(s, d)
-          .memo())) // session-scoped memo (QueryDef cache contract)
+          .persist())) // session-scoped memo (QueryDef cache contract)
       }
       val sig = resolved match {
         case Some(dir) => TextIndex.readSigs(s, dir).select("doc_id", "mhs")
@@ -1253,7 +1255,7 @@ object DedupQueries {
       val (resolved, shStr) = TextIndex.resolveFor(s, docs(s, d)) match {
         case some @ Some(_) => (some, None)
         case None => (None, Some(shingled(s, d)
-          .memo())) // session-scoped memo (QueryDef cache contract)
+          .persist())) // session-scoped memo (QueryDef cache contract)
       }
       val sh = (resolved match {
         case Some(dir) if TextIndex.readSigs(s, dir).columns.contains("shn") =>
@@ -1505,7 +1507,7 @@ object DedupQueries {
       .withColumn("vd", expr("transform(vec, x -> CAST(x AS DOUBLE))"))
       .withColumn("n2", expr("aggregate(vec, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
       .select("doc_id", "vd", "n2")
-      .memo() // session-scoped memo (QueryDef cache contract)
+      .persist() // session-scoped memo (QueryDef cache contract)
 
   /** The exact integer τ = 19/20 predicate both docvec tiers share:
     * cos ≥ τ ⟺ dot > 0 ∧ 400·dot² ≥ 361·|a|²·|b|². Two exact tiers:
@@ -1535,7 +1537,7 @@ object DedupQueries {
     val bandBits = AnnIndex.advisedBandBits(n, ROUTED_PLANES)
     val bands = SimilarityQueries.srpBands(
       SimilarityQueries.srpCoded(ev, ROUTED_PLANES), ROUTED_PLANES, bandBits)
-      .memo()
+      .persist()
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
           && col("a.vec_id") < col("b.vec_id"))
@@ -1622,7 +1624,7 @@ object DedupQueries {
     val e = s.read.parquet(s"$d/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("norm", sqrt(call_function("graft_dot", col("v"), col("v"))))
-      .memo() // persists here: session-scoped memos (QueryDef cache contract)
+      .persist() // persists here: session-scoped memos (QueryDef cache contract)
     // Candidate generation runs on SLIM (id, band, bucket) rows — the
     // 64-double vectors never enter the self-join shuffle or the
     // pair-dedup; they are joined back only for the surviving pairs.
@@ -1638,7 +1640,7 @@ object DedupQueries {
       case None =>
         SimilarityQueries.srpBands(SimilarityQueries.srpCoded(e, planes), planes, bandBits)
     })
-      .memo()
+      .persist()
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket")
           && col("a.vec_id") < col("b.vec_id"))
@@ -1819,7 +1821,7 @@ object DedupQueries {
           .select(col("doc_id"), col("p").cast("long").as("p"), col("h"))
       case _ => spanWindowRows(docs(s, d))
     })
-      .memo()
+      .persist()
 
   /** Per-doc token counts — `ntk` from a certified index (column-pruned
     * read) or a text-scan fallback; dedup_span_frac / dedup_scrub's
@@ -2148,7 +2150,7 @@ object DedupQueries {
       val boiler = fp.groupBy("m")
         .agg(countDistinct(col("doc_id")).as("nd"))
         .filter(col("nd") > FP_MAX_DOCS).select("m")
-      val kept = fp.join(boiler, Seq("m"), "left_anti").memo()
+      val kept = fp.join(boiler, Seq("m"), "left_anti").persist()
       val counts = kept.groupBy("doc_id").agg(count(lit(1)).as("nfp"))
       kept.select(col("m"), col("doc_id").as("doc_a"))
         .join(kept.select(col("m"), col("doc_id").as("doc_b")), Seq("m"))
@@ -2209,7 +2211,7 @@ object DedupQueries {
       }
       val bands = sig.select(col("doc_id"), posexplode(minhashBandArray))
         .toDF("doc_id", "band", "bucket")
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       // hot-bucket guard: the O(|a|·|b|) Levenshtein verification makes
       // an uncapped template bucket catastrophically expensive here
       val keep = capHotBuckets(s, bands, Seq("band", "bucket"), corpusRows(docs(s, d)))
@@ -2404,10 +2406,10 @@ object DedupQueries {
             col("docs_in"), col("docs_removed"), col("tokens_removed"),
             (col("docs_in") - col("docs_removed")).as("survivors"))
       val g1 = tierGroup(corpus, sha2(col("text"), 256))
-        .memo() // session-scoped memo (QueryDef cache contract): stats + survivor reads share it
+        .persist() // session-scoped memo (QueryDef cache contract): stats + survivor reads share it
       val g2 = tierGroup(survivors(g1),
           sha2(regexp_replace(trim(lower(col("text"))), lit("  *"), lit(" ")), 256))
-        .memo() // feeds pair generation AND the tier-3 accounting pass
+        .persist() // feeds pair generation AND the tier-3 accounting pass
       val s2 = survivors(g2)
       // n: conservative upper bound on |s2| — the planted corpus is
       // base + three partial copies (< 2x base), and s2 is its subset

@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,7 +51,7 @@ object PipelineQueries {
       // (3+ evaluations through ex/s3/comp at round-12 measurement)
       val q = TextQueries.withQualityMetrics(corpus)
         .select(col("doc_id"), col("text"), col("lang"), col("reasons"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val s2 = q.filter(col("lang") === KEEP_LANG && col("reasons") === "")
       // exact stage: content-hash groupBy, min doc_id keeps (one
       // bounded shuffle on the hash; the join back is hash-equi)
@@ -63,7 +62,7 @@ object PipelineQueries {
       val ex = s2.withColumn("chash", sha2(col("text"), 256))
         .join(keepByHash, "chash")
         .select(col("doc_id"), col("text"), col("keep_id"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val s3 = ex.filter(col("doc_id") === col("keep_id")).select("doc_id", "text")
       // near-dup stage: simhash banding over survivors only, then
       // connected components; the component's min doc_id is the kept

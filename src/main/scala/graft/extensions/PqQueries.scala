@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -575,7 +574,7 @@ object PqQueries {
   // -------------------------------------------------------------------
   val recall: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val (cb, codeRows) = resolvePq(s, d, e)
       // exact truth: top-K per query by micro-cosine
       val q = e.filter(col("vec_id") < N_QUERIES)
@@ -660,7 +659,7 @@ object PqQueries {
   // -------------------------------------------------------------------
   val ivfPq: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val raw = s.read.parquet(s"$d/embeddings.parquet").drop("label")
       val (cb, codeRows0) = resolvePq(s, d, e)
       // coarse quantizer: certified kmeans index when its quantizer is
@@ -746,7 +745,7 @@ object PqQueries {
   // -------------------------------------------------------------------
   val ivfPqRes: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val raw = s.read.parquet(s"$d/embeddings.parquet").drop("label")
       // coarse quantizer: the sim_ivfpq resolve rule
       val dirOpt = AnnIndex.resolveFor(s, e)
@@ -880,7 +879,7 @@ object PqQueries {
   // -------------------------------------------------------------------
   val rerank: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val (cb, codeRows) = resolvePq(s, d, e)
       val lut = subvectors(e.filter(col("vec_id") < N_QUERIES))
         .join(broadcast(cb), "sub")

@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -82,7 +81,7 @@ object RetrievalQueries {
         // scoring join read tf, and without the memo the corpus
         // explode+groupBy runs twice
         ex.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-          .memo()
+          .persist()
     }
     // query terms = the query docs' distinct tokens — exactly their
     // posting rows when served
@@ -245,7 +244,7 @@ object RetrievalQueries {
       .withColumn("vd", expr("transform(vec, x -> CAST(x AS DOUBLE))"))
       .withColumn("n2", expr("aggregate(vec, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
       .select("doc_id", "vd", "n2")
-      .memo() // session-scoped memo (QueryDef cache contract)
+      .persist() // session-scoped memo (QueryDef cache contract)
     val c = e.filter(col("n2") > 0)
     val q = c.filter(col("doc_id") < QUERY_DOCS)
       .select(col("doc_id").as("query_id"), col("vd").as("qv"), col("n2").as("qn2"))

@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -163,7 +162,7 @@ object SimilarityQueries {
 
   val ann: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       // codes from the persisted _ann index when one is certified
       // (AnnIndex.ConfKey → usable dir), recomputed map-side otherwise.
       // A default-scheme index yields results identical to recompute; an
@@ -174,7 +173,7 @@ object SimilarityQueries {
         case Some(dir) => AnnIndex.bandsFromIndex(s, dir)
         case None      => srpBands(srpCoded(e))
       })
-        .memo()
+        .persist()
       val qb = bands.filter(col("vec_id") < N_QUERIES)
         .select(col("vec_id").as("query_id"), col("band"), col("bucket"))
       // graft_topk heap instead of the row_number window (the sim_topk
@@ -847,7 +846,7 @@ object SimilarityQueries {
 
   val recall: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       // ground truth: brute-force top-K per query (the sim_topk derivation)
       val q = e.filter(col("vec_id") < N_QUERIES)
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
@@ -861,7 +860,7 @@ object SimilarityQueries {
         .groupBy("query_id")
         .agg(expr(s"graft_topk(cos_sim, vec_id, $K)").as("top"))
         .select(col("query_id"), explode(col("top.id")).as("neighbor_id"))
-        .memo()
+        .persist()
       // SRP candidate set — the sim_ann generation, index-served when
       // certified. Persisted (round 12): the 16-dot coding pass runs
       // once instead of per consumer (qb + the band join's corpus side)
@@ -869,7 +868,7 @@ object SimilarityQueries {
         case Some(dir) => AnnIndex.bandsFromIndex(s, dir)
         case None      => srpBands(srpCoded(e))
       })
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val qb = bands.filter(col("vec_id") < N_QUERIES)
         .select(col("vec_id").as("query_id"), col("band"), col("bucket"))
       val srpCand = bands.join(qb, Seq("band", "bucket"))
@@ -1041,7 +1040,7 @@ object SimilarityQueries {
       // sides and the verdict spine — without the memo the plan re-derives
       // the cell assignment (a corpus × k scoring pass) three times
       val av = assigned.join(e, "vec_id")
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val left = av.select(col("cell"), col("vec_id"), col("v"), col("norm"),
         explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
       val right = av.select(col("cell"),
@@ -1238,7 +1237,7 @@ object SimilarityQueries {
           assignCells(e, c)
       }
       val av = assigned.join(e, "vec_id")
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val left = av.select(col("vec_id").as("vec_a"), col("cell").as("cell_a"),
         col("v").as("va"), col("norm").as("na"),
         explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
@@ -1323,7 +1322,7 @@ object SimilarityQueries {
     }
     // persisted: feeds both pair-join sides (QueryDef cache contract;
     // the agg form's canonically-equal plan reuses this same entry)
-    val av = assigned.join(e, "vec_id").memo()
+    val av = assigned.join(e, "vec_id").persist()
     val left = av.select(col("cell"), col("vec_id"), col("v"), col("norm"),
       explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
     val right = av.select(col("cell"),
@@ -1681,7 +1680,7 @@ object SimilarityQueries {
   // -------------------------------------------------------------------
   val knnRecall: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val left = e.select(col("vec_id"), col("v"), col("norm"),
         explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
       val right = e.select(pmod(col("vec_id"), lit(SEM_BLOCKS)).cast("int").as("blk"),
@@ -1697,7 +1696,7 @@ object SimilarityQueries {
         .groupBy("vec_id")
         .agg(expr(s"graft_topk(cs, nbr_id, $KNN_K)").as("top"))
         .select(col("vec_id"), explode(col("top.id")).as("nbr_id"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val graph = knnGraph.build(s, d).select("vec_id", "nbr_id")
       val hits = truth.join(graph, Seq("vec_id", "nbr_id"))
       truth.agg(count(lit(1)).as("n_truth")).crossJoin(
@@ -1835,7 +1834,7 @@ object SimilarityQueries {
 
   val knnRecallSampled: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d).memo() // session-scoped memo (QueryDef cache contract)
+      val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val q = e.join(broadcast(auditSample(e)), "vec_id")
         .select(col("vec_id"), col("v").as("qv"), col("norm").as("qnorm"))
       // truth = sample × corpus (broadcast the bounded sample, never an
@@ -1850,7 +1849,7 @@ object SimilarityQueries {
         .groupBy("vec_id")
         .agg(expr(s"graft_topk(cs, nbr_id, $KNN_K)").as("top"))
         .select(col("vec_id"), explode(col("top.id")).as("nbr_id"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val graph = knnGraph.build(s, d).select("vec_id", "nbr_id")
         .join(broadcast(auditSample(e)), Seq("vec_id"), "leftsemi")
       val hits = truth.join(graph, Seq("vec_id", "nbr_id"))
@@ -1914,7 +1913,7 @@ object SimilarityQueries {
           assignCells(e, c)
       }
       val av = assigned.join(e, "vec_id")
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       // DIRECTED anchor pairs: each sampled anchor a scores its whole
       // ≥-threshold neighborhood (sample × corpus, broadcast anchors) —
       // the sampled estimate of the straddle rate per similarity band

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.PhaseLog.timed
 import graft.sources.TsdbStorage
 
 /** What the persisted text-signature index knows about itself — the
@@ -269,27 +270,14 @@ object TextIndex {
       .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
   }
 
-  /** Session conf key: when "true", [[build]] prints a per-component
-    * wall-clock breakdown (fingerprint/sigs/postings/vocab/dfreq) so
-    * scale smokes can attribute the ingest cost — the components run
-    * as independent Spark jobs, so the breakdown is exact. */
-  val TimingConfKey = "spark.graft.text.buildTiming"
+  private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Build (or rebuild) from a full corpus: derive both signatures per
     * document, fingerprint, certify. */
   def build(spark: SparkSession, docs: DataFrame, dir: String,
             numHashes: Int = DedupQueries.NUM_HASHES): Unit = locked(spark, dir) {
-    val timing = spark.conf.get(TimingConfKey, "false") == "true"
-    def timed[T](name: String)(f: => T): T =
-      if (!timing) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[tindex-build] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     ArtifactSwap.recover(spark, dir, "sigs")
-    val (n, idMin, idMax, idSum, cxor) = timed("fingerprint (1 hash scan)")(fingerprint(docs))
+    val (n, idMin, idMax, idSum, cxor) = timed(logger, "fingerprint (1 hash scan)")(fingerprint(docs))
     TsdbStorage.markStatsOutOfSync(spark, dir)
     writeMeta(spark, dir, TextMeta(numHashes, n, idMin, idMax, idSum, cxor, "", -1L))
     // Each corpus-scan component TOKENIZES FOR ITSELF — a recorded
@@ -305,7 +293,7 @@ object TextIndex {
     // output). The real ingest win stays where round 9 put it: vocab +
     // dfreq derive from the WRITTEN postings (one shared aggregate),
     // never from a third/fourth text pass.
-    timed("sigs (tokenize + minhash/simhash/swh, map-side write)") {
+    timed(logger, "sigs (tokenize + minhash/simhash/swh, map-side write)") {
       DedupQueries.signatures(spark, docs, numHashes)
         .write.mode("overwrite").parquet(sigsPath(dir))
     }
@@ -314,7 +302,7 @@ object TextIndex {
     // vocab-sized. Together with the meta row count and the vocab
     // token total they are everything bm25_topk needs — the per-query
     // corpus explode+groupBy happens at ingest instead.
-    timed("postings (tokenize + one-pass graft_token_tf + range-cluster)") {
+    timed(logger, "postings (tokenize + one-pass graft_token_tf + range-cluster)") {
       postingsDelta(docs)
         .repartitionByRange(col("tok")).sortWithinPartitions("tok", "doc_id")
         .write.mode("overwrite").parquet(postingsPath(dir))
@@ -342,11 +330,11 @@ object TextIndex {
     val tokStats = postings.groupBy("tok")
       .agg(sum("tf").as("cnt"), count(lit(1)).as("df"))
     graft.core.TransientCache.borrowCached(tokStats) {
-      timed("vocab (Σtf side of the shared token aggregate)") {
+      timed(logger, "vocab (sum-of-tf side of the shared token aggregate)") {
         tokStats.select(col("tok").as("token"), col("cnt"))
           .write.mode("overwrite").parquet(vocabPath(dir))
       }
-      timed("dfreq (df side of the shared token aggregate)") {
+      timed(logger, "dfreq (df side of the shared token aggregate)") {
         tokStats.select("tok", "df")
           .write.mode("overwrite").parquet(dfreqPath(dir))
       }

@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -206,7 +205,7 @@ object TextQueries {
   val tfidf: QueryDef = QueryDef(
     build = (s, d) => {
       val tok = docs(s, d).select(col("doc_id"), explode(expr(toksExpr)).as("token"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
       val df = tok.distinct().groupBy("token").agg(count(lit(1)).as("df"))
       val n = docs(s, d).agg(count(lit(1)).as("n_docs"))
@@ -629,7 +628,7 @@ object TextQueries {
     * [[lmCalibration]] threshold table. */
   private def lmFrame(s: SparkSession, d: String): DataFrame = {
     val tok = docs(s, d).select(col("doc_id"), explode(expr(toksExpr)).as("token"))
-      .memo() // session-scoped memo (QueryDef cache contract)
+      .persist() // session-scoped memo (QueryDef cache contract)
     val lm = tok.groupBy("token").agg(count(lit(1)).as("cnt"))
       .crossJoin(broadcast(tok.agg(count(lit(1)).as("total"))))
       .withColumn("surprisal_micro", expr(
@@ -766,7 +765,7 @@ object TextQueries {
       val lm = bucketed.filter(col("bkt") < LM_TRAIN_PERMILLE)
         .select(explode(expr(toksExpr)).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       scoreAgainstVocab(bucketed.filter(col("bkt") >= LM_TRAIN_PERMILLE), lm)
         .orderBy("doc_id")
     },
@@ -819,7 +818,7 @@ object TextQueries {
       val words = docs(s, d)
         .select(explode(expr(toksExpr)).as("word"))
         .groupBy("word").agg(count(lit(1)).as("wcnt"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val merges = words
         .filter(length(col("word")) >= 2)
         .select(col("wcnt"),
@@ -901,7 +900,7 @@ object TextQueries {
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(toks) - 1), i -> struct(toks[i - 1] AS w1, toks[i] AS w2))")).as("bg"))
         .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val counts = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
       val lm = counts
         .join(counts.groupBy("w1").agg(sum("cnt").as("c1")), "w1")

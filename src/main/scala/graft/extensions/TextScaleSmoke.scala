@@ -91,6 +91,7 @@ object TextScaleSmoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.PhaseLog.enable() // index-build phase timings
 
     def time[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
@@ -234,7 +235,6 @@ object TextScaleSmoke {
       val bmRecompute = time("bm25_topk recompute (corpus explode+groupBy per query)")(run("bm25_topk"))
       val rrfRecompute = time("hybrid_rrf recompute (BM25 + cosine legs)")(run("hybrid_rrf"))
       val idxDir = java.nio.file.Files.createTempDirectory("graft-text-smoke-idx").toString
-      spark.conf.set(TextIndex.TimingConfKey, "true")
       val tBuild0 = System.nanoTime()
       time(s"TextIndex.build over $nDocs docs (the once-at-ingest cost)") {
         TextIndex.build(spark, spark.read.parquet(s"$dir/documents.parquet"), idxDir)
@@ -242,7 +242,6 @@ object TextScaleSmoke {
       val buildSec = (System.nanoTime() - tBuild0) / 1e9
       println(f"[tscale] build throughput: ${nDocs / buildSec}%,.0f docs/s " +
         f"(${nDocs * TOKENS / buildSec / 1e6}%.1f M tokens/s) at $nDocs%,d docs")
-      spark.conf.unset(TextIndex.TimingConfKey)
       spark.conf.set(TextIndex.ConfKey, idxDir)
       try {
         val bmServed = time("bm25_topk index-served (stored postings + dfreq probe)")(run("bm25_topk"))

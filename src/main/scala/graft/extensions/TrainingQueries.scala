@@ -1,6 +1,5 @@
 package graft.extensions
 
-import graft.core.Memo.MemoOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -221,7 +220,7 @@ object TrainingQueries {
       // candidate join
       val hits = wins.filter(col("doc_id") % 25 =!= 0)
         .join(ev, "h") // (train doc_id, p, h, eval_id)
-        .memo() // session-scoped memo (QueryDef cache contract)
+        .persist() // session-scoped memo (QueryDef cache contract)
       val perDoc = hits.groupBy("doc_id")
         .agg(countDistinct(col("h")).as("shared_windows"),
           countDistinct(col("eval_id")).as("eval_docs"))

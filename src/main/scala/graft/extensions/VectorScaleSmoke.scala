@@ -34,6 +34,7 @@ object VectorScaleSmoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.PhaseLog.enable() // index-build phase timings
     graft.functions.VectorFunctions.register(spark)
 
     def time[T](name: String)(f: => T): T = {
@@ -118,10 +119,8 @@ object VectorScaleSmoke {
       val idxDir = java.nio.file.Files.createTempDirectory("graft-vscale-ivfpq").toString
       val raw = spark.range(rows).select(col("id").as("vec_id"), array(vDims: _*).as("embedding"),
         clusterCol.cast("int").as("label"))
-      spark.conf.set(AnnIndex.TimingConfKey, "true")
       time(f"AnnIndex.build at $rows%,d vectors ($CLUSTERS label cells + PQ codebooks + packed codes — once at ingest)")(
         AnnIndex.build(spark, raw, idxDir))
-      spark.conf.unset(AnnIndex.TimingConfKey)
       val cent = AnnIndex.readCentroids(spark, idxDir)
       val assigned = AnnIndex.readCodes(spark, idxDir).select(col("vec_id"), col("cell"))
       val packed = AnnIndex.readCodes(spark, idxDir).select(col("vec_id"), col("pq"))

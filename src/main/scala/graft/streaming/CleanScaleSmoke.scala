@@ -50,6 +50,7 @@ object CleanScaleSmoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.core.PhaseLog.enable() // index-build phase timings
 
     def timed(name: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -75,11 +76,9 @@ object CleanScaleSmoke {
         .write.parquet(s"$ownedDir/docs.parquet")
     }
     val idxDir = java.nio.file.Files.createTempDirectory("graft-cscale-idx").toString
-    spark.conf.set(TextIndex.TimingConfKey, "true")
     timed("TextIndex.build over the owned corpus (once at ingest)") {
       TextIndex.build(spark, spark.read.parquet(s"$ownedDir/docs.parquet"), idxDir)
     }
-    spark.conf.unset(TextIndex.TimingConfKey)
 
     // ---- "loop" mode: the RefCache steady-state demonstration at a
     // segment count where the LSM consolidation ACTUALLY TRIGGERS.

@@ -26,17 +26,18 @@ class CacheHygieneSpec extends SparkSpec {
 
   private def ids: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  // every query whose build persist()s an intermediate
+  private val persisting = Seq("dedup_minhash", "dedup_simhash", "dedup_ngram",
+    "dedup_embed_lsh", "sim_ann", "text_tfidf",
+    "jaccard_recall", "lm_score", "lm_calibration", "lm_crossval", "series_lttb",
+    "dedup_docvec", "text_winnow", "winnow_matches", "bm25_topk", "hybrid_rrf",
+    "dedup_edit", "knn_graph", "knn_recall")
+
   test("re-running persisting queries adds no cache entries; clearCache drains all") {
-    // every query whose build persist()s an intermediate
-    val names = Seq("dedup_minhash", "dedup_simhash", "dedup_ngram",
-      "dedup_embed_lsh", "sim_ann", "text_tfidf",
-      "jaccard_recall", "lm_score", "lm_calibration", "lm_crossval", "series_lttb",
-      "dedup_docvec", "text_winnow", "winnow_matches", "bm25_topk", "hybrid_rrf",
-      "dedup_edit", "knn_graph", "knn_recall")
     spark.sharedState.cacheManager.clearCache()
     val baseline = ids
     def runAll(): Set[Int] = {
-      names.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
+      persisting.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
       ids -- baseline
     }
     val first = runAll()
@@ -47,6 +48,28 @@ class CacheHygieneSpec extends SparkSpec {
         s"replace them (pass1=${first.toSeq.sorted}, pass2=${second.toSeq.sorted})")
     spark.sharedState.cacheManager.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty, "clearCache releases every registry memo")
+  }
+
+  test("registry persists follow spark.sql.defaultCacheStorageLevel") {
+    // the cache level is Spark's built-in conf, read at persist() time —
+    // no query pins its own level
+    val key = "spark.sql.defaultCacheStorageLevel"
+    spark.sharedState.cacheManager.clearCache()
+    val baseline = ids
+    spark.conf.set(key, "MEMORY_AND_DISK_SER")
+    try {
+      persisting.foreach(n => SparkEntry.queries(n)(spark, sfDir).count())
+      val created = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !baseline(id) }
+      assert(created.nonEmpty, "the chosen queries do persist intermediates")
+      val off = created.collect {
+        case (id, r) if r.getStorageLevel != StorageLevel.MEMORY_AND_DISK_SER =>
+          s"rdd $id: ${r.getStorageLevel.description}"
+      }
+      assert(off.isEmpty, s"persists ignoring $key: ${off.mkString("; ")}")
+    } finally {
+      spark.conf.unset(key)
+      spark.sharedState.cacheManager.clearCache()
+    }
   }
 
   test("hygiene verdict is immune to third-party checkpoint entries vanishing mid-run " +
