@@ -15,8 +15,8 @@ object PhaseLog {
     r
   }
 
-  /** Raise the `graft` logger to INFO (what the scale smokes do to
-    * attribute their ingest cost). */
+  /** Raise the `graft` logger to INFO (what `graft.Smoke` does to
+    * attribute its entries' ingest cost). */
   def enable(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel("graft", org.apache.logging.log4j.Level.INFO)
 }

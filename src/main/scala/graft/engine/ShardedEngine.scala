@@ -191,15 +191,13 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
     * parallel — each shard owns its own directory tree, lease, and
     * marker protocol, and Spark accepts jobs from multiple threads — so
     * a 32-shard nightly maintain costs ~the slowest shard, not the sum.
-    * Pool width: `spark.graft.shard.maintenanceParallelism` (default 8,
-    * capped at the shard count) — wide enough to hide per-shard
+    * Pool width: min(shards, 8) — wide enough to hide per-shard
     * stragglers, narrow enough that the concurrent Spark jobs don't
     * thrash the scheduler. A shard failure propagates (unwrapped) after
     * the pool drains — no shard's maintenance is silently skipped. */
   private def inParallel[T](f: GraftEngine => T): Seq[T] = {
-    val par = math.max(1, math.min(shards.size,
-      spark.conf.get("spark.graft.shard.maintenanceParallelism", "8").toInt))
-    if (par <= 1 || shards.size == 1) shards.map(f)
+    val par = math.min(shards.size, 8)
+    if (par <= 1) shards.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par, (r: Runnable) => {
         val t = new Thread(r, "graft-shard-maint"); t.setDaemon(true); t
@@ -251,7 +249,7 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
   def fsck(repair: Boolean = false): Seq[String] = inParallel(_.fsck(repair)).flatten
 
   /** Nightly maintenance, fanned out concurrently; one merged report
-    * (wall-clock ≈ slowest shard — ScaleSmoke measures the speedup).
+    * (wall-clock ≈ slowest shard — the `engine` smoke entry times it).
     * The ARTIFACT indexes (`annIndex`/`textIndex`, same params as the
     * single-engine maintain) are corpus-level, not per-shard, so their
     * probe → rebuild-if-uncertified → compact cycle runs exactly ONCE,

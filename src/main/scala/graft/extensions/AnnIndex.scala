@@ -86,7 +86,7 @@ case class AnnMeta(planes: Int, bandBits: Int, corpusRows: Long,
   * ones — AnnIndexSpec pins that equality.
   *
   * Scale shape: codes rows are 3 longs per vector (slim by design —
-  * the 3× wide-row regression measured in VectorScaleSmoke motivated
+  * the 3× wide-row regression measured in the `vector` smoke motivated
   * this layout); the centroid table is cells×dims, always
   * broadcastable. An append touches only the appended vectors; no
   * existing file is rewritten (compact() rewrites the accumulation into
@@ -391,7 +391,7 @@ object AnnIndex {
     * at planes/2 so at least two bands remain (recall for sign-agreement
     * s is 1 − (1 − s^b)^bands — one giant band has no OR-redundancy).
     * 500 vectors / 16 planes → 4 (the gated test scheme); 10⁶ → 8 (the
-    * knob VectorScaleSmoke measured); 10⁹ / 32 planes → 16. */
+    * knob the `vector` smoke measures); 10⁹ / 32 planes → 16. */
   def advisedBandBits(corpusRows: Long, planes: Int, targetOccupancy: Long = 32L): Int = {
     val want = math.max(1, math.ceil(
       math.log(math.max(1.0, corpusRows.toDouble / targetOccupancy)) / math.log(2.0)).toInt)
@@ -407,7 +407,7 @@ object AnnIndex {
     * the cell that claims it — two clusters wearing one label, the
     * unambiguous retrain signal. 0.0 is deliberately conservative:
     * health must never flag a merely-noisy cell into a rebuild loop. */
-  val CellMinCosineKey = "spark.graft.ann.cellMinCosine"
+  val CellMinCosine = 0.0
 
   /** IVF cell-count advisor: k ≈ √N (the classic IVF sizing — probe
     * cost ∝ k + N/k is minimized there), floored at the default k the
@@ -422,7 +422,7 @@ object AnnIndex {
   /** The quantizer-health probe `maintain()` ACTS on (ivf_cell_stats is
     * the queryable form of the same signal): Some(reason) when the
     * certified k-means quantizer has a collapsed cell — one whose min
-    * member-cosine fell below [[CellMinCosineKey]] (default 0.0), i.e.
+    * member-cosine fell below [[CellMinCosine]], i.e.
     * the corpus drifted until some vectors are anti-correlated with the
     * centroid that claims them. Occupancy rides along in the reason
     * (the collapsed cell's size bounds how much IVF probe cost and
@@ -435,7 +435,6 @@ object AnnIndex {
     if (!usable(spark, dir)) return None
     val m = readMeta(spark, dir)
     if (m.quantizer != "kmeans") return None
-    val floor = spark.conf.get(CellMinCosineKey, "0.0").toDouble
     graft.functions.VectorFunctions.register(spark)
     val e = SimilarityQueries.prep(spark, corpus)
     readCodes(spark, dir).select("vec_id", "cell")
@@ -446,14 +445,14 @@ object AnnIndex {
         call_function("graft_dot", col("v"), col("cv")) / (col("norm") * col("cnorm")))
       .groupBy("cell")
       .agg(min("csim").as("min_csim"), count(lit(1)).as("n_vecs"))
-      .filter(col("min_csim") < floor)
+      .filter(col("min_csim") < CellMinCosine)
       .orderBy(col("min_csim"))
       .take(1).headOption
       .map { r =>
         val oldK = if (m.kCells > 0) m.kCells else SimilarityQueries.KMEANS_K
         val cs = f"${r.getDouble(1)}%.4f"
         s"cell ${r.get(0)} collapsed: min member-cosine $cs across " +
-          s"${r.getLong(2)} vectors < floor $floor — retrain with k grown " +
+          s"${r.getLong(2)} vectors < floor $CellMinCosine — retrain with k grown " +
           s"$oldK -> ${grownK(m)}"
       }
   }
@@ -552,7 +551,7 @@ object AnnIndex {
       }
       // residual (IVFADC) codebooks against the JUST-FROZEN centroids —
       // measured 2.7× lower ADC distortion than direct coding on
-      // clustered corpora (VectorScaleSmoke respq), so the index
+      // clustered corpora (the `vector.respq` smoke), so the index
       // persists both: direct codes serve sim_pq/sim_ivfpq (the
       // oracle-replayed scheme), residual codes serve sim_ivfpq_res
       timed(logger, s"residual PQ codebooks (${PqQueries.ITERS}-iter Lloyd over residuals + write)") {

@@ -63,7 +63,7 @@ object DedupQueries {
     * band match is a HASH-PROXIMITY event, and proximity false
     * positives grow with the reference corpus — against 10⁵ unrelated
     * documents a 32-bit simhash finds a Hamming-≤6 partner for
-    * essentially every probe (measured in CleanScaleSmoke's first
+    * essentially every probe (measured in the `clean` smoke's first
     * draft: 100% of novel docs flagged). A minhash band match requires
     * two md5-min values to agree exactly, which for unrelated documents
     * is a collision in the shingle space — candidates arise from
@@ -204,7 +204,7 @@ object DedupQueries {
 
   /** The dedup_bloom batch derivation: the doc_id % 20 = 7 slice
     * re-keyed, every second doc's text mutated — shared with the spec
-    * and the scale smoke so all three measure the same batch. */
+    * and the `text` smoke so all three measure the same batch. */
   private[graft] def bloomBatch(corpus: DataFrame): DataFrame =
     corpus.filter(col("doc_id") % 20 === 7)
       .select((col("doc_id") + BLOOM_OFFSET).as("batch_id"),
@@ -409,7 +409,7 @@ object DedupQueries {
     * bucket, bucket_size) for every band bucket [[capHotBuckets]] would
     * drop at the current cap. Diagnostic companion to dedup_minhash /
     * dedup_edit — a capped run reports what it skipped (HotBucketSpec,
-    * TextScaleSmoke `hot` mode). */
+    * the `text.hot` smoke). */
   private[graft] def minhashHotBuckets(s: SparkSession, corpus: DataFrame): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val bands = withMinhash(corpus).select(col("doc_id"), posexplode(minhashBandArray))
@@ -879,7 +879,7 @@ object DedupQueries {
   /** Near-dup pair source for CLUSTER consumers (dedup_clusters,
     * dedup_keepbest, the corpus_clean near_dup verdicts): the
     * oracle-described SimHash tier at ≤-gate scale, VERIFIED MinHash
-    * pairs past it. Measured basis (TextScaleSmoke `cascade` mode): the
+    * pairs past it. Measured basis (the `text.cascade` smoke): the
     * 32-bit SimHash byte-banding's 1024-bucket space floods with
     * ~1.8e-4·n²/2 false Hamming-≤6 pairs on weakly-correlated corpora —
     * at 240k docs that is ~5M false edges, whose components collapsed
@@ -1130,7 +1130,7 @@ object DedupQueries {
   // (`theory_ppm`, evaluated at the band midpoint with plain IEEE
   // multiplication — no pow(), so both engines agree bit-for-bit), so a
   // banding-scheme retune (more hashes / wider bands) is a query away
-  // from its evidence — the TextScaleSmoke 99.5 %-at-J≈0.84 number,
+  // from its evidence — the `text` smoke's 99.5 %-at-J≈0.84 number,
   // generalized to every corpus and every band.
   //
   // Determinism discipline: the decile key derives from the micro-int
@@ -1402,7 +1402,7 @@ object DedupQueries {
   // documented LSH tradeoff (dedup_embed_lsh's contract). Every
   // oracle SF is ≤ 5k rows, far under the gate, so gated results are
   // bit-identical to the ungated round-7 plans; DedupRouteSpec pins
-  // the routed builders, VectorScaleSmoke prices them at 1M rows.
+  // the routed builders, the `vector` smoke prices them at 1M rows.
   // ------------------------------------------------------------------
   private[graft] val EXACT_TIER_MAX_ROWS = 100000L
   private[graft] val ROUTED_PLANES = 32
@@ -2359,7 +2359,7 @@ object DedupQueries {
   // deliberately rides the VERIFIED MinHash pairs, not SimHash: the
   // 32-bit SimHash byte-banding floods with false candidates past ~10⁵
   // docs (a 240k-doc run collapsed 239,999 docs into one Hamming-≤6
-  // component — TextScaleSmoke `cascade` mode is the regression gate),
+  // component — the `text.cascade` smoke is the regression gate),
   // while MinHash buckets are md5s of actual shingles, collision-free
   // across unrelated docs, and every surviving pair is exact-Jaccard
   // re-checked.

@@ -173,7 +173,7 @@ object PqQueries {
 
   /** Packed → (vec_id, sub, code) rows — the shape ADC consumes.
     * Map-side arithmetic only (PqSpec pins the round-trip). */
-  private[extensions] def unpackCodes(codes: DataFrame): DataFrame =
+  private[graft] def unpackCodes(codes: DataFrame): DataFrame =
     codes.withColumn("sub", explode(expr(s"sequence(0L, ${M - 1}L)")))
       .withColumn("code", expr("(pq div CAST(pow(16, sub) AS BIGINT)) % 16"))
       .select("vec_id", "sub", "code")
@@ -219,7 +219,7 @@ object PqQueries {
       // the unit sphere, so only the normalized centroid leaves a
       // per-cell-small residual (against raw cv the residual is
       // ≈ −(1 − 1/‖cv‖)·cv: cell-sized again, measured no-lift in
-      // VectorScaleSmoke respq before this normalization)
+      // the `vector.respq` smoke before this normalization)
       .join(broadcast(cent.select(col("clabel").as("cell"),
         expr("transform(cv, x -> x / cnorm)").as("chat"))), "cell")
       .withColumn("r", expr("zip_with(u, chat, (a, b) -> a - b)"))

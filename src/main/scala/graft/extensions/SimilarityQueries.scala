@@ -24,8 +24,8 @@ object SimilarityQueries {
 
   private val K = 10
   private val N_QUERIES = 10 // query set: vec_id < 10
-  private[extensions] val N_PLANES = 16
-  private[extensions] val BAND_BITS = 4
+  private[graft] val N_PLANES = 16
+  private[graft] val BAND_BITS = 4
   private[extensions] val KMEANS_K = 10
   private[extensions] val KMEANS_ITERS = 3
   private val SEM_BLOCKS = 8 // within-cell pair-join block keys (dedup_semantic)
@@ -123,7 +123,7 @@ object SimilarityQueries {
 
   /** SRP code per vector, map-side: (vec_id, v, norm) → + `planes`-bit
     * code. Shared by sim_ann, dedup_embed_lsh, AnnIndex, and
-    * VectorScaleSmoke so every SRP user buckets with the identical
+    * the smokes so every SRP user buckets with the identical
     * scheme. The default (16 planes / 4-bit bands) is the GATED
     * configuration — the DuckDB oracles derive it bit-for-bit; wider
     * schemes are the corpus-growth knob (see srpBands). */
@@ -140,14 +140,14 @@ object SimilarityQueries {
 
   /** SLIM (vec_id, band, bucket) rows — the only shape that may enter a
     * band self-join: wide vectors riding the join + pair-dedup measured
-    * 3× slower at 1M vectors (VectorScaleSmoke / docs/PLANS.md).
+    * 3× slower at 1M vectors (the `vector` smoke / docs/PLANS.md).
     *
     * Scale knob: expected bucket occupancy is N / 2^bandBits per band —
     * the self-join cost per bucket is quadratic in it, so bandBits must
     * GROW with the corpus (4 bits / 16 buckets serves the gated test
     * scale; ~10⁹ vectors wants 16+ bits). Recall for a pair with sign
     * agreement s is 1 − (1 − s^bandBits)^bands: more bits per band
-    * prunes harder AND more selectively — VectorScaleSmoke measures the
+    * prunes harder AND more selectively — the `vector` smoke measures the
     * 4-bit vs 8-bit trade at 1M vectors. */
   private[graft] def srpBands(coded: DataFrame, planes: Int = N_PLANES,
                               bandBits: Int = BAND_BITS,
@@ -291,7 +291,7 @@ object SimilarityQueries {
     * deterministic k-means otherwise. `k ≤ 0` means the default
     * [[KMEANS_K]]; an explicit k is the retune path
     * ([[AnnIndex.quantizerHealth]] grows it). */
-  private[extensions] def quantizer(s: SparkSession, raw: DataFrame, k: Int = 0,
+  private[graft] def quantizer(s: SparkSession, raw: DataFrame, k: Int = 0,
                                     n: Long = -1L,
                                     fpKnown: Option[(Long, Long, Long, Long, Long)] = None): DataFrame =
     if (raw.columns.contains("label")) centroidTable(s, raw, n)
@@ -531,7 +531,7 @@ object SimilarityQueries {
     * answer to assignment itself becoming the ingest wall once
     * k ≈ √N (10⁸ vectors ⇒ k = 10⁴ dots/row under the full scan).
     * Bounded-divergent: a row whose true cell sits outside both probed
-    * supers assigns to its best probed cell (VectorScaleSmoke `cells2`
+    * supers assigns to its best probed cell (the `vector.cells2` smoke
     * measures the rate; TwoLevelCellSpec pins determinism and the
     * agreement bound). Every oracle-replayed quantizer (k ≤ 250 across
     * registry + smokes) stays on the exact full scan. 0 disables. */
@@ -1462,7 +1462,7 @@ object SimilarityQueries {
   private val pcaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Seq[Long], Long)]()
 
-  private[extensions] def pcaTrain(s: SparkSession, raw: DataFrame): (Seq[Long], Long) = {
+  private[graft] def pcaTrain(s: SparkSession, raw: DataFrame): (Seq[Long], Long) = {
     graft.functions.VectorFunctions.register(s)
     val xmf = raw.select(col("vec_id"),
         expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))").as("xm"))

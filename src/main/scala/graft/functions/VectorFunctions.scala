@@ -368,7 +368,7 @@ object NearestCellExpr {
     * supers' member centroids. ~4√k dots instead of k; the result
     * diverges from the full scan only when the true cell's centroid
     * lives outside all probed supers (bounded-divergent by
-    * construction, measured in VectorScaleSmoke `cells2`). */
+    * construction, measured in the `vector.cells2` smoke). */
   def computeTwoLevel(arr: ArrayData, norm: Double, labels: Array[Long],
                       cvs: Array[Array[Double]], cnorms: Array[Double],
                       superU: Array[Array[Double]],

@@ -4,6 +4,8 @@ import java.io.{BufferedReader, InputStreamReader, PrintWriter}
 import java.net.{ServerSocket, Socket, SocketException}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import graft.core.Meas
 import graft.engine.{GraftEngine, QueryInterval, QueryTimePoint}
 
@@ -266,22 +268,18 @@ class GraftServer(engine: graft.engine.EngineApi, port: Int = 0, bindAddress: Op
             case "READ_INTERVAL" =>
               val q = QueryInterval(Wire.parseIds(parts(1)), parts(2).toLong,
                 Wire.usToTs(parts(3).toLong), Wire.usToTs(parts(4).toLong))
-              var n = 0
-              engine.intervalReader(q).foreach { m => reply("MEAS " + Wire.fmtMeas(m)); n += 1 }
-              reply(s"END $n")
+              streamRows(engine.intervalReader(q), "MEAS", Wire.fmtMeas, reply)
             case "READ_TIMEPOINT" =>
               val q = QueryTimePoint(Wire.parseIds(parts(1)), parts(2).toLong,
                 Wire.usToTs(parts(3).toLong))
-              replyPoints(engine.readTimePoint(q), reply)
+              streamRows(engine.readTimePoint(q).toLocalIterator().asScala, "POINT", Wire.fmtPoint, reply)
             case "CURRENT_VALUE" =>
-              replyPoints(engine.currentValue(Wire.parseIds(parts(1)), parts(2).toLong), reply)
+              streamRows(engine.currentValue(Wire.parseIds(parts(1)), parts(2).toLong)
+                .toLocalIterator().asScala, "POINT", Wire.fmtPoint, reply)
             case "READ_GRID" =>
               val df = engine.readGrid(Wire.usToTs(parts(1).toLong), Wire.usToTs(parts(2).toLong),
                 parts(3).toLong, parts(4).toLong)
-              val it = df.toLocalIterator()
-              var n = 0
-              while (it.hasNext) { reply("GRID " + Wire.fmtGrid(it.next())); n += 1 }
-              reply(s"END $n")
+              streamRows(df.toLocalIterator().asScala, "GRID", Wire.fmtGrid, reply)
             case "SUBSCRIBE" =>
               // re-subscribing REPLACES this connection's filter: the
               // previous registration must be removed (and its writer
@@ -308,10 +306,11 @@ class GraftServer(engine: graft.engine.EngineApi, port: Int = 0, bindAddress: Op
     }
   }
 
-  private def replyPoints(df: org.apache.spark.sql.DataFrame, reply: String => Unit): Unit = {
-    val it = df.toLocalIterator()
+  /** One streamed result: a `<kind> <row>` line per row, then `END n`. */
+  private def streamRows[T](rows: Iterator[T], kind: String, fmt: T => String,
+                            reply: String => Unit): Unit = {
     var n = 0
-    while (it.hasNext) { reply("POINT " + Wire.fmtPoint(it.next())); n += 1 }
+    rows.foreach { r => reply(s"$kind ${fmt(r)}"); n += 1 }
     reply(s"END $n")
   }
 
@@ -390,27 +389,16 @@ class GraftClient(host: String, port: Int, secret: Option[String] = None) extend
     expect("OK ").stripPrefix("OK ").trim.toInt
   }
 
-  private def readMeasList(): Seq[Meas] = {
-    val buf = scala.collection.mutable.ArrayBuffer[Meas]()
+  /** One streamed result: `<kind> <row>` lines until `END`; an `ERR`
+    * line throws. EOF before the END terminator = truncated result, NOT
+    * a complete one — a dropped connection must never masquerade as a
+    * small result. */
+  private def readRows[T](kind: String)(parse: String => T): Seq[T] = {
+    val buf = scala.collection.mutable.ArrayBuffer[T]()
     var l = in.readLine()
     while (l != null && !l.startsWith("END")) {
       if (l.startsWith("ERR")) throw new RuntimeException(s"server: $l")
-      buf += Wire.parseMeas(l.stripPrefix("MEAS "))
-      l = in.readLine()
-    }
-    // EOF before the END terminator = truncated result, NOT a complete
-    // one — a dropped connection must never masquerade as a small result
-    if (l == null) throw new java.io.IOException(
-      s"connection closed mid-stream after ${buf.size} rows (no END)")
-    buf.toSeq
-  }
-
-  private def readPointList(): Seq[(Long, Option[Timestamp], Option[Double], Long)] = {
-    val buf = scala.collection.mutable.ArrayBuffer[(Long, Option[Timestamp], Option[Double], Long)]()
-    var l = in.readLine()
-    while (l != null && !l.startsWith("END")) {
-      if (l.startsWith("ERR")) throw new RuntimeException(s"server: $l")
-      buf += Wire.parsePoint(l.stripPrefix("POINT "))
+      buf += parse(l.stripPrefix(s"$kind "))
       l = in.readLine()
     }
     if (l == null) throw new java.io.IOException(
@@ -421,19 +409,19 @@ class GraftClient(host: String, port: Int, secret: Option[String] = None) extend
   def readInterval(q: QueryInterval): Seq[Meas] = {
     requireSync("readInterval")
     send(s"READ_INTERVAL ${Wire.fmtIds(q.ids)} ${q.flag} ${Wire.tsToUs(q.from)} ${Wire.tsToUs(q.to)}")
-    readMeasList()
+    readRows("MEAS")(Wire.parseMeas)
   }
 
   def readTimePoint(q: QueryTimePoint): Seq[(Long, Option[Timestamp], Option[Double], Long)] = {
     requireSync("readTimePoint")
     send(s"READ_TIMEPOINT ${Wire.fmtIds(q.ids)} ${q.flag} ${Wire.tsToUs(q.timePoint)}")
-    readPointList()
+    readRows("POINT")(Wire.parsePoint)
   }
 
   def currentValue(ids: Seq[Long], flag: Long): Seq[(Long, Option[Timestamp], Option[Double], Long)] = {
     requireSync("currentValue")
     send(s"CURRENT_VALUE ${Wire.fmtIds(ids)} $flag")
-    readPointList()
+    readRows("POINT")(Wire.parsePoint)
   }
 
   /** Beyond-reference: the engine's catalog-driven grid read over the
@@ -443,16 +431,7 @@ class GraftClient(host: String, port: Int, secret: Option[String] = None) extend
                stalenessSeconds: Long): Seq[(Long, Timestamp, Option[Double], Option[Long])] = {
     requireSync("readGrid")
     send(s"READ_GRID ${Wire.tsToUs(from)} ${Wire.tsToUs(to)} $stepSeconds $stalenessSeconds")
-    val buf = scala.collection.mutable.ArrayBuffer[(Long, Timestamp, Option[Double], Option[Long])]()
-    var l = in.readLine()
-    while (l != null && !l.startsWith("END")) {
-      if (l.startsWith("ERR")) throw new RuntimeException(s"server: $l")
-      buf += Wire.parseGrid(l.stripPrefix("GRID "))
-      l = in.readLine()
-    }
-    if (l == null) throw new java.io.IOException(
-      s"connection closed mid-stream after ${buf.size} rows (no END)")
-    buf.toSeq
+    readRows("GRID")(Wire.parseGrid)
   }
 
   /** Push-mode subscription: registers the filter, then delivers every

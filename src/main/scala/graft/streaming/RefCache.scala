@@ -50,7 +50,7 @@ private[graft] object RefCache {
   private[graft] val extendCount = new java.util.concurrent.atomic.AtomicLong()
 
   /** Segment-list consolidations (the amortized LSM merge) — the
-    * observable CleanScaleSmoke's loop mode asserts on: steady-state
+    * observable the `clean.loop` smoke asserts on: steady-state
     * admission must show extends ≫ consolidations and ZERO rebuilds. */
   private[graft] val consolidateCount = new java.util.concurrent.atomic.AtomicLong()
 

@@ -37,7 +37,7 @@ import graft.extensions.{DedupQueries, TextIndex, TextQueries}
   *     simhash, deliberately: a simhash band match is a hash-proximity
   *     event whose false-positive count grows with the reference
   *     corpus — at 10⁵ owned docs a 32-bit simhash finds a Hamming-≤6
-  *     partner for essentially every probe (CleanScaleSmoke measured
+  *     partner for essentially every probe (the `clean` smoke measured
   *     100% of novel docs flagging) — while a minhash band match
   *     requires md5-min values to agree exactly, so candidates arise
   *     from genuine Jaccard similarity at ANY corpus size. The static
@@ -328,7 +328,7 @@ object StreamingClean {
       // every time the handful-of-files size target is doubled; content
       // and fingerprint are preserved (ArtifactSwap crash-safe), so the
       // RefCache generation stays valid and exactly-once is untouched
-      // (StreamingCleanSpec pins the trigger; CleanScaleSmoke `loop`
+      // (StreamingCleanSpec pins the trigger; the `clean.loop` smoke
       // shows the flat steady state).
       if (TextIndex.fragmented(spark, indexDir, minFiles = compactMinFiles(spark)))
         TextIndex.compact(spark, indexDir)

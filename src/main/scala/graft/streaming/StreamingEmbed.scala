@@ -26,7 +26,7 @@ import graft.extensions.{AnnIndex, DedupQueries, SimilarityQueries}
   *     [[DefaultCosMin]] — see its scaladoc for why NOT the dedup
   *     query's looser gate) against
   *     the owned vectors, joined by candidate id only — the wide
-  *     vectors never enter the band join (the VectorScaleSmoke
+  *     vectors never enter the band join (the `vector` smoke
   *     lesson). The owned side stays on parquet (column-pruned scan
   *     per batch); a 10⁹-vector deployment would bucket it by vec_id
   *     so the candidate join co-locates — the plan is unchanged.

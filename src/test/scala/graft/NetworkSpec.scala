@@ -415,4 +415,44 @@ class NetworkSpec extends SparkSpec {
       assert(stored.sorted === got.map(_.seq).sorted)
     } finally server.stop()
   }
+
+  test("a result stream cut short or interrupted by ERR throws on every read kind") {
+    // raw stub server: answers each request with two rows of the
+    // requested kind, then `tail`, then closes the connection
+    val rowOf = Map("READ_INTERVAL" -> "MEAS 1 0 1.0 0 1", "READ_TIMEPOINT" -> "POINT 1 0 1.0 0",
+      "CURRENT_VALUE" -> "POINT 1 0 1.0 0", "READ_GRID" -> "GRID 1 0 1.0 0")
+    def withStub(tail: Seq[String])(f: GraftClient => Unit): Unit = {
+      val stub = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+      val t = new Thread(() => {
+        val sock = stub.accept()
+        try {
+          val in = new java.io.BufferedReader(new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+          val out = new java.io.PrintWriter(new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"))
+          val row = rowOf(in.readLine().split(" ")(0))
+          (Seq(row, row) ++ tail).foreach(out.println)
+          out.flush()
+        } finally sock.close()
+      })
+      t.setDaemon(true)
+      t.start()
+      val client = new GraftClient("127.0.0.1", stub.getLocalPort)
+      try f(client) finally { client.close(); t.join(10000L); stub.close() }
+    }
+    val (from, to) = (ts("2024-03-01 00:00:00"), ts("2024-03-02 00:00:00"))
+    val reads: Seq[GraftClient => Any] = Seq(
+      _.readInterval(QueryInterval(Seq(1L), 0L, from, to)),
+      _.readTimePoint(QueryTimePoint(Seq(1L), 0L, to)),
+      _.currentValue(Seq(1L), 0L),
+      _.readGrid(from, to, 3600L, 7200L))
+    for (read <- reads) {
+      withStub(Nil) { c =>
+        val e = intercept[java.io.IOException](read(c))
+        assert(e.getMessage.contains("after 2 rows"), e.getMessage)
+      }
+      withStub(Seq("ERR IllegalStateException: boom", "END 2")) { c =>
+        val e = intercept[RuntimeException](read(c))
+        assert(e.getMessage === "server: ERR IllegalStateException: boom")
+      }
+    }
+  }
 }

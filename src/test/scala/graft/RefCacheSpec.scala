@@ -48,7 +48,7 @@ class RefCacheSpec extends SparkSpec {
         s"consolidation bounds the plan: ${unions.map(_.children.size)}")
       // the consolidation observable moved: segment lists 1→2→3→4(>3,
       // merge)→… across ten extends trip the ceiling MORE than once,
-      // and every merge was counted (CleanScaleSmoke's loop mode
+      // and every merge was counted (the `clean.loop` smoke
       // asserts on this counter at scale)
       assert(RefCache.consolidateCount.get() >= cons0 + 2,
         s"ten extends past a ceiling of 3 consolidate repeatedly: ${RefCache.consolidateCount.get() - cons0}")
