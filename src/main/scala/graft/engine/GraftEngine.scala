@@ -334,9 +334,13 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * one partition, not the whole store. The hot level (bounded by
     * hotCapacity, already materialized in memory) unions in under the
     * same `time` bounds before the freshness merge. */
-  private def mergedRange(from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
+  private def mergedRange(from: Option[Timestamp], to: Option[Timestamp]): DataFrame =
+    TsdbStorage.mergeFreshest(levels(from, to))
+
+  /** The unmerged rows of both levels inside the bounds. */
+  private def levels(from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
     val cold = if (!hasData) emptyMeas else TsdbStorage.readRange(spark, dataPath, from, to)
-    val levels = hotUnion match {
+    hotUnion match {
       case None => cold
       case Some(hot) =>
         val bounded = (from, to) match {
@@ -347,8 +351,32 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
         }
         cold.unionByName(bounded)
     }
-    TsdbStorage.mergeFreshest(levels)
   }
+
+  /** Run a collected stats-index lookup against ONE certified
+    * generation of the index. Every mutation drops the `_SYNCED` marker
+    * before it touches the index (a touched day's partition is deleted
+    * and rewritten, so a lookup listing it mid-refresh silently misses
+    * that day) and re-creates it with a fresh token after. The token is
+    * read before and after the lookup; an absent or changed token, or a
+    * file deleted under the lookup, answers None and the caller serves
+    * the always-correct scan path. Holds across engine instances: the
+    * marker lives in the store. The index covers only the durable
+    * level, so unflushed hot rows answer None too. */
+  private def indexLookup[T](lookup: => T): Option[T] =
+    if (hotSize != 0L) None
+    else TsdbStorage.statsGeneration(spark, statsPath).flatMap { gen =>
+      val found = try Some(lookup) catch { case e: Exception if missingFile(e) => None }
+      found.filter(_ => TsdbStorage.statsGeneration(spark, statsPath).contains(gen))
+    }
+
+  private def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException => true
+      case t: org.apache.spark.SparkThrowable =>
+        Set("FAILED_READ_FILE.FILE_NOT_EXIST", "PATH_NOT_FOUND").contains(t.getCondition)
+      case _ => false
+    }
 
   // ---- O2/O3 interval reads ----------------------------------------
   /** O2. For explicit id lists with a certified index and no hot rows,
@@ -358,8 +386,8 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * scans 7 partitions, not 300. Catalog-wide reads (ids empty) and
     * fallback cases take the time-pruned scan. */
   def readInterval(q: QueryInterval): DataFrame =
-    if (q.ids.nonEmpty && hasStats && hotSize == 0L) readIntervalIndexed(q)
-    else readIntervalScan(q)
+    (if (q.ids.nonEmpty) indexLookup(residentDays(q)) else None)
+      .fold(readIntervalScan(q))(readIntervalDays(q, _))
 
   /** Scan path: day partitions pruned by the time bounds alone. The
     * authoritative (and fallback) answer. */
@@ -368,19 +396,33 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
       .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)) && flagPred(q.flag))
       .orderBy("id", "time")
 
-  private def readIntervalIndexed(q: QueryInterval): DataFrame = {
-    // flag is NOT consulted here (the index doesn't know flags): the day
-    // set only needs to cover every day holding rows for the ids; the
-    // flag predicate filters rows after the scan, same as the scan path
-    val days = TsdbStorage.readStats(spark, statsPath)
-      .filter(idPred(q.ids)
-        && col("max_time") >= lit(q.from) && col("min_time") <= lit(q.to))
-      .select("day").distinct().collect().map(_.getDate(0)).toSeq
-    if (days.isEmpty) return emptyMeas.orderBy("id", "time")
-    TsdbStorage.mergeFreshest(TsdbStorage.readDays(spark, dataPath, days))
-      .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)) && flagPred(q.flag))
+  /** The ids' resident days inside the interval. The flag is NOT
+    * consulted (the index doesn't know flags): the day set only needs
+    * to cover every day holding rows for the ids. The `day` bound is
+    * implied by the time overlap (every index row's times fall inside
+    * its own day) and is what prunes the index's partitions: a 1-day
+    * read lists 2 index days, not all of them. No shuffle — the rows
+    * are de-duplicated on the driver, bounded by |ids| × interval days. */
+  private def residentDays(q: QueryInterval): Seq[java.sql.Date] =
+    TsdbStorage.readStats(spark, statsPath)
+      .filter(col("day").between(to_date(lit(q.from)), to_date(lit(q.to)))
+        && idPred(q.ids) && col("max_time") >= lit(q.from) && col("min_time") <= lit(q.to))
+      .select("day").collect().map(_.getDate(0)).distinct.toSeq
+
+  /** Data query over the resident days, with ONE exchange: the pruned
+    * rows are range-partitioned on (id, time), which both clusters the
+    * freshness merge's keys and orders its output, so the merge and the
+    * final sort share it. The flag predicate stays above the merge — a
+    * fresher version whose flag fails must still hide the superseded
+    * one. */
+  private def readIntervalDays(q: QueryInterval, days: Seq[java.sql.Date]): DataFrame =
+    if (days.isEmpty) emptyMeas.orderBy("id", "time")
+    else TsdbStorage.mergeFreshest(
+        TsdbStorage.readDays(spark, dataPath, days)
+          .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)))
+          .repartitionByRange(col("id"), col("time")))
+      .filter(flagPred(q.flag))
       .orderBy("id", "time")
-  }
 
   /** O3 cursor form: per-series iterator over the interval result —
     * the Id2Cursor analog [U: storage/cursors.h]. Streams through the
@@ -397,81 +439,81 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     intervalReader(q).foreach(callback)
 
   // ---- O4/O5 point reads -------------------------------------------
-  /** O4 as-of read. Served from the stats index when it can be exact:
-    * flag 0 (match-all — the index doesn't know flags), no unflushed
-    * hot rows, index certified. The index pinpoints each series' LAST
-    * RESIDENT day at-or-before the timepoint, so the scan touches only
-    * those few partitions instead of every day up to the timepoint —
-    * the difference between "a few pruned partitions" and "half the
-    * store" on an aged store. Falls back to the always-correct scan. */
-  def readTimePoint(q: QueryTimePoint): DataFrame =
-    if (q.flag == 0L && hasStats && hotSize == 0L) readTimePointIndexed(q)
-    else readTimePointScan(q)
-
-  /** The requested-id universe: explicit lists stay literal; the "all
-    * series" default derives distributedly — from the (tiny) stats
-    * index when usable, from the store otherwise (no driver-side
-    * collect of the id universe, no giant isin literal). */
-  private def idUniverse(ids: Seq[Long]): DataFrame =
-    if (ids.nonEmpty) ids.toDF("qid")
-    else if (hasStats && hotSize == 0L)
-      TsdbStorage.readStats(spark, statsPath).select(col("id").as("qid")).distinct()
-    else merged.select(col("id").as("qid")).distinct()
+  /** O4 as-of read: one row per distinct requested id. Served from the
+    * stats index when it can be exact: flag 0 (match-all — the index
+    * doesn't know flags), no unflushed hot rows, index certified. The
+    * index pinpoints each series' LAST RESIDENT day at-or-before the
+    * timepoint, so the scan touches only those few partitions instead
+    * of every day up to the timepoint — the difference between "a few
+    * pruned partitions" and "half the store" on an aged store. Falls
+    * back to the always-correct scan. */
+  def readTimePoint(q: QueryTimePoint): DataFrame = {
+    val ids = q.ids.distinct
+    (if (q.flag == 0L) indexLookup(lastResidentDays(ids, q.timePoint)) else None)
+      .fold(readTimePointScan(q)) { days =>
+        // flag 0, so the raw rows need no freshness merge: `seq` is
+        // unique per measurement, and the largest (time, seq) at or
+        // before the timepoint IS the freshest version at the latest time
+        val candidates =
+          if (days.isEmpty) emptyMeas
+          else TsdbStorage.readDays(spark, dataPath, days)
+            .filter(col("time") <= lit(q.timePoint) && idPred(ids))
+        asOf(if (ids.nonEmpty) ids.toDF("id")
+             else TsdbStorage.readStats(spark, statsPath).select("id"), candidates)
+      }
+  }
 
   /** Scan path: prunes every day partition after the timepoint. The
-    * authoritative (and fallback) answer. */
+    * authoritative (and fallback) answer. The merge runs before the
+    * flag filter: a superseded version can match a flag its fresher
+    * version does not, and must not answer. */
   def readTimePointScan(q: QueryTimePoint): DataFrame = {
-    val idsDf = idUniverse(q.ids)
-    val last = mergedRange(None, Some(q.timePoint))
-      .filter(col("time") <= lit(q.timePoint) && flagPred(q.flag) && idPred(q.ids))
-      .groupBy("id")
-      .agg(max_by(struct(col("time"), col("value"), col("flag")), struct(col("time"), col("seq"))).as("m"))
-      .select(col("id"), col("m.time").as("time"), col("m.value").as("value"), col("m.flag").as("flag"))
-    // no broadcast hint: the left (preserved) side cannot be the build
-    // side of a left-outer join, so a hint there is silently ignored —
-    // AQE picks the per-series aggregate as the broadcast side at runtime
-    idsDf.join(last, col("qid") === col("id"), "left")
-      .select(col("qid").as("id"), col("time"), col("value"),
-        coalesce(col("flag"), lit(Meas.NO_DATA)).as("flag"))
-      .orderBy("id")
+    val ids = q.ids.distinct
+    asOf(if (ids.nonEmpty) ids.toDF("id") else levels(None, None).select("id"),
+      mergedRange(None, Some(q.timePoint))
+        .filter(col("time") <= lit(q.timePoint) && flagPred(q.flag) && idPred(ids)))
   }
 
-  /** Index path: per id, the last day at-or-before the timepoint that
-    * holds a row ≤ timepoint (day before the timepoint's day, or the
-    * day itself when its min_time is ≤ the timepoint — min_time is in
-    * the index, so a day whose rows all fall AFTER a mid-day timepoint
-    * is correctly skipped for its predecessor). Only the distinct
-    * last-resident days are scanned — for a live store, typically one
-    * or two partitions. The collect is bounded by the store's day
-    * count, same class as the directory listings. Exactness: the index
-    * reflects the merged store (refreshed under the _SYNCED marker at
-    * every mutation), and the freshness merge runs over the scanned
-    * days exactly as the scan path would. */
-  private def readTimePointIndexed(q: QueryTimePoint): DataFrame = {
-    val tpDay = java.sql.Date.valueOf(
-      q.timePoint.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
-    val stats = TsdbStorage.readStats(spark, statsPath).filter(idPred(q.ids))
-    val days = stats
-      .filter(col("day") < lit(tpDay)
-        || (col("day") === lit(tpDay) && col("min_time") <= lit(q.timePoint)))
-      .groupBy("id").agg(max("day").as("last_day"))
-      .select(col("last_day")).distinct()
-      .collect().map(_.getDate(0)).toSeq
-    val idsDf = idUniverse(q.ids)
-    val noData = idsDf.select(col("qid").as("id"),
-      lit(null).cast("timestamp").as("time"), lit(null).cast("double").as("value"),
-      lit(Meas.NO_DATA).as("flag")).orderBy("id")
-    if (days.isEmpty) return noData
-    val last = TsdbStorage.mergeFreshest(TsdbStorage.readDays(spark, dataPath, days))
-      .filter(col("time") <= lit(q.timePoint) && idPred(q.ids))
+  /** Per id, the last day at-or-before the timepoint that holds a row
+    * ≤ timepoint (a day before the timepoint's day, or the day itself
+    * when its min_time is ≤ the timepoint — a day whose rows all fall
+    * AFTER a mid-day timepoint is skipped for its predecessor); returns
+    * the distinct such days. Explicit ids collect their (id, day) rows
+    * and take each id's max on the driver — no shuffle, bounded by
+    * |ids| × resident days ≤ tp. The catalog-wide request keeps the
+    * distributed per-id max, since its rows grow with series × days.
+    * Exactness: the index reflects the merged store (refreshed under the
+    * _SYNCED marker at every mutation). */
+  private def lastResidentDays(ids: Seq[Long], tp: Timestamp): Seq[java.sql.Date] = {
+    val tpDay = java.sql.Date.valueOf(tp.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
+    val resident = TsdbStorage.readStats(spark, statsPath)
+      .filter(col("day") <= lit(tpDay) && idPred(ids)
+        && (col("day") < lit(tpDay) || col("min_time") <= lit(tp)))
+    if (ids.nonEmpty)
+      resident.select("id", "day").collect()
+        .groupMapReduce(_.getLong(0))(_.getDate(1))((a, b) => if (a.after(b)) a else b)
+        .values.toSeq.distinct
+    else
+      resident.groupBy("id").agg(max("day").as("last_day"))
+        .select("last_day").distinct().collect().map(_.getDate(0)).toSeq
+  }
+
+  /** The as-of answer over `candidates` (rows at or before the
+    * timepoint): per id of `universe`, the row with the largest (time,
+    * seq), or NO_DATA. Each universe id adds a placeholder row (id,
+    * null, null, NO_DATA, null) whose (null, null) key sorts below every
+    * real row, so it wins only for an id with no candidate; repeated
+    * ids collapse in the same groupBy. One exchange, no join; the
+    * answer — one row per series — is sorted inside a single partition. */
+  private def asOf(universe: DataFrame, candidates: DataFrame): DataFrame =
+    universe.select(col("id"), lit(null).cast("timestamp").as("time"),
+        lit(null).cast("double").as("value"), lit(Meas.NO_DATA).as("flag"),
+        lit(null).cast("long").as("seq"))
+      .unionByName(candidates.select("id", "time", "value", "flag", "seq"))
       .groupBy("id")
       .agg(max_by(struct(col("time"), col("value"), col("flag")), struct(col("time"), col("seq"))).as("m"))
       .select(col("id"), col("m.time").as("time"), col("m.value").as("value"), col("m.flag").as("flag"))
-    idsDf.join(last, col("qid") === col("id"), "left")
-      .select(col("qid").as("id"), col("time"), col("value"),
-        coalesce(col("flag"), lit(Meas.NO_DATA)).as("flag"))
-      .orderBy("id")
-  }
+      .coalesce(1).sortWithinPartitions("id")
 
   def currentValue(ids: Seq[Long], flag: Long): DataFrame =
     readTimePoint(QueryTimePoint(ids, flag, Meas.TIME_MAX))

@@ -125,7 +125,24 @@ object TsdbStorage {
     // index content to exist (a maintenance op on a store without an
     // index must leave it index-less)
     if (!fs.exists(root)) return
-    fs.create(new Path(root, SyncMarker), true).close()
+    // a fresh token per certification: readers bracket a lookup with
+    // [[statsGeneration]], and an unchanged token proves no mutation
+    // committed (or began) in between
+    val out = fs.create(new Path(root, SyncMarker), true)
+    try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The certified generation of the stats index: the `_SYNCED`
+    * marker's token, None when the index is uncertified (or the marker
+    * is being rewritten under the reader). */
+  private[graft] def statsGeneration(spark: SparkSession, statsPath: String): Option[String] = {
+    val p = new Path(statsPath, SyncMarker)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.IOException => None }
   }
 
   /** True iff the stats index exists AND its last mutation committed —
@@ -203,8 +220,9 @@ object TsdbStorage {
     // drop the touched index partitions first: dynamic overwrite only
     // rewrites partitions PRESENT in the output, so a touched day whose
     // data vanished entirely (per-id retention emptied it) would keep
-    // its stale index rows. Callers bracket with the sync marker, so
-    // the transient gap is never served.
+    // its stale index rows. Callers bracket with the sync marker, and
+    // readers bracket their lookups with its generation, so the
+    // transient gap is never served.
     val root = new Path(statsPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root))

@@ -14,6 +14,8 @@ import graft.sources.EventsSource
 class EngineSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq)
 
   test("full engine lifecycle: append, interval/point reads, stat, scheme, retention, compaction") {
     val engine = new GraftEngine(spark, tmpDir("graft-engine"), buckets = 4)
@@ -400,6 +402,185 @@ class EngineSpec extends SparkSpec {
     // a staled index forces the scan path (same result, no index read)
     graft.sources.TsdbStorage.markStatsOutOfSync(spark, s"$dir/_stats")
     assert(engine.readTimePoint(qMid).collect().toSeq.map(_.toSeq) === sMid)
+  }
+
+  test("flag filters apply after the freshness merge: a superseded version never answers") {
+    val dir = tmpDir("graft-flag-merge")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    engine.append(Seq(
+      Meas(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK, 1),
+      Meas(1L, ts("2024-03-02 10:00:00"), 2.0, Flags.CLICK, 2)))
+    engine.append(Seq( // fresher version of the day-2 key; its flag no longer matches CLICK
+      Meas(1L, ts("2024-03-02 10:00:00"), 20.0, Flags.ERROR, 3)))
+
+    val qi = QueryInterval(Seq(1L), Flags.CLICK, ts("2024-03-01 00:00:00"), ts("2024-03-03 00:00:00"))
+    val clickRow = Seq(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK, 1L)
+    assert(rows(engine.readInterval(qi)) === Seq(clickRow), "index path")
+    assert(rows(engine.readIntervalScan(qi)) === Seq(clickRow), "scan path")
+
+    val tp = ts("2024-03-03 00:00:00")
+    val asOfClick = Seq(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK)
+    for (ids <- Seq(Seq(1L), Seq.empty[Long])) {
+      val q = QueryTimePoint(ids, Flags.CLICK, tp)
+      assert(rows(engine.readTimePoint(q)) === Seq(asOfClick), s"facade, ids=$ids")
+      assert(rows(engine.readTimePointScan(q)) === Seq(asOfClick), s"scan path, ids=$ids")
+    }
+    // flag 0 (index path, no merge on the raw rows): the fresher version answers
+    assert(rows(engine.readTimePoint(QueryTimePoint(Seq(1L), 0L, tp)))
+      === Seq(Seq(1L, ts("2024-03-02 10:00:00"), 20.0, Flags.ERROR)))
+  }
+
+  test("as-of reads answer one row per distinct requested id on every path") {
+    val dirs = Seq("a", "b").map(s => tmpDir(s"graft-dup-ids-$s"))
+    val engine = new GraftEngine(spark, tmpDir("graft-dup-ids"), buckets = 2)
+    val sharded = new graft.engine.ShardedEngine(spark, dirs, buckets = 2)
+    val batch = Seq(
+      Meas(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK, 1),
+      Meas(2L, ts("2024-03-02 10:00:00"), 2.0, Flags.ERROR, 2))
+    engine.append(batch)
+    sharded.append(batch)
+
+    val ids = Seq(2L, 1L, 999L, 2L, 999L, 1L)
+    val tp = ts("2024-03-05 00:00:00")
+    val expected = Seq(
+      Seq(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK),
+      Seq(2L, ts("2024-03-02 10:00:00"), 2.0, Flags.ERROR),
+      Seq(999L, null, null, Meas.NO_DATA))
+    assert(rows(engine.readTimePoint(QueryTimePoint(ids, 0L, tp))) === expected, "index path")
+    assert(rows(engine.readTimePointScan(QueryTimePoint(ids, 0L, tp))) === expected, "scan path")
+    assert(rows(engine.currentValue(ids, 0L)) === expected, "currentValue")
+    assert(rows(sharded.readTimePoint(QueryTimePoint(ids, 0L, tp))) === expected, "sharded")
+    assert(rows(engine.readTimePoint(QueryTimePoint(ids, Flags.ERROR, tp))).map(_.head)
+      === Seq(1L, 2L, 999L), "flagged (scan) path")
+  }
+
+  test("index lookups survive concurrent appends: an untouched series reads its fixed answer") {
+    val dir = tmpDir("graft-concurrent-lookup")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
+    engine.append(days.zipWithIndex.flatMap { case (d, i) => Seq(
+      Meas(1L, ts(s"$d 06:00:00"), i.toDouble, 1L, i.toLong),     // series A
+      Meas(2L, ts(s"$d 07:00:00"), -i.toDouble, 1L, 100L + i)) }) // series B
+    val qi = QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 23:00:00"))
+    val qp = QueryTimePoint(Seq(1L), 0L, ts("2024-03-03 12:00:00"))
+    val interval = rows(engine.readIntervalScan(qi))
+    val point = rows(engine.readTimePointScan(qp))
+    assert(interval.size === 3 && point.head(2) === 2.0)
+
+    // appends of B to A's existing days refresh (delete + rewrite) the
+    // index partitions A's lookups read; the appender is a second engine
+    // instance on the store, so nothing in-process serializes it with
+    // the reads
+    val appender = new GraftEngine(spark, dir, buckets = 2)
+    val writer = new Thread(() => (1 to 20).foreach { n =>
+      appender.append(days.map(d => Meas(2L, ts(s"$d 08:00:00"), n.toDouble, 1L, 1000L + n)))
+    })
+    writer.start()
+    val wrong = scala.collection.mutable.ArrayBuffer[String]()
+    try (1 to 50).foreach { n =>
+      try {
+        if (rows(engine.readInterval(qi)) != interval) wrong += s"readInterval #$n"
+        if (rows(engine.readTimePoint(qp)) != point) wrong += s"readTimePoint #$n"
+      } catch { case e: Exception => wrong += s"read #$n threw ${e.getClass.getSimpleName}: ${e.getMessage}" }
+    } finally writer.join()
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    assert(rows(engine.readInterval(qi)) === interval && rows(engine.readTimePoint(qp)) === point)
+  }
+
+  test("an index lookup that a whole append interleaves answers from the scan path, not a torn index") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = tmpDir("graft-interleaved-lookup")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    val appender = new GraftEngine(spark, dir, buckets = 2)
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
+    engine.append(days.flatMap(d => Seq(
+      Meas(1L, ts(s"$d 06:00:00"), 1.0, 1L, 1L + d.last), Meas(2L, ts(s"$d 07:00:00"), 2.0, 1L, 10L + d.last))))
+    val qi = QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 23:00:00"))
+    val qp = QueryTimePoint(Seq(1L), 0L, ts("2024-03-03 12:00:00"))
+    val (interval, point) = (rows(engine.readIntervalScan(qi)), rows(engine.readTimePointScan(qp)))
+
+    // The interleaving, made deterministic: the reader's index scan has
+    // listed its files (at DataFrame creation); before it executes, a
+    // second engine instance runs one whole append to the same days,
+    // which deletes and rewrites those index partitions.
+    val reader = Thread.currentThread
+    @volatile var armed = false
+    var seq = 100L
+    object AppendMidLookup extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val readsIndex = plan.exists {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "_stats")
+            case _ => false
+          }
+          case _ => false
+        }
+        if (armed && readsIndex && Thread.currentThread == reader) {
+          armed = false
+          seq += 1
+          val t = new Thread(() => appender.append(days.map(d => Meas(2L, ts(s"$d 08:00:00"), 3.0, 1L, seq))))
+          t.start(); t.join()
+        }
+        plan
+      }
+    }
+    spark.experimental.extraOptimizations ++= Seq(AppendMidLookup)
+    try {
+      armed = true
+      assert(rows(engine.readInterval(qi)) === interval)
+      assert(!armed, "the append ran inside the interval lookup")
+      armed = true
+      assert(rows(engine.readTimePoint(qp)) === point)
+      assert(!armed, "the append ran inside the point lookup")
+    } finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ eq AppendMidLookup)
+  }
+
+  test("index-served reads: the lookup runs no exchange, the data query exactly one shuffle") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
+    val engine = new GraftEngine(spark, tmpDir("graft-read-plans"), buckets = 2)
+    engine.append((0 until 60).map { i =>
+      Meas(i % 4L, ts(f"2024-03-${1 + i % 5}%02d ${i % 24}%02d:00:00"), i.toDouble, 1L, i.toLong)
+    })
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    /** The final plan of every query the read call runs, in order. */
+    def plans(read: => org.apache.spark.sql.DataFrame): Seq[Seq[SparkPlan]] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
+      }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        assert(read.collect().nonEmpty)
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.map(qe => nodes(qe.executedPlan))
+    }
+    val reads: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "readInterval" -> (() => engine.readInterval(
+        QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00")))),
+      "readTimePoint" -> (() => engine.readTimePoint(
+        QueryTimePoint(Seq(1L, 2L, 9L), 0L, ts("2024-03-03 12:00:00")))),
+      "currentValue" -> (() => engine.currentValue(Seq(3L, 1L), 0L)))
+    for ((name, read) <- reads) {
+      val qs = plans(read())
+      assert(qs.size === 2, s"$name: one lookup, one data query")
+      val (lookup, data) = (qs.head, qs(1))
+      assert(!lookup.exists(_.isInstanceOf[Exchange]), s"$name lookup:\n${lookup.head.treeString}")
+      assert(data.count(_.isInstanceOf[ShuffleExchangeLike]) === 1, s"$name data:\n${data.head.treeString}")
+      assert(!data.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name data:\n${data.head.treeString}")
+    }
   }
 
   test("per-id eraseOld falls back to the full day list when the index is unusable") {

@@ -66,6 +66,10 @@ class NetworkSpec extends SparkSpec {
       }.toSeq
       assert(cur === curLocal)
       assert(cur.find(_._1 == 2L).get._3 === Some(4.0))
+      // a repeated id answers once, like dariadb's Id2Meas map
+      assert(client.currentValue(Seq(2L, 1L, 2L, 1L), 0L) === cur)
+      assert(client.readTimePoint(QueryTimePoint(Seq(999L, 1L, 999L, 2L), 0L,
+        ts("2024-03-01 10:45:00"))).map(_._1) === Seq(1L, 2L, 999L))
 
       // SUBSCRIBE: the id-1 ERROR appends were pushed (seq 2 then 5),
       // the CLICK/SIGNUP and id-2 rows were filtered server-side
