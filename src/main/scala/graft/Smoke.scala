@@ -63,7 +63,7 @@ object Smoke {
 
   lazy val entries: Seq[Entry] =
     smoke.CoreSmokes.entries ++ smoke.TextSmokes.entries ++
-      smoke.VectorSmokes.entries ++ smoke.CleanSmokes.entries
+      smoke.VectorSmokes.entries ++ smoke.CleanSmokes.entries ++ smoke.ConnectSmokes.entries
 
   /** Run one entry on `spark`; rows go to `sink`. Throws after the
     * verdict row when an assert fails. */

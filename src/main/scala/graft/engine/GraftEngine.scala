@@ -100,7 +100,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * with the maintenance lease (same owner token), so maintain() and
     * an append from another thread of the SAME engine never deadlock. */
   private def maybeLeased[T](body: => T): T =
-    if (spark.conf.get("spark.graft.lock.appends", "false").toBoolean) locked(body)
+    if (graft.core.Conf.bool(spark, "spark.graft.lock.appends", false)) locked(body)
     else body
 
   // ---- MEMORY-strategy hot level -----------------------------------
@@ -562,15 +562,14 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
 
   // ---- O6/O8/O9 aggregates -----------------------------------------
   /** O6: min/max time per series — answered from the stats index when
-    * present (a |days|×1 aggregate over index rows, no data-file scan;
-    * min/max time are merge-invariant, so the index answer is exact
-    * even under duplicate-key rewrites). */
+    * it is certified (a |days|×1 aggregate over index rows, no data-file
+    * scan, bracketed by [[indexLookup]]; min/max time are
+    * merge-invariant, so the index answer is exact even under
+    * duplicate-key rewrites). */
   def minMaxTime(id: Long): Option[(Timestamp, Timestamp)] = {
-    val r =
-      if (hasStats && hotSize == 0L)
-        TsdbStorage.readStats(spark, statsPath).filter(col("id") === id)
-          .agg(min("min_time"), max("max_time")).head()
-      else merged.filter(col("id") === id).agg(min("time"), max("time")).head()
+    val r = indexLookup(TsdbStorage.readStats(spark, statsPath).filter(col("id") === id)
+        .agg(min("min_time"), max("max_time")).head())
+      .getOrElse(merged.filter(col("id") === id).agg(min("time"), max("time")).head())
     if (r.isNullAt(0)) None else Some((r.getTimestamp(0), r.getTimestamp(1)))
   }
 
@@ -580,13 +579,13 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
         min("value").as("min_value"), max("value").as("max_value"), sum("value").as("sum_value"))
 
   /** O8: the per-series Statistic struct over an interval. Served from
-    * the chunk-stat index when usable, scan otherwise. (statIndexed
-    * itself delegates inverted intervals back to the scan path.) The
-    * index only covers the durable store, so unflushed hot rows force
-    * the scan path — which reads the hot level through mergedRange. */
+    * the chunk-stat index when [[indexLookup]] certifies the lookup,
+    * scan otherwise. (statIndexed itself delegates inverted intervals
+    * back to the scan path.) The index only covers the durable store,
+    * so unflushed hot rows force the scan path — which reads the hot
+    * level through mergedRange. */
   def stat(id: Long, from: Timestamp, to: Timestamp): DataFrame =
-    if (hasStats && hotSize == 0L) statIndexed(id, from, to)
-    else statScan(id, from, to)
+    indexLookup(statIndexed(id, from, to)).getOrElse(statScan(id, from, to))
 
   /** Rebuild the chunk-stat index from scratch — the explicit repair
     * path for an index left uncertified by a crash (or for a store that
@@ -611,12 +610,13 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
         .filter(col("id") === id && col("time").between(lit(from), lit(to))))
 
   /** Index path: fully-covered days are answered from per-(day, id)
-    * index rows (no data files touched); at most the two boundary days
-    * are scanned with partition pruning. The index stores MERGED stats
-    * (refreshed per touched day at append), so the two paths agree
-    * exactly — EngineSpec asserts it across append/rewrite/compact/
-    * eraseOld. A 100-day stat over a 100 TB store reads ~100 tiny index
-    * rows plus ≤ 2 day partitions. */
+    * index rows, collected here (bounded by the covered days; no data
+    * files touched), so the returned frame never reads the index again;
+    * at most the two boundary days are scanned with partition pruning.
+    * The index stores MERGED stats (refreshed per touched day at
+    * append), so the two paths agree exactly — EngineSpec asserts it
+    * across append/rewrite/compact/eraseOld. A 100-day stat over a
+    * 100 TB store reads ~100 tiny index rows plus ≤ 2 day partitions. */
   def statIndexed(id: Long, from: Timestamp, to: Timestamp): DataFrame = {
     // inverted interval: the covered-day range is empty, but the
     // boundary-day scans below would still match real rows — delegate
@@ -634,13 +634,13 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     val coveredFrom = if (fromCovered) fromDay else fromDay.plusDays(1)
     val coveredTo = if (toCovered) toDay else toDay.minusDays(1)
 
-    val stats = TsdbStorage.readStats(spark, statsPath).filter(col("id") === id)
-    val partialCols = Seq("id", "cnt", "min_time", "max_time", "min_value", "max_value", "sum_value")
-    val full =
-      if (coveredFrom.isAfter(coveredTo)) stats.filter(lit(false)).select(partialCols.map(col): _*)
-      else stats.filter(col("day").between(
-          lit(java.sql.Date.valueOf(coveredFrom)), lit(java.sql.Date.valueOf(coveredTo))))
-        .select(partialCols.map(col): _*)
+    val covered = TsdbStorage.readStats(spark, statsPath)
+      .filter(col("id") === id && (if (coveredFrom.isAfter(coveredTo)) lit(false)
+        else col("day").between(
+          lit(java.sql.Date.valueOf(coveredFrom)), lit(java.sql.Date.valueOf(coveredTo)))))
+      .select("id", "cnt", "min_time", "max_time", "min_value", "max_value", "sum_value")
+    val full = spark.createDataFrame(
+      java.util.Arrays.asList(covered.collect(): _*), covered.schema)
 
     // boundary-day scans: each is a single pruned partition
     val edgeBounds: Seq[(Timestamp, Timestamp)] =
@@ -708,17 +708,18 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * stats index — bounded index rows, no data files touched. Flag
     * filters are ignored (an overcount only routes to the equally-exact
     * distributed path). 0 when the index cannot answer (absent, stale,
-    * or unflushed hot rows) — the default path then applies. */
+    * unflushed hot rows, or changed under the [[indexLookup]] bracket)
+    * — the default path then applies. */
   private def maxSeriesRowsInRange(q: QueryInterval): Long = {
-    if (!(hasStats && hotSize == 0L) || q.from.after(q.to)) return 0L
+    if (q.from.after(q.to)) return 0L
     val utc = java.time.ZoneOffset.UTC
     val fromDay = java.sql.Date.valueOf(q.from.toInstant.atZone(utc).toLocalDate)
     val toDay = java.sql.Date.valueOf(q.to.toInstant.atZone(utc).toLocalDate)
-    TsdbStorage.readStats(spark, statsPath)
+    indexLookup(TsdbStorage.readStats(spark, statsPath)
       .filter(idPred(q.ids) && col("day").between(lit(fromDay), lit(toDay)))
       .groupBy("id").agg(sum("cnt").as("c"))
       .agg(coalesce(max("c"), lit(0L)))
-      .head().getLong(0)
+      .head().getLong(0)).getOrElse(0L)
   }
 
   // ---- O10 subscribe (delegates to the one subscription definition) --

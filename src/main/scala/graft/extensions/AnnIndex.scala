@@ -121,24 +121,12 @@ object AnnIndex {
   val ContentCheckKey = "spark.graft.index.contentCheck"
 
   private[extensions] def contentCheck(spark: SparkSession): Boolean =
-    spark.conf.get(ContentCheckKey, "true").toBoolean
+    graft.core.Conf.bool(spark, ContentCheckKey, true)
 
-  /** Session conf: corpus-row gate past which [[build]] fuses the
-    * fingerprint's content-xor term into the codes pass (Observation on
-    * the shared scan) instead of paying a dedicated full-vector hash
-    * scan — at 10M vectors that scan was 48.5 s of a 232 s build, and
-    * it grows linearly forever. Below the gate (default 1M — every
-    * oracle SF by 200×) the build computes the upfront fingerprint
-    * exactly as before. `0`/negative forces the fused path at any size
-    * (what the spec uses to pin fused ≡ unfused). */
-  val FusedFingerprintMinRowsKey = "spark.graft.ann.fusedFingerprintMinRows"
-
-  private[extensions] def fusedFingerprintMinRows(spark: SparkSession): Long =
-    spark.conf.get(FusedFingerprintMinRowsKey, "1000000").toLong
-
-  /** The PROVISIONAL content term for training-memo keys on the fused
-    * build path: an md5-head of the driver-side corpus identity (plan
-    * hash + sorted file listing — [[corpusIdentity]]). Distinct from
+  /** The PROVISIONAL content term for [[build]]'s training-memo keys
+    * (the true term is observed later, on the codes pass): an md5-head
+    * of the driver-side corpus identity (plan hash + sorted file
+    * listing — [[corpusIdentity]]). Distinct from
     * any true xxhash64 xor with 2⁻⁶⁴ coincidence; collides with itself
     * exactly when the same session rebuilds the same immutable frame,
     * which is precisely when reusing the trained parameters is right. */
@@ -310,7 +298,7 @@ object AnnIndex {
     * they are true (id, content) duplicates. One agg pass; empty corpus
     * → (0, 0, 0, 0, 0). Shared with [[SimilarityQueries.kmeansCentroids]]
     * as the memo key for the trained quantizer. */
-  private[extensions] def fingerprint(corpus: DataFrame): (Long, Long, Long, Long, Long) = {
+  private[graft] def fingerprint(corpus: DataFrame): (Long, Long, Long, Long, Long) = {
     val r = corpus.agg(
       count(col("vec_id")), coalesce(min("vec_id"), lit(0L)),
       coalesce(max("vec_id"), lit(0L)), coalesce(sum("vec_id"), lit(0L)),
@@ -495,32 +483,22 @@ object AnnIndex {
             planes: Int = SimilarityQueries.N_PLANES,
             bandBits: Int = 0, kCells: Int = 0): Unit = locked(spark, dir) {
     recoverCompact(spark, dir)
-    // Fingerprint (round 12): the content-xor term is the build's only
-    // purpose for a dedicated full-vector scan (48.5 s of the 10M
-    // build), and the CODES pass reads every (vec_id, v) row anyway —
-    // so past [[FusedFingerprintMinRows]] the xor RIDES the codes write
-    // as an Observation (one scan fewer), and the upfront pass prunes
-    // to the vec_id column (id stats only). Below the gate the build
-    // is byte-identical to round 11: full fingerprint upfront, memo
-    // keys carry the true content term, every oracle SF replays
-    // unchanged. Past the gate the training-memo keys carry a
-    // PROVISIONAL content term (md5-head of plan hash + file listing —
-    // the contentProofs identity): sound for the build's own immutable
-    // frame, and post-build queries serve from the certified index,
-    // never from these memo entries.
+    // Fingerprint: the content-xor term RIDES the codes write as an
+    // Observation (the codes pass reads every (vec_id, v) row anyway), so
+    // the upfront pass prunes to the vec_id column (id stats only). The
+    // training-memo keys carry a PROVISIONAL content term (md5-head of
+    // plan hash + file listing — the contentProofs identity): sound for
+    // the build's own immutable frame, and post-build queries serve from
+    // the certified index, never from these memo entries.
     val (n, idMin, idMax, idSum) = timed(logger, "id stats (pruned vec_id scan)")(idStats(raw))
-    val fused = n >= fusedFingerprintMinRows(spark)
-    val cxorPre: Option[Long] =
-      if (fused) None
-      else Some(timed(logger, "fingerprint content term (1 hash scan)")(fingerprint(raw)._5))
-    val fp = (n, idMin, idMax, idSum, cxorPre.getOrElse(provisionalXor(raw)))
+    val fp = (n, idMin, idMax, idSum, provisionalXor(raw))
     val bb = if (bandBits > 0) bandBits else advisedBandBits(n, planes)
     require(planes % bb == 0, s"planes ($planes) must be a multiple of bandBits ($bb)")
     val kind = if (raw.columns.contains("label")) "label" else "kmeans"
     TsdbStorage.markStatsOutOfSync(spark, dir)
     timed(logger, s"quantizer ($kind centroids, corpus aggregation + write)") {
       // n known (the id stats just counted): the label path switches
-      // to the one-pass vector-mean aggregate past its gate; the
+      // to the one-pass vector-mean aggregate from LabelMeanMinRows on; the
       // kmeans path reuses the build's fingerprint for its memo key
       // instead of paying a second content scan
       val cent = SimilarityQueries.quantizer(spark, raw, kCells, n, Some(fp)).coalesce(1)
@@ -562,25 +540,22 @@ object AnnIndex {
       }
     }
     val e = SimilarityQueries.prep(spark, raw)
-    // fused path: the content xor is OBSERVED on the prepped frame as
-    // the codes projection streams over it — CollectMetrics aggregates
+    // the content xor is OBSERVED on the prepped frame as the codes
+    // projection streams over it — CollectMetrics aggregates
     // per task and merges successful tasks only, so the value equals
-    // fingerprint(raw)._5 (AnnIndexSpec pins the equality). Sound here
-    // because the build's codes plan is the single-scan projection
-    // (freshly-written default-scheme books always take the packCol
-    // path); a plan that read `e` twice would fold duplicates into the
-    // xor and cancel them.
+    // fingerprint(raw)._5. AnnIndexSpec pins the equality on a full
+    // corpus (the single-scan packCol projection) and on one too small
+    // to fill a PQ book (the join form, which reads `e` in more than
+    // one branch).
     val obs = org.apache.spark.sql.Observation("ann-build-fp")
-    val eForCodes =
-      if (fused)
-        e.observe(obs, coalesce(bit_xor(xxhash64(col("vec_id"), col("v"))), lit(0L)).as("cxor"))
-      else e
+    val observed =
+      e.observe(obs, coalesce(bit_xor(xxhash64(col("vec_id"), col("v"))), lit(0L)).as("cxor"))
     timed(logger, "codes (ONE projection: SRP + cell + packed PQ + residual PQ, map-side write)") {
-      codesFrame(eForCodes, planes, readCentroids(spark, dir), Some(readPqCodebooks(spark, dir)),
+      codesFrame(observed, planes, readCentroids(spark, dir), Some(readPqCodebooks(spark, dir)),
           Some(readPqResCodebooks(spark, dir)))
         .write.mode("overwrite").parquet(codesPath(dir))
     }
-    val cxor = cxorPre.getOrElse(obs.get("cxor").asInstanceOf[Long])
+    val cxor = obs.get("cxor").asInstanceOf[Long]
     // meta lands AFTER the codes pass (it now carries the observed
     // content term); certification below is still the commit point, so
     // crash-ordering is unchanged — an uncertified dir never serves

@@ -330,13 +330,13 @@ object DedupQueries {
   private[graft] val LeanShingleMinRowsKey = "spark.graft.dedup.leanShingleMinRows"
 
   private def leanShingleMinRows(s: SparkSession): Long =
-    s.conf.get(LeanShingleMinRowsKey, "2000000").toLong
+    graft.core.Conf.long(s, LeanShingleMinRowsKey, 2000000L)
 
   private[graft] val MaxBucketKey = "spark.graft.dedup.maxBandBucket"
   private[graft] val DefaultMaxBucket = 2000
 
   private def maxBucket(s: SparkSession): Int =
-    s.conf.get(MaxBucketKey, DefaultMaxBucket.toString).toInt
+    graft.core.Conf.int(s, MaxBucketKey, DefaultMaxBucket)
 
   /** Buckets actually DROPPED by [[capHotBuckets]] since JVM start —
     * the runtime signal (the compactCount pattern) that a capped run is
@@ -1421,10 +1421,9 @@ object DedupQueries {
 
   /** True ⇒ serve the exact all-pairs tier (see [[RouteKey]]). */
   private def exactTier(s: SparkSession, n: Long): Boolean =
-    s.conf.get(RouteKey, "") match {
-      case "exact" => true
-      case "lsh"   => false
-      case _       => n <= EXACT_TIER_MAX_ROWS
+    graft.core.Conf.choice(s, RouteKey, Seq("exact", "lsh")) match {
+      case Some(route) => route == "exact"
+      case None        => n <= EXACT_TIER_MAX_ROWS
     }
 
   /** The exact block-partitioned all-pairs plan (the ≤ gate tier). */

@@ -244,27 +244,27 @@ object SimilarityQueries {
   // -------------------------------------------------------------------
   private[graft] val N_PROBE = 2
 
+  /** Corpus rows from which [[quantizer]] derives LABEL centroids with
+    * the one-pass vector-mean aggregate instead of the oracle-replayed
+    * explode + per-dim avg (640M exploded rows at 10M×64). Only a
+    * caller that knows the row count (AnnIndex.build) crosses it; every
+    * oracle SF (≤ 5k rows) stays on the explode form. Both forms stay
+    * because the explode form measured 1.7× slower at 1M rows. */
+  private[graft] val LabelMeanMinRows = 1000000L
+
   /** The IVF coarse quantizer: per-label centroid table, rounded 6dp so
     * both engines (and index-build vs query-time) derive bit-identical
     * cells. dims×cells rows — always broadcastable. Shared with
     * AnnIndex.build so the persisted centroids are the same values the
-    * live path derives. */
-  /** Session conf: row count at which the LABEL centroid derivation
-    * switches from the oracle-replayed explode + per-dim avg (640M
-    * exploded rows at 10M×64) to the one-pass vector-mean aggregate
+    * live path derives. `vectorMean` picks the one-pass form
     * (`Summarizer.mean` over ml vectors — per-dim running sums, no
-    * explode). Same mean, different summation tree: values agree to
-    * the 6dp both forms round to, but the at-scale form is not
-    * bit-replayed by the oracle — the sampled-kmeans contract. Every
-    * oracle SF (≤ 5k rows) stays on the explode form. 0 disables. */
-  private[graft] val LabelMeanMinRowsKey = "spark.graft.ann.labelMeanMinRows"
-  private[graft] val DefaultLabelMeanMinRows = 1000000L
-
+    * explode): same mean, different summation tree, so values agree to
+    * the 6dp both forms round to, but it is not bit-replayed by the
+    * oracle — the sampled-kmeans contract. */
   private[graft] def centroidTable(s: SparkSession, raw: DataFrame,
-                                        n: Long = -1L): DataFrame = {
+                                   vectorMean: Boolean = false): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    val gate = s.conf.get(LabelMeanMinRowsKey, DefaultLabelMeanMinRows.toString).toLong
-    if (gate > 0 && n >= gate) {
+    if (vectorMean) {
       import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
       raw.select(col("label").cast("long").as("clabel"),
           array_to_vector(expr("transform(embedding, x -> CAST(x AS DOUBLE))")).as("fv"))
@@ -283,10 +283,6 @@ object SimilarityQueries {
         .withColumn("cnorm", sqrt(call_function("graft_dot", col("cv"), col("cv"))))
   }
 
-  /** The quantizer an [[AnnIndex]] build derives: label centroids when
-    * the corpus carries a label column (the supervised fast path — one
-    * grouped pass), deterministic k-means when it does not (the general
-    * case: a real embedding corpus has no labels). */
   /** The coarse quantizer for a corpus: label centroids when labeled,
     * deterministic k-means otherwise. `k ≤ 0` means the default
     * [[KMEANS_K]]; an explicit k is the retune path
@@ -294,7 +290,7 @@ object SimilarityQueries {
   private[graft] def quantizer(s: SparkSession, raw: DataFrame, k: Int = 0,
                                     n: Long = -1L,
                                     fpKnown: Option[(Long, Long, Long, Long, Long)] = None): DataFrame =
-    if (raw.columns.contains("label")) centroidTable(s, raw, n)
+    if (raw.columns.contains("label")) centroidTable(s, raw, vectorMean = n >= LabelMeanMinRows)
     else kmeansCentroids(s, raw, if (k > 0) k else KMEANS_K, KMEANS_ITERS, fpKnown)
 
   /** (clabel, cv, cnorm) frame from driver-held centroid vectors —
@@ -392,7 +388,7 @@ object SimilarityQueries {
   private[graft] val TrainSampleKey = "spark.graft.ann.trainSampleRows"
 
   private[graft] def trainSampleTarget(s: SparkSession, k: Long): Long = {
-    val conf = s.conf.get(TrainSampleKey, "0").toLong
+    val conf = graft.core.Conf.long(s, TrainSampleKey, 0L)
     if (conf < 0) Long.MaxValue
     // explicit targets are floored at 64/centroid: a target below k
     // would silently starve the seed TakeOrdered and train fewer cells
@@ -521,11 +517,12 @@ object SimilarityQueries {
     * table is k driver-held rows by construction (it IS the quantizer),
     * shipped into the expression as literals — the broadcast analog
     * with zero join machinery. */
-  private[graft] def assignCells(vecs: DataFrame, cent: DataFrame): DataFrame =
-    vecs.select(col("vec_id"), nearestCellCol(cent).as("cell"))
+  private[graft] def assignCells(vecs: DataFrame, cent: DataFrame,
+                                 twoLevel: Option[Boolean] = None): DataFrame =
+    vecs.select(col("vec_id"), nearestCellCol(cent, twoLevel).as("cell"))
 
-  /** Session conf: centroid count at which [[nearestCellCol]] switches
-    * to the TWO-LEVEL assignment expression (`graft_nearest_cell2`):
+  /** Centroid count at which [[nearestCellCol]] switches to the
+    * TWO-LEVEL assignment expression (`graft_nearest_cell2`):
     * pre-rank √k unit super-centroids, exact argmin over the top-3
     * supers' members — ~2√k dots/row instead of k, the FAISS-style
     * answer to assignment itself becoming the ingest wall once
@@ -534,9 +531,8 @@ object SimilarityQueries {
     * supers assigns to its best probed cell (the `vector.cells2` smoke
     * measures the rate; TwoLevelCellSpec pins determinism and the
     * agreement bound). Every oracle-replayed quantizer (k ≤ 250 across
-    * registry + smokes) stays on the exact full scan. 0 disables. */
-  private[graft] val TwoLevelMinKKey = "spark.graft.ann.twoLevelMinK"
-  private[graft] val DefaultTwoLevelMinK = 512
+    * registry + smokes) stays on the exact full scan. */
+  private[graft] val TwoLevelMinK = 512
 
   /** Deterministic driver-side clustering of the k centroids into
     * ⌈√k⌉ super-cells (spherical Lloyd, 5 iterations, first-k seeding —
@@ -604,9 +600,12 @@ object SimilarityQueries {
 
   /** The assignment as a COLUMN over any frame carrying (v, norm) —
     * what lets AnnIndex derive its whole codes table in one projection
-    * (SRP code + cell + packed PQ are all map-side expressions). Past
-    * [[TwoLevelMinKKey]] cells the column is the two-level pruned form. */
-  private[graft] def nearestCellCol(cent: DataFrame): org.apache.spark.sql.Column = {
+    * (SRP code + cell + packed PQ are all map-side expressions). From
+    * [[TwoLevelMinK]] cells on the column is the two-level pruned form;
+    * `twoLevel` pins one path whatever k is (the exact scan is the
+    * reference the two-level form is measured against). */
+  private[graft] def nearestCellCol(cent: DataFrame,
+                                    twoLevel: Option[Boolean] = None): org.apache.spark.sql.Column = {
     graft.functions.VectorFunctions.register(cent.sparkSession)
     val rows = cent.select(col("clabel").cast("long"), col("cv"), col("cnorm").cast("double"))
       .collect() // bounded: k centroid rows (the quantizer is driver-sized)
@@ -618,9 +617,8 @@ object SimilarityQueries {
     val cvs = rows.map(_.getSeq[Double](1)).toSeq
     val cnorms = rows.map(_.getDouble(2)).toSeq
     val labelType = cent.schema("clabel").dataType
-    val minK = cent.sparkSession.conf.get(TwoLevelMinKKey, DefaultTwoLevelMinK.toString).toInt
     val assignExpr =
-      if (minK > 0 && rows.length >= minK) {
+      if (twoLevel.getOrElse(rows.length >= TwoLevelMinK)) {
         val (su, members) = superCluster(cvs.map(_.toArray).toArray, cnorms.toArray)
         call_function("graft_nearest_cell2", col("v"), col("norm"),
           typedlit(labels), typedlit(cvs), typedlit(cnorms),

@@ -424,7 +424,7 @@ object NearestCellExpr {
   * fields like the centroid tables. Divergence contract: a row whose
   * true nearest centroid lives outside both probed supers may assign to
   * its best PROBED centroid instead — bounded-divergent, measured, and
-  * only engaged past `spark.graft.ann.twoLevelMinK` (every
+  * only engaged from `SimilarityQueries.TwoLevelMinK` cells on (every
   * oracle-replayed quantizer is far below it). */
 case class NearestCell2Expr(vec: Expression, norm: Expression,
                             labels: Seq[Long], cvs: Seq[Seq[Double]],

@@ -417,14 +417,12 @@ object VectorSmokes {
       materialize(c, f"materialize $rows%,d vectors near $k2 planted centers", eBase).e
     else eBase
     val full = c.time(f"FULL-SCAN assignment, $slice%,d-row slice ($k2 dots/row)") {
-      c.withConf(SimilarityQueries.TwoLevelMinKKey, "0") {
-        val f = SimilarityQueries.assignCells(e.filter(col("vec_id") < slice), cent)
-          .select(col("vec_id"), col("cell").as("cell_full")).persist()
-        f.count(); f
-      }
+      val f = SimilarityQueries.assignCells(e.filter(col("vec_id") < slice), cent, twoLevel = Some(false))
+        .select(col("vec_id"), col("cell").as("cell_full")).persist()
+      f.count(); f
     }
     val two = c.time(f"TWO-LEVEL assignment, ALL $rows%,d rows (~4*sqrt($k2) dots/row)") {
-      val t = SimilarityQueries.assignCells(e, cent).persist()
+      val t = SimilarityQueries.assignCells(e, cent, twoLevel = Some(true)).persist()
       t.count(); t
     }
     val diff = two.withColumnRenamed("cell", "cell_two").join(full, "vec_id")

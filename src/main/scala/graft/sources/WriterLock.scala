@@ -72,7 +72,7 @@ object WriterLock {
   }
 
   private def staleMs(spark: SparkSession): Long =
-    spark.conf.get(ConfStaleMs, DefaultStaleMs.toString).toLong
+    graft.core.Conf.long(spark, ConfStaleMs, DefaultStaleMs)
 
   /** Run `body` holding the writer lease for `dir`. Re-entrant for the
     * same `owner`; any other live holder → [[ConcurrentWriterException]].

@@ -341,7 +341,7 @@ object StreamingClean {
   private[graft] val CompactMinFilesKey = "spark.graft.clean.compactMinFiles"
 
   private def compactMinFiles(spark: SparkSession): Int =
-    spark.conf.get(CompactMinFilesKey, "48").toInt
+    graft.core.Conf.int(spark, CompactMinFilesKey, 48)
 
   /** The closed admission loop over a parquet document feed: verdicts
     * land under `verdictsDir` (one subdir per batch), admitted

@@ -306,32 +306,30 @@ class AnnIndexSpec extends SparkSpec {
     } finally spark.conf.unset(AnnIndex.ContentCheckKey)
   }
 
-  test("fused fingerprint (observed on the codes pass) builds an index identical to the upfront-scan build") {
-    // Past FusedFingerprintMinRows the build's content-xor term rides
-    // the codes write as an Observation instead of a dedicated hash
-    // scan. Forcing the fused path at test scale must yield: the SAME
-    // meta fingerprint (observed xor ≡ fingerprint(raw) xor), the SAME
-    // codes table, and a certified index resolveFor serves.
-    val dirA = tmpDir("graft-ann-fusedA")
-    val dirB = tmpDir("graft-ann-fusedB")
-    AnnIndex.build(spark, raw, dirA) // default gate: upfront scan (the r11 path)
-    spark.conf.set(AnnIndex.FusedFingerprintMinRowsKey, "0")
-    try AnnIndex.build(spark, raw, dirB)
-    finally spark.conf.unset(AnnIndex.FusedFingerprintMinRowsKey)
-    val (ma, mb) = (AnnIndex.readMeta(spark, dirA), AnnIndex.readMeta(spark, dirB))
-    assert(mb.contentXor === ma.contentXor,
-      "observed content term must equal the dedicated-scan fingerprint")
-    assert((mb.corpusRows, mb.idMin, mb.idMax, mb.idSum) ===
-      ((ma.corpusRows, ma.idMin, ma.idMax, ma.idSum)))
-    assert(AnnIndex.usable(spark, dirB))
-    val codesOf = (d: String) => AnnIndex.readCodes(spark, d)
-      .orderBy("vec_id").collect().toSeq.map(_.toSeq)
-    assert(codesOf(dirB) === codesOf(dirA), "fused build writes identical codes")
-    withIndex(dirB) {
-      assert(AnnIndex.resolveFor(spark, raw) === Some(dirB),
-        "the fused-build fingerprint certifies against the live corpus")
+  test("observed build content term equals the fingerprint scan") {
+    // The build's content-xor term rides the codes write as an
+    // Observation instead of a dedicated hash scan. It must equal the
+    // reference scan, fingerprint(raw), and the index it certifies must
+    // serve the live corpus and pass the full-content audit.
+    val dir = tmpDir("graft-ann-fp")
+    AnnIndex.build(spark, raw, dir)
+    val m = AnnIndex.readMeta(spark, dir)
+    val (rows, idMin, idMax, idSum, cxor) = AnnIndex.fingerprint(raw)
+    assert(m.contentXor === cxor, "observed content term must equal the fingerprint scan")
+    assert((m.corpusRows, m.idMin, m.idMax, m.idSum) === ((rows, idMin, idMax, idSum)))
+    assert(AnnIndex.usable(spark, dir))
+    withIndex(dir) {
+      assert(AnnIndex.resolveFor(spark, raw) === Some(dir),
+        "the build's fingerprint certifies against the live corpus")
     }
-    assert(AnnIndex.verify(spark, dirB, raw), "the full-content audit passes")
+    assert(AnnIndex.verify(spark, dir, raw), "the full-content audit passes")
+    // 10 vectors cannot fill a 16-code PQ book, so the codes pass takes
+    // the join form, which reads the observed frame more than once
+    val tiny = raw.filter(col("vec_id") < 10)
+    val tinyDir = tmpDir("graft-ann-fp-tiny")
+    AnnIndex.build(spark, tiny, tinyDir)
+    assert(AnnIndex.readMeta(spark, tinyDir).contentXor === AnnIndex.fingerprint(tiny)._5)
+    assert(AnnIndex.verify(spark, tinyDir, tiny))
   }
 
   test("streamed replay: an already-applied (appId, batchId) append is a no-op") {

@@ -500,6 +500,11 @@ class EngineSpec extends SparkSpec {
     val qi = QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 23:00:00"))
     val qp = QueryTimePoint(Seq(1L), 0L, ts("2024-03-03 12:00:00"))
     val (interval, point) = (rows(engine.readIntervalScan(qi)), rows(engine.readTimePointScan(qp)))
+    // covered days 03-01 and 03-02 come from the index, 03-03 is a boundary scan
+    val (from, to) = (ts("2024-03-01 00:00:00"), ts("2024-03-03 12:00:00"))
+    val stat = rows(engine.statScan(1L, from, to))
+    val span = Some((ts("2024-03-01 06:00:00"), ts("2024-03-03 06:00:00")))
+    val calc = rows(engine.calculator(qi))
 
     // The interleaving, made deterministic: the reader's index scan has
     // listed its files (at DataFrame creation); before it executes, a
@@ -534,6 +539,15 @@ class EngineSpec extends SparkSpec {
       armed = true
       assert(rows(engine.readTimePoint(qp)) === point)
       assert(!armed, "the append ran inside the point lookup")
+      armed = true
+      assert(rows(engine.stat(1L, from, to)) === stat)
+      assert(!armed, "the append ran inside the stat lookup")
+      armed = true
+      assert(engine.minMaxTime(1L) === span)
+      assert(!armed, "the append ran inside the minMaxTime lookup")
+      armed = true
+      assert(rows(engine.calculator(qi)) === calc)
+      assert(!armed, "the append ran inside the calculator's skew lookup")
     } finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ eq AppendMidLookup)
   }

@@ -52,22 +52,30 @@ class SkewToolsSpec extends SparkSpec {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // duplicate-heavy values (small integer grid) force rank ties; key 9
-    // gets a single row (the n=1 interpolation edge); p ∈ {0, 1} pin the
-    // rank extremes
+    // gets a single row (the n=1 interpolation edge); key 10 mixes NaN,
+    // -0.0 and +0.0 in one series; p ∈ {0, 1} pin the rank extremes
     val gen = Gen.listOfN(300, for {
       k <- Gen.choose(1L, 8L)
       v <- Gen.choose(-20, 20).map(_ / 4.0)
     } yield (k, v))
     val ps = Seq("p0" -> 0.0, "p37" -> 0.37, "median" -> 0.5, "p99" -> 0.99, "p100" -> 1.0)
     for (i <- 1 to 3) {
-      val rows = gen(Gen.Parameters.default, Seed(7L + i)).getOrElse(sys.error("gen failed")) :+
-        ((9L, 3.25))
+      val rows = gen(Gen.Parameters.default, Seed(7L + i)).getOrElse(sys.error("gen failed")) ++
+        Seq((9L, 3.25)) ++
+        Seq(-0.0, 0.0, Double.NaN, -0.0, -1.5, 0.0, Double.NaN, 2.0).take(3 + 2 * i).map(v => (10L, v))
       val df = spark.createDataFrame(rows).toDF("id", "value")
       val aggs = ps.map { case (n, p) => expr(s"percentile(value, ${p}D)").as(n) }
-      val expected = df.groupBy(col("id").as("k")).agg(aggs.head, aggs.tail: _*)
-        .orderBy("k").collect().map(_.toSeq)
-      val routed = SkewTools.distributedPercentiles(df, col("id"), col("value"), ps)
-        .orderBy("k").collect().map(_.toSeq)
+      // bit for bit (NaN ≠ NaN under ==), except the sign of a zero: the
+      // distributed route groups on the value, and Spark normalizes a
+      // grouping key's -0.0 to 0.0, so a percentile that lands on -0.0
+      // answers +0.0 there; the buffering aggregate keeps -0.0 and +0.0
+      // as separate keys in hash order. Both are 0.0 under SQL equality.
+      def bits(d: org.apache.spark.sql.DataFrame) = d.orderBy("k").collect().map(_.toSeq.map {
+        case v: Double => java.lang.Double.doubleToRawLongBits(if (v == 0.0) 0.0 else v)
+        case other => other
+      }).toSeq
+      val expected = bits(df.groupBy(col("id").as("k")).agg(aggs.head, aggs.tail: _*))
+      val routed = bits(SkewTools.distributedPercentiles(df, col("id"), col("value"), ps))
       assert(routed === expected, s"case $i diverged")
     }
   }

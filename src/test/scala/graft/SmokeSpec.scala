@@ -13,11 +13,12 @@ class SmokeSpec extends SparkSpec {
     new java.io.File(System.getProperty("java.io.tmpdir")).list()
       .filter(_.startsWith("graft-smoke")).toSet
 
-  test("the table names the 16 entries once each") {
+  test("the table names the 17 entries once each") {
     val names = Smoke.entries.map(_.name)
     assert(names.toSet === Set("engine", "skew", "export", "span", "temporal",
       "text", "text.retrieval", "text.cascade", "text.hot", "text.sh64",
-      "vector", "vector.ivfpq", "vector.cells2", "vector.respq", "clean", "clean.loop"))
+      "vector", "vector.ivfpq", "vector.cells2", "vector.respq", "clean", "clean.loop",
+      "connect"))
     assert(names.distinct.size === names.size)
   }
 

@@ -94,16 +94,14 @@ class TrainSampleSpec extends SparkSpec {
   }
 
   test("label-centroid vector-mean path agrees with the explode form to the shared 6dp rounding") {
-    // past spark.graft.ann.labelMeanMinRows the label quantizer switches
+    // from LabelMeanMinRows corpus rows on the label quantizer switches
     // from explode + per-dim avg to the one-pass Summarizer.mean — same
     // mean, different summation tree; both round to 6dp, so per-dim
     // values agree within one ulp of that rounding
     val explodeForm = SimilarityQueries.centroidTable(spark, emb)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    spark.conf.set(SimilarityQueries.LabelMeanMinRowsKey, "1")
-    val meanForm = try SimilarityQueries.centroidTable(spark, emb, n = emb.count())
+    val meanForm = SimilarityQueries.centroidTable(spark, emb, vectorMean = true)
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    finally spark.conf.unset(SimilarityQueries.LabelMeanMinRowsKey)
     assert(meanForm.keySet === explodeForm.keySet)
     for ((l, cv) <- explodeForm) {
       val mv = meanForm(l)

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.extensions.SimilarityQueries
 
-/** Two-level coarse assignment (SimilarityQueries.nearestCellCol past
-  * spark.graft.ann.twoLevelMinK): rank √k unit super-centroids, exact
+/** Two-level coarse assignment (SimilarityQueries.nearestCellCol from
+  * TwoLevelMinK cells on): rank √k unit super-centroids, exact
   * argmin over the top-3 supers' members — ~4√k dots/row instead of k.
   * Contract pinned here: deterministic; EXACT on clustered geometry
   * (the true cell's centroid is in the nearest super when centroids
@@ -41,19 +41,15 @@ class TwoLevelCellSpec extends SparkSpec {
     rows.toDF("vec_id", "v", "norm")
   }
 
-  private def withMinK[T](k: Int)(body: => T): T = {
-    spark.conf.set(SimilarityQueries.TwoLevelMinKKey, k.toString)
-    try body finally spark.conf.unset(SimilarityQueries.TwoLevelMinKKey)
-  }
-
-  private def assigns(minK: Int): Map[Long, Long] =
-    withMinK(minK)(SimilarityQueries.assignCells(planted, centFrame).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+  private def assigns(vecs: org.apache.spark.sql.DataFrame,
+                      twoLevel: Option[Boolean]): Map[Long, Long] =
+    SimilarityQueries.assignCells(vecs, centFrame, twoLevel).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("two-level assignment is deterministic and EXACT on separated clustered geometry") {
-    val exact = assigns(0)            // 0 disables the two-level path
-    val two = assigns(16)             // force two-level at k=64
-    assert(two === assigns(16), "deterministic across invocations")
+    val exact = assigns(planted, Some(false)) // the exact full scan
+    val two = assigns(planted, Some(true))    // force two-level at k=64
+    assert(two === assigns(planted, Some(true)), "deterministic across invocations")
     assert(two === exact, "separated centroids: the true cell's centroid is in the probed supers")
     assert(exact === (0L until 512L).map(i => i -> (i % K)).toMap,
       "sanity: every planted vector assigns to its planted cell")
@@ -65,10 +61,8 @@ class TwoLevelCellSpec extends SparkSpec {
       (i, v, math.sqrt(v.map(x => x * x).sum))
     }
     val vecs = rows.toDF("vec_id", "v", "norm")
-    val exact = withMinK(0)(SimilarityQueries.assignCells(vecs, centFrame).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val two = withMinK(16)(SimilarityQueries.assignCells(vecs, centFrame).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val exact = assigns(vecs, Some(false))
+    val two = assigns(vecs, Some(true))
     val agree = exact.count { case (id, c) => two(id) == c }
     assert(agree.toDouble / exact.size >= 0.9,
       s"probe-2 agreement on uniform vectors: $agree/${exact.size}")
@@ -76,10 +70,8 @@ class TwoLevelCellSpec extends SparkSpec {
   }
 
   test("below the gate the full scan runs untouched (default threshold far above every oracle quantizer)") {
-    assert(SimilarityQueries.DefaultTwoLevelMinK === 512)
-    // default conf, k=64 ⇒ exact path; equals the forced-exact run
-    val dflt = SimilarityQueries.assignCells(planted, centFrame).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dflt === assigns(0))
+    assert(SimilarityQueries.TwoLevelMinK === 512)
+    // k=64 ⇒ exact path; equals the forced-exact run
+    assert(assigns(planted, None) === assigns(planted, Some(false)))
   }
 }
