@@ -14,13 +14,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The registered oracles for the size-gated dedup routes
-    // (dedup_embed / dedup_docvec) are the EXACT all-pairs SQL; pin the
-    // exact tier so the comparison is always apples-to-apples — past
-    // the gate the default route is SRP-LSH (recall < 1 by contract)
-    // and an un-pinned verify would report a red that is really a
-    // route/oracle mismatch, not a bug.
-    spark.conf.set(graft.extensions.DedupQueries.RouteKey, "exact")
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (same contract as Bench's BENCH_ONLY): the
     // driver sets no filter and always gets the full registry

@@ -2,10 +2,10 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Reads of the numeric, boolean and enumerated `spark.graft.*` session
-  * confs. An unset key takes its default; a set value that does not
-  * parse fails at the read with an IllegalArgumentException naming the
-  * key and the value — never a bare NumberFormatException, and never a
+/** Reads of the numeric and boolean `spark.graft.*` session confs. An
+  * unset key takes its default; a set value that does not parse fails
+  * at the read with an IllegalArgumentException naming the key and the
+  * value — never a bare NumberFormatException, and never a
   * silent fall-through to the default behaviour. */
 object Conf {
   def long(spark: SparkSession, key: String, default: Long): Long =
@@ -16,10 +16,6 @@ object Conf {
 
   def bool(spark: SparkSession, key: String, default: Boolean): Boolean =
     parsed(spark, key, "true or false")(_.toBooleanOption).getOrElse(default)
-
-  /** The value of `key`, one of `allowed`; None when unset. */
-  def choice(spark: SparkSession, key: String, allowed: Seq[String]): Option[String] =
-    parsed(spark, key, s"one of ${allowed.mkString(", ")}")(Some(_).filter(allowed.contains))
 
   private def parsed[T](spark: SparkSession, key: String, expected: String)(
       parse: String => Option[T]): Option[T] =

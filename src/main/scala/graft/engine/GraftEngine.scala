@@ -935,58 +935,35 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   def maintainArtifacts(annIndex: Option[(String, DataFrame)] = None,
                         textIndex: Option[(String, DataFrame)] = None,
                         repair: Boolean = true): Seq[ArtifactReport] =
-    annIndex.map { case (dir, corpus) =>
-      maintainArtifact(dir,
-        r => graft.extensions.AnnIndex.fsck(spark, dir, r),
-        graft.extensions.AnnIndex.usable(spark, dir),
-        () => graft.extensions.AnnIndex.verify(spark, dir, corpus),
-        () => graft.extensions.AnnIndex.build(spark, corpus, dir),
-        () => graft.extensions.AnnIndex.fragmented(spark, dir),
-        () => graft.extensions.AnnIndex.compact(spark, dir), repair,
-        health = () => graft.extensions.AnnIndex.quantizerHealth(spark, dir, corpus),
-        retune = () => graft.extensions.AnnIndex.rebuildGrown(spark, corpus, dir))
-    }.toSeq ++
-    textIndex.map { case (dir, corpus) =>
-      maintainArtifact(dir,
-        r => graft.extensions.TextIndex.fsck(spark, dir, r),
-        graft.extensions.TextIndex.usable(spark, dir),
-        () => graft.extensions.TextIndex.verify(spark, dir, corpus),
-        () => graft.extensions.TextIndex.build(spark, corpus, dir),
-        () => graft.extensions.TextIndex.fragmented(spark, dir),
-        () => graft.extensions.TextIndex.compact(spark, dir), repair)
-    }.toSeq
+    (annIndex.map(graft.extensions.AnnIndex -> _) ++
+      textIndex.map(graft.extensions.TextIndex -> _)).toSeq.map { case (ix, (dir, corpus)) =>
+      maintainArtifact(ix, dir, corpus, repair)
+    }
 
   /** One artifact's probe → verify → rebuild-if-uncertified →
-    * compact-if-fragmented cycle. `existedUsable` is sampled BEFORE fsck
-    * so a never-built dir (nothing to rebuild from scratch here — the
-    * user never asked for an index) is distinguished from one a crash or
-    * the probe just uncertified. `verifyF` is the full-fingerprint audit
-    * (content term always included): it uncertifies an index that no
-    * longer matches its corpus — a corpus grown or mutated without the
-    * index keeping up is caught HERE even when the per-query content
-    * check is opted out (ContentCheckKey). */
-  private def maintainArtifact(dir: String, fsckF: Boolean => Seq[String],
-                               existedUsable: Boolean, verifyF: () => Boolean,
-                               rebuild: () => Unit,
-                               fragged: () => Boolean, compactF: () => Unit,
-                               repair: Boolean,
-                               health: () => Option[String] = () => None,
-                               retune: () => Unit = () => ()): ArtifactReport = {
-    val existed = existedUsable || // uncertified remains of a real index: rebuildable
+    * retune-if-asked → compact-if-fragmented cycle. Usability is sampled
+    * BEFORE fsck so a never-built dir (nothing to rebuild from scratch
+    * here — the user never asked for an index) is distinguished from one
+    * a crash or the probe just uncertified. `verify` is the
+    * full-fingerprint audit (content term always included): it
+    * uncertifies an index that no longer matches its corpus — a corpus
+    * grown or mutated without the index keeping up is caught HERE even
+    * when the per-query content check is opted out (ContentCheckKey). */
+  private def maintainArtifact(ix: graft.extensions.CorpusIndex[_], dir: String,
+                               corpus: DataFrame, repair: Boolean): ArtifactReport = {
+    val existed = ix.usable(spark, dir) || // uncertified remains of a real index: rebuildable
       new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration).exists(new Path(dir))
-    val bad = fsckF(repair)
-    if (TsdbStorage.statsUsable(spark, dir)) verifyF() // uncertifies on mismatch
-    val needRebuild = existed && !TsdbStorage.statsUsable(spark, dir)
-    if (needRebuild && repair) rebuild()
+    val bad = ix.fsck(spark, dir, repair)
+    if (ix.usable(spark, dir)) ix.verify(spark, dir, corpus) // uncertifies on mismatch
+    val needRebuild = existed && !ix.usable(spark, dir)
+    if (needRebuild && repair) ix.build(spark, corpus, dir)
     // tuning-debt payment, consulted only on a CERTIFIED index (a
-    // rebuild above re-derived the quantizer already — health then
+    // rebuild above re-derived the tuning already — the retune then
     // re-checks the FRESH one, so a rebuild that still collapses gets
-    // its retune in the same pass): acts on the quantizerHealth signal
-    // (the ivf_cell_stats retrain trigger), rebuilding with grown k
-    val retuned = if (repair && TsdbStorage.statsUsable(spark, dir)) health() else None
-    retuned.foreach(_ => retune())
-    val doCompact = fragged()
-    if (doCompact) compactF()
+    // its retune in the same pass)
+    val retuned = if (repair && ix.usable(spark, dir)) ix.retune(spark, dir, corpus) else None
+    val doCompact = ix.fragmented(spark, dir)
+    if (doCompact) ix.compact(spark, dir)
     ArtifactReport(dir, bad, needRebuild && repair, doCompact, retuned)
   }
 
@@ -1173,11 +1150,13 @@ object GraftEngine {
     require(unknown.isEmpty, s"unknown calculator functions: ${unknown.mkString(", ")}")
     require(functions.nonEmpty, "calculator needs at least one function")
     def r(c: org.apache.spark.sql.Column) = if (round6) round(c, 6) else c
+    // one zero, +0.0, on both calculator routes (SkewTools.positiveZero)
+    def pct(p: String) = graft.operators.SkewTools.positiveZero(expr(s"percentile(value, $p)"))
     functions.map {
       case "average"      => r(avg("value")).as("average")
-      case "median"       => r(expr("percentile(value, 0.5D)")).as("median")
-      case "percentile90" => r(expr("percentile(value, 0.9D)")).as("percentile90")
-      case "percentile99" => r(expr("percentile(value, 0.99D)")).as("percentile99")
+      case "median"       => r(pct("0.5D")).as("median")
+      case "percentile90" => r(pct("0.9D")).as("percentile90")
+      case "percentile99" => r(pct("0.99D")).as("percentile99")
       case "sigma"        => r(stddev_pop("value")).as("sigma")
       case "minimum"      => min("value").as("minimum")
       case "maximum"      => max("value").as("maximum")

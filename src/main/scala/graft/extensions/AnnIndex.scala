@@ -1,30 +1,17 @@
 package graft.extensions
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PhaseLog.timed
 import graft.sources.TsdbStorage
 
-/** What the persisted index knows about itself, from `_meta`:
+/** The ANN index's `_meta` — its scheme next to the shared
+  * [[CorpusState]] (corpus fingerprint + idempotent-writer cursor):
   *
   *  - `planes`/`bandBits` — the SRP scheme its codes were built with
   *    (queries must band stored codes with the SAME scheme at any later
   *    time, so the scheme travels with the index, not the session);
-  *  - `corpusRows`/`idMin`/`idMax`/`idSum`/`contentXor` — a fingerprint
-  *    of the corpus the codes cover. An index is only served for the
-  *    corpus it was built from: [[AnnIndex.resolveFor]] cross-checks the
-  *    live dataset against this fingerprint and falls back to recompute
-  *    on mismatch, so a conf key pointing at a stale or foreign index
-  *    can never silently drop vectors from candidate sets. `idSum` (an
-  *    exact integer, order-independent) catches same-count/same-range id
-  *    swaps; `contentXor` (xor of xxhash64(vec_id, vector) over the
-  *    corpus — order-independent, overflow-free, rolls forward under
-  *    append) catches a corpus RE-EMBEDDED in place with unchanged ids,
-  *    which the id stats alone cannot see. The check costs one xxhash64
-  *    agg pass over the vectors — cheap next to the exact-scoring join
-  *    every index-served query already runs over the same corpus.
   *  - `quantizer` — which coarse quantizer build() froze: "label"
   *    (supervised centroids) or "kmeans" (unsupervised). Quantizer-
   *    specific consumers (sim_ivf_kmeans) only serve from an index
@@ -37,24 +24,11 @@ import graft.sources.TsdbStorage
   *    ([[AnnIndex.quantizerHealth]]) legitimately buckets differently,
   *    so those queries fall back to recompute while the quantizer-free
   *    SRP paths keep serving it. Legacy metas read -1 (k unknown).
-  *  - `lastAppId`/`lastBatchId` — the idempotent-writer cursor: the last
-  *    streaming (checkpoint, batchId) whose append committed. foreachBatch
-  *    is at-least-once, so a crash after the index commit but before the
-  *    streaming checkpoint commit replays the micro-batch; the replay is
-  *    recognized (same appId, batchId ≤ cursor) and skipped instead of
-  *    appending duplicate rows into a certified index. Scoped by appId
-  *    (the checkpoint path) so a NEW stream restarting batch numbering
-  *    from 0 is not mistaken for a replay.
+  *  - `pqM`/`pqResM` — the direct and residual PQ widths (0: no such
+  *    component).
   */
-case class AnnMeta(planes: Int, bandBits: Int, corpusRows: Long,
-                   idMin: Long, idMax: Long, idSum: Long, contentXor: Long,
-                   quantizer: String, lastAppId: String, lastBatchId: Long,
-                   kCells: Int, txnCursors: String = "", pqM: Int = 0,
-                   pqResM: Int = 0) {
-  /** Per-app replay check ([[TxnCursors]]): the last applied batchId
-    * for `app`, if any. */
-  def appliedBatch(app: String): Option[Long] = TxnCursors.applied(txnCursors, app)
-}
+case class AnnMeta(planes: Int, bandBits: Int, quantizer: String, kCells: Int,
+                   pqM: Int, pqResM: Int, state: CorpusState) extends CorpusMeta
 
 /** Persisted ANN index — the artifact a production 100 TB embedding
   * corpus builds ONCE and serves every query from, instead of
@@ -69,13 +43,9 @@ case class AnnMeta(planes: Int, bandBits: Int, corpusRows: Long,
   *               quantizer is not re-derived per batch). Derived from
   *               labels when the corpus has them, deterministic k-means
   *               ([[SimilarityQueries.kmeansCentroids]]) when it does not.
+  *   pq/, pqres/ parquet — the frozen direct and residual PQ codebooks
   *   _meta/      parquet, one row — see [[AnnMeta]]
-  *   _SYNCED     commit marker — the same certify/fallback protocol as
-  *               the engine's chunk-stat index (TsdbStorage): every
-  *               mutation drops the marker first and restores it only
-  *               after the index content committed, so a crash in
-  *               between leaves the index uncertified and queries fall
-  *               back to the always-correct recompute path.
+  *   _SYNCED     commit marker — the [[CorpusIndex]] protocol
   *
   * Query integration: set `spark.graft.ann.indexDir` to the index dir;
   * `sim_ann` / `sim_ivf` / `dedup_embed_lsh` read codes/centroids from
@@ -91,178 +61,48 @@ case class AnnMeta(planes: Int, bandBits: Int, corpusRows: Long,
   * broadcastable. An append touches only the appended vectors; no
   * existing file is rewritten (compact() rewrites the accumulation into
   * size-targeted, vec_id-range-clustered files).
-  *
-  * Writer discipline: build/append/compact are single-writer (the same
-  * contract as the engine's maintenance ops). Each writer entry point
-  * first resolves any crashed compact swap ([[recoverCompact]]) so a
-  * kill between renames self-heals on the next maintenance call instead
-  * of dead-ending until a full rebuild. Readers never mutate: usable()
-  * only inspects the marker, so a query racing a live compact just falls
-  * back to recompute for the duration of the swap.
   */
-object AnnIndex {
+object AnnIndex extends CorpusIndex[AnnMeta] {
 
   /** Session conf key pointing sim_ann/sim_ivf at a persisted index. */
   val ConfKey = "spark.graft.ann.indexDir"
 
-  /** Whether resolveFor's per-query fingerprint check includes the
-    * CONTENT term (default true). The content hash is one xxhash64 agg
-    * over the vectors/text — trivially cheap at test scale, but it is an
-    * O(corpus) column scan PER QUERY, the exact growth-with-corpus cost
-    * the index exists to amortize: at 100 TB the index-served dedup path
-    * reads stored signatures + survivor shingles only, and a full
-    * content scan per query would dwarf both. A deployment whose corpus
-    * is append-only (the common case — in-place mutation impossible by
-    * construction) sets this false to keep the per-query check at the
-    * column-pruned id stats; [[verify]] (and through it `maintain()`)
-    * still checks content regardless, so a mutated corpus is caught at
-    * maintenance time even when opted out. Shared by AnnIndex and
-    * TextIndex. */
-  val ContentCheckKey = "spark.graft.index.contentCheck"
+  protected val label = "ANN index"
+  protected val idCol = "vec_id"
+  protected val tables = Seq("codes", "centroids", "pq", "pqres")
+  protected val metaLayout = Seq("planes", "band_bits", "corpus_rows", "id_min", "id_max",
+    "id_sum", "content_xor", "quantizer", "last_app_id", "last_batch_id", "k_cells",
+    "txn_cursors", "pq_m", "pq_res_m")
 
-  private[extensions] def contentCheck(spark: SparkSession): Boolean =
-    graft.core.Conf.bool(spark, ContentCheckKey, true)
+  protected def schemeColumns(m: AnnMeta): Map[String, Any] = Map("planes" -> m.planes,
+    "band_bits" -> m.bandBits, "quantizer" -> m.quantizer, "k_cells" -> m.kCells.toLong,
+    "pq_m" -> m.pqM.toLong, "pq_res_m" -> m.pqResM.toLong)
+
+  // pre-kind metas were label-built; pre-PQ metas have no PQ component
+  protected def metaOf(r: MetaRow, state: CorpusState): AnnMeta = AnnMeta(
+    r.int("planes", SimilarityQueries.N_PLANES), r.int("band_bits", SimilarityQueries.BAND_BITS),
+    r.string("quantizer", "label"), r.long("k_cells", -1L).toInt,
+    r.long("pq_m", 0L).toInt, r.long("pq_res_m", 0L).toInt, state)
+
+  protected def withState(m: AnnMeta, state: CorpusState): AnnMeta = m.copy(state = state)
 
   /** The PROVISIONAL content term for [[build]]'s training-memo keys
     * (the true term is observed later, on the codes pass): an md5-head
     * of the driver-side corpus identity (plan hash + sorted file
-    * listing — [[corpusIdentity]]). Distinct from
+    * listing — [[CorpusIndex.corpusIdentity]]). Distinct from
     * any true xxhash64 xor with 2⁻⁶⁴ coincidence; collides with itself
     * exactly when the same session rebuilds the same immutable frame,
     * which is precisely when reusing the trained parameters is right. */
   private def provisionalXor(corpus: DataFrame): Long = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(corpusIdentity(corpus).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val h = java.security.MessageDigest.getInstance("MD5").digest(
+      CorpusIndex.corpusIdentity(corpus).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     java.nio.ByteBuffer.wrap(h).getLong
   }
-
-  /** Default compact target: ~4M slim code rows per file (~tens of MB
-    * compressed) — keeps a 10⁹-vector codes table at a few hundred
-    * parallel-readable files instead of one single-task monolith. */
-  val DefaultRowsPerFile = 4L * 1000 * 1000
 
   private def codesPath(dir: String) = s"$dir/codes"
   private def centroidsPath(dir: String) = s"$dir/centroids"
   private def pqPath(dir: String) = s"$dir/pq"
   private def pqResPath(dir: String) = s"$dir/pqres"
-  private def metaPath(dir: String) = s"$dir/_meta"
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The enforced single-writer lease (see [[graft.sources.WriterLock]]):
-    * each writer entry (build/append/compact/fsck) is its own lease
-    * term — a second maintainer on the same index dir fails fast instead
-    * of interleaving marker transitions. Readers never touch the lock. */
-  private def locked[T](spark: SparkSession, dir: String)(body: => T): T =
-    graft.sources.WriterLock.withLock(spark, dir, graft.sources.WriterLock.newOwner())(body)
-
-  /** The certified index dir the session points at, if any. None ⇒
-    * callers recompute (conf unset, dir missing, or marker absent).
-    * Marker-only: corpus identity is NOT checked here — query paths use
-    * [[resolveFor]]. */
-  def resolve(spark: SparkSession): Option[String] =
-    Option(spark.conf.get(ConfKey, null)).filter(usable(spark, _))
-
-  /** The certified index dir IF its fingerprint matches `corpus` (any
-    * frame with the vec_id column the index was built over). An index
-    * that cannot prove corpus identity — legacy meta without a
-    * fingerprint, or a mismatch (stale index, foreign corpus) — is not
-    * served; the caller recomputes, which is always correct. */
-  def resolveFor(spark: SparkSession, corpus: DataFrame): Option[String] =
-    resolve(spark).filter(dir => fingerprintMatches(spark, readMeta(spark, dir), corpus))
-
-  private def fingerprintMatches(spark: SparkSession, m: AnnMeta,
-                                 corpus: DataFrame): Boolean =
-    m.corpusRows >= 0 && {
-      if (contentCheck(spark))
-        contentProven(spark, "ann",
-          (m.corpusRows, m.idMin, m.idMax, m.idSum, m.contentXor),
-          corpus, idStats(corpus), fingerprint(corpus))
-      else // column-pruned id stats only (see ContentCheckKey)
-        idStats(corpus) == ((m.corpusRows, m.idMin, m.idMax, m.idSum))
-    }
-
-  /** Session-scoped memo of PROVEN content checks (the k-means-memo
-    * pattern). The content hash is an O(corpus) column scan; for the
-    * TEXT index it reads + hashes the very column whose md5 derivation
-    * the index amortizes, so paying it per query hands back most of
-    * what the index saves (measured at sf0.1: ~0.3 s/query — an
-    * index-served dedup_ngram was NET slower than recompute).
-    *
-    * Soundness: the memo key binds the proof to the exact corpus it was
-    * computed over — the index fingerprint PLUS the corpus's
-    * canonicalized-plan hash and its sorted input-file listing. Any
-    * change that could alter content misses the memo and re-proves:
-    * a rewritten/re-embedded file set has new part-file names (Spark
-    * writes fresh UUIDs even under overwrite), a transformed frame has
-    * a different plan hash, a rebuilt index has a new fingerprint. The
-    * memo hit still pays the column-pruned id-stats check, so a
-    * same-plan corpus whose data moved under an unchanged listing
-    * (external byte-level mutation preserving file names AND doc ids)
-    * is the only slip — and [[verify]]/maintain() are memo-blind, so
-    * even that is caught at maintenance time. Bounded at 64 proofs,
-    * whole-clear (the k-means memo contract). */
-  private val contentProofs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Full content-scan invocations — the memo's observable (spec-pinned,
-    * the kmeansTrainCount pattern). */
-  private[graft] val contentScanCount = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Driver-side corpus identity: canonicalized plan + input files.
-    * No data scan — plan hash and file listing are already materialized
-    * at analysis time. */
-  private def corpusIdentity(corpus: DataFrame): String = {
-    val planHash = corpus.queryExecution.analyzed.semanticHash()
-    val files = java.util.UUID.nameUUIDFromBytes(
-      corpus.inputFiles.sorted.mkString("\n").getBytes("UTF-8"))
-    s"$planHash:$files"
-  }
-
-  private[extensions] def contentProven(spark: SparkSession, kind: String,
-      metaFp: (Long, Long, Long, Long, Long), corpus: DataFrame,
-      liveIds: => (Long, Long, Long, Long),
-      liveFull: => (Long, Long, Long, Long, Long)): Boolean = {
-    val key =
-      s"${System.identityHashCode(spark)}:$kind:$metaFp:${corpusIdentity(corpus)}"
-    if (contentProofs.contains(key))
-      liveIds == ((metaFp._1, metaFp._2, metaFp._3, metaFp._4))
-    else {
-      contentScanCount.incrementAndGet()
-      val ok = liveFull == metaFp
-      if (ok) {
-        if (contentProofs.size > 64) contentProofs.clear()
-        contentProofs.add(key)
-      }
-      ok
-    }
-  }
-
-  /** Full-fingerprint audit (content term ALWAYS included, whatever
-    * ContentCheckKey says): true iff the certified index matches the
-    * corpus bit-for-bit at the fingerprint level. A mismatch UNCERTIFIES
-    * the index — the maintenance-time backstop for deployments that
-    * opted the per-query content check out. */
-  def verify(spark: SparkSession, dir: String, corpus: DataFrame): Boolean = {
-    if (!usable(spark, dir)) return false
-    val m = readMeta(spark, dir)
-    val ok = m.corpusRows >= 0 &&
-      fingerprint(corpus) == ((m.corpusRows, m.idMin, m.idMax, m.idSum, m.contentXor))
-    if (!ok) TsdbStorage.markStatsOutOfSync(spark, dir)
-    ok
-  }
-
-  /** The cheap (column-pruned) half of the fingerprint. */
-  private def idStats(corpus: DataFrame): (Long, Long, Long, Long) = {
-    val r = corpus.agg(
-      count(col("vec_id")), coalesce(min("vec_id"), lit(0L)),
-      coalesce(max("vec_id"), lit(0L)), coalesce(sum("vec_id"), lit(0L))).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-  }
-
-  /** True iff the index exists AND its last mutation committed. */
-  def usable(spark: SparkSession, dir: String): Boolean =
-    TsdbStorage.statsUsable(spark, dir)
 
   def readCodes(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(codesPath(dir))
@@ -284,80 +124,12 @@ object AnnIndex {
   /** The vector content in its canonical (double-array) form, whichever
     * shape the frame is in: prepped frames carry it as `v`, raw
     * embeddings frames derive it with the exact `prep` cast — so build
-    * (raw) and resolveFor (prepped) hash identical values. */
-  private def contentExpr(corpus: DataFrame) =
+    * (raw) and resolveFor (prepped) hash identical values. The
+    * fingerprint is shared with [[SimilarityQueries.kmeansCentroids]]
+    * as the memo key for the trained quantizer. */
+  protected def contentCol(corpus: DataFrame): Column =
     if (corpus.columns.contains("v")) col("v")
     else expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-
-  /** (rows, min/max/sum vec_id, content xor) of a corpus — the identity
-    * bound into `_meta` at build and rolled forward by append. The xor
-    * of per-row xxhash64(vec_id, vector) is order-independent and
-    * cannot overflow (the reason it is not a sum — ANSI mode would
-    * throw on a wrapped Long), and folding vec_id into the hash keeps
-    * two genuinely identical rows from cancelling each other only when
-    * they are true (id, content) duplicates. One agg pass; empty corpus
-    * → (0, 0, 0, 0, 0). Shared with [[SimilarityQueries.kmeansCentroids]]
-    * as the memo key for the trained quantizer. */
-  private[graft] def fingerprint(corpus: DataFrame): (Long, Long, Long, Long, Long) = {
-    val r = corpus.agg(
-      count(col("vec_id")), coalesce(min("vec_id"), lit(0L)),
-      coalesce(max("vec_id"), lit(0L)), coalesce(sum("vec_id"), lit(0L)),
-      coalesce(bit_xor(xxhash64(col("vec_id"), contentExpr(corpus))), lit(0L))).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-  }
-
-  /** This index's self-description. Columns are selected BY NAME (a
-    * positional read would silently swap fields under any future schema
-    * evolution — and a swapped planes/bandBits mis-bands every stored
-    * code). Indexes predating `_meta` — or predating any fingerprint
-    * field, including `content_xor` (an xor has no -1 sentinel, so its
-    * absence demotes the whole fingerprint) — read with an UNKNOWN
-    * fingerprint (corpusRows = -1), which resolveFor refuses to serve;
-    * rebuild to upgrade. */
-  def readMeta(spark: SparkSession, dir: String): AnnMeta = {
-    val p = new Path(metaPath(dir))
-    if (!fs(spark, dir).exists(p))
-      AnnMeta(SimilarityQueries.N_PLANES, SimilarityQueries.BAND_BITS,
-        -1L, 0L, 0L, 0L, 0L, "label", "", -1L, -1, "")
-    else {
-      val df = spark.read.parquet(metaPath(dir))
-      val names = df.columns.toSet
-      def longOr(r: org.apache.spark.sql.Row, name: String, dflt: Long): Long =
-        if (names(name)) r.getLong(r.fieldIndex(name)) else dflt
-      def strOr(r: org.apache.spark.sql.Row, name: String, dflt: String): String =
-        if (names(name)) r.getString(r.fieldIndex(name)) else dflt
-      val r = df.head()
-      AnnMeta(
-        r.getInt(r.fieldIndex("planes")),
-        r.getInt(r.fieldIndex("band_bits")),
-        if (names("content_xor")) longOr(r, "corpus_rows", -1L) else -1L,
-        longOr(r, "id_min", 0L), longOr(r, "id_max", 0L), longOr(r, "id_sum", 0L),
-        longOr(r, "content_xor", 0L),
-        strOr(r, "quantizer", "label"), // pre-kind metas were label-built
-        strOr(r, "last_app_id", ""),
-        longOr(r, "last_batch_id", -1L),
-        longOr(r, "k_cells", -1L).toInt,
-        // legacy single-cursor metas fold into a one-entry map
-        if (names("txn_cursors")) strOr(r, "txn_cursors", "")
-        else if (strOr(r, "last_app_id", "").nonEmpty)
-          TxnCursors.render(Vector(
-            strOr(r, "last_app_id", "") -> longOr(r, "last_batch_id", -1L)))
-        else "",
-        longOr(r, "pq_m", 0L).toInt, // pre-PQ metas: no pq component
-        longOr(r, "pq_res_m", 0L).toInt) // pre-residual metas: direct only
-    }
-  }
-
-  private[graft] def writeMeta(spark: SparkSession, dir: String, m: AnnMeta): Unit = {
-    import spark.implicits._
-    Seq((m.planes, m.bandBits, m.corpusRows, m.idMin, m.idMax, m.idSum,
-        m.contentXor, m.quantizer, m.lastAppId, m.lastBatchId, m.kCells.toLong,
-        m.txnCursors, m.pqM.toLong, m.pqResM.toLong))
-      .toDF("planes", "band_bits", "corpus_rows", "id_min", "id_max", "id_sum",
-        "content_xor", "quantizer", "last_app_id", "last_batch_id", "k_cells",
-        "txn_cursors", "pq_m", "pq_res_m")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
-  }
 
   /** Band the index's stored codes with ITS OWN persisted scheme. */
   def bandsFromIndex(spark: SparkSession, dir: String): DataFrame = {
@@ -463,6 +235,11 @@ object AnnIndex {
   def rebuildGrown(spark: SparkSession, corpus: DataFrame, dir: String): Unit =
     build(spark, corpus, dir, kCells = grownK(readMeta(spark, dir)))
 
+  /** The maintenance retune: a collapsed k-means cell
+    * ([[quantizerHealth]]) rebuilds the index with grown k. */
+  override def retune(spark: SparkSession, dir: String, corpus: DataFrame): Option[String] =
+    quantizerHealth(spark, dir, corpus).map { why => rebuildGrown(spark, corpus, dir); why }
+
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Build (or rebuild) the index from a full corpus: derive the
@@ -481,13 +258,12 @@ object AnnIndex {
     * corpora (their cell count IS the label count). */
   def build(spark: SparkSession, raw: DataFrame, dir: String,
             planes: Int = SimilarityQueries.N_PLANES,
-            bandBits: Int = 0, kCells: Int = 0): Unit = locked(spark, dir) {
-    recoverCompact(spark, dir)
+            bandBits: Int = 0, kCells: Int = 0): Unit = writer(spark, dir) {
     // Fingerprint: the content-xor term RIDES the codes write as an
     // Observation (the codes pass reads every (vec_id, v) row anyway), so
     // the upfront pass prunes to the vec_id column (id stats only). The
     // training-memo keys carry a PROVISIONAL content term (md5-head of
-    // plan hash + file listing — the contentProofs identity): sound for
+    // plan hash + file listing — the content-proof identity): sound for
     // the build's own immutable frame, and post-build queries serve from
     // the certified index, never from these memo entries.
     val (n, idMin, idMax, idSum) = timed(logger, "id stats (pruned vec_id scan)")(idStats(raw))
@@ -548,8 +324,7 @@ object AnnIndex {
     // to fill a PQ book (the join form, which reads `e` in more than
     // one branch).
     val obs = org.apache.spark.sql.Observation("ann-build-fp")
-    val observed =
-      e.observe(obs, coalesce(bit_xor(xxhash64(col("vec_id"), col("v"))), lit(0L)).as("cxor"))
+    val observed = e.observe(obs, contentTerm(e).as("cxor"))
     timed(logger, "codes (ONE projection: SRP + cell + packed PQ + residual PQ, map-side write)") {
       codesFrame(observed, planes, readCentroids(spark, dir), Some(readPqCodebooks(spark, dir)),
           Some(readPqResCodebooks(spark, dir)))
@@ -559,8 +334,8 @@ object AnnIndex {
     // meta lands AFTER the codes pass (it now carries the observed
     // content term); certification below is still the commit point, so
     // crash-ordering is unchanged — an uncertified dir never serves
-    writeMeta(spark, dir, AnnMeta(planes, bb, n, idMin, idMax, idSum, cxor, kind, "", -1L, k,
-      pqM = PqQueries.M, pqResM = PqQueries.M))
+    writeMeta(spark, dir, AnnMeta(planes, bb, kind, k, PqQueries.M, PqQueries.M,
+      CorpusState(n, idMin, idMax, idSum, cxor)))
     TsdbStorage.markStatsInSync(spark, dir)
   }
 
@@ -600,115 +375,21 @@ object AnnIndex {
     }
   }
 
-  /** Incrementally index appended vectors: SRP codes are per-vector
-    * deterministic (fixed hyperplanes), cells are assigned against the
-    * FROZEN centroids — both bit-identical to what a build would derive
-    * with the same quantizer, so the index stays exact under appends.
-    * Only the new vectors are written; nothing is rewritten, and the
-    * fingerprint rolls forward so resolveFor keeps matching the grown
-    * corpus.
-    *
-    * `txn` is the streaming idempotency cursor (appId = checkpoint path,
-    * batchId): a replayed micro-batch — same appId, batchId not beyond
-    * the persisted cursor — is a no-op, keeping the index exactly-once
-    * under foreachBatch's at-least-once contract. Batch-style callers
-    * omit it (no replay source, no idempotency claim). */
-  def append(spark: SparkSession, rawNew: DataFrame, dir: String,
-             txn: Option[(String, Long)] = None): Unit = locked(spark, dir) {
-    recoverCompact(spark, dir)
-    require(usable(spark, dir), s"ANN index at $dir is absent or uncertified — build() first")
-    val m = readMeta(spark, dir)
-    // PER-APP replay check (see [[TxnCursors]])
-    val replayed = txn.exists { case (app, bid) => m.appliedBatch(app).exists(bid <= _) }
-    if (replayed) return
-    val (n, bMin, bMax, bSum, bXor) = fingerprint(rawNew)
-    val planes = m.planes // code with the index's own scheme
-    TsdbStorage.markStatsOutOfSync(spark, dir)
-    val e = SimilarityQueries.prep(spark, rawNew)
-    // PQ codes against the FROZEN codebooks (the centroid rule); a
-    // legacy pre-PQ index keeps its schema — mixing would corrupt reads
-    codesFrame(e, planes, readCentroids(spark, dir),
+  def build(spark: SparkSession, corpus: DataFrame, dir: String): Unit =
+    build(spark, corpus, dir, SimilarityQueries.N_PLANES)
+
+  /** Appended vectors' codes: SRP codes are per-vector deterministic
+    * (fixed hyperplanes), cells are assigned against the FROZEN
+    * centroids — both bit-identical to what a build would derive with
+    * the same quantizer, so the index stays exact under appends. Only
+    * the new vectors are written; nothing is rewritten. */
+  protected def appendPayload(spark: SparkSession, dir: String, m: AnnMeta,
+                              rawNew: DataFrame): Unit =
+    // code with the index's own scheme; PQ codes against the FROZEN
+    // codebooks (the centroid rule) — a legacy pre-PQ index keeps its
+    // schema, mixing would corrupt reads
+    codesFrame(SimilarityQueries.prep(spark, rawNew), m.planes, readCentroids(spark, dir),
         if (m.pqM == PqQueries.M) Some(readPqCodebooks(spark, dir)) else None,
-        // residual codes against the FROZEN residual books (same rule)
         if (m.pqResM == PqQueries.M) Some(readPqResCodebooks(spark, dir)) else None)
       .write.mode("append").parquet(codesPath(dir))
-    val grown =
-      if (n == 0) m // EMPTY append: an all-zero fingerprint must not fold
-        // into min/max (the TextIndex.append rule) — only the cursor moves
-      else if (m.corpusRows < 0) m // legacy fingerprintless meta stays unknown
-      else if (m.corpusRows == 0)
-        m.copy(corpusRows = n, idMin = bMin, idMax = bMax, idSum = bSum, contentXor = bXor)
-      else m.copy(corpusRows = m.corpusRows + n,
-        idMin = math.min(m.idMin, bMin), idMax = math.max(m.idMax, bMax),
-        idSum = m.idSum + bSum, contentXor = m.contentXor ^ bXor)
-    writeMeta(spark, dir, txn.fold(grown) { case (app, bid) =>
-      grown.copy(lastAppId = app, lastBatchId = bid,
-        txnCursors = TxnCursors.advance(grown.txnCursors, app, bid)) })
-    TsdbStorage.markStatsInSync(spark, dir)
-  }
-
-  /** Integrity probe (the fsck of this artifact): every codes/centroids
-    * file fully decompressed, distributed. A corrupt file UNCERTIFIES
-    * the index immediately — even without repair — so queries fall back
-    * to recompute instead of throwing mid-query; with repair the bad
-    * files are dropped. Repair either way is `build()` (the index is
-    * derived data — unlike the scheme log, dropping it loses nothing). */
-  def fsck(spark: SparkSession, dir: String, repair: Boolean = false): Seq[String] = locked(spark, dir) {
-    recoverCompact(spark, dir)
-    val bad = TsdbStorage.probeFiles(spark, codesPath(dir)) ++
-      TsdbStorage.probeFiles(spark, centroidsPath(dir)) ++
-      TsdbStorage.probeFiles(spark, pqPath(dir)) ++
-      TsdbStorage.probeFiles(spark, pqResPath(dir)) ++
-      TsdbStorage.probeFiles(spark, metaPath(dir))
-    if (bad.nonEmpty) {
-      TsdbStorage.markStatsOutOfSync(spark, dir)
-      if (repair) { val f = fs(spark, dir); bad.foreach(p => f.delete(new Path(p), false)) }
-    }
-    bad
-  }
-
-  /** Rewrite the append-accumulated codes files (contents unchanged)
-    * into ~rowsPerFile-sized files RANGE-CLUSTERED on vec_id — the file
-    * count scales with the corpus (never a one-task monolith), readers
-    * keep full parallelism, and parquet min/max footers let id-probing
-    * reads prune whole files. Same tmp-swap discipline as the engine's
-    * compact paths, with the marker protocol covering the swap and
-    * [[recoverCompact]] resolving a crash inside it. */
-  def compact(spark: SparkSession, dir: String,
-              rowsPerFile: Long = DefaultRowsPerFile): Unit = locked(spark, dir) {
-    recoverCompact(spark, dir)
-    require(usable(spark, dir), s"ANN index at $dir is absent or uncertified")
-    val m = readMeta(spark, dir)
-    val rows = if (m.corpusRows >= 0) m.corpusRows else readCodes(spark, dir).count()
-    val files = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile).toInt
-    ArtifactSwap.rewrite(spark, dir, "codes") { tmp =>
-      readCodes(spark, dir)
-        .repartitionByRange(files, col("vec_id"))
-        .sortWithinPartitions("vec_id")
-        .write.parquet(tmp)
-    }
-  }
-
-  /** Append-accumulation signature (the engine's fragmentedDays analog):
-    * more codes files than 2× the size-targeted count compact() would
-    * write. Directory-listing metadata only. */
-  def fragmented(spark: SparkSession, dir: String,
-                 rowsPerFile: Long = DefaultRowsPerFile): Boolean = {
-    val p = new Path(codesPath(dir))
-    val f = fs(spark, dir)
-    if (!f.exists(p) || !usable(spark, dir)) return false
-    val m = readMeta(spark, dir)
-    val rows = if (m.corpusRows >= 0) m.corpusRows else readCodes(spark, dir).count()
-    val target = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile)
-    f.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) > 2 * target
-  }
-
-  /** Resolve a compact() that died inside its swap — the shared
-    * [[ArtifactSwap]] discipline, run on every WRITER entry
-    * (build/append/compact/fsck; single-writer contract, so no live
-    * compact can race it). Readers (usable/resolve) deliberately do NOT
-    * run this: a query racing a live compact must fall back, not mutate
-    * the swap. */
-  private def recoverCompact(spark: SparkSession, dir: String): Unit =
-    ArtifactSwap.recover(spark, dir, "codes")
 }

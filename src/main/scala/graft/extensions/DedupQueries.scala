@@ -838,24 +838,26 @@ object DedupQueries {
 
   private val simhashPairsSql: String = "WITH RECURSIVE " + simhashPairsCtes("documents")
 
+  /** dedup_simhash, SIZE-GATED (the nearPairsRouted/embedCosine
+    * pattern): ≤ 100k docs serves the oracle-replayed 32-bit
+    * byte-banded tier; past the gate the 64-bit Manku-style tier
+    * (Hamming ≤ 3) whose pair list is bounded by true near-dup mass
+    * instead of flooding ∝ n² (measured: 32-bit collapsed 240k docs
+    * into one component). `exact` pins a tier (None: by size). */
+  private[graft] def simhashRouted(s: SparkSession, d: String,
+                                   exact: Option[Boolean] = None): DataFrame = {
+    val c = docs(s, d)
+    val n = corpusRows(c) // memoized — one metadata count per session, not per call
+    (if (exact.getOrElse(exactTier(n))) simhashPairs(s, d) else simhashPairs64For(s, c, n = n))
+      .orderBy("doc_a", "doc_b")
+  }
+
   val simhash: QueryDef = QueryDef(
-    build = (s, d) => {
-      // SIZE-GATED (the nearPairsRouted/embedCosine pattern): ≤ 100k
-      // docs serves the oracle-replayed 32-bit byte-banded tier; past
-      // the gate the 64-bit Manku-style tier (4 × 16-bit bands,
-      // Hamming ≤ 3) whose pair list is bounded by true near-dup mass
-      // instead of flooding ∝ n² (measured: 32-bit collapsed 240k docs
-      // into one component). RouteKey "exact" pins the 32-bit tier
-      // (Verify does), "lsh" forces the 64-bit tier at any size.
-      val c = docs(s, d)
-      val n = corpusRows(c) // memoized — one metadata count per session, not per call
-      (if (exactTier(s, n)) simhashPairs(s, d) else simhashPairs64For(s, c, n = n))
-        .orderBy("doc_a", "doc_b")
-    },
+    build = (s, d) => simhashRouted(s, d),
     oracle = Some(
       s"""$simhashPairsSql
          |SELECT doc_a, doc_b, hamming FROM pairs ORDER BY doc_a, doc_b""".stripMargin),
-    doc = "X2 SimHash near-dup - SIZE-GATED: 32-bit byte-banded Hamming<=6 tier <= 100k docs (every oracle SF; what the oracle replays), 64-bit Manku/WWW'07 multi-block-banded Hamming<=3 tier past the gate (6 blocks, C(6,3)=20 three-block tables keyed on ~32 bits - recall exactly 1 by pigeonhole, false-candidate mass ~20*n^2/2^33; spark.graft.dedup.route=exact forces the 32-bit tier)")
+    doc = "X2 SimHash near-dup - SIZE-GATED: 32-bit byte-banded Hamming<=6 tier <= 100k docs (every oracle SF; what the oracle replays), 64-bit Manku/WWW'07 multi-block-banded Hamming<=3 tier past the gate (6 blocks, C(6,3)=20 three-block tables keyed on ~32 bits - recall exactly 1 by pigeonhole, false-candidate mass ~20*n^2/2^33)")
 
   // -------------------------------------------------------------------
   // X2f cluster resolution — what a production dedup pipeline runs AFTER
@@ -889,8 +891,8 @@ object DedupQueries {
     * edge list stays ∝ true near-dup mass at any corpus size. `n` =
     * corpus row count (metadata-served; derived-frame callers pass
     * their base table's count as the conservative upper bound).
-    * [[RouteKey]]: "exact" pins the SimHash tier (what the oracles
-    * replay — Verify pins this), "lsh" forces the verified route.
+    * `exact` pins a tier: Some(true) the SimHash tier the oracles
+    * replay, Some(false) the verified route; None routes by `n`.
     *
     * CRITERION NOTE (the routed tier is a different near-dup RELATION,
     * not just a different candidate generator): the SimHash tier admits
@@ -902,19 +904,24 @@ object DedupQueries {
     * divergent pair; the alternative (keeping the Hamming criterion at
     * scale) is exactly the measured flood this route exists to avoid. */
   private[extensions] def nearPairsRouted(s: SparkSession, corpus: DataFrame, n: Long,
-                                          useIndex: Boolean = true): DataFrame =
-    if (exactTier(s, n)) simhashPairsFor(s, corpus, useIndex).select("doc_a", "doc_b")
+                                          useIndex: Boolean = true,
+                                          exact: Option[Boolean] = None): DataFrame =
+    if (exact.getOrElse(exactTier(n))) simhashPairsFor(s, corpus, useIndex).select("doc_a", "doc_b")
     else minhashPairsFor(s, corpus, useIndex, n).select("doc_a", "doc_b")
 
+  /** dedup_clusters over [[nearPairsRouted]]; `exact` pins its tier. */
+  private[graft] def clusterLabels(s: SparkSession, d: String,
+                                   exact: Option[Boolean] = None): DataFrame = {
+    val comp = graft.operators.ConnectedComponents.resolve(
+      nearPairsRouted(s, docs(s, d), corpusRows(docs(s, d)), exact = exact))
+    docs(s, d).select(col("doc_id"))
+      .join(comp, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+      .orderBy("doc_id")
+  }
+
   val clusters: QueryDef = QueryDef(
-    build = (s, d) => {
-      val comp = graft.operators.ConnectedComponents.resolve(
-        nearPairsRouted(s, docs(s, d), corpusRows(docs(s, d))))
-      docs(s, d).select(col("doc_id"))
-        .join(comp, Seq("doc_id"), "left")
-        .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-        .orderBy("doc_id")
-    },
+    build = (s, d) => clusterLabels(s, d),
     oracle = Some(
       s"""$simhashPairsSql, edges AS (
          |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -928,7 +935,7 @@ object DedupQueries {
          |)
          |SELECT doc_id, min(label) AS cluster_id FROM reach
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    doc = "X2 near-dup cluster resolution (connected components, min-id representative) - SIZE-GATED pair source: SimHash tier <= 100k docs (every oracle SF), verified MinHash pairs past the gate (spark.graft.dedup.route=exact forces the SimHash tier)")
+    doc = "X2 near-dup cluster resolution (connected components, min-id representative) - SIZE-GATED pair source: SimHash tier <= 100k docs (every oracle SF), verified MinHash pairs past the gate)")
 
   // -------------------------------------------------------------------
   // X2 keep-best cluster dedup — the SELECTION step after clustering:
@@ -985,7 +992,7 @@ object DedupQueries {
          |SELECT cluster_id, n_members::BIGINT AS n_members, doc_id AS kept_doc_id,
          |       q_micro AS kept_q_micro, min_q_micro
          |FROM ranked WHERE rk = 1 AND n_members > 1 ORDER BY cluster_id""".stripMargin),
-    doc = "X2 keep-best cluster dedup: highest-quality member survives each near-dup cluster (FineWeb-style canonicalization) - SIZE-GATED pair source: SimHash tier <= 100k docs (every oracle SF), verified MinHash pairs past the gate (spark.graft.dedup.route=exact forces the SimHash tier)")
+    doc = "X2 keep-best cluster dedup: highest-quality member survives each near-dup cluster (FineWeb-style canonicalization) - SIZE-GATED pair source: SimHash tier <= 100k docs (every oracle SF), verified MinHash pairs past the gate)")
 
   // -------------------------------------------------------------------
   // X2c n-gram Jaccard with rare-shingle blocking: candidate pairs share
@@ -1407,24 +1414,13 @@ object DedupQueries {
   private[graft] val EXACT_TIER_MAX_ROWS = 100000L
   private[graft] val ROUTED_PLANES = 32
 
-  /** Conf override for the size-gated dedup route (the TextIndex /
-    * AnnIndex ConfKey pattern): `"exact"` forces the all-pairs tier at
-    * ANY corpus size — the knob an oracle/verification run needs,
-    * because the registered oracles for dedup_embed / dedup_docvec ARE
-    * the exact all-pairs SQL and a silently-banded result past the gate
-    * would hash-mismatch (or worse, silently under-report pairs to a
-    * consumer who read "exact" in the doc). `"lsh"` forces the banded
-    * route (pricing the scale path at a small SF); unset routes by
-    * corpus size. [[graft.Verify]] pins `"exact"` so the correctness
-    * gate always compares the tier the oracle describes. */
-  private[graft] val RouteKey = "spark.graft.dedup.route"
-
-  /** True ⇒ serve the exact all-pairs tier (see [[RouteKey]]). */
-  private def exactTier(s: SparkSession, n: Long): Boolean =
-    graft.core.Conf.choice(s, RouteKey, Seq("exact", "lsh")) match {
-      case Some(route) => route == "exact"
-      case None        => n <= EXACT_TIER_MAX_ROWS
-    }
+  /** True ⇒ a corpus of `n` rows is served by the exact all-pairs
+    * tier — every oracle SF, so the correctness gate always compares
+    * the tier the oracle describes. A spec or smoke reaches the banded
+    * route at small scale through the routed builders' explicit
+    * arguments (embedCosineLshBuild / docvecPairsLsh, and the `exact`
+    * pin of simhashRouted / nearPairsRouted). */
+  private def exactTier(n: Long): Boolean = n <= EXACT_TIER_MAX_ROWS
 
   /** The exact block-partitioned all-pairs plan (the ≤ gate tier). */
   private def embedCosineExact(s: SparkSession, d: String): DataFrame = {
@@ -1451,7 +1447,7 @@ object DedupQueries {
     build = (s, d) => {
       // metadata-served row count (parquet footers), memoized per session
       val n = corpusRows(s.read.parquet(s"$d/embeddings.parquet"))
-      if (!exactTier(s, n))
+      if (!exactTier(n))
         embedCosineLshBuild(s, d, ROUTED_PLANES, AnnIndex.advisedBandBits(n, ROUTED_PLANES))
       else embedCosineExact(s, d)
     },
@@ -1467,7 +1463,7 @@ object DedupQueries {
          |WHERE round(list_dot_product(a.v, b.v) / (a.norm * b.norm), 6) >= $COSINE_MIN
          |ORDER BY vec_a, vec_b""".stripMargin),
     doc = "X2 embedding-cosine near-dup — SIZE-GATED route: exact block-partitioned all-pairs ≤ 100k rows (every oracle SF), " +
-      "SRP-LSH banding past the gate (recall < 1 on band-missed pairs; spark.graft.dedup.route=exact forces the exact tier)")
+      "SRP-LSH banding past the gate (recall < 1 on band-missed pairs)")
 
   // -------------------------------------------------------------------
   // X2h cosine near-dup over the MODEL-FREE doc_embed vectors — near-
@@ -1578,7 +1574,7 @@ object DedupQueries {
     build = (s, d) => {
       // metadata-served row count (parquet footers), memoized per session
       val n = corpusRows(docs(s, d))
-      if (!exactTier(s, n)) docvecPairsLsh(s, d, n)
+      if (!exactTier(n)) docvecPairsLsh(s, d, n)
       else docvecPairsExact(s, d)
     },
     oracle = Some(
@@ -1593,7 +1589,7 @@ object DedupQueries {
          |WHERE dot > 0 AND 400::HUGEINT * dot * dot >= 361::HUGEINT * na2 * nb2
          |ORDER BY doc_a, doc_b""".stripMargin),
     doc = "X2 cosine near-dup over model-free hash embeddings — SIZE-GATED route: exact integer-threshold block join ≤ 100k docs " +
-      "(every oracle SF), SRP banding past the gate (spark.graft.dedup.route=exact forces the exact tier)")
+      "(every oracle SF), SRP banding past the gate)")
 
   // -------------------------------------------------------------------
   // X2e SRP-LSH-bucketed embedding near-dup — the sub-quadratic 100 TB

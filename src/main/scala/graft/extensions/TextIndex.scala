@@ -1,27 +1,17 @@
 package graft.extensions
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.PhaseLog.timed
 import graft.sources.TsdbStorage
 
-/** What the persisted text-signature index knows about itself — the
-  * [[AnnMeta]] analog: the MinHash width its signatures were computed
-  * with (serving a differently-sized signature would mis-band every
-  * query), the corpus fingerprint (count + doc_id min/max/sum + an
-  * order-independent xor of xxhash64(doc_id, text) — the content term
-  * catches a corpus re-texted in place with unchanged ids) binding it
-  * to the documents it covers, and the idempotent-writer cursor for
-  * streaming maintenance. */
-case class TextMeta(numHashes: Int, corpusRows: Long, idMin: Long, idMax: Long,
-                    idSum: Long, contentXor: Long, lastAppId: String, lastBatchId: Long,
-                    txnCursors: String = "") {
-  /** Per-app replay check ([[TxnCursors]]): the last applied batchId
-    * for `app`, if any. */
-  def appliedBatch(app: String): Option[Long] = TxnCursors.applied(txnCursors, app)
-}
+/** The text index's `_meta` — the [[AnnMeta]] analog: the MinHash
+  * width its signatures were computed with (serving a differently-sized
+  * signature would mis-band every query) next to the shared
+  * [[CorpusState]] (fingerprint over doc_id and text + cursor). */
+case class TextMeta(numHashes: Int, state: CorpusState) extends CorpusMeta
 
 /** Persisted text-signature index — the [[AnnIndex]] of the dedup
   * family. A 100 TB document corpus computes its MinHash/SimHash
@@ -43,10 +33,8 @@ case class TextMeta(numHashes: Int, corpusRows: Long, idMin: Long, idMax: Long,
   *            reader prunes to the columns it serves, so storing the
   *            arrays costs the other paths nothing
   *   _meta/   one row — see [[TextMeta]]
-  *   _SYNCED  commit marker — same certify/fallback protocol as the
-  *            engine's stats index and AnnIndex: queries serve a
-  *            certified, fingerprint-matched index and recompute
-  *            otherwise.
+  *   vocab/, postings/, dfreq/  the LM and BM25 components
+  *   _SYNCED  commit marker — the [[CorpusIndex]] protocol
   *
   * Query integration: set `spark.graft.text.indexDir`;
   * `dedup_minhash` / `dedup_simhash` / `dedup_clusters` read signatures
@@ -59,10 +47,30 @@ case class TextMeta(numHashes: Int, corpusRows: Long, idMin: Long, idMax: Long,
   * docs — the index removes the corpus-wide signature derivation, the
   * part that grows with the corpus.
   */
-object TextIndex {
+object TextIndex extends CorpusIndex[TextMeta] {
 
   /** Session conf key pointing the dedup queries at a persisted index. */
   val ConfKey = "spark.graft.text.indexDir"
+
+  protected val label = "text index"
+  protected val idCol = "doc_id"
+  protected val tables = Seq("sigs", "vocab", "postings", "dfreq")
+  protected val metaLayout = Seq("num_hashes", "corpus_rows", "id_min", "id_max", "id_sum",
+    "content_xor", "last_app_id", "last_batch_id", "txn_cursors")
+
+  protected def schemeColumns(m: TextMeta): Map[String, Any] = Map("num_hashes" -> m.numHashes)
+
+  protected def metaOf(r: MetaRow, state: CorpusState): TextMeta =
+    TextMeta(r.int("num_hashes", DedupQueries.NUM_HASHES), state)
+
+  protected def withState(m: TextMeta, state: CorpusState): TextMeta = m.copy(state = state)
+
+  /** Only the MinHash width the dedup queries band with is served. */
+  override protected def servable(m: TextMeta): Boolean = m.numHashes == DedupQueries.NUM_HASHES
+
+  /** Content term = xor of xxhash64(doc_id, text): cheap next to the
+    * md5 signature derivation the index exists to amortize. */
+  protected def contentCol(corpus: DataFrame): Column = col("text")
 
   private def sigsPath(dir: String) = s"$dir/sigs"
   private def vocabPath(dir: String) = s"$dir/vocab"
@@ -160,126 +168,21 @@ object TextIndex {
       .filter(col("tok").isin(toks: _*))
       .groupBy("tok").agg(sum("df").as("df"))
 
-  private def metaPath(dir: String) = s"$dir/_meta"
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def usable(spark: SparkSession, dir: String): Boolean =
-    TsdbStorage.statsUsable(spark, dir)
-
-  /** Enforced single-writer lease per writer entry — the AnnIndex
-    * contract (see [[graft.sources.WriterLock]]). */
-  private def locked[T](spark: SparkSession, dir: String)(body: => T): T =
-    graft.sources.WriterLock.withLock(spark, dir, graft.sources.WriterLock.newOwner())(body)
-
-  /** Marker-only resolution (conf set + certified). Query paths use
-    * [[resolveFor]], which also proves corpus identity + scheme. */
-  def resolve(spark: SparkSession): Option[String] =
-    Option(spark.conf.get(ConfKey, null)).filter(usable(spark, _))
-
-  /** The certified index dir IF its fingerprint matches `corpus` (a
-    * documents-shaped frame) and its MinHash width matches the one the
-    * caller bands with. Anything else — stale index, foreign corpus,
-    * different signature scheme — is not served; recompute is always
-    * correct. */
-  def resolveFor(spark: SparkSession, corpus: DataFrame,
-                 numHashes: Int = DedupQueries.NUM_HASHES): Option[String] =
-    resolve(spark).filter { dir =>
-      val m = readMeta(spark, dir)
-      m.numHashes == numHashes && fingerprintMatches(spark, m, corpus)
-    }
-
-  private def fingerprintMatches(spark: SparkSession, m: TextMeta,
-                                 corpus: DataFrame): Boolean =
-    m.corpusRows >= 0 && {
-      if (AnnIndex.contentCheck(spark)) // shared ContentCheckKey contract,
-        // shared proof memo (see AnnIndex.contentProven: one content
-        // scan per session per index fingerprint, not one per query)
-        AnnIndex.contentProven(spark, "text",
-          (m.corpusRows, m.idMin, m.idMax, m.idSum, m.contentXor),
-          corpus, idStats(corpus), fingerprint(corpus))
-      else
-        idStats(corpus) == ((m.corpusRows, m.idMin, m.idMax, m.idSum))
-    }
-
-  /** Full-fingerprint audit, content term always included — uncertifies
-    * on mismatch (the [[AnnIndex.verify]] contract). */
-  def verify(spark: SparkSession, dir: String, corpus: DataFrame): Boolean = {
-    if (!usable(spark, dir)) return false
-    val m = readMeta(spark, dir)
-    val ok = m.corpusRows >= 0 &&
-      fingerprint(corpus) == ((m.corpusRows, m.idMin, m.idMax, m.idSum, m.contentXor))
-    if (!ok) TsdbStorage.markStatsOutOfSync(spark, dir)
-    ok
-  }
-
-  private def idStats(corpus: DataFrame): (Long, Long, Long, Long) = {
-    val r = corpus.agg(
-      count(col("doc_id")), coalesce(min("doc_id"), lit(0L)),
-      coalesce(max("doc_id"), lit(0L)), coalesce(sum("doc_id"), lit(0L))).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-  }
-
   def readSigs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(sigsPath(dir))
 
-  /** Content term = xor of xxhash64(doc_id, text): order-independent,
-    * overflow-free (the reason it is not a sum), rolls forward under
-    * append, and costs one cheap hash pass — tiny next to the md5
-    * signature derivation the index exists to amortize. */
-  private def fingerprint(corpus: DataFrame): (Long, Long, Long, Long, Long) = {
-    val r = corpus.agg(
-      count(col("doc_id")), coalesce(min("doc_id"), lit(0L)),
-      coalesce(max("doc_id"), lit(0L)), coalesce(sum("doc_id"), lit(0L)),
-      coalesce(bit_xor(xxhash64(col("doc_id"), col("text"))), lit(0L))).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-  }
-
-  /** Columns selected BY NAME (the AnnIndex lesson: positional reads
-    * silently swap fields under schema evolution). A meta predating
-    * `content_xor` reads as an UNKNOWN fingerprint (corpusRows = -1 —
-    * an xor has no sentinel value), which resolveFor refuses to serve;
-    * rebuild to upgrade. */
-  def readMeta(spark: SparkSession, dir: String): TextMeta = {
-    val df = spark.read.parquet(metaPath(dir))
-    val names = df.columns.toSet
-    val r = df.head()
-    TextMeta(
-      r.getInt(r.fieldIndex("num_hashes")),
-      if (names("content_xor")) r.getLong(r.fieldIndex("corpus_rows")) else -1L,
-      r.getLong(r.fieldIndex("id_min")), r.getLong(r.fieldIndex("id_max")),
-      r.getLong(r.fieldIndex("id_sum")),
-      if (names("content_xor")) r.getLong(r.fieldIndex("content_xor")) else 0L,
-      r.getString(r.fieldIndex("last_app_id")),
-      r.getLong(r.fieldIndex("last_batch_id")),
-      // legacy single-cursor metas fold into a one-entry map
-      if (names("txn_cursors")) r.getString(r.fieldIndex("txn_cursors"))
-      else if (r.getString(r.fieldIndex("last_app_id")).nonEmpty)
-        TxnCursors.render(Vector(
-          r.getString(r.fieldIndex("last_app_id")) -> r.getLong(r.fieldIndex("last_batch_id"))))
-      else "")
-  }
-
-  private def writeMeta(spark: SparkSession, dir: String, m: TextMeta): Unit = {
-    import spark.implicits._
-    Seq((m.numHashes, m.corpusRows, m.idMin, m.idMax, m.idSum, m.contentXor,
-        m.lastAppId, m.lastBatchId, m.txnCursors))
-      .toDF("num_hashes", "corpus_rows", "id_min", "id_max", "id_sum",
-        "content_xor", "last_app_id", "last_batch_id", "txn_cursors")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath(dir))
-  }
-
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  def build(spark: SparkSession, docs: DataFrame, dir: String): Unit =
+    build(spark, docs, dir, DedupQueries.NUM_HASHES)
 
   /** Build (or rebuild) from a full corpus: derive both signatures per
     * document, fingerprint, certify. */
   def build(spark: SparkSession, docs: DataFrame, dir: String,
-            numHashes: Int = DedupQueries.NUM_HASHES): Unit = locked(spark, dir) {
-    ArtifactSwap.recover(spark, dir, "sigs")
+            numHashes: Int): Unit = writer(spark, dir) {
     val (n, idMin, idMax, idSum, cxor) = timed(logger, "fingerprint (1 hash scan)")(fingerprint(docs))
     TsdbStorage.markStatsOutOfSync(spark, dir)
-    writeMeta(spark, dir, TextMeta(numHashes, n, idMin, idMax, idSum, cxor, "", -1L))
+    writeMeta(spark, dir, TextMeta(numHashes, CorpusState(n, idMin, idMax, idSum, cxor)))
     // Each corpus-scan component TOKENIZES FOR ITSELF — a recorded
     // round-10 negative, not an oversight: caching the shared tokenized
     // view to serve both writes measured WORSE at every unfriendly
@@ -342,106 +245,40 @@ object TextIndex {
     TsdbStorage.markStatsInSync(spark, dir)
   }
 
-  /** Incrementally index appended documents: signatures are
-    * per-document deterministic, so appended rows are bit-identical to
-    * what a full rebuild would derive; the fingerprint rolls forward.
-    * `txn` = (appId, batchId) streaming idempotency cursor, exactly the
-    * AnnIndex contract (a replayed micro-batch is a no-op). */
-  def append(spark: SparkSession, newDocs: DataFrame, dir: String,
-             txn: Option[(String, Long)] = None): Unit = locked(spark, dir) {
-    ArtifactSwap.recover(spark, dir, "sigs")
-    ArtifactSwap.recover(spark, dir, "vocab")
-    require(usable(spark, dir), s"text index at $dir is absent or uncertified — build() first")
-    val m = readMeta(spark, dir)
-    // PER-APP replay check: a second writer under a different appId
-    // (nightly re-admission, a second stream) must not reset replay
-    // detection for the first (see [[TxnCursors]])
-    if (txn.exists { case (app, bid) => m.appliedBatch(app).exists(bid <= _) }) return
-    val (n, bMin, bMax, bSum, bXor) = fingerprint(newDocs)
-    // schema-evolution guard: appending NEW-schema rows (e.g. with the
-    // round-6 swh/ntk span columns) into a dir whose existing sigs lack
-    // them would create a MIXED dir — parquet footer sampling then
-    // decides nondeterministically whether readers see the column, and
-    // the span family would serve null windows for every pre-append doc
-    // (silently dropping their duplicates, violating certify-or-
-    // fallback). An older artifact must be rebuilt, not grown.
+  /** Schema-evolution guard: appending NEW-schema rows (e.g. with the
+    * round-6 swh/ntk span columns) into a dir whose existing sigs lack
+    * them would create a MIXED dir — parquet footer sampling then
+    * decides nondeterministically whether readers see the column, and
+    * the span family would serve null windows for every pre-append doc
+    * (silently dropping their duplicates, violating certify-or-
+    * fallback). An older artifact must be rebuilt, not grown. */
+  override protected def checkAppend(spark: SparkSession, dir: String, m: TextMeta,
+                                     newDocs: DataFrame): Unit = {
     val existing = spark.read.parquet(sigsPath(dir)).columns.toSet
     val produced = DedupQueries.signatures(spark, newDocs.limit(0), m.numHashes).columns.toSet
     require(existing == produced,
       s"text index at $dir has signature schema ${existing.toSeq.sorted.mkString(",")} " +
         s"but this version derives ${produced.toSeq.sorted.mkString(",")} — " +
         "rebuild the index (TextIndex.build) before appending")
-    TsdbStorage.markStatsOutOfSync(spark, dir)
+  }
+
+  /** Appended documents' rows: signatures are per-document
+    * deterministic, so they are bit-identical to what a full rebuild
+    * would derive. The vocab and BM25 deltas ride the same txn (the
+    * replay check already skipped a replayed batch, so counts are
+    * exactly-once); only dirs that HAVE a component grow it (a
+    * pre-vocab artifact must be rebuilt, not silently given a partial
+    * LM). */
+  protected def appendPayload(spark: SparkSession, dir: String, m: TextMeta,
+                              newDocs: DataFrame): Unit = {
     DedupQueries.signatures(spark, newDocs, m.numHashes)
       .write.mode("append").parquet(sigsPath(dir))
-    // vocab delta rides the same txn: the replay check above already
-    // returned for a replayed batch, so counts are exactly-once. Only
-    // dirs that HAVE the component grow it (a pre-vocab artifact must
-    // be rebuilt, not silently given a partial LM).
     if (hasVocab(spark, dir))
       vocabDelta(newDocs).write.mode("append").parquet(vocabPath(dir))
-    // BM25 components ride the same exactly-once txn (vocab rule:
-    // only dirs that already have them grow them)
     if (hasPostings(spark, dir)) {
       postingsDelta(newDocs).write.mode("append").parquet(postingsPath(dir))
       dfreqDelta(newDocs).write.mode("append").parquet(dfreqPath(dir))
     }
-    val grown =
-      if (n == 0) m // EMPTY append: an all-zero fingerprint must not fold
-        // into min/max (idMin = min(real, 0) would corrupt the identity
-        // and uncertify the index at the next verify) — the cursor still
-        // advances below, which is the whole point of an empty commit
-      else if (m.corpusRows < 0) m // legacy fingerprintless meta stays unknown
-      else if (m.corpusRows == 0)
-        m.copy(corpusRows = n, idMin = bMin, idMax = bMax, idSum = bSum, contentXor = bXor)
-      else m.copy(corpusRows = m.corpusRows + n,
-        idMin = math.min(m.idMin, bMin), idMax = math.max(m.idMax, bMax),
-        idSum = m.idSum + bSum, contentXor = m.contentXor ^ bXor)
-    writeMeta(spark, dir, txn.fold(grown) { case (app, bid) =>
-      grown.copy(lastAppId = app, lastBatchId = bid,
-        txnCursors = TxnCursors.advance(grown.txnCursors, app, bid)) })
-    TsdbStorage.markStatsInSync(spark, dir)
-  }
-
-  /** Integrity probe: any corrupt file uncertifies (queries fall back);
-    * repair drops the bad files — full repair is build() (derived data). */
-  def fsck(spark: SparkSession, dir: String, repair: Boolean = false): Seq[String] = locked(spark, dir) {
-    ArtifactSwap.recover(spark, dir, "sigs")
-    ArtifactSwap.recover(spark, dir, "vocab")
-    ArtifactSwap.recover(spark, dir, "postings")
-    ArtifactSwap.recover(spark, dir, "dfreq")
-    val bad = TsdbStorage.probeFiles(spark, sigsPath(dir)) ++
-      TsdbStorage.probeFiles(spark, metaPath(dir)) ++
-      (if (hasVocab(spark, dir)) TsdbStorage.probeFiles(spark, vocabPath(dir)) else Nil) ++
-      (if (hasPostings(spark, dir))
-        TsdbStorage.probeFiles(spark, postingsPath(dir)) ++
-          TsdbStorage.probeFiles(spark, dfreqPath(dir))
-      else Nil)
-    if (bad.nonEmpty) {
-      TsdbStorage.markStatsOutOfSync(spark, dir)
-      if (repair) { val f = fs(spark, dir); bad.foreach(p => f.delete(new Path(p), false)) }
-    }
-    bad
-  }
-
-  /** Append-accumulation signature — the [[AnnIndex.fragmented]] analog
-    * over the sigs table. `minFiles` raises the trigger floor for
-    * callers that amortize compaction against many small appends (the
-    * closed admission loop: a 1M-row store's size target is a handful
-    * of files, so the bare 2×-target rule would fire an O(corpus)
-    * rewrite every couple of batches — the floor lets ~a dozen batches
-    * accumulate first). */
-  def fragmented(spark: SparkSession, dir: String,
-                 rowsPerFile: Long = AnnIndex.DefaultRowsPerFile,
-                 minFiles: Int = 0): Boolean = {
-    val p = new Path(sigsPath(dir))
-    val f = fs(spark, dir)
-    if (!f.exists(p) || !usable(spark, dir)) return false
-    val m = readMeta(spark, dir)
-    val rows = if (m.corpusRows >= 0) m.corpusRows else readSigs(spark, dir).count()
-    val target = math.max(1L, (rows + rowsPerFile - 1) / rowsPerFile)
-    f.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) >
-      math.max(2 * target, minFiles.toLong)
   }
 
   /** Compaction invocations — the RefCache-counter pattern: the
@@ -449,51 +286,32 @@ object TextIndex {
     * often) instead of inferring it from wall-clock shape. */
   private[graft] val compactCount = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Rewrite append-accumulated sigs into size-targeted files,
-    * doc_id-range-clustered — same shape as AnnIndex.compact, same
-    * shared swap discipline. */
-  def compact(spark: SparkSession, dir: String,
-              rowsPerFile: Long = AnnIndex.DefaultRowsPerFile): Unit = locked(spark, dir) {
+  /** After [[compact]] rewrote the sigs: fold the vocab LSM into
+    * summed, token-range-clustered segments so steady-state readVocab
+    * scans one segment per size target (never a coalesce(1) monolith —
+    * the vocabulary of a 100 TB corpus is itself large); re-cluster the
+    * append-accumulated postings by token (restores file-level term
+    * pruning) and fold the dfreq LSM. */
+  override protected def compactPayload(spark: SparkSession, dir: String,
+                                        rowsPerFile: Long): Unit = {
     compactCount.incrementAndGet()
-    ArtifactSwap.recover(spark, dir, "sigs")
-    require(usable(spark, dir), s"text index at $dir is absent or uncertified")
-    val m = readMeta(spark, dir)
-    val files = math.max(1L, (m.corpusRows + rowsPerFile - 1) / rowsPerFile).toInt
-    ArtifactSwap.rewrite(spark, dir, "sigs") { tmp =>
-      readSigs(spark, dir)
-        .repartitionByRange(files, col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .write.parquet(tmp)
-    }
-    // consolidate the vocab LSM: fold append deltas into summed,
-    // token-range-clustered segments so steady-state readVocab scans
-    // one segment per size target (never a coalesce(1) monolith — the
-    // vocabulary of a 100 TB corpus is itself large)
     if (hasVocab(spark, dir)) {
-      ArtifactSwap.recover(spark, dir, "vocab")
-      val vRows = spark.read.parquet(vocabPath(dir)).count()
-      val vFiles = math.max(1L, (vRows + rowsPerFile - 1) / rowsPerFile).toInt
+      val vFiles = targetFiles(spark.read.parquet(vocabPath(dir)).count(), rowsPerFile)
       ArtifactSwap.rewrite(spark, dir, "vocab") { tmp =>
         readVocab(spark, dir)
           .repartitionByRange(vFiles, col("token"))
           .write.parquet(tmp)
       }
     }
-    // re-cluster the append-accumulated postings by token (restores
-    // file-level term pruning) and fold the dfreq LSM
     if (hasPostings(spark, dir)) {
-      ArtifactSwap.recover(spark, dir, "postings")
-      ArtifactSwap.recover(spark, dir, "dfreq")
-      val pRows = spark.read.parquet(postingsPath(dir)).count()
-      val pFiles = math.max(1L, (pRows + rowsPerFile - 1) / rowsPerFile).toInt
+      val pFiles = targetFiles(spark.read.parquet(postingsPath(dir)).count(), rowsPerFile)
       ArtifactSwap.rewrite(spark, dir, "postings") { tmp =>
         readPostings(spark, dir)
           .repartitionByRange(pFiles, col("tok"))
           .sortWithinPartitions("tok", "doc_id")
           .write.parquet(tmp)
       }
-      val dRows = spark.read.parquet(dfreqPath(dir)).count()
-      val dFiles = math.max(1L, (dRows + rowsPerFile - 1) / rowsPerFile).toInt
+      val dFiles = targetFiles(spark.read.parquet(dfreqPath(dir)).count(), rowsPerFile)
       ArtifactSwap.rewrite(spark, dir, "dfreq") { tmp =>
         readDfreq(spark, dir)
           .repartitionByRange(dFiles, col("tok"))

@@ -57,7 +57,9 @@ object SkewTools {
     *
     * `ps` maps output column name → percentile in [0, 1]. Returns one
     * row per key: (k, <name>...). Rows with NULL values are ignored by
-    * `percentile`; callers pass non-null value columns. */
+    * `percentile`; callers pass non-null value columns. A zero answers
+    * +0.0 ([[positiveZero]]), so this equals the built-in under
+    * [[positiveZero]] bit for bit. */
   def distributedPercentiles(df: DataFrame, key: Column, valueCol: Column,
                              ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0.0 && p <= 1.0 })
@@ -75,10 +77,17 @@ object SkewTools {
     val agged = cum.groupBy("k").agg(max("n").as("n"), rankAggs: _*)
     val outs = ps.zipWithIndex.map { case ((name, p), i) =>
       val (lo, hi) = (col(s"_lo_$i"), col(s"_hi_$i"))
-      when(ceil(pos(p)) === floor(pos(p)), lo)
-        .otherwise((ceil(pos(p)) - pos(p)) * lo + (pos(p) - floor(pos(p))) * hi)
+      positiveZero(when(ceil(pos(p)) === floor(pos(p)), lo)
+        .otherwise((ceil(pos(p)) - pos(p)) * lo + (pos(p) - floor(pos(p))) * hi))
         .as(name)
     }
     agged.select(col("k") +: outs: _*)
   }
+
+  /** The percentile contract has one zero, +0.0. The built-in
+    * `percentile` keys its count map on the boxed value, which keeps
+    * -0.0 and +0.0 apart (which one answers depends on hash order);
+    * grouping on the value normalizes -0.0 to +0.0. `x + 0.0` is `x`
+    * for every other double, NaN included. */
+  def positiveZero(c: Column): Column = c + lit(0.0)
 }

@@ -191,7 +191,7 @@ object TextSmokes {
     * here (4.5e8 / 332 s at 3.84M docs); the 20-table list must stay
     * ∝ plants and the wall ~linear in the corpus. The route is pinned to
     * that tier (past 100k docs the size gate picks it anyway). */
-  private def sh64Phase(c: Ctx, cp: Corpus): Unit = c.withConf(DedupQueries.RouteKey, "lsh") {
+  private def sh64Phase(c: Ctx, cp: Corpus): Unit = {
     import cp.{dir, nDocs, planted, planted2}
     val vplants = (nDocs - 1) / 5 + 1 // ids 0, 5, 10, … < nDocs
     val d64 = s"$dir/sh64"
@@ -201,7 +201,7 @@ object TextSmokes {
           .withColumn("doc_id", col("doc_id") + 100000000L))
       .write.parquet(s"$d64/documents.parquet")
     val n64 = c.time(f"dedup_simhash 64-bit tier at ${(nDocs * 6) / 5}%,d docs") {
-      try graft.SparkEntry.queries("dedup_simhash")(c.spark, d64).count()
+      try DedupQueries.simhashRouted(c.spark, d64, exact = Some(false)).count()
       finally c.spark.catalog.clearCache()
     }
     c.report("sh64", "pairs" -> n64, "verbatim_floor" -> vplants,
@@ -221,13 +221,13 @@ object TextSmokes {
     * bounded below by the prefixed plants (118/119 shared shingles) and
     * above by plants + the verified near-dup tranche. This entry is
     * ALSO the regression gate for the near tier's candidate generator
-    * (pinned to the past-the-gate route): the SimHash form it replaced
+    * (verified MinHash pairs at every size): the SimHash form it replaced
     * collapsed 239,999 of 240,000 survivors into one false component. */
   val cascade = Entry("text.cascade", "[docs=200k]", Seq(5000L)) { (c, sz) =>
     val cp = corpus(c, sz(0, 200000L))
     import cp.{dir, nDocs, planted}
     val rows = c.time("dedup_cascade end-to-end") {
-      c.withConf(DedupQueries.RouteKey, "lsh")(run(c, dir, "dedup_cascade")).map(r =>
+      run(c, dir, "dedup_cascade").map(r =>
         (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
     }
     rows.foreach { case (no, tier, in, rm, tok, surv) =>

@@ -124,7 +124,7 @@ object VectorSmokes {
     * which scores only same-band-bucket candidates (for random vectors
     * ≈ 1-(15/16)^4 ≈ 23 % of the corpus; real corpora cluster, pushing
     * the ratio down); the persisted index, IVF probing, PQ/ADC, k-means,
-    * PCA and the size-gated dedup route. */
+    * PCA and the size-gated dedup tiers. */
   val main = Entry("vector", "[rows=1M]", Seq(2000L)) { (c, sz) =>
     val spark = c.spark
     val rows = sz(0, 1000000L)
@@ -280,7 +280,7 @@ object VectorSmokes {
     assert(pcaShare > 0 && pcaShare <= 1000000L, s"share ppm in range: $pcaShare")
     c.report("embed_pca", "top_share_ppm" -> pcaShare)
 
-    // ---- the size-gated dedup route END TO END: past
+    // ---- the size-gated dedup tiers END TO END: past
     // EXACT_TIER_MAX_ROWS the gated dedup_embed QueryDef itself picks
     // the SRP-banded plan instead of the N² block join. NOT the lattice
     // corpus: its dims have period 2000 in vec_id (a degenerate all-pairs

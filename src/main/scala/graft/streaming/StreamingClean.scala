@@ -289,7 +289,8 @@ object StreamingClean {
   def admitBatch(spark: SparkSession, batch: DataFrame, ownedDir: String,
                  indexDir: String, verdictsDir: String,
                  appId: String, batchId: Long,
-                 keepLang: String = KEEP_LANG): Unit = {
+                 keepLang: String = KEEP_LANG,
+                 compactFloor: Int = CompactFloor): Unit = {
     require(TextIndex.usable(spark, indexDir),
       s"text index at $indexDir is absent or uncertified — build() it from the owned corpus first")
     val m = TextIndex.readMeta(spark, indexDir)
@@ -322,7 +323,7 @@ object StreamingClean {
         refFrames(DedupQueries.signatures(spark, kept, m.numHashes)))
       // SELF-TRIGGERING artifact compaction (the measured 14→17 s/batch
       // drift over 36 appends was index file-count growth): once the
-      // sigs table carries CompactMinFiles+ fragments — ~a dozen
+      // sigs table carries compactFloor+ fragments — ~a dozen
       // batches of append deltas — fold the LSM. The floor keeps the
       // O(corpus) rewrite amortized over many batches instead of firing
       // every time the handful-of-files size target is doubled; content
@@ -330,18 +331,14 @@ object StreamingClean {
       // RefCache generation stays valid and exactly-once is untouched
       // (StreamingCleanSpec pins the trigger; the `clean.loop` smoke
       // shows the flat steady state).
-      if (TextIndex.fragmented(spark, indexDir, minFiles = compactMinFiles(spark)))
+      if (TextIndex.fragmented(spark, indexDir, minFiles = compactFloor))
         TextIndex.compact(spark, indexDir)
     } finally v.unpersist()
   }
 
-  /** Session conf: file-count floor before [[admitBatch]] self-triggers
-    * [[TextIndex.compact]] (default 48 — ~a dozen batches of 4-file
-    * deltas). */
-  private[graft] val CompactMinFilesKey = "spark.graft.clean.compactMinFiles"
-
-  private def compactMinFiles(spark: SparkSession): Int =
-    graft.core.Conf.int(spark, CompactMinFilesKey, 48)
+  /** Sigs file-count floor before [[admitBatch]] self-triggers
+    * [[TextIndex.compact]]: ~a dozen batches of 4-file deltas. */
+  val CompactFloor = 48
 
   /** The closed admission loop over a parquet document feed: verdicts
     * land under `verdictsDir` (one subdir per batch), admitted

@@ -2,11 +2,11 @@ package graft
 
 import graft.core.Meas
 import graft.engine.GraftEngine
-import graft.extensions.{DedupQueries, SimilarityQueries}
+import graft.extensions.SimilarityQueries
 
 /** A `spark.graft.*` value that does not parse fails at its read with an
   * IllegalArgumentException naming the key and the value — one case
-  * per kind of key: integer, boolean, enumerated. */
+  * per kind of key: integer and boolean. */
 class ConfSpec extends SparkSpec {
 
   private def rejected(key: String, value: String)(read: => Any): Unit = {
@@ -25,9 +25,5 @@ class ConfSpec extends SparkSpec {
     val engine = new GraftEngine(spark, tmpDir("graft-conf-bool"), buckets = 2)
     rejected("spark.graft.lock.appends", "yes")(
       engine.append(Seq(Meas(1L, java.sql.Timestamp.valueOf("2024-03-01 10:00:00"), 1.0, 1L, 1L))))
-  }
-
-  test("an unknown dedup route names the key and the value instead of falling through") {
-    rejected(DedupQueries.RouteKey, "exacct")(DedupQueries.embedCosine.build(spark, sfDir))
   }
 }

@@ -75,14 +75,10 @@ class DedupRouteSpec extends SparkSpec {
     rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
       .withColumn("source", lit("src0")).withColumn("n_chars", length(col("text")).cast("long"))
       .write.parquet(s"$d/documents.parquet")
-    def clustersUnder(route: String) = {
-      spark.conf.set(DedupQueries.RouteKey, route)
-      try graft.SparkEntry.queries("dedup_clusters")(spark, d).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      finally spark.conf.unset(DedupQueries.RouteKey)
-    }
-    val exact = clustersUnder("exact") // the oracle-replayed SimHash tier
-    val routed = clustersUnder("lsh")  // the >100k-doc verified-MinHash route
+    def clustersUnder(exact: Boolean) = DedupQueries.clusterLabels(spark, d, Some(exact))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val exact = clustersUnder(true)   // the oracle-replayed SimHash tier
+    val routed = clustersUnder(false) // the >100k-doc verified-MinHash route
     assert(exact === routed, "both routes resolve the identical components on true near-dups")
     assert(routed.count { case (id, c) => c != id } === 1L, "exactly the planted copy is clustered away")
     assert(routed.contains((8L, 0L)), "the prefixed copy labels to its source")
@@ -109,15 +105,11 @@ class DedupRouteSpec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))
       .write.parquet(s"$d/documents.parquet")
-    def clustersUnder(route: String) = {
-      spark.conf.set(DedupQueries.RouteKey, route)
-      try graft.SparkEntry.queries("dedup_clusters")(spark, d).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      finally spark.conf.unset(DedupQueries.RouteKey)
-    }
-    assert(clustersUnder("exact") === Seq((0L, 0L), (1L, 0L)),
+    def clustersUnder(exact: Boolean) = DedupQueries.clusterLabels(spark, d, Some(exact))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(clustersUnder(true) === Seq((0L, 0L), (1L, 0L)),
       "SimHash tier: Hamming 4 <= 6 clusters the pair")
-    assert(clustersUnder("lsh") === Seq((0L, 0L), (1L, 1L)),
+    assert(clustersUnder(false) === Seq((0L, 0L), (1L, 1L)),
       "verified-Jaccard route: J ~= 0.737 < 0.8 keeps them apart — the intended criterion difference")
   }
 
@@ -132,16 +124,12 @@ class DedupRouteSpec extends SparkSpec {
     rows.toDF("doc_id", "text").withColumn("lang", lit("en"))
       .withColumn("source", lit("src0")).withColumn("n_chars", length(col("text")).cast("long"))
       .write.parquet(s"$d/documents.parquet")
-    def pairsUnder(route: String) = {
-      spark.conf.set(DedupQueries.RouteKey, route)
-      try graft.SparkEntry.queries("dedup_simhash")(spark, d).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      finally spark.conf.unset(DedupQueries.RouteKey)
-    }
-    val routed = pairsUnder("lsh") // forces the > 100k-doc 64-bit tier
+    def pairsUnder(exact: Boolean) = DedupQueries.simhashRouted(spark, d, Some(exact))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val routed = pairsUnder(false) // forces the > 100k-doc 64-bit tier
     assert(routed === Seq((0L, 12L, 0L)),
       "the 64-bit tier reports exactly the verbatim pair — no false Hamming-<=3 edges among unrelated docs")
-    val exact = pairsUnder("exact") // the oracle-replayed 32-bit tier
+    val exact = pairsUnder(true) // the oracle-replayed 32-bit tier
     assert(exact.exists { case (a, b, h) => a == 0L && b == 12L && h == 0L },
       "the 32-bit tier also sees the verbatim pair at Hamming 0")
   }

@@ -64,14 +64,13 @@ class SkewToolsSpec extends SparkSpec {
         Seq((9L, 3.25)) ++
         Seq(-0.0, 0.0, Double.NaN, -0.0, -1.5, 0.0, Double.NaN, 2.0).take(3 + 2 * i).map(v => (10L, v))
       val df = spark.createDataFrame(rows).toDF("id", "value")
-      val aggs = ps.map { case (n, p) => expr(s"percentile(value, ${p}D)").as(n) }
-      // bit for bit (NaN ≠ NaN under ==), except the sign of a zero: the
-      // distributed route groups on the value, and Spark normalizes a
-      // grouping key's -0.0 to 0.0, so a percentile that lands on -0.0
-      // answers +0.0 there; the buffering aggregate keeps -0.0 and +0.0
-      // as separate keys in hash order. Both are 0.0 under SQL equality.
+      // the reference is the built-in under the one-zero contract
+      // (SkewTools.positiveZero): +0.0 wherever a percentile is a zero
+      val aggs = ps.map { case (n, p) =>
+        SkewTools.positiveZero(expr(s"percentile(value, ${p}D)")).as(n) }
+      // bit for bit: NaN ≠ NaN under ==, and -0.0 == +0.0
       def bits(d: org.apache.spark.sql.DataFrame) = d.orderBy("k").collect().map(_.toSeq.map {
-        case v: Double => java.lang.Double.doubleToRawLongBits(if (v == 0.0) 0.0 else v)
+        case v: Double => java.lang.Double.doubleToRawLongBits(v)
         case other => other
       }).toSeq
       val expected = bits(df.groupBy(col("id").as("k")).agg(aggs.head, aggs.tail: _*))
@@ -95,5 +94,28 @@ class SkewToolsSpec extends SparkSpec {
     val subPlain = eng.calculator(q, fns).collect().map(_.toSeq)
     val subRouted = eng.calculator(q, fns, percentileSkewThreshold = 0L).collect().map(_.toSeq)
     assert(subRouted === subPlain)
+  }
+
+  test("calculator percentiles answer one zero, +0.0, on both routes") {
+    // series 1 holds only -0.0 (the built-in's count map then has the
+    // single key -0.0); series 2 mixes -0.0, +0.0, NaN and a negative;
+    // series 3 +0.0, NaN and a positive
+    val eng = new graft.engine.GraftEngine(spark, tmpDir("graft-skew-zero"), buckets = 2)
+    val vals = Seq(1L -> Seq(-0.0, -0.0, -0.0), 2L -> Seq(-0.0, 0.0, Double.NaN, -0.0, -1.5),
+      3L -> Seq(0.0, Double.NaN, 2.0))
+    eng.append(vals.flatMap { case (id, vs) => vs.zipWithIndex.map { case (v, i) =>
+      graft.core.Meas(id, new java.sql.Timestamp(1700000000000L + i * 1000L), v, 0L, i.toLong)
+    } })
+    val q = graft.engine.QueryInterval(Seq(1L, 2L, 3L), 0L,
+      new java.sql.Timestamp(1600000000000L), new java.sql.Timestamp(1800000000000L))
+    val fns = Seq("median", "percentile90", "percentile99")
+    def bits(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq.map {
+      case v: Double => java.lang.Double.doubleToRawLongBits(v)
+      case other => other
+    }).toSeq
+    val plain = bits(eng.calculator(q, fns))
+    assert(plain === bits(eng.calculator(q, fns, percentileSkewThreshold = 0L)),
+      "built-in and distributed routes agree bit for bit")
+    assert(plain.head === Seq(1L, 0L, 0L, 0L), "an all -0.0 series answers +0.0")
   }
 }

@@ -237,18 +237,15 @@ class StreamingCleanSpec extends SparkSpec {
     def sigsFiles(): Int = new java.io.File(s"$idx/sigs")
       .listFiles().count(_.getName.endsWith(".parquet"))
     val before = graft.extensions.TextIndex.compactCount.get()
-    spark.conf.set(StreamingClean.CompactMinFilesKey, "3")
-    try {
-      // six 1-file novel batches: the sigs table accumulates append
-      // deltas until the floor (3 files) is crossed, then admitBatch
-      // itself folds the LSM — no nightly cron involved
-      for (b <- 0 until 6) {
-        StreamingClean.admitBatch(spark,
-          Seq((1000L + b, goodText(s"cpt$b"), "en", new java.sql.Timestamp(b * 1000L)))
-            .toDF("doc_id", "text", "lang", "ingest_ts").coalesce(1),
-          owned, idx, vdir, "cpt-app", b.toLong)
-      }
-    } finally spark.conf.unset(StreamingClean.CompactMinFilesKey)
+    // six 1-file novel batches: the sigs table accumulates append
+    // deltas until the floor (3 files) is crossed, then admitBatch
+    // itself folds the LSM — no nightly cron involved
+    for (b <- 0 until 6) {
+      StreamingClean.admitBatch(spark,
+        Seq((1000L + b, goodText(s"cpt$b"), "en", new java.sql.Timestamp(b * 1000L)))
+          .toDF("doc_id", "text", "lang", "ingest_ts").coalesce(1),
+        owned, idx, vdir, "cpt-app", b.toLong, compactFloor = 3)
+    }
     assert(graft.extensions.TextIndex.compactCount.get() > before,
       "the loop self-triggered at least one compaction")
     assert(sigsFiles() <= 4, s"the folded sigs table is back near its size target: ${sigsFiles()} files")

@@ -80,7 +80,7 @@ class TextIndexSpec extends SparkSpec {
   }
 
   test("the content-check proof is memoized per (session, index, corpus identity)") {
-    import graft.extensions.AnnIndex
+    import graft.extensions.CorpusIndex
     val dir = tmpDir("graft-textidx-memo")
     // a sub-corpus no other test resolves: the memo key is (session,
     // index fingerprint, corpus identity) — NOT the index dir — so a
@@ -89,20 +89,20 @@ class TextIndexSpec extends SparkSpec {
     val corp = docs.filter(col("doc_id") < 400)
     TextIndex.build(spark, corp, dir)
     withIndex(dir) {
-      val c0 = AnnIndex.contentScanCount.get()
+      val c0 = CorpusIndex.contentScanCount.get()
       assert(TextIndex.resolveFor(spark, corp) === Some(dir))
-      val c1 = AnnIndex.contentScanCount.get()
+      val c1 = CorpusIndex.contentScanCount.get()
       assert(c1 === c0 + 1, "the first resolve pays the full content scan")
       assert(TextIndex.resolveFor(spark, corp) === Some(dir))
       assert(TextIndex.resolveFor(spark, corp) === Some(dir))
-      assert(AnnIndex.contentScanCount.get() === c1,
+      assert(CorpusIndex.contentScanCount.get() === c1,
         "later resolves of the same corpus serve the session proof (id stats only)")
       // a transformed frame is a DIFFERENT corpus identity (plan hash):
       // memo miss → full re-proof → refused, never served on the proof
       // of the unmutated corpus
       val mutated = corp.withColumn("text", concat(col("text"), lit(" edited")))
       assert(TextIndex.resolveFor(spark, mutated) === None)
-      assert(AnnIndex.contentScanCount.get() === c1 + 1,
+      assert(CorpusIndex.contentScanCount.get() === c1 + 1,
         "a mutated corpus misses the memo and is re-proved (and refused)")
       // a rewritten file set (same rows, new part files) is also a new
       // identity: re-proof happens, and — the corpus being genuinely
@@ -111,7 +111,7 @@ class TextIndexSpec extends SparkSpec {
       corp.write.parquet(s"$copy/documents.parquet")
       val reread = spark.read.parquet(s"$copy/documents.parquet")
       assert(TextIndex.resolveFor(spark, reread) === Some(dir))
-      assert(AnnIndex.contentScanCount.get() === c1 + 2,
+      assert(CorpusIndex.contentScanCount.get() === c1 + 2,
         "a new file listing misses the memo and re-proves")
     }
   }
