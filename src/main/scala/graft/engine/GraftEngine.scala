@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Meas
+import graft.extensions.TxnCursors
 import graft.sources.TsdbStorage
 import graft.streaming.Subscribe
 
@@ -261,45 +262,12 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   // until compact(). The cursor is a tiny root-level file (NOT under
   // _stats — reindex()/compact() rebuild that directory from scratch
   // and must not reset stream progress), overwritten after each applied
-  // batch; scoped by appId so a NEW stream restarting batch numbering
-  // at 0 is not mistaken for a replay.
+  // batch: a per-app [[TxnCursors]] map, so two streams appending to
+  // one engine cannot defeat each other's replay detection, and a NEW
+  // stream restarting batch numbering at 0 is not mistaken for a
+  // replay. Legacy single-cursor files ("appId\nbatchId") parse as a
+  // one-entry map.
   private def cursorFile = new Path(s"$path/_stream_cursor")
-
-  /** A single-(appId,batchId) cursor would let TWO streams appending to
-    * one engine defeat replay detection: interleaved batches alternate
-    * the stored appId, so stream A's replay arriving after stream B's
-    * append looks like a new app and is re-applied. The cursor is
-    * therefore a small PER-APP map, most-recently-updated last, bounded
-    * at [[CursorMaxApps]] concurrent streams (eviction drops the
-    * longest-idle app, which then degrades to the documented
-    * masked-duplicate behavior — never to data loss). */
-  private val CursorMaxApps = 16
-
-  /** appId → last applied batchId, most-recently-updated LAST. Legacy
-    * single-cursor files ("appId\nbatchId", no tabs) parse as a one-
-    * entry map. */
-  private def readCursors(): Vector[(String, Long)] =
-    if (!fs.exists(cursorFile)) Vector.empty
-    else {
-      val in = fs.open(cursorFile)
-      try {
-        val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        if (lines.exists(_.contains('\t')))
-          lines.flatMap { l =>
-            val i = l.lastIndexOf('\t')
-            if (i < 0) None else l.drop(i + 1).toLongOption.map(l.take(i) -> _)
-          }.toVector
-        else
-          (for { app <- lines.headOption; bid <- lines.lift(1).flatMap(_.toLongOption) }
-            yield Vector(app -> bid)).getOrElse(Vector.empty)
-      } finally in.close()
-    }
-
-  private def writeCursors(cur: Vector[(String, Long)]): Unit = {
-    val out = fs.create(cursorFile, true)
-    try out.write(cur.map { case (a, b) => s"$a\t$b" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** Append a streamed micro-batch at most once: a replayed (appId,
     * batchId) — one at or behind the persisted cursor — is a no-op (no
@@ -314,12 +282,14 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * caveat the level itself documents. */
   def appendOnce(batch: DataFrame, appId: String, batchId: Long): Unit = synchronized {
     if (hotCapacity <= 0L) maybeLeased {
-      val cursors = readCursors()
-      val applied = cursors.collectFirst { case (a, b) if a == appId => b }
-      if (applied.forall(batchId > _)) { // else replay: already applied
+      val cursors =
+        if (!fs.exists(cursorFile)) ""
+        else { val in = fs.open(cursorFile); try new String(in.readAllBytes(), "UTF-8") finally in.close() }
+      if (TxnCursors.applied(cursors, appId).forall(batchId > _)) { // else replay: already applied
         notifyAppended(appendCore(batch))
-        writeCursors((cursors.filterNot(_._1 == appId) :+ (appId -> batchId))
-          .takeRight(CursorMaxApps))
+        val out = fs.create(cursorFile, true)
+        try out.write(TxnCursors.advance(cursors, appId, batchId).getBytes("UTF-8"))
+        finally out.close()
       }
     } else maybeLeased(notifyAppended(appendCore(batch)))
   }
@@ -450,7 +420,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   def readTimePoint(q: QueryTimePoint): DataFrame = {
     val ids = q.ids.distinct
     (if (q.flag == 0L) indexLookup(lastResidentDays(ids, q.timePoint)) else None)
-      .fold(readTimePointScan(q)) { days =>
+      .fold(readTimePointScan(q)) { case (universe, days) =>
         // flag 0, so the raw rows need no freshness merge: `seq` is
         // unique per measurement, and the largest (time, seq) at or
         // before the timepoint IS the freshest version at the latest time
@@ -458,8 +428,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
           if (days.isEmpty) emptyMeas
           else TsdbStorage.readDays(spark, dataPath, days)
             .filter(col("time") <= lit(q.timePoint) && idPred(ids))
-        asOf(if (ids.nonEmpty) ids.toDF("id")
-             else TsdbStorage.readStats(spark, statsPath).select("id"), candidates)
+        asOf(universe.toDF("id"), candidates)
       }
   }
 
@@ -474,28 +443,32 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
         .filter(col("time") <= lit(q.timePoint) && flagPred(q.flag) && idPred(ids)))
   }
 
-  /** Per id, the last day at-or-before the timepoint that holds a row
-    * ≤ timepoint (a day before the timepoint's day, or the day itself
-    * when its min_time is ≤ the timepoint — a day whose rows all fall
-    * AFTER a mid-day timepoint is skipped for its predecessor); returns
-    * the distinct such days. Explicit ids collect their (id, day) rows
-    * and take each id's max on the driver — no shuffle, bounded by
-    * |ids| × resident days ≤ tp. The catalog-wide request keeps the
-    * distributed per-id max, since its rows grow with series × days.
+  /** The as-of id universe, and per id the last day at-or-before the
+    * timepoint that holds a row ≤ timepoint (a day before the
+    * timepoint's day, or the day itself when its min_time is ≤ the
+    * timepoint — a day whose rows all fall AFTER a mid-day timepoint is
+    * skipped for its predecessor) as the distinct such days. Explicit
+    * ids are their own universe: they collect their (id, day) rows and
+    * take each id's max on the driver — no shuffle, bounded by |ids| ×
+    * resident days ≤ tp. The catalog-wide request keeps the distributed
+    * per-id max, since its rows grow with series × days, and collects
+    * one row per indexed series — the size of the answer itself: the
+    * universe must be read inside the lookup's generation bracket too,
+    * not lazily by the data query.
     * Exactness: the index reflects the merged store (refreshed under the
     * _SYNCED marker at every mutation). */
-  private def lastResidentDays(ids: Seq[Long], tp: Timestamp): Seq[java.sql.Date] = {
+  private def lastResidentDays(ids: Seq[Long], tp: Timestamp): (Seq[Long], Seq[java.sql.Date]) = {
     val tpDay = java.sql.Date.valueOf(tp.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
-    val resident = TsdbStorage.readStats(spark, statsPath)
-      .filter(col("day") <= lit(tpDay) && idPred(ids)
-        && (col("day") < lit(tpDay) || col("min_time") <= lit(tp)))
+    val resident = col("day") <= lit(tpDay) && (col("day") < lit(tpDay) || col("min_time") <= lit(tp))
+    val stats = TsdbStorage.readStats(spark, statsPath)
     if (ids.nonEmpty)
-      resident.select("id", "day").collect()
+      (ids, stats.filter(resident && idPred(ids)).select("id", "day").collect()
         .groupMapReduce(_.getLong(0))(_.getDate(1))((a, b) => if (a.after(b)) a else b)
-        .values.toSeq.distinct
-    else
-      resident.groupBy("id").agg(max("day").as("last_day"))
-        .select("last_day").distinct().collect().map(_.getDate(0)).toSeq
+        .values.toSeq.distinct)
+    else {
+      val last = stats.groupBy("id").agg(max(when(resident, col("day"))).as("last_day")).collect()
+      (last.map(_.getLong(0)).toSeq, last.filterNot(_.isNullAt(1)).map(_.getDate(1)).toSeq.distinct)
+    }
   }
 
   /** The as-of answer over `candidates` (rows at or before the
@@ -795,17 +768,17 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     // index-driven day pruning: the index reflects the MERGED store, so
     // a (day, id) row with min_time < cutoff exists iff that day holds
     // at least one erasable row. The collect is bounded by the candidate
-    // day count (tiny), same as the directory listing above.
-    val affectedDays =
-      if (!wasUsable) candidateDays
-      else {
-        val present = TsdbStorage.readStats(spark, statsPath)
-          .filter(idPred(ids) && col("day").isin(candidateDays: _*)
-            && col("min_time") < lit(cutoff))
-          .select("day").distinct()
-          .collect().map(_.getDate(0)).toSet
-        candidateDays.filter(present)
-      }
+    // day count (tiny), same as the directory listing above. Appends are
+    // lease-free, so the lookup runs inside the generation bracket; a
+    // torn one falls back to every candidate day.
+    val affectedDays = indexLookup {
+      val present = TsdbStorage.readStats(spark, statsPath)
+        .filter(idPred(ids) && col("day").isin(candidateDays: _*)
+          && col("min_time") < lit(cutoff))
+        .select("day").distinct()
+        .collect().map(_.getDate(0)).toSet
+      candidateDays.filter(present)
+    }.getOrElse(candidateDays)
     if (affectedDays.isEmpty) return Seq.empty
     TsdbStorage.markStatsOutOfSync(spark, statsPath)
     TsdbStorage.rewriteDaysFiltered(spark, dataPath, affectedDays, buckets,

@@ -3,6 +3,7 @@ package graft.extensions
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.sources.TsdbStorage
@@ -169,6 +170,17 @@ abstract class CorpusIndex[M <: CorpusMeta] {
   /** True iff the index exists AND its last mutation committed. */
   def usable(spark: SparkSession, dir: String): Boolean = TsdbStorage.statsUsable(spark, dir)
 
+  /** Fail unless the index at `dir` is [[usable]]. */
+  def certified(spark: SparkSession, dir: String): Unit =
+    require(usable(spark, dir), s"$label at $dir is absent or uncertified — build() it first")
+
+  /** The served content's generation: the scheme columns plus the
+    * fingerprint, the txn cursor excluded — an append that kept nothing
+    * advances the cursor but serves the same content. The admission
+    * loop's reference-cache key ([[graft.streaming.RefCache]]). */
+  def generation(m: M): String =
+    (metaLayout.flatMap(schemeColumns(m).get) :+ m.state.fingerprint).mkString(":")
+
   /** The certified index dir the session points at, if any. Marker-only:
     * corpus identity is NOT checked here — query paths use
     * [[resolveFor]]. */
@@ -300,7 +312,7 @@ abstract class CorpusIndex[M <: CorpusMeta] {
     * claim). */
   def append(spark: SparkSession, delta: DataFrame, dir: String,
              txn: Option[(String, Long)] = None): Unit = writer(spark, dir) {
-    require(usable(spark, dir), s"$label at $dir is absent or uncertified — build() first")
+    certified(spark, dir)
     val m = readMeta(spark, dir)
     if (!txn.exists { case (app, bid) => m.appliedBatch(app).exists(bid <= _) }) {
       val fp = fingerprint(delta)
@@ -311,6 +323,23 @@ abstract class CorpusIndex[M <: CorpusMeta] {
       TsdbStorage.markStatsInSync(spark, dir)
     }
   }
+
+  /** Streaming maintenance: every non-empty micro-batch of `source`
+    * (the corpus's shape) is one [[append]] under the (checkpoint,
+    * batchId) txn. foreachBatch is at-least-once; the txn cursor skips a
+    * replayed batch, which lifts the loop to exactly-once, and a NEW
+    * stream (fresh checkpoint) restarts batch numbering without being
+    * mistaken for a replay. Appends are per-item deterministic, so the
+    * streamed index equals a batch append of the same rows. The index
+    * must be built first; an uncertified one fails the next micro-batch
+    * fast. */
+  def appendStream(source: DataFrame, dir: String, checkpoint: String): StreamingQuery =
+    source.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) append(batch.sparkSession, batch, dir, txn = Some((checkpoint, batchId)))
+      }
+      .start()
 
   /** Integrity probe (the fsck of this artifact): every payload and
     * `_meta` file fully decompressed, distributed. A corrupt file
@@ -337,6 +366,10 @@ abstract class CorpusIndex[M <: CorpusMeta] {
     if (m.corpusRows >= 0) m.corpusRows else spark.read.parquet(s"$dir/$mainTable").count()
   }
 
+  /** Compaction invocations: the closed-loop smoke and specs assert
+    * maintenance actually fired instead of inferring it from timings. */
+  private[graft] val compactCount = new java.util.concurrent.atomic.AtomicLong()
+
   /** Rewrite the append-accumulated main table (contents unchanged)
     * into ~rowsPerFile-sized files RANGE-CLUSTERED on the id — the file
     * count scales with the corpus (never a one-task monolith), readers
@@ -345,7 +378,8 @@ abstract class CorpusIndex[M <: CorpusMeta] {
     * the swap. */
   def compact(spark: SparkSession, dir: String,
               rowsPerFile: Long = DefaultRowsPerFile): Unit = writer(spark, dir) {
-    require(usable(spark, dir), s"$label at $dir is absent or uncertified")
+    certified(spark, dir)
+    compactCount.incrementAndGet()
     val files = targetFiles(mainRows(spark, dir), rowsPerFile)
     ArtifactSwap.rewrite(spark, dir, mainTable) { tmp =>
       spark.read.parquet(s"$dir/$mainTable")

@@ -34,7 +34,10 @@ object PipelineQueries {
 
   private val PLANT = 50L
   private val OFFSET = 2000000L
-  private val KEEP_LANG = "en"
+  /** The one kept language — of this pipeline and of its streaming
+    * form, [[graft.streaming.StreamingClean]], whose stage precedence
+    * matches this one. */
+  private[graft] val KEEP_LANG = "en"
 
   private def docs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/documents.parquet")

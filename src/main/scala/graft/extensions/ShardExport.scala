@@ -3,6 +3,7 @@ package graft.extensions
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Training-shard exporter — the writer behind `shard_manifest`: ships
   * the corpus as hash-assigned parquet shards plus the manifest the
@@ -162,6 +163,23 @@ object ShardExport {
   }
 
   /** App tokens live in file names and tab-separated logs. */
+  /** Streaming export — the last stage of the online pipeline (admit →
+    * clean → EXPORT): each non-empty micro-batch of documents-shaped
+    * rows is one [[append]] under the (checkpoint, batchId) txn, so a
+    * replayed micro-batch is a no-op and a crash inside an append
+    * replays cleanly. Loaders never see a torn state: batch files appear
+    * only under complete deterministic names, and the manifest always
+    * describes a prefix of the applied batches. The target must be an
+    * existing [[write]] layout. */
+  def appendStream(source: DataFrame, outDir: String, checkpoint: String): StreamingQuery =
+    source.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) append(batch.sparkSession, batch, outDir, checkpoint, batchId)
+        () // the replay flag is not foreachBatch's business
+      }
+      .start()
+
   private def sanitize(appId: String): String =
     appId.replaceAll("[^A-Za-z0-9.-]", "-")
 

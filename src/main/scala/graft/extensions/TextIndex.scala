@@ -281,11 +281,6 @@ object TextIndex extends CorpusIndex[TextMeta] {
     }
   }
 
-  /** Compaction invocations — the RefCache-counter pattern: the
-    * closed-loop smoke asserts maintenance actually fired (and how
-    * often) instead of inferring it from wall-clock shape. */
-  private[graft] val compactCount = new java.util.concurrent.atomic.AtomicLong()
-
   /** After [[compact]] rewrote the sigs: fold the vocab LSM into
     * summed, token-range-clustered segments so steady-state readVocab
     * scans one segment per size target (never a coalesce(1) monolith —
@@ -294,7 +289,6 @@ object TextIndex extends CorpusIndex[TextMeta] {
     * pruning) and fold the dfreq LSM. */
   override protected def compactPayload(spark: SparkSession, dir: String,
                                         rowsPerFile: Long): Unit = {
-    compactCount.incrementAndGet()
     if (hasVocab(spark, dir)) {
       val vFiles = targetFiles(spark.read.parquet(vocabPath(dir)).count(), rowsPerFile)
       ArtifactSwap.rewrite(spark, dir, "vocab") { tmp =>

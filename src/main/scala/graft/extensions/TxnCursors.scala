@@ -1,9 +1,9 @@
 package graft.extensions
 
-/** The artifact indexes' streaming-idempotency cursor, as a small
-  * PER-APP map ("appId\tbatchId" lines) instead of a single last
-  * (appId, batchId) pair — the same fix [[graft.engine.GraftEngine]]'s
-  * `_stream_cursor` got: with one pair, a second writer under a
+/** The streaming-idempotency cursor of the corpus indexes, the shard
+  * export and [[graft.engine.GraftEngine]]'s `_stream_cursor`, as a
+  * small PER-APP map ("appId\tbatchId" lines) instead of a single last
+  * (appId, batchId) pair: with one pair, a second writer under a
   * different appId (a nightly re-admission pass, a second admission
   * stream) RESETS replay detection for the first, and in the closed
   * admission loop a defeated replay is not merely wasteful — the
@@ -19,8 +19,15 @@ private[graft] object TxnCursors {
 
   val MaxApps = 16
 
+  /** The map, most-recently-updated last. A text without tabs is the
+    * engine's legacy single-cursor file ("appId\nbatchId"), read as a
+    * one-entry map. */
   def parse(s: String): Vector[(String, Long)] =
     if (s == null || s.isEmpty) Vector.empty
+    else if (!s.contains('\t')) s.split('\n') match {
+      case Array(app, bid, _*) => bid.toLongOption.map(app -> _).toVector
+      case _ => Vector.empty
+    }
     else s.split('\n').toVector.flatMap { l =>
       val i = l.lastIndexOf('\t')
       if (i < 0) None else l.drop(i + 1).toLongOption.map(l.take(i) -> _)

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Static-side reference frames for the admission streams
-  * ([[StreamingClean]]/[[StreamingEmbed]]), cached once per index
-  * GENERATION instead of once per invocation.
+/** Static-side reference frames for the admission loop ([[Admission]],
+  * both modalities), cached once per index GENERATION
+  * ([[graft.extensions.CorpusIndex.generation]]) instead of once per
+  * invocation.
   *
   * The admission marker legs join every micro-batch against frames
   * derived from the certified index (banded signatures, SRP band

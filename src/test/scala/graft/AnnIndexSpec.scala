@@ -183,7 +183,7 @@ class AnnIndexSpec extends SparkSpec {
     def write(cond: org.apache.spark.sql.Column): Unit =
       raw.filter(cond).coalesce(1).write.mode("append").parquet(src)
     write(col("vec_id") < 25)
-    val query = graft.streaming.AnnIndexStream.start(
+    val query = AnnIndex.appendStream(
       spark.readStream.schema(raw.schema).parquet(src),
       dir, tmpDir("graft-ann-stream-ckpt"))
     try {

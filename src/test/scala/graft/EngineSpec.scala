@@ -510,19 +510,23 @@ class EngineSpec extends SparkSpec {
     // listed its files (at DataFrame creation); before it executes, a
     // second engine instance runs one whole append to the same days,
     // which deletes and rewrites those index partitions.
+    // `withData` arms the append for a plan that reads the store's data
+    // too: the data query of a read, which must not touch the index.
     val reader = Thread.currentThread
     @volatile var armed = false
+    @volatile var withData = false
     var seq = 100L
     object AppendMidLookup extends Rule[LogicalPlan] {
       def apply(plan: LogicalPlan): LogicalPlan = {
-        val readsIndex = plan.exists {
+        def reads(dir: String) = plan.exists {
           case l: LogicalRelation => l.relation match {
-            case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "_stats")
+            case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == dir)
             case _ => false
           }
           case _ => false
         }
-        if (armed && readsIndex && Thread.currentThread == reader) {
+        if (armed && reads("_stats") && (!withData || reads("data"))
+            && Thread.currentThread == reader) {
           armed = false
           seq += 1
           val t = new Thread(() => appender.append(days.map(d => Meas(2L, ts(s"$d 08:00:00"), 3.0, 1L, seq))))
@@ -548,6 +552,23 @@ class EngineSpec extends SparkSpec {
       armed = true
       assert(rows(engine.calculator(qi)) === calc)
       assert(!armed, "the append ran inside the calculator's skew lookup")
+      // the catalog-wide as-of id universe is read inside the lookup: no
+      // later query reads the index, so an append armed for the data
+      // query never fires (reading the universe there, the data query
+      // would list index files the append then deletes)
+      val qAll = QueryTimePoint(Nil, 0L, ts("2024-03-03 12:00:00"))
+      val pointAll = rows(engine.readTimePointScan(qAll))
+      armed = true; withData = true
+      assert(rows(engine.readTimePoint(qAll)) === pointAll)
+      assert(armed, "no query after the catalog-wide lookup reads the index")
+      armed = false; withData = false
+      // per-id eraseOld's day pruning: a torn lookup falls back to every
+      // candidate day, so the erase still reaches all of series 1's days
+      armed = true
+      assert(engine.eraseOld(ts("2024-03-02 12:00:00"), Seq(1L)).sorted ===
+        Seq("day=2024-03-01", "day=2024-03-02"))
+      assert(!armed, "the append ran inside eraseOld's day lookup")
+      assert(rows(engine.readIntervalScan(qi)).map(_.head) === Seq(1L))
     } finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ eq AppendMidLookup)
   }
@@ -779,6 +800,28 @@ class EngineSpec extends SparkSpec {
       spark.readStream.schema(Meas.schema).parquet(src), tmpDir("graft-ingest-replay-ckpt"))
     try q.processAllAvailable() finally q.stop()
     assert(engine.merged.count() === 5L)
+  }
+
+  test("appendOnce reads a legacy single-cursor file: its replay is still a no-op") {
+    import spark.implicits._
+    val dir = tmpDir("graft-ingest-legacy-cursor")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    val batch0 = spark.createDataset(Seq(
+      Meas(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK, 1))).toDF()
+    engine.appendOnce(batch0, "ckpt-A", 0L)
+    // the cursor as an engine predating the per-app map wrote it
+    val cursor = new org.apache.hadoop.fs.Path(s"$dir/_stream_cursor")
+    val fs = cursor.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(cursor, true)
+    try out.write("ckpt-A\n0".getBytes("UTF-8")) finally out.close()
+    def dataFiles(): Seq[String] = new java.io.File(s"$dir/data").listFiles
+      .filter(_.isDirectory).flatMap(_.listFiles).map(f => s"${f.getName}:${f.length}").toSeq.sorted
+    val files = dataFiles()
+    engine.appendOnce(batch0, "ckpt-A", 0L)
+    assert(dataFiles() === files, "the legacy cursor still marks batch 0 applied")
+    engine.appendOnce(spark.createDataset(Seq(
+      Meas(2L, ts("2024-03-01 11:00:00"), 2.0, Flags.CLICK, 2))).toDF(), "ckpt-A", 1L)
+    assert(engine.merged.count() === 2L, "the next batch applies")
   }
 
   test("maintain(): one call repairs corruption, compacts fragmented days, recertifies the index") {

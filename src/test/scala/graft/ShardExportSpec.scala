@@ -170,7 +170,7 @@ class ShardExportSpec extends SparkSpec {
     write(5000000L)
     val stream = spark.readStream.schema(
       docs.select("doc_id", "text", "lang", "source", "n_chars").schema).parquet(src)
-    val q = graft.streaming.ShardExportStream.start(stream, out, tmpDir("graft-shardexp-ckpt"))
+    val q = ShardExport.appendStream(stream, out, tmpDir("graft-shardexp-ckpt"))
     try {
       q.processAllAvailable()
       write(6000000L) // a second micro-batch

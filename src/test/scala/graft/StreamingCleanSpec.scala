@@ -10,7 +10,7 @@ import graft.streaming.StreamingClean
   * boundaries — and the hand-derived verdicts pin every stage path
   * independently of the shared derivations.
   */
-class StreamingCleanSpec extends SparkSpec {
+class StreamingCleanSpec extends SparkSpec with AdmissionCases {
 
   import spark.implicits._
 
@@ -45,6 +45,11 @@ class StreamingCleanSpec extends SparkSpec {
   private val expected: Map[Long, String] = Map(
     100L -> "kept", 101L -> "lang", 102L -> "quality", 103L -> "near_dup",
     104L -> "near_dup", 105L -> "exact_dup", 106L -> "kept", 107L -> "quality")
+
+  private val text = Modality("text", StreamingClean, TextIndex, "sigs",
+    () => baseCorpus.toDF("doc_id", "text"),
+    b => Seq((1000L + b, goodText(s"cpt$b"), "en", new java.sql.Timestamp(b * 1000L)))
+      .toDF("doc_id", "text", "lang", "ingest_ts"))
 
   private def buildIndex(): String = {
     val dir = tmpDir("graft-sclean-idx")
@@ -187,22 +192,12 @@ class StreamingCleanSpec extends SparkSpec {
     assert(TextIndex.readSigs(spark, idx).count() === 22L, "replayed batch appends nothing")
     assert(StreamingClean.ownedCorpus(spark, owned).count() === 22L)
     // a SECOND writer under a different appId (the nightly re-admission
-    // pass) must NOT reset the stream's replay detection: the cursor is
-    // a per-app map, and a defeated replay here would re-judge batch 0
-    // against its own admission (near_dup → empty kept) and overwrite
-    // its corpus dir — destroying doc 100
-    StreamingClean.admitBatch(spark,
-      Seq((300L, goodText("n300"), "en", new java.sql.Timestamp(9000L)))
+    // pass) must NOT reset the stream's replay detection: a defeated
+    // replay would destroy doc 100
+    nightlyKeepsReplay(text, owned, idx, vdir, ckpt, batch0, admitted = 100L,
+      nightly = Seq((300L, goodText("n300"), "en", new java.sql.Timestamp(9000L)))
         .toDF("doc_id", "text", "lang", "ingest_ts"),
-      owned, idx, vdir, "nightly-pass", 0L)
-    assert(StreamingClean.ownedCorpus(spark, owned).count() === 23L, "the nightly's doc admitted")
-    StreamingClean.admitBatch(spark, batch0, owned, idx, vdir, ckpt, 0L)
-    val ids = StreamingClean.ownedCorpus(spark, owned).select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-    assert(ids.contains(100L),
-      "stream batch 0's replay after the nightly's commit is STILL a no-op — " +
-        "its admission survives")
-    assert(StreamingClean.ownedCorpus(spark, owned).count() === 23L)
+      ownedAfter = 23L)
   }
 
   test("an all-rejected batch advances the cursor without corrupting the fingerprint") {
@@ -229,37 +224,7 @@ class StreamingCleanSpec extends SparkSpec {
   }
 
   test("self-triggering compaction: the admit loop folds the sigs LSM past the file floor, exactly-once intact") {
-    val owned = tmpDir("graft-admit-cpt-owned")
-    baseCorpus.toDF("doc_id", "text").write.mode("overwrite").parquet(owned)
-    val idx = tmpDir("graft-admit-cpt-idx")
-    TextIndex.build(spark, StreamingClean.ownedCorpus(spark, owned), idx)
-    val vdir = tmpDir("graft-admit-cpt-verdicts")
-    def sigsFiles(): Int = new java.io.File(s"$idx/sigs")
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    val before = graft.extensions.TextIndex.compactCount.get()
-    // six 1-file novel batches: the sigs table accumulates append
-    // deltas until the floor (3 files) is crossed, then admitBatch
-    // itself folds the LSM — no nightly cron involved
-    for (b <- 0 until 6) {
-      StreamingClean.admitBatch(spark,
-        Seq((1000L + b, goodText(s"cpt$b"), "en", new java.sql.Timestamp(b * 1000L)))
-          .toDF("doc_id", "text", "lang", "ingest_ts").coalesce(1),
-        owned, idx, vdir, "cpt-app", b.toLong, compactFloor = 3)
-    }
-    assert(graft.extensions.TextIndex.compactCount.get() > before,
-      "the loop self-triggered at least one compaction")
-    assert(sigsFiles() <= 4, s"the folded sigs table is back near its size target: ${sigsFiles()} files")
-    // the compaction preserved content + certification: every admitted
-    // doc is still indexed exactly once and the fingerprint matches
-    assert(TextIndex.readSigs(spark, idx).count() === 26L, "20 seed + 6 admitted, no loss, no dup")
-    assert(TextIndex.verify(spark, idx, StreamingClean.ownedCorpus(spark, owned)),
-      "fingerprint still matches the grown corpus after the fold")
-    // replay of an already-compacted batch is still a no-op
-    StreamingClean.admitBatch(spark,
-      Seq((1000L, goodText("cpt0"), "en", new java.sql.Timestamp(0L)))
-        .toDF("doc_id", "text", "lang", "ingest_ts"),
-      owned, idx, vdir, "cpt-app", 0L)
-    assert(TextIndex.readSigs(spark, idx).count() === 26L, "exactly-once survives the fold")
+    selfCompaction(text)
   }
 
   test("an absent or uncertified index is a hard error, not a silent pass-through") {

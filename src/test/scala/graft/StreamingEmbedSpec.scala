@@ -12,7 +12,7 @@ import graft.streaming.StreamingEmbed
   * deterministic with no banding-recall caveat; the float values (and
   * hence the exact-dup hash) still differ from the original.
   */
-class StreamingEmbedSpec extends SparkSpec {
+class StreamingEmbedSpec extends SparkSpec with AdmissionCases {
 
   import spark.implicits._
 
@@ -38,6 +38,11 @@ class StreamingEmbedSpec extends SparkSpec {
 
   private def ownedDf = owned.toDF("vec_id", "embedding", "label")
 
+  private val vectors = Modality("vector", StreamingEmbed, AnnIndex, "codes",
+    () => owned.map { case (id, v, _) => (id, v) }.toDF("vec_id", "embedding"),
+    b => Seq((100300L + b, vec(8000L + b), new java.sql.Timestamp(b * 1000L)))
+      .toDF("vec_id", "embedding", "ingest_ts"))
+
   // stream tranche: every verdict path carries at least one vector
   private val tranche: Seq[(Long, Seq[Float], Long)] = Seq(
     (100100L, vec(5000L), 1L),                  // novel             → kept
@@ -62,7 +67,7 @@ class StreamingEmbedSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(src)
 
     write(Set(100100L, 100101L, 100102L)) // 100103 must hit CARRIED state
-    val q = StreamingEmbed.start(spark, src, idx, ownedDf, "semb_sink", ckpt)
+    val q = StreamingEmbed.start(spark, src, idx, "semb_sink", ckpt, owned = ownedDf)
     try {
       q.processAllAvailable()
       write(Set(100103L, 100104L))
@@ -85,7 +90,7 @@ class StreamingEmbedSpec extends SparkSpec {
     owned.map { case (id, v, _) => (id, v) }.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(ownedDir)
     val idx = tmpDir("graft-semb-admit-idx")
-    AnnIndex.build(spark, StreamingEmbed.ownedVectors(spark, ownedDir), idx)
+    AnnIndex.build(spark, StreamingEmbed.ownedCorpus(spark, ownedDir), idx)
     val src = tmpDir("graft-semb-admit-src")
     val vdir = tmpDir("graft-semb-admit-verdicts")
     val ckpt = tmpDir("graft-semb-admit-ckpt")
@@ -95,6 +100,8 @@ class StreamingEmbedSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(src)
     // batch 0: a novel vector + a scaled copy of the SEED corpus
     write(Seq((100100L, vec(5000L), 1L), (100101L, vec(7L).map(_ * 2f), 2L)))
+    val (builds0, extends0) =
+      (graft.streaming.RefCache.buildCount.get(), graft.streaming.RefCache.extendCount.get())
     val q = StreamingEmbed.admitStream(spark, src, ownedDir, idx, vdir, ckpt)
     try {
       q.processAllAvailable()
@@ -103,6 +110,10 @@ class StreamingEmbedSpec extends SparkSpec {
       write(Seq((100200L, vec(5000L).map(_ * 2f), 3L), (100201L, vec(6000L), 4L)))
       q.processAllAvailable()
     } finally q.stop()
+    assert(graft.streaming.RefCache.buildCount.get() === builds0 + 1,
+      "one full reference derivation for the whole run — batch 1 rode the extended cache")
+    assert(graft.streaming.RefCache.extendCount.get() === extends0 + 2,
+      "each admitting batch rolled the cached generation forward incrementally")
     val got = spark.read.option("recursiveFileLookup", "true").parquet(vdir)
       .select("vec_id", "verdict").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -111,7 +122,7 @@ class StreamingEmbedSpec extends SparkSpec {
     assert(got(100200L) === "near_dup",
       "batch 1's copy of a batch-0 admission is caught — the loop is closed")
     assert(got(100201L) === "kept")
-    assert(StreamingEmbed.ownedVectors(spark, ownedDir).select("vec_id").collect()
+    assert(StreamingEmbed.ownedCorpus(spark, ownedDir).select("vec_id").collect()
       .map(_.getLong(0)).toSet === ((0L until 200L).toSet + 100100L + 100201L))
     assert(AnnIndex.readCodes(spark, idx).count() === 202L)
     assert(AnnIndex.usable(spark, idx), "the loop leaves a certified index behind")
@@ -121,13 +132,33 @@ class StreamingEmbedSpec extends SparkSpec {
         .toDF("vec_id", "embedding", "ingest_ts"),
       ownedDir, idx, vdir, ckpt, 0L)
     assert(AnnIndex.readCodes(spark, idx).count() === 202L, "replayed batch appends nothing")
-    assert(StreamingEmbed.ownedVectors(spark, ownedDir).count() === 202L)
+    assert(StreamingEmbed.ownedCorpus(spark, ownedDir).count() === 202L)
+  }
+
+  test("an interleaved second app (the nightly pass) does not reset the stream's replay detection") {
+    val ownedDir = tmpDir("graft-semb-nightly-owned")
+    vectors.seed().write.mode("overwrite").parquet(ownedDir)
+    val idx = tmpDir("graft-semb-nightly-idx")
+    AnnIndex.build(spark, StreamingEmbed.ownedCorpus(spark, ownedDir), idx)
+    val vdir = tmpDir("graft-semb-nightly-verdicts")
+    val batch0 = Seq((100100L, vec(5000L), new java.sql.Timestamp(1000L)))
+      .toDF("vec_id", "embedding", "ingest_ts")
+    StreamingEmbed.admitBatch(spark, batch0, ownedDir, idx, vdir, "stream-ckpt", 0L)
+    assert(StreamingEmbed.ownedCorpus(spark, ownedDir).count() === 201L)
+    nightlyKeepsReplay(vectors, ownedDir, idx, vdir, "stream-ckpt", batch0, admitted = 100100L,
+      nightly = Seq((100300L, vec(7000L), new java.sql.Timestamp(9000L)))
+        .toDF("vec_id", "embedding", "ingest_ts"),
+      ownedAfter = 202L)
+  }
+
+  test("self-triggering compaction: the admit loop folds the codes LSM past the file floor, exactly-once intact") {
+    selfCompaction(vectors)
   }
 
   test("an uncertified index is a hard error") {
     val err = intercept[IllegalArgumentException] {
       StreamingEmbed.verdicts(spark, tmpDir("graft-semb-nosrc"),
-        tmpDir("graft-semb-noidx"), ownedDf)
+        tmpDir("graft-semb-noidx"), owned = ownedDf)
     }
     assert(err.getMessage.contains("uncertified"))
   }

@@ -162,7 +162,7 @@ class TextIndexSpec extends SparkSpec {
     def write(cond: org.apache.spark.sql.Column): Unit =
       docs.filter(cond).coalesce(1).write.mode("append").parquet(src)
     write(col("doc_id") < 25)
-    val q = graft.streaming.TextIndexStream.start(
+    val q = TextIndex.appendStream(
       spark.readStream.schema(docs.schema).parquet(src),
       dir, tmpDir("graft-textidx-stream-ckpt"))
     try {
