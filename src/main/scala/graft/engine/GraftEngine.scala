@@ -86,9 +86,12 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   // half-mutated index. One owner token per engine instance; maintain()
   // re-enters the lease its sub-ops acquire. Appends stay lease-free —
   // they are serialized per instance by the append lock, and the hot
-  // ingest path must not pay two FS round-trips per batch; concurrent
-  // ingest from multiple engines remains (documented) merge-safe since
-  // appends only add day files and refresh only touched days.
+  // ingest path must not pay two FS round-trips per batch. Concurrent
+  // ingest, from other engines or during maintenance, is merge-safe:
+  // appends only add day files and refresh only touched days, and every
+  // maintenance rewrite deletes exactly the files it listed, so a file
+  // appended mid-rewrite is never read, moved or deleted
+  // (TsdbStorage's store-rewrite protocol).
   private val writerId = graft.sources.WriterLock.newOwner()
   private def locked[T](body: => T): T =
     graft.sources.WriterLock.withLock(spark, path, writerId)(body)
@@ -146,15 +149,15 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Crash recovery for the compact swap protocols: a crash between
-    * `rename(live → .old)` and `rename(.compacting → live)` leaves the
-    * live path MISSING while the aside copy holds the only data — a
-    * reader would then silently see an empty store/catalog (and scheme
-    * re-registrations would assign ids diverging from the logged ones).
-    * Restoring the aside copy (the pre-compact original) is always
-    * correct: re-running compact() simply redoes the work. Checked on
-    * every read-path entry; two fs.exists when the live path is absent,
-    * one when present. */
+  /** Restore debris of the retired whole-directory compact swap: a
+    * crash between its `rename(live → .old)` and `rename(.compacting →
+    * live)` left the live path MISSING and the aside copy holding the
+    * only data — a reader would then silently see an empty store/catalog
+    * (and scheme re-registrations would assign ids diverging from the
+    * logged ones). Restoring the aside copy (the pre-compact original)
+    * is always correct. No writer creates this debris any more (rewrites
+    * land files beside the live ones); checked on every read-path entry,
+    * two fs.exists when the live path is absent, one when present. */
   private def recoverSwap(live: String): Unit = {
     val p = new Path(live)
     if (!fs.exists(p)) {
@@ -164,6 +167,8 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   }
 
   private def hasData = { recoverSwap(dataPath); fs.exists(new Path(dataPath)) }
+  /** The durable store's day partitions, oldest first. */
+  private def days: Seq[java.sql.Date] = if (hasData) TsdbStorage.days(spark, dataPath) else Nil
   // index exists AND its last mutation committed (data+index cannot
   // commit atomically; a crash in between leaves the marker absent and
   // every read falls back to the always-correct scan path)
@@ -564,15 +569,25 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * path for an index left uncertified by a crash (or for a store that
     * predates the index). Cheaper than compact(): no data rewrite. */
   def reindex(): Unit = locked {
-    if (!hasData) return
+    if (hasData) mutating(recertify = true)(fs.delete(new Path(statsPath), true))(
+      _ => TsdbStorage.refreshStats(spark, dataPath, statsPath, days))
+  }
+
+  /** The stats-index bracket around every store mutation: the index is
+    * uncertified before `mutate` touches anything (a crash anywhere in
+    * it leaves readers on the scan path), then `refresh` re-derives the
+    * index rows it changed and the index is re-certified — only if
+    * `recertify`, which callers pass as "usable going in": an index
+    * that was already stale must not be laundered back to usable by an
+    * incidental mutation (repair is [[reindex]]). */
+  private def mutating[T](recertify: Boolean)(mutate: => T)(refresh: T => Unit): T = {
     TsdbStorage.markStatsOutOfSync(spark, statsPath)
-    fs.delete(new Path(statsPath), true)
-    val days = fs.listStatus(new Path(dataPath)).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("day="))
-      .map(n => java.sql.Date.valueOf(n.stripPrefix("day=")))
-    TsdbStorage.refreshStats(spark, dataPath, statsPath, days)
-    TsdbStorage.markStatsInSync(spark, statsPath)
+    val out = mutate
+    if (recertify) {
+      refresh(out)
+      TsdbStorage.markStatsInSync(spark, statsPath)
+    }
+    out
   }
 
   /** Scan path: merge-on-read over the pruned day range, one grouped
@@ -721,24 +736,20 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     // applies uniformly (the reference drops memstorage before erase)
     flush()
     val cutoffDay = cutoff.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
-    // the stats index is day-partitioned identically — drop in lockstep,
-    // bracketed by the sync marker so a crash mid-drop disables the
-    // index. Re-certify only if the index was usable going in: dropping
-    // days from an already-stale index must not launder it back to
-    // "usable" (repair is compact()/reindex(), never incidental).
-    val wasUsable = hasStats
-    TsdbStorage.markStatsOutOfSync(spark, statsPath)
-    TsdbStorage.eraseOld(spark, statsPath, cutoffDay)
-    val dropped = TsdbStorage.eraseOld(spark, dataPath, cutoffDay)
-    if (wasUsable) TsdbStorage.markStatsInSync(spark, statsPath)
-    dropped
+    // the stats index is day-partitioned identically — drop in lockstep
+    mutating(hasStats) {
+      TsdbStorage.eraseOld(spark, statsPath, cutoffDay)
+      TsdbStorage.eraseOld(spark, dataPath, cutoffDay)
+    }(_ => ())
   }
 
   /** O11, per-id variant [U: engines/engine.cpp — eraseOld(id, to)]:
     * drop only the given series' rows older than the cutoff. Unlike the
     * whole-store form this cannot be a partition drop — affected day
-    * partitions are REWRITTEN with an anti-filter (dynamic partition
-    * overwrite: untouched days are never read or written). The
+    * partitions are REWRITTEN with an anti-filter through the store's
+    * one rewrite protocol (new files land beside the listed ones, which
+    * are then deleted; untouched days are never read or written, and a
+    * concurrent append's file is never touched). The
     * per-(day, id) stats index restricts the rewrite to days ACTUALLY
     * holding erasable rows for the target ids (index row present with
     * min_time < cutoff) — so erasing a series that lived one week out
@@ -748,7 +759,6 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   def eraseOld(cutoff: Timestamp, ids: Seq[Long]): Seq[String] = locked {
     require(ids.nonEmpty, "per-id eraseOld needs at least one id")
     flush()
-    if (!hasData) return Seq.empty
     val cutoffDay = cutoff.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
     // unlike the whole-store partition-drop form (day granularity by
     // necessity), this path is a row-level rewrite — so a mid-day cutoff
@@ -757,14 +767,9 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     // 00:00 on its own day).
     val midnightCutoff =
       cutoff.toInstant == cutoffDay.atStartOfDay(java.time.ZoneOffset.UTC).toInstant
-    val candidateDays = fs.listStatus(new Path(dataPath)).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("day="))
-      .map(n => java.sql.Date.valueOf(n.stripPrefix("day=")))
-      .filter(d => d.toLocalDate.isBefore(cutoffDay)
-        || (!midnightCutoff && d.toLocalDate == cutoffDay))
+    val candidateDays = days.filter(d => d.toLocalDate.isBefore(cutoffDay)
+      || (!midnightCutoff && d.toLocalDate == cutoffDay))
     if (candidateDays.isEmpty) return Seq.empty
-    val wasUsable = hasStats
     // index-driven day pruning: the index reflects the MERGED store, so
     // a (day, id) row with min_time < cutoff exists iff that day holds
     // at least one erasable row. The collect is bounded by the candidate
@@ -780,93 +785,58 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
       candidateDays.filter(present)
     }.getOrElse(candidateDays)
     if (affectedDays.isEmpty) return Seq.empty
-    TsdbStorage.markStatsOutOfSync(spark, statsPath)
-    TsdbStorage.rewriteDaysFiltered(spark, dataPath, affectedDays, buckets,
-      keep = !(col("id").isin(ids: _*) && col("time") < lit(cutoff)))
-    if (wasUsable) {
-      TsdbStorage.refreshStats(spark, dataPath, statsPath, affectedDays)
-      TsdbStorage.markStatsInSync(spark, statsPath)
-    }
+    mutating(hasStats)(TsdbStorage.rewriteDaysFiltered(spark, dataPath, affectedDays, buckets,
+      keep = !(col("id").isin(ids: _*) && col("time") < lit(cutoff))))(
+      _ => TsdbStorage.refreshStats(spark, dataPath, statsPath, affectedDays))
     affectedDays.map(d => s"day=$d")
   }
 
-  /** O12: rewrite the store with merge-on-read materialized.
-    * Crash-safe ordering for a single-writer store: stale tmp from a
-    * previously crashed run is removed first (mode("append") would
-    * otherwise merge it into the new snapshot), and the old store is
-    * moved aside before the swap so no failure point leaves the store
-    * path empty — a crash leaves either the old or the new snapshot
-    * recoverable. */
+  /** O12: rewrite the store with merge-on-read materialized
+    * ([U: engines/engine.cpp — compact]): the scheme log is repacked,
+    * then [[compactDays]]' rewrite runs over every day and [[reindex]]
+    * rebuilds the stats index from the compacted store. The rewrite
+    * lands new files beside the old ones and deletes exactly the files
+    * it read — a crash leaves a superset of the rows (merge-on-read
+    * answers the same), and appends that land meanwhile survive. */
   def compact(): Unit = locked {
     flush()
     // repack the scheme log first (independent of data presence):
     // per-call appends accumulate one tiny file each; compact() is
     // where the store pays that debt down
     compactScheme()
-    if (!hasData) return // hasData ran the swap-recovery preamble
-    val tmp = new Path(s"$dataPath.compacting")
-    val old = new Path(s"$dataPath.old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    // disable the index across the whole rewrite: a crash anywhere in
-    // here must leave readers on the scan path, never a stale index
-    TsdbStorage.markStatsOutOfSync(spark, statsPath)
-    TsdbStorage.compactTo(spark, dataPath, tmp.toString, buckets)
-    val p = new Path(dataPath)
-    fs.rename(p, old)
-    fs.rename(tmp, p)
-    fs.delete(old, true)
-    // rebuild the stats index from the compacted store: per-day rows for
-    // days whose duplicates were just collapsed would otherwise go stale
-    fs.delete(new Path(statsPath), true)
-    val days = fs.listStatus(new Path(dataPath)).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("day="))
-      .map(n => java.sql.Date.valueOf(n.stripPrefix("day=")))
-    TsdbStorage.refreshStats(spark, dataPath, statsPath, days)
-    TsdbStorage.markStatsInSync(spark, statsPath)
+    val all = days
+    if (all.nonEmpty) {
+      // no refresh: reindex() rebuilds the whole index right after
+      mutating(recertify = false)(TsdbStorage.compactDays(spark, dataPath, all, buckets))(_ => ())
+      reindex()
+    }
   }
 
   /** O12, incremental form: compact ONLY the given day partitions
     * (merge-on-read materialized, small files coalesced) — how an aged
-    * store pays down its hot days' append debt without the full-store
-    * rewrite. The stats index rows for these days are value-invariant
-    * (they already reflect the merged view) but are refreshed anyway so
-    * index files track data files one-to-one. */
+    * store pays down its hot days' append debt without rewriting every
+    * day. Same rewrite protocol as [[compact]]: the listed files are
+    * replaced, a file appended mid-rewrite is kept. The stats index rows
+    * for these days are value-invariant (they already reflect the merged
+    * view) but are refreshed anyway so index files track data files
+    * one-to-one. */
   def compactDays(days: Seq[java.sql.Date]): Unit = locked {
     flush()
-    if (!hasData || days.isEmpty) return
     // no-op for days this store doesn't host (a sharded router passes
     // every shard the same day list) — saves the rewrite/index machinery
     // an empty pass
-    val existing = fs.listStatus(new Path(dataPath)).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("day="))
-      .map(n => java.sql.Date.valueOf(n.stripPrefix("day="))).toSet
-    val target = days.filter(existing)
-    if (target.isEmpty) return
-    val wasUsable = hasStats
-    TsdbStorage.markStatsOutOfSync(spark, statsPath)
-    TsdbStorage.compactDays(spark, dataPath, target, buckets)
-    if (wasUsable) {
-      TsdbStorage.refreshStats(spark, dataPath, statsPath, target)
-      TsdbStorage.markStatsInSync(spark, statsPath)
-    }
+    val target = days.filter(this.days.toSet)
+    if (target.nonEmpty)
+      mutating(hasStats)(TsdbStorage.compactDays(spark, dataPath, target, buckets))(
+        _ => TsdbStorage.refreshStats(spark, dataPath, statsPath, target))
   }
 
   /** The days worth compacting: more parquet files than `maxFiles` (the
     * append-accumulation signature). Pure directory-listing metadata —
     * the periodic-maintenance driver for [[compactDays]], the analog of
     * the reference's period-worker picking hot chunks to drop. */
-  def fragmentedDays(maxFiles: Int = 2 * buckets): Seq[java.sql.Date] = {
-    if (!hasData) return Seq.empty
-    fs.listStatus(new Path(dataPath)).toSeq
-      .filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("day="))
-      .filter(d => fs.listStatus(d.getPath).count(_.getPath.getName.endsWith(".parquet")) > maxFiles)
-      .map(d => java.sql.Date.valueOf(d.getPath.getName.stripPrefix("day=")))
-      .sortBy(_.toString)
-  }
+  def fragmentedDays(maxFiles: Int = 2 * buckets): Seq[java.sql.Date] =
+    TsdbStorage.dayFiles(spark, dataPath, days).collect { case (d, files) if files.size > maxFiles => d }
 
   /** The nightly-maintenance entrypoint — one call chains the repair
     * and debt-payment ops a production deployment crons, in dependency
@@ -940,20 +910,15 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     ArtifactReport(dir, bad, needRebuild && repair, doCompact, retuned)
   }
 
-  /** Rewrite the append-only scheme log as its dedup view in one file
-    * (same tmp-swap discipline as the data rewrite). */
+  /** Rewrite the append-only scheme log as its dedup view in one file,
+    * through the store's replace step: the new file lands beside the
+    * listed ones, which are then deleted. A crash in between leaves
+    * duplicate rows, which the `distinct` view [[ls]] collapses. */
   private def compactScheme(): Unit = {
     recoverSwap(schemePath)
-    if (!fs.exists(new Path(schemePath))) return
-    val tmp = new Path(s"$schemePath.compacting")
-    val old = new Path(s"$schemePath.old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    ls().coalesce(1).write.parquet(tmp.toString)
-    val p = new Path(schemePath)
-    fs.rename(p, old)
-    fs.rename(tmp, p)
-    fs.delete(old, true)
+    val listed = graft.sources.ParquetProbe.listParquet(spark, new Path(schemePath))
+    if (listed.nonEmpty) TsdbStorage.replaceFiles(spark, schemePath, listed)(
+      spark.read.parquet(listed.map(_.toString): _*).distinct().coalesce(1).write.parquet(_))
   }
 
   /** O13 fsck: verify every data file — footer, every row group, and

@@ -31,17 +31,26 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
   private def shardOf(id: Long): GraftEngine =
     shards(((id % shards.size) + shards.size).toInt % shards.size)
 
-  /** Routed append: each measurement lands on its series' shard. The
-    * input is cached for the N filtered passes (one write per shard) —
-    * without it each slice would rescan the source, doubling per shard
-    * with the emptiness probe this used to do. */
-  def append(meas: DataFrame): Unit = {
+  /** Ownership routing: each shard with the requested ids it owns, or
+    * every shard with the catalog-wide (empty) request. Ids are
+    * pmod-disjoint across shards, so exactly one shard answers each id
+    * and the per-shard answers merge by plain union. */
+  private def byOwner[T](ids: Seq[Long])(f: (GraftEngine, Seq[Long]) => T): Seq[T] =
+    if (ids.isEmpty) shards.map(f(_, ids)) else ids.distinct.groupBy(shardOf).toSeq.map(f.tupled)
+
+  /** Routed append: each measurement lands on its series' shard. */
+  def append(meas: DataFrame): Unit = routed(meas)(_.append(_))
+
+  /** `write` each shard's slice of `meas` on that shard. The input is
+    * cached for the N filtered passes (one write per shard) — without
+    * it each slice would rescan the source. */
+  private def routed(meas: DataFrame)(write: (GraftEngine, DataFrame) => Unit): Unit = {
     val n = shards.size
     // borrow-don't-own (TransientCache): a caller may pass a frame it
     // (or a registry memo) already persisted — never evict it on exit
     graft.core.TransientCache.borrowCached(meas) {
       shards.zipWithIndex.foreach { case (shard, i) =>
-        shard.append(meas.filter(pmod(col("id"), lit(n.toLong)) === i.toLong))
+        write(shard, meas.filter(pmod(col("id"), lit(n.toLong)) === i.toLong))
       }
     }
   }
@@ -70,16 +79,11 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
     * plain union with no aggregation shuffle, and GraftEngine's
     * one-row-per-requested-id contract is preserved by construction. */
   def readTimePoint(q: QueryTimePoint): DataFrame =
-    (if (q.ids.isEmpty) shards.map(_.readTimePoint(q))
-     else q.ids.distinct.groupBy(shardOf).toSeq
-       .map { case (shard, owned) => shard.readTimePoint(q.copy(ids = owned)) })
+    byOwner(q.ids)((shard, owned) => shard.readTimePoint(q.copy(ids = owned)))
       .reduce(_ unionByName _).orderBy("id")
 
   def currentValue(ids: Seq[Long], flag: Long): DataFrame =
-    (if (ids.isEmpty) shards.map(_.currentValue(ids, flag))
-     else ids.distinct.groupBy(shardOf).toSeq
-       .map { case (shard, owned) => shard.currentValue(owned, flag) })
-      .reduce(_ unionByName _).orderBy("id")
+    byOwner(ids)(_.currentValue(_, flag)).reduce(_ unionByName _).orderBy("id")
 
   /** O14 routed scheme: a new name registers on the shard that will own
     * its content-addressed id. A name ALREADY in some shard's log keeps
@@ -163,9 +167,7 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
     * plain union, identical to a single engine over the same data. */
   def calculator(q: QueryInterval,
                  functions: Seq[String] = GraftEngine.CalculatorFunctions): DataFrame =
-    (if (q.ids.isEmpty) shards.map(_.calculator(q, functions))
-     else q.ids.distinct.groupBy(shardOf).toSeq
-       .map { case (shard, owned) => shard.calculator(q.copy(ids = owned), functions) })
+    byOwner(q.ids)((shard, owned) => shard.calculator(q.copy(ids = owned), functions))
       .reduce(_ unionByName _).orderBy("id")
 
   /** O10 subscribe, fanned out: one stream per shard (each tails its
@@ -178,12 +180,17 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
     }
 
   /** O1 streaming strategy, routed: each micro-batch splits across the
-    * owning shards exactly like a batch append. */
+    * owning shards exactly like a batch append, and each shard applies
+    * its slice through [[GraftEngine.appendOnce]] under the checkpoint's
+    * appId — a replayed micro-batch (foreachBatch is at-least-once) is a
+    * no-op on every shard. */
   def appendStream(source: DataFrame,
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     source.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) => append(batch) }
+      .foreachBatch { (batch: DataFrame, bid: Long) =>
+        routed(batch)(_.appendOnce(_, checkpoint, bid))
+      }
       .start()
 
   /** Run `f` over every shard CONCURRENTLY (bounded pool) and return the
@@ -235,8 +242,7 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
     * owning shard (where its data lives), with the per-shard stats
     * index restricting the touched days further. */
   def eraseOld(cutoff: java.sql.Timestamp, ids: Seq[Long]): Seq[String] =
-    ids.distinct.groupBy(shardOf).toSeq
-      .flatMap { case (shard, shardIds) => shard.eraseOld(cutoff, shardIds) }
+    if (ids.isEmpty) Seq.empty else byOwner(ids)(_.eraseOld(cutoff, _)).flatten
 
   /** O12 incremental compaction, fanned out concurrently: every shard
     * compacts the days it hosts from the list (foreign days no-op per

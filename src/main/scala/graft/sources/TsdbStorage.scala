@@ -48,13 +48,7 @@ object TsdbStorage {
     // day partitions present BEFORE this write — distinguishes brand-new
     // days (stats derive from the batch alone, no store read-back) from
     // already-populated days (stats must re-merge against stored rows)
-    val preExisting: Set[String] = {
-      val root = new Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(root)) Set.empty
-      else fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("day=")).toSet
-    }
+    val preExisting = days(spark, path).toSet
     // data and index cannot commit atomically — so the sync MARKER is
     // dropped before the data write and restored only after the index
     // update: a crash in between leaves the index flagged unusable and
@@ -74,23 +68,15 @@ object TsdbStorage {
     // the clustered frame is persisted (only when a stats pass will
     // consume it) so stats re-read the shuffle output from cache
     // instead of re-shuffling the batch
-    val clustered = meas
-      .withColumn("day", to_date(col("time")))
-      .repartition(buckets, pmod(hash(col("id")), lit(buckets)))
-      .sortWithinPartitions("id", "time")
+    val clustered = cluster(meas.withColumn("day", to_date(col("time"))), buckets)
     if (statsPath.isDefined) clustered.persist()
-    clustered
-      .write.mode("append")
-      .partitionBy("day")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#flag", "true")
-      .parquet(path)
+    writeClustered(clustered, path)
     statsPath.foreach { sp =>
       // touched-day list is bounded by the batch's day span — a tiny
       // driver-side collect even for a billion-row batch
       val touched = clustered.select(col("day")).distinct()
         .collect().map(_.getDate(0)).toSeq
-      val (oldDays, newDays) = touched.partition(d => preExisting.contains(s"day=$d"))
+      val (oldDays, newDays) = touched.partition(preExisting)
       // common ingest case (append-only daily batches): every touched day
       // is new → stats stream out of the ALREADY-clustered batch with
       // zero additional shuffle (ids are bucket-disjoint and (id, time)
@@ -304,54 +290,77 @@ object TsdbStorage {
     pruned.drop("day")
   }
 
+  // ---- day partitions ------------------------------------------------
+
+  /** The store's day partitions, oldest first; empty when `path` is
+    * absent. The one `day=` listing every writer shares. */
+  def days(spark: SparkSession, path: String): Seq[java.sql.Date] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith("day=")).map(n => java.sql.Date.valueOf(n.stripPrefix("day=")))
+      .sortBy(_.getTime)
+  }
+
+  /** The parquet files of each given day, in the given order (a day
+    * without a directory lists none). */
+  private[graft] def dayFiles(spark: SparkSession, path: String,
+                               days: Seq[java.sql.Date]): Seq[(java.sql.Date, Seq[Path])] = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    days.map { d =>
+      val dir = new Path(path, s"day=$d")
+      d -> (if (!fs.exists(dir)) Seq.empty
+        else fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.endsWith(".parquet")))
+    }
+  }
+
   /** O11 eraseOld: drop whole day partitions strictly older than the
     * cutoff date. Pure metadata/filesystem operation — no data rewrite,
     * which is the only retention strategy that survives 100 TB. Applies
     * to any day-partitioned dir (data and stats index alike). */
   def eraseOld(spark: SparkSession, path: String, cutoffDay: java.time.LocalDate): Seq[String] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val dropped = fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("day=") &&
-          java.time.LocalDate.parse(p.getName.stripPrefix("day=")).isBefore(cutoffDay)
-      }
-    dropped.foreach(fs.delete(_, true))
-    dropped.map(_.getName)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    days(spark, path).filter(_.toLocalDate.isBefore(cutoffDay)).map { d =>
+      fs.delete(new Path(path, s"day=$d"), true)
+      s"day=$d"
+    }
   }
 
+  // ---- the one store-rewrite protocol ---------------------------------
+  // Every rewrite of stored rows (compactDays, per-id retention, the
+  // engine's compact() and its scheme-log compaction) lands new files
+  // BESIDE the files it read and then deletes exactly those:
+  //   1. list the target files once;  2. read exactly them;
+  //   3. transform the rows;  4. write the result to a staging dir;
+  //   5. move each new file into its live directory (Spark part names
+  //      are unique per write job, so no live file is overwritten);
+  //   6. delete the listed files, then each day left with no file.
+  // Every intermediate state holds a superset of the rows, and reads
+  // resolve duplicate (id, time) keys to the freshest seq: a crash after
+  // step 5 leaves compaction's answer unchanged and a retention rerun
+  // finishes the erase. No day directory is ever moved or absent, so
+  // readers see files appear and disappear, never a missing day; and a
+  // file appended after step 1 is never read, moved or deleted, so
+  // lease-free appends survive the rewrite. There is no recovery step:
+  // a crashed rewrite's staging dir is dropped when the next one starts.
+
   /** Rewrite ONLY the given day partitions, keeping rows matching
-    * `keep`, in the clustered layout. Untouched days are never read or
-    * written. Used by per-id retention (O11 per-id variant), where a
-    * partition drop is too coarse. Writes to a sibling tmp dir first,
-    * then swaps each day dir — Spark cannot overwrite a path it is
-    * reading, and the swap keeps the non-affected days live throughout.
-    * A day whose rows are ALL erased is deleted outright (dynamic
-    * overwrite would silently leave it behind).
-    *
-    * Crash safety: a live day dir is never deleted while it is the only
-    * copy. Each swap moves the old day ASIDE (rename), lands the
-    * rewrite, then drops the aside copy — and the next invocation's
-    * recovery preamble restores any day whose swap died between the two
-    * renames (dst missing ⇒ the aside copy is the only copy; restoring
-    * the ORIGINAL is correct for retention, which simply re-erases on
-    * the re-run). Only after recovery may the tmp dir be cleared. */
+    * `keep`, in the clustered layout — per-id retention (O11 per-id
+    * variant), where a partition drop is too coarse. Untouched days are
+    * never read or written; a day whose rows are ALL erased is removed. */
   def rewriteDaysFiltered(spark: SparkSession, path: String,
                           days: Seq[java.sql.Date], buckets: Int,
                           keep: org.apache.spark.sql.Column): Unit =
     rewriteDays(spark, path, days, buckets, _.filter(keep))
 
-  /** O12 incremental form: rewrite only the given day partitions with
-    * merge-on-read MATERIALIZED (duplicate (id, time) keys collapse to
-    * the freshest seq, append-accumulated small files coalesce into the
-    * clustered layout). Duplicate keys never span days (a row's day is
-    * a function of its time), so a per-day merge equals the global one
-    * restricted to those days — which is what lets a year-old store pay
-    * its hot days' debt down without the full-store rewrite compact()
-    * does. Same crash-safe swap as the retention rewrite. */
+  /** O12: rewrite only the given day partitions with merge-on-read
+    * MATERIALIZED (duplicate (id, time) keys collapse to the freshest
+    * seq, append-accumulated small files coalesce into the clustered
+    * layout). Duplicate keys never span days (a row's day is a function
+    * of its time), so a per-day merge equals the global one restricted
+    * to those days: over every day it is the engine's full compact(),
+    * over a few it is how a year-old store pays its hot days' debt. */
   def compactDays(spark: SparkSession, path: String,
                   days: Seq[java.sql.Date], buckets: Int): Unit =
     rewriteDays(spark, path, days, buckets,
@@ -360,39 +369,60 @@ object TsdbStorage {
   private def rewriteDays(spark: SparkSession, path: String,
                           days: Seq[java.sql.Date], buckets: Int,
                           transform: DataFrame => DataFrame): Unit = {
-    if (days.isEmpty) return
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$path.rewrite")
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // debris of the retired aside-swap format: a day whose swap crashed
+    // between its two renames lives only in `<path>.rewrite.old`
     val aside = new Path(s"$path.rewrite.old")
     if (fs.exists(aside)) {
       fs.listStatus(aside).filter(_.getPath.getName.startsWith("day=")).foreach { st =>
-        val dst = new Path(root, st.getPath.getName)
+        val dst = new Path(path, st.getPath.getName)
         if (!fs.exists(dst)) fs.rename(st.getPath, dst)
       }
       fs.delete(aside, true)
     }
-    fs.delete(tmp, true)
-    transform(
-      spark.read.schema(withDaySchema).parquet(path)
-        .filter(col("day").isin(days: _*)))
-      .repartition(buckets, pmod(hash(col("id")), lit(buckets)))
+    val listed = dayFiles(spark, path, days).flatMap(_._2)
+    if (listed.isEmpty) return
+    replaceFiles(spark, path, listed) { staging =>
+      writeClustered(cluster(transform(spark.read.option("basePath", path)
+        .schema(withDaySchema).parquet(listed.map(_.toString): _*)), buckets), staging)
+    }
+    // non-recursive: a day an append has just landed a file in stays
+    days.foreach { d =>
+      try fs.delete(new Path(path, s"day=$d"), false)
+      catch { case _: java.io.IOException => () }
+    }
+  }
+
+  /** Steps 4–6 for any parquet dir: `write(staging)` materializes the
+    * replacement in `<root>.rewrite`, each new file moves to the same
+    * relative place under `root`, then exactly `listed` is deleted. */
+  private[graft] def replaceFiles(spark: SparkSession, root: String, listed: Seq[Path])
+                                 (write: String => Unit): Unit = {
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = fs.makeQualified(new Path(s"$root.rewrite"))
+    fs.delete(staging, true)
+    write(staging.toString)
+    ParquetProbe.listParquet(spark, staging).foreach { f =>
+      val dst = new Path(root, staging.toUri.relativize(f.toUri).getPath)
+      fs.mkdirs(dst.getParent)
+      fs.rename(f, dst)
+    }
+    fs.delete(staging, true)
+    listed.foreach(fs.delete(_, false))
+  }
+
+  /** Hash-bucket a frame carrying `day` by series id and sort by
+    * (id, time) within partitions — the layout every writer lands. */
+  private def cluster(withDay: DataFrame, buckets: Int): DataFrame =
+    withDay.repartition(buckets, pmod(hash(col("id")), lit(buckets)))
       .sortWithinPartitions("id", "time")
-      .write.mode("overwrite")
+
+  private def writeClustered(clustered: DataFrame, path: String): Unit =
+    clustered.write.mode("append")
       .partitionBy("day")
       .option("compression", "zstd")
       .option("parquet.bloom.filter.enabled#flag", "true")
-      .parquet(tmp.toString)
-    fs.mkdirs(aside)
-    days.foreach { d =>
-      val dst = new Path(root, s"day=$d")
-      val src = new Path(tmp, s"day=$d")
-      if (fs.exists(dst)) fs.rename(dst, new Path(aside, s"day=$d"))
-      if (fs.exists(src)) fs.rename(src, dst)
-    }
-    fs.delete(aside, true)
-    fs.delete(tmp, true)
-  }
+      .parquet(path)
 
   /** Merge-on-read dedup: exactly one (the freshest, by `seq`) row per
     * (id, time). Partial-aggregating max_by — no window, one shuffle on
@@ -409,13 +439,4 @@ object TsdbStorage {
     * empty when the dir is absent. */
   def probeFiles(spark: SparkSession, path: String): Seq[String] =
     ParquetProbe.probe(spark, ParquetProbe.listParquet(spark, new Path(path)))
-
-  /** O12 compact view: the merge-on-read resolution over the whole store. */
-  def compacted(spark: SparkSession, path: String): DataFrame =
-    mergeFreshest(read(spark, path))
-
-  /** Compact in place: rewrite into `path` atomically-enough for a
-    * single-writer store (write tmp, swap). */
-  def compactTo(spark: SparkSession, srcPath: String, dstPath: String, buckets: Int = 32): Unit =
-    append(compacted(spark, srcPath), dstPath, buckets)
 }

@@ -139,12 +139,7 @@ abstract class Admission[M <: CorpusMeta, R](val index: CorpusIndex[M]) {
   def start(spark: SparkSession, dir: String, indexDir: String, queryName: String,
             checkpoint: String, watermark: String = "1 hour",
             owned: R = noOwned): StreamingQuery =
-    verdicts(spark, dir, indexDir, watermark, owned).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(verdicts(spark, dir, indexDir, watermark, owned), queryName, checkpoint)
 
   // -------------------------------------------------------------------
   // The CLOSED admission loop: verdict → append, one transaction.

@@ -51,12 +51,7 @@ object StatefulStreams {
 
   /** Run the stateful stream into a queryable in-memory sink. */
   def start(spark: SparkSession, dir: String, queryName: String, checkpoint: String): StreamingQuery =
-    currentValues(spark, dir).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(currentValues(spark, dir), queryName, checkpoint, OutputMode.Update())
 
   // ---- streaming sessionization (flatMapGroupsWithState) -------------
 
@@ -165,12 +160,7 @@ object StatefulStreams {
   /** Run the session stream into a queryable in-memory sink. */
   def startSessions(spark: SparkSession, dir: String, gapMinutes: Long,
                     queryName: String, checkpoint: String): StreamingQuery =
-    sessions(spark, dir, gapMinutes).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(sessions(spark, dir, gapMinutes), queryName, checkpoint)
 
   // ---- streaming funnel (flatMapGroupsWithState) ----------------------
 
@@ -307,10 +297,5 @@ object StatefulStreams {
   def startZscores(spark: SparkSession, dir: String, queryName: String,
                    checkpoint: String, w: Int = 8,
                    dayPartitioned: Boolean = false): StreamingQuery =
-    zscores(spark, dir, w, dayPartitioned).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(zscores(spark, dir, w, dayPartitioned), queryName, checkpoint)
 }

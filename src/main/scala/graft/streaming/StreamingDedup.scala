@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Streaming exact deduplication over a continuously-ingested document
@@ -40,10 +40,5 @@ object StreamingDedup {
   /** Run into a queryable in-memory sink. */
   def start(spark: SparkSession, dir: String, queryName: String, checkpoint: String,
             watermark: String = "1 hour"): StreamingQuery =
-    dedupedDocs(spark, dir, watermark).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(dedupedDocs(spark, dir, watermark), queryName, checkpoint)
 }

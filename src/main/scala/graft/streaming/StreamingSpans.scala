@@ -65,10 +65,5 @@ object StreamingSpans {
   /** Run the marked-window stream into a queryable in-memory sink. */
   def start(spark: SparkSession, dir: String, queryName: String,
             checkpoint: String, watermark: String = "1 hour"): StreamingQuery =
-    markedWindows(spark, dir, watermark).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(markedWindows(spark, dir, watermark), queryName, checkpoint)
 }

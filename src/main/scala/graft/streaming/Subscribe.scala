@@ -44,12 +44,7 @@ object Subscribe {
     * deployment would point writeStream at its delivery sink. */
   def start(spark: SparkSession, dir: String, ids: Seq[Long], flag: Long,
       queryName: String, checkpoint: String, dayPartitioned: Boolean = false): StreamingQuery =
-    subscribe(spark, dir, ids, flag, dayPartitioned).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .start()
+    MemorySink.start(subscribe(spark, dir, ids, flag, dayPartitioned), queryName, checkpoint)
 
   /** Windowed downsampling over the live stream — watermarked tumbling
     * aggregation (beyond-reference capability; the batch analog is the

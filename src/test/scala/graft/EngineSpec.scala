@@ -697,6 +697,122 @@ class EngineSpec extends SparkSpec {
     assert(st.getLong(1) === 1 && st.getDouble(6) === 5.0, "the freshest-seq rewrite is the one surviving row")
   }
 
+  /** Run `rewrite` on a store whose day 03-01 is fragmented, with one
+    * append landing in 03-01 between the rewrite's file listing and its
+    * write — made deterministic by an optimizer rule that fires on the
+    * rewrite's first plan reading the data (the listing happened at
+    * DataFrame creation). The appender is a second engine instance:
+    * appends take no lease. The appended row must survive, and the
+    * index-served read must equal the scan. */
+  private def appendMidRewrite(name: String)(rewrite: GraftEngine => Unit): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = tmpDir(s"graft-append-mid-$name")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    val appender = new GraftEngine(spark, dir, buckets = 2)
+    (1 to 3).foreach { k =>
+      engine.append(Seq("2024-03-01", "2024-03-02", "2024-03-03").flatMap(d => Seq(
+        Meas(1L, ts(s"$d 0$k:00:00"), k.toDouble, 1L, 10L * k),
+        Meas(2L, ts(s"$d 1$k:00:00"), -k.toDouble, 1L, 10L * k + 1))))
+    }
+    val landed = Meas(9L, ts("2024-03-01 20:00:00"), 90.0, 1L, 900L)
+    val rewriter = Thread.currentThread
+    @volatile var armed = true
+    object AppendMidRewrite extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val readsData = plan.exists {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.exists(p =>
+              Iterator.iterate(p)(_.getParent).takeWhile(_ != null).exists(_.getName == "data"))
+            case _ => false
+          }
+          case _ => false
+        }
+        if (armed && readsData && Thread.currentThread == rewriter) {
+          armed = false
+          val t = new Thread(() => appender.append(Seq(landed)))
+          t.start(); t.join()
+        }
+        plan
+      }
+    }
+    spark.experimental.extraOptimizations ++= Seq(AppendMidRewrite)
+    try rewrite(engine)
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ eq AppendMidRewrite)
+    assert(!armed, s"the append ran inside $name")
+    val q = QueryInterval(Seq(1L, 2L, 9L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 23:00:00"))
+    assert(rows(engine.readIntervalScan(q.copy(ids = Seq(9L)))) ===
+      Seq(Seq(9L, landed.time, 90.0, 1L, 900L)), s"the row appended during $name survives")
+    assert(graft.sources.TsdbStorage.statsUsable(spark, s"$dir/_stats"), s"$name re-certifies the index")
+    assert(rows(engine.readInterval(q)) === rows(engine.readIntervalScan(q)), s"index path ≡ scan after $name")
+  }
+
+  test("compactDays keeps a row appended between its file listing and its write") {
+    appendMidRewrite("compactDays")(_.compactDays(Seq(java.sql.Date.valueOf("2024-03-01"))))
+  }
+
+  test("per-id eraseOld keeps a row appended between its file listing and its write") {
+    appendMidRewrite("eraseOld") { engine =>
+      assert(engine.eraseOld(ts("2024-03-02 00:00:00"), Seq(1L)) === Seq("day=2024-03-01"))
+      assert(engine.readIntervalScan(QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"),
+        ts("2024-03-03 23:00:00"))).count() === 6L, "series 1 keeps only its 03-02 and 03-03 rows")
+    }
+  }
+
+  test("compact() keeps a row appended between its file listing and its write") {
+    appendMidRewrite("compact")(_.compact())
+  }
+
+  test("a rewrite that crashed after landing its files leaves a superset; a rerun finishes it") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val dir = tmpDir("graft-rewrite-window")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    (1 to 4).foreach { k =>
+      engine.append(Seq(
+        Meas(1L, ts("2024-03-01 10:00:00"), k.toDouble, 1L, k.toLong), // one key, rewritten
+        Meas(1L, ts(f"2024-03-01 0$k%d:00:00"), k.toDouble, 1L, 10L + k),
+        Meas(2L, ts(f"2024-03-01 1$k%d:30:00"), -k.toDouble, 1L, 20L + k)))
+    }
+    val day = java.sql.Date.valueOf("2024-03-01")
+    val dayDir = new java.io.File(s"$dir/data/day=$day")
+    def view = engine.merged.collect().map(_.toSeq).toSet
+    def raw = graft.sources.TsdbStorage.read(spark, s"$dir/data").count()
+    /** Run `rewrite`, then restore the files it listed: the state a crash
+      * between landing the new files and deleting the listed ones leaves
+      * (with the index uncertified, as the rewrite left it). */
+    def crashBeforeDeletes(rewrite: => Unit): Unit = {
+      val save = Files.createTempDirectory("graft-rewrite-listed")
+      val listed = dayDir.listFiles().filter(_.getName.endsWith(".parquet"))
+      listed.foreach(f => Files.copy(f.toPath, save.resolve(f.getName)))
+      rewrite
+      listed.foreach(f => Files.copy(save.resolve(f.getName), f.toPath, StandardCopyOption.REPLACE_EXISTING))
+      graft.sources.TsdbStorage.markStatsOutOfSync(spark, s"$dir/_stats")
+    }
+
+    // compaction: the landed merge plus the listed originals answer the
+    // pre-rewrite view; the rerun leaves one copy of each row
+    val before = view
+    crashBeforeDeletes(engine.compactDays(Seq(day)))
+    assert(view === before, "merged view unchanged in the crash window")
+    assert(raw > before.size, "both generations are on disk")
+    engine.compactDays(Seq(day))
+    assert(view === before)
+    assert(raw === before.size.toLong, "the rerun leaves one copy of each row")
+
+    // retention: the crash window still holds the rows to erase; the
+    // rerun (index uncertified: every candidate day) finishes the erase
+    val erased = before.filterNot(r => r(0) == 1L && r(1).asInstanceOf[Timestamp].before(ts("2024-03-01 05:00:00")))
+    crashBeforeDeletes(engine.eraseOld(ts("2024-03-01 05:00:00"), Seq(1L)))
+    assert(view === before, "the crash window is a superset: nothing erased yet")
+    assert(engine.eraseOld(ts("2024-03-01 05:00:00"), Seq(1L)) === Seq(s"day=$day"))
+    assert(view === erased, "the rerun finishes the erase")
+    engine.reindex()
+    val q = QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-01 23:00:00"))
+    assert(rows(engine.readInterval(q)) === rows(engine.readIntervalScan(q)))
+  }
+
   test("MEMORY strategy: hot-level rows serve reads before any parquet exists, flush outranks") {
     val dir = tmpDir("graft-hot")
     val engine = new GraftEngine(spark, dir, buckets = 2, hotCapacity = 1000L)

@@ -282,4 +282,33 @@ class ShardedEngineSpec extends SparkSpec {
     val again = eng.maintain(annIndex = Some((annDir, raw)))
     assert(again.artifacts.forall(a => a.corrupt.isEmpty && !a.rebuilt && !a.compacted))
   }
+
+  test("sharded appendStream replay: a re-run micro-batch writes no parquet on any shard") {
+    import spark.implicits._
+    val roots = Seq(tmpDir("replay-s0"), tmpDir("replay-s1"))
+    val eng = new ShardedEngine(spark, roots, buckets = 2)
+    def dataFiles(): Seq[String] = roots.flatMap { r =>
+      new java.io.File(s"$r/data").listFiles.filter(_.isDirectory).flatMap(_.listFiles)
+        .filter(_.getName.endsWith(".parquet")).map(f => s"$r:${f.getName}:${f.length}")
+    }.sorted
+    val src = tmpDir("replay-src")
+    spark.createDataset((0 until 10).map(i => Meas(i.toLong, ts("2024-03-01 10:00:00"), i.toDouble, 1L, i.toLong)))
+      .toDF().coalesce(1).write.mode("append").parquet(src)
+    val ckpt = tmpDir("replay-ckpt")
+    def run(): Unit = {
+      val q = eng.appendStream(spark.readStream.schema(Meas.schema).parquet(src), ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    run()
+    val files = dataFiles()
+    assert(roots.forall(r => files.exists(_.startsWith(s"$r:"))), "the batch landed on both shards")
+    // a crash after the shards applied batch 0 but before Spark committed
+    // it: the restart re-runs batch 0 with the same batchId
+    val commit = new org.apache.hadoop.fs.Path(s"$ckpt/commits/0")
+    assert(commit.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(commit, false))
+    run()
+    assert(dataFiles() === files, "the replayed micro-batch must not write parquet on any shard")
+    val q = QueryInterval(Seq.empty, 0L, ts("2024-03-01 00:00:00"), ts("2024-03-02 00:00:00"))
+    assert(eng.readInterval(q).count() === 10L)
+  }
 }

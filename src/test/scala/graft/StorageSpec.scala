@@ -80,7 +80,9 @@ class StorageSpec extends SparkSpec {
         .withColumn("value", col("value") * 2)
         .withColumn("seq", col("seq") + 1000000L),
       dir, buckets = 4)
-    val compacted = TsdbStorage.compacted(spark, dir).cache()
+    // the store-rewrite protocol over every day, read back from disk
+    TsdbStorage.compactDays(spark, dir, TsdbStorage.days(spark, dir), buckets = 4)
+    val compacted = TsdbStorage.read(spark, dir).cache()
     assert(compacted.groupBy("id", "time").count().filter(col("count") > 1).count() === 0L)
     // rewritten rows won: every seq%7==0 slice must carry the boosted seq
     val boosted = compacted.filter(col("seq") >= 1000000L).count()

@@ -48,4 +48,16 @@ class SubscribeSpec extends SparkSpec {
     q.stop()
     assert(got === meas.filter(col("id") === 17L).count())
   }
+
+  test("a memory-sink stream serves one run: a restart on its checkpoint is refused by Spark") {
+    val dir = tmpDir("graft-sub-restart-src")
+    val ckpt = tmpDir("graft-sub-restart-ckpt")
+    EventsSource.meas(spark, sfDir).limit(50).write.mode("append").parquet(dir)
+    val q = Subscribe.start(spark, dir, Seq(17L), 0L, "sub_restart", ckpt)
+    try q.processAllAvailable() finally q.stop()
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Subscribe.start(spark, dir, Seq(17L), 0L, "sub_restart", ckpt).stop()
+    }
+    assert(e.getMessage.contains("This query does not support recovering from checkpoint location"))
+  }
 }
