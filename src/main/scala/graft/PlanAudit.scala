@@ -111,10 +111,11 @@ object PlanAudit {
 
   /** Audit the ENGINE FACADE's own read plans — the DataFrames
     * GraftEngine/ShardedEngine build internally (readInterval,
-    * readTimePoint/currentValue, readGrid, statIndexed, sharded
-    * fan-outs), which the registry walk never sees. Builds a throwaway
-    * store so the plans are the real ones (stats index present, scheme
-    * catalog populated, multi-day partitions). Same three rules. */
+    * readTimePoint/currentValue, readGrid, stat/statScan, the
+    * index-free catalog-wide and flagged forms, sharded fan-outs), which
+    * the registry walk never sees. Builds a throwaway store so the plans
+    * are the real ones (stats index present, scheme catalog populated,
+    * multi-day partitions). Same three rules. */
   def runFacade(spark: SparkSession): Seq[String] = {
     import graft.core.Meas
     import graft.engine.{GraftEngine, QueryInterval, QueryTimePoint, ShardedEngine}
@@ -137,7 +138,11 @@ object PlanAudit {
         "facade:readTimePoint" -> (() => engine.readTimePoint(QueryTimePoint(Seq.empty, 0L, to))),
         "facade:currentValue" -> (() => engine.currentValue(Seq(1L), 0L)),
         "facade:readGrid" -> (() => engine.readGrid(from, to, 3600L, 7200L)),
-        "facade:statIndexed" -> (() => engine.statIndexed(1L, from, to)),
+        "facade:stat" -> (() => engine.stat(1L, from, to)),
+        "facade:statScan" -> (() => engine.statScan(1L, from, to)),
+        // the index-free forms, the same queries over the time-pruned days
+        "facade:readInterval.catalog" -> (() => engine.readInterval(QueryInterval(Seq.empty, 0L, from, to))),
+        "facade:readTimePoint.flagged" -> (() => engine.readTimePoint(QueryTimePoint(Seq(1L, 2L), 1L, to))),
         "facade:merged" -> (() => engine.merged),
         "facade:sharded.readGrid" -> (() => sharded.readGrid(from, to, 3600L, 7200L)),
         "facade:sharded.currentValue" -> (() => sharded.currentValue(Seq(1L, 2L), 0L)),

@@ -3,7 +3,7 @@ package graft.engine
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -145,7 +145,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   private def hotUnion: Option[DataFrame] = synchronized { hotChunks.reduceOption(_ unionByName _) }
 
   private def emptyMeas: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Meas.schema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), Meas.schema)
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -171,7 +171,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   private def days: Seq[java.sql.Date] = if (hasData) TsdbStorage.days(spark, dataPath) else Nil
   // index exists AND its last mutation committed (data+index cannot
   // commit atomically; a crash in between leaves the marker absent and
-  // every read falls back to the always-correct scan path)
+  // every read runs its query over every day the time bounds admit)
   private def hasStats = TsdbStorage.statsUsable(spark, statsPath)
 
   private def flagPred(flag: Long) = graft.core.Flags.matches(col("flag"), flag)
@@ -301,31 +301,23 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
 
   /** Merge-on-read view: freshest row per (id, time), across the
     * durable store AND the MEMORY hot level. */
-  def merged: DataFrame = mergedRange(None, None)
+  def merged: DataFrame = TsdbStorage.mergeFreshest(levels(None, None, None))
 
-  /** Merge-on-read restricted to the day partitions intersecting the
-    * bounds — the interval's `day` predicate is applied BEFORE the
-    * dedup aggregation, so a one-day read of a 100-day store shuffles
-    * one partition, not the whole store. The hot level (bounded by
-    * hotCapacity, already materialized in memory) unions in under the
-    * same `time` bounds before the freshness merge. */
-  private def mergedRange(from: Option[Timestamp], to: Option[Timestamp]): DataFrame =
-    TsdbStorage.mergeFreshest(levels(from, to))
-
-  /** The unmerged rows of both levels inside the bounds. */
-  private def levels(from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
-    val cold = if (!hasData) emptyMeas else TsdbStorage.readRange(spark, dataPath, from, to)
-    hotUnion match {
-      case None => cold
-      case Some(hot) =>
-        val bounded = (from, to) match {
-          case (Some(f), Some(t)) => hot.filter(col("time").between(lit(f), lit(t)))
-          case (Some(f), None) => hot.filter(col("time") >= lit(f))
-          case (None, Some(t)) => hot.filter(col("time") <= lit(t))
-          case (None, None) => hot
-        }
-        cold.unionByName(bounded)
+  /** The unmerged rows of both levels. The durable store contributes
+    * the day partitions an index lookup chose (`days`), else every day
+    * the time bounds admit — [[TsdbStorage.readRange]]'s partition
+    * predicate, so a one-day read of a 100-day store lists one
+    * directory. The hot level (bounded by hotCapacity, already in
+    * memory) unions in whole: every caller filters `time` itself, and
+    * the filter reaches both sides of the union. */
+  private def levels(days: Option[Seq[java.sql.Date]],
+                     from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
+    val cold = days match {
+      case Some(ds) if ds.nonEmpty => TsdbStorage.readDays(spark, dataPath, ds)
+      case None if hasData => TsdbStorage.readRange(spark, dataPath, from, to)
+      case _ => emptyMeas
     }
+    hotUnion.fold(cold)(cold.unionByName(_))
   }
 
   /** Run a collected stats-index lookup against ONE certified
@@ -334,10 +326,10 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * and rewritten, so a lookup listing it mid-refresh silently misses
     * that day) and re-creates it with a fresh token after. The token is
     * read before and after the lookup; an absent or changed token, or a
-    * file deleted under the lookup, answers None and the caller serves
-    * the always-correct scan path. Holds across engine instances: the
-    * marker lives in the store. The index covers only the durable
-    * level, so unflushed hot rows answer None too. */
+    * file deleted under the lookup, answers None and the caller runs its
+    * query over every day the time bounds admit. Holds across engine
+    * instances: the marker lives in the store. The index covers only the
+    * durable level, so unflushed hot rows answer None too. */
   private def indexLookup[T](lookup: => T): Option[T] =
     if (hotSize != 0L) None
     else TsdbStorage.statsGeneration(spark, statsPath).flatMap { gen =>
@@ -354,46 +346,48 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     }
 
   // ---- O2/O3 interval reads ----------------------------------------
-  /** O2. For explicit id lists with a certified index and no hot rows,
-    * the scan is restricted to the ids' RESIDENT days inside the
-    * interval (index rows whose per-(day,id) [min_time, max_time]
-    * intersects it) — a 300-day read of a series that lived one week
-    * scans 7 partitions, not 300. Catalog-wide reads (ids empty) and
-    * fallback cases take the time-pruned scan. */
-  def readInterval(q: QueryInterval): DataFrame =
-    (if (q.ids.nonEmpty) indexLookup(residentDays(q)) else None)
-      .fold(readIntervalScan(q))(readIntervalDays(q, _))
+  // Every facade read kind builds its answer with ONE data query; the
+  // stats index only chooses what that query reads (the reference's page
+  // footer index picking the chunks its one merge path opens [U:
+  // storage/pages/page_manager.cpp — chunksByIterval]). When
+  // [[indexLookup]] cannot answer, the same query runs over every day the
+  // time bounds admit.
 
-  /** Scan path: day partitions pruned by the time bounds alone. The
-    * authoritative (and fallback) answer. */
-  def readIntervalScan(q: QueryInterval): DataFrame =
-    mergedRange(Some(q.from), Some(q.to))
-      .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)) && flagPred(q.flag))
-      .orderBy("id", "time")
+  /** O2. An explicit id list with a certified index and no hot rows
+    * reads only the ids' RESIDENT days inside the interval — a 300-day
+    * read of a series that lived one week scans 7 partitions, not 300.
+    * Catalog-wide reads read every day the interval admits. */
+  def readInterval(q: QueryInterval): DataFrame =
+    intervalQuery(q, if (q.ids.nonEmpty) indexLookup(residentDays(q)) else None)
+
+  /** The interval query with no index answer. */
+  def readIntervalScan(q: QueryInterval): DataFrame = intervalQuery(q, None)
+
+  /** The per-(day, id) index rows of the ids whose [min_time, max_time]
+    * intersects the interval. The `day` bound is implied by the time
+    * overlap (every index row's times fall inside its own day) and is
+    * what prunes the index's partitions: a 1-day read lists 2 index
+    * days, not all of them. */
+  private def overlapping(ids: Seq[Long], from: Timestamp, to: Timestamp): DataFrame =
+    TsdbStorage.readStats(spark, statsPath)
+      .filter(col("day").between(to_date(lit(from)), to_date(lit(to)))
+        && idPred(ids) && col("max_time") >= lit(from) && col("min_time") <= lit(to))
 
   /** The ids' resident days inside the interval. The flag is NOT
     * consulted (the index doesn't know flags): the day set only needs
-    * to cover every day holding rows for the ids. The `day` bound is
-    * implied by the time overlap (every index row's times fall inside
-    * its own day) and is what prunes the index's partitions: a 1-day
-    * read lists 2 index days, not all of them. No shuffle — the rows
+    * to cover every day holding rows for the ids. No shuffle — the rows
     * are de-duplicated on the driver, bounded by |ids| × interval days. */
   private def residentDays(q: QueryInterval): Seq[java.sql.Date] =
-    TsdbStorage.readStats(spark, statsPath)
-      .filter(col("day").between(to_date(lit(q.from)), to_date(lit(q.to)))
-        && idPred(q.ids) && col("max_time") >= lit(q.from) && col("min_time") <= lit(q.to))
-      .select("day").collect().map(_.getDate(0)).distinct.toSeq
+    overlapping(q.ids, q.from, q.to).select("day").collect().map(_.getDate(0)).distinct.toSeq
 
-  /** Data query over the resident days, with ONE exchange: the pruned
-    * rows are range-partitioned on (id, time), which both clusters the
-    * freshness merge's keys and orders its output, so the merge and the
-    * final sort share it. The flag predicate stays above the merge — a
-    * fresher version whose flag fails must still hide the superseded
-    * one. */
-  private def readIntervalDays(q: QueryInterval, days: Seq[java.sql.Date]): DataFrame =
-    if (days.isEmpty) emptyMeas.orderBy("id", "time")
-    else TsdbStorage.mergeFreshest(
-        TsdbStorage.readDays(spark, dataPath, days)
+  /** The interval query, with ONE exchange: the rows are
+    * range-partitioned on (id, time), which both clusters the freshness
+    * merge's keys and orders its output, so the merge and the final sort
+    * share it. The flag predicate stays above the merge — a fresher
+    * version whose flag fails must still hide the superseded one. */
+  private def intervalQuery(q: QueryInterval, days: Option[Seq[java.sql.Date]]): DataFrame =
+    TsdbStorage.mergeFreshest(
+        levels(days, Some(q.from), Some(q.to))
           .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)))
           .repartitionByRange(col("id"), col("time")))
       .filter(flagPred(q.flag))
@@ -414,38 +408,36 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     intervalReader(q).foreach(callback)
 
   // ---- O4/O5 point reads -------------------------------------------
-  /** O4 as-of read: one row per distinct requested id. Served from the
-    * stats index when it can be exact: flag 0 (match-all — the index
-    * doesn't know flags), no unflushed hot rows, index certified. The
-    * index pinpoints each series' LAST RESIDENT day at-or-before the
-    * timepoint, so the scan touches only those few partitions instead
-    * of every day up to the timepoint — the difference between "a few
-    * pruned partitions" and "half the store" on an aged store. Falls
-    * back to the always-correct scan. */
-  def readTimePoint(q: QueryTimePoint): DataFrame = {
-    val ids = q.ids.distinct
-    (if (q.flag == 0L) indexLookup(lastResidentDays(ids, q.timePoint)) else None)
-      .fold(readTimePointScan(q)) { case (universe, days) =>
-        // flag 0, so the raw rows need no freshness merge: `seq` is
-        // unique per measurement, and the largest (time, seq) at or
-        // before the timepoint IS the freshest version at the latest time
-        val candidates =
-          if (days.isEmpty) emptyMeas
-          else TsdbStorage.readDays(spark, dataPath, days)
-            .filter(col("time") <= lit(q.timePoint) && idPred(ids))
-        asOf(universe.toDF("id"), candidates)
-      }
-  }
+  /** O4 as-of read: one row per distinct requested id. With flag 0 (the
+    * index doesn't know flags), no unflushed hot rows and a certified
+    * index, the index pinpoints each series' LAST RESIDENT day
+    * at-or-before the timepoint, so the query reads only those few
+    * partitions instead of every day up to the timepoint — the
+    * difference between "a few pruned partitions" and "half the store"
+    * on an aged store. */
+  def readTimePoint(q: QueryTimePoint): DataFrame =
+    asOfQuery(q, if (q.flag == 0L) indexLookup(lastResidentDays(q.ids.distinct, q.timePoint)) else None)
 
-  /** Scan path: prunes every day partition after the timepoint. The
-    * authoritative (and fallback) answer. The merge runs before the
-    * flag filter: a superseded version can match a flag its fresher
-    * version does not, and must not answer. */
-  def readTimePointScan(q: QueryTimePoint): DataFrame = {
+  /** The as-of query with no index answer. */
+  def readTimePointScan(q: QueryTimePoint): DataFrame = asOfQuery(q, None)
+
+  /** The as-of query over the lookup's (universe, days), else over every
+    * day up to the timepoint with the requested ids — or, catalog-wide,
+    * every stored id — as the universe. At flag 0 the raw rows need no
+    * freshness merge: `seq` is unique per measurement, so the largest
+    * (time, seq) at or before the timepoint IS the freshest version at
+    * the latest time. A flag filter breaks that argument — a superseded
+    * version can match a flag its fresher version does not, and must not
+    * answer — so only then the merge runs before the filter. */
+  private def asOfQuery(q: QueryTimePoint,
+                        index: Option[(Seq[Long], Seq[java.sql.Date])]): DataFrame = {
     val ids = q.ids.distinct
-    asOf(if (ids.nonEmpty) ids.toDF("id") else levels(None, None).select("id"),
-      mergedRange(None, Some(q.timePoint))
-        .filter(col("time") <= lit(q.timePoint) && flagPred(q.flag) && idPred(ids)))
+    val universe = index.map(_._1.toDF("id")).getOrElse(
+      if (ids.nonEmpty) ids.toDF("id") else levels(None, None, None).select("id"))
+    val rows = levels(index.map(_._2), None, Some(q.timePoint))
+      .filter(col("time") <= lit(q.timePoint) && idPred(ids))
+    asOf(universe,
+      if (q.flag == 0L) rows else TsdbStorage.mergeFreshest(rows).filter(flagPred(q.flag)))
   }
 
   /** The as-of id universe, and per id the last day at-or-before the
@@ -520,7 +512,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     require(maxStalenessSeconds >= 0 && maxStalenessSeconds <= 100L * 365L * 86400L,
       "readGrid: staleness must be in [0, ~100 years]")
     val lower = new Timestamp(from.getTime - maxStalenessSeconds * 1000L)
-    val obs = mergedRange(Some(lower), Some(to))
+    val obs = TsdbStorage.mergeFreshest(levels(None, Some(lower), Some(to)))
       .filter(col("time").between(lit(lower), lit(to)))
       .select(col("id").as("k"), col("time").as("t"), col("seq"), col("value").as("v"))
     // gridIds (a `series_id` frame) overrides the catalog-derived grid —
@@ -551,19 +543,46 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     if (r.isNullAt(0)) None else Some((r.getTimestamp(0), r.getTimestamp(1)))
   }
 
-  private def statPartials(df: DataFrame): DataFrame =
-    df.groupBy("id")
-      .agg(count(lit(1)).as("cnt"), min("time").as("min_time"), max("time").as("max_time"),
-        min("value").as("min_value"), max("value").as("max_value"), sum("value").as("sum_value"))
-
-  /** O8: the per-series Statistic struct over an interval. Served from
-    * the chunk-stat index when [[indexLookup]] certifies the lookup,
-    * scan otherwise. (statIndexed itself delegates inverted intervals
-    * back to the scan path.) The index only covers the durable store,
-    * so unflushed hot rows force the scan path — which reads the hot
-    * level through mergedRange. */
+  /** O8: the per-series Statistic struct over an interval. The index
+    * rows of the series whose [min_time, max_time] lies inside the
+    * interval are pre-aggregated answers for their days; the days of the
+    * rows that only overlap it are read. A 100-day stat over a 100 TB
+    * store reads ~100 tiny index rows plus ≤ 2 day partitions. The index
+    * stores MERGED stats (refreshed per touched day at append), so both
+    * forms agree exactly — StatIndexSpec asserts it across
+    * append/rewrite/compact/eraseOld. */
   def stat(id: Long, from: Timestamp, to: Timestamp): DataFrame =
-    indexLookup(statIndexed(id, from, to)).getOrElse(statScan(id, from, to))
+    statQuery(id, from, to, indexLookup {
+      val found = overlapping(Seq(id), from, to)
+      val (inside, partial) = found.collect().partition(r =>
+        !r.getAs[Timestamp]("min_time").before(from) && !r.getAs[Timestamp]("max_time").after(to))
+      (spark.createDataFrame(java.util.Arrays.asList(inside: _*), found.schema).drop("day"),
+        partial.map(_.getAs[java.sql.Date]("day")).distinct.toSeq)
+    })
+
+  /** The stat query with no index answer. */
+  def statScan(id: Long, from: Timestamp, to: Timestamp): DataFrame = statQuery(id, from, to, None)
+
+  /** The stat query over the lookup's (pre-aggregated index rows, days
+    * to read), else over every day the interval admits. One exchange:
+    * the read rows are hash-partitioned on `id`, which clusters the
+    * freshness merge's (id, time) keys too; the index rows are collected
+    * (the query never reads the index again), and the answer — one row
+    * for one series — aggregates inside a single partition. */
+  private def statQuery(id: Long, from: Timestamp, to: Timestamp,
+                        index: Option[(DataFrame, Seq[java.sql.Date])]): DataFrame = {
+    val read = TsdbStorage.mergeFreshest(
+        levels(index.map(_._2), Some(from), Some(to))
+          .filter(col("id") === id && col("time").between(lit(from), lit(to)))
+          .repartition(col("id")))
+      .select(col("id"), lit(1L).as("cnt"), col("time").as("min_time"), col("time").as("max_time"),
+        col("value").as("min_value"), col("value").as("max_value"), col("value").as("sum_value"))
+    index.fold(read)(ix => read.unionByName(ix._1)).coalesce(1)
+      .groupBy("id")
+      .agg(sum("cnt").as("cnt"), min("min_time").as("min_time"), max("max_time").as("max_time"),
+        min("min_value").as("min_value"), max("max_value").as("max_value"),
+        sum("sum_value").as("sum_value"))
+  }
 
   /** Rebuild the chunk-stat index from scratch — the explicit repair
     * path for an index left uncertified by a crash (or for a store that
@@ -588,65 +607,6 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
       TsdbStorage.markStatsInSync(spark, statsPath)
     }
     out
-  }
-
-  /** Scan path: merge-on-read over the pruned day range, one grouped
-    * aggregation. The authoritative (and fallback) answer. */
-  def statScan(id: Long, from: Timestamp, to: Timestamp): DataFrame =
-    statPartials(
-      mergedRange(Some(from), Some(to))
-        .filter(col("id") === id && col("time").between(lit(from), lit(to))))
-
-  /** Index path: fully-covered days are answered from per-(day, id)
-    * index rows, collected here (bounded by the covered days; no data
-    * files touched), so the returned frame never reads the index again;
-    * at most the two boundary days are scanned with partition pruning.
-    * The index stores MERGED stats (refreshed per touched day at
-    * append), so the two paths agree exactly — EngineSpec asserts it
-    * across append/rewrite/compact/eraseOld. A 100-day stat over a
-    * 100 TB store reads ~100 tiny index rows plus ≤ 2 day partitions. */
-  def statIndexed(id: Long, from: Timestamp, to: Timestamp): DataFrame = {
-    // inverted interval: the covered-day range is empty, but the
-    // boundary-day scans below would still match real rows — delegate
-    // to the scan path, whose between() filter yields the correct
-    // empty result with the right schema
-    if (from.after(to)) return statScan(id, from, to)
-    val utc = java.time.ZoneOffset.UTC
-    val fromDay = from.toInstant.atZone(utc).toLocalDate
-    val toDay = to.toInstant.atZone(utc).toLocalDate
-    def dayStart(d: java.time.LocalDate) = Timestamp.from(d.atStartOfDay(utc).toInstant)
-    def dayEnd(d: java.time.LocalDate) =
-      Timestamp.from(d.plusDays(1).atStartOfDay(utc).toInstant.minusNanos(1000))
-    val fromCovered = !from.after(dayStart(fromDay))
-    val toCovered = !to.before(dayEnd(toDay))
-    val coveredFrom = if (fromCovered) fromDay else fromDay.plusDays(1)
-    val coveredTo = if (toCovered) toDay else toDay.minusDays(1)
-
-    val covered = TsdbStorage.readStats(spark, statsPath)
-      .filter(col("id") === id && (if (coveredFrom.isAfter(coveredTo)) lit(false)
-        else col("day").between(
-          lit(java.sql.Date.valueOf(coveredFrom)), lit(java.sql.Date.valueOf(coveredTo)))))
-      .select("id", "cnt", "min_time", "max_time", "min_value", "max_value", "sum_value")
-    val full = spark.createDataFrame(
-      java.util.Arrays.asList(covered.collect(): _*), covered.schema)
-
-    // boundary-day scans: each is a single pruned partition
-    val edgeBounds: Seq[(Timestamp, Timestamp)] =
-      if (fromDay == toDay) { if (fromCovered && toCovered) Seq.empty else Seq((from, to)) }
-      else Seq(
-        if (fromCovered) None else Some((from, dayEnd(fromDay))),
-        if (toCovered) None else Some((dayStart(toDay), to))).flatten
-    val edges = edgeBounds.map { case (a, b) =>
-      statPartials(
-        mergedRange(Some(a), Some(b))
-          .filter(col("id") === id && col("time").between(lit(a), lit(b))))
-    }
-
-    (full +: edges).reduce(_ unionByName _)
-      .groupBy("id")
-      .agg(sum("cnt").as("cnt"), min("min_time").as("min_time"), max("max_time").as("max_time"),
-        min("min_value").as("min_value"), max("max_value").as("max_value"),
-        sum("sum_value").as("sum_value"))
   }
 
   /** O9: the named statistic-calculator function set, selectable by

@@ -60,13 +60,12 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
     append(spark.createDataset(ms).toDF())
   }
 
-  /** Fan-out + merge: union of per-shard results, re-ordered. */
-  def readInterval(q: QueryInterval): DataFrame = {
-    val relevant =
-      if (q.ids.isEmpty) shards
-      else q.ids.map(shardOf).distinct // route: only shards owning requested ids
-    relevant.map(_.readInterval(q)).reduce(_ unionByName _).orderBy("id", "time")
-  }
+  /** Fan-out + merge, ROUTED BY OWNERSHIP: each owning shard reads only
+    * its own ids (so its resident-day lookup sees only them); a
+    * catalog-wide read asks every shard. The union is re-ordered. */
+  def readInterval(q: QueryInterval): DataFrame =
+    byOwner(q.ids)((shard, owned) => shard.readInterval(q.copy(ids = owned)))
+      .reduce(_ unionByName _).orderBy("id", "time")
 
   /** O4 as-of fan-out, ROUTED BY OWNERSHIP (the readGrid discipline):
     * an explicit id list is pmod-partitioned so each owning shard is

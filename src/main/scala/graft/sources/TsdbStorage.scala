@@ -275,20 +275,11 @@ object TsdbStorage {
     * a one-day read of a 100-day store lists one directory. The precise
     * `time` bounds additionally prune parquet row groups. */
   def readRange(spark: SparkSession, path: String,
-                from: Option[Timestamp], to: Option[Timestamp]): DataFrame = {
-    val base = spark.read.schema(withDaySchema).parquet(path)
-    val pruned = (from, to) match {
-      case (Some(f), Some(t)) =>
-        base.filter(col("day").between(to_date(lit(f)), to_date(lit(t)))
-          && col("time").between(lit(f), lit(t)))
-      case (Some(f), None) =>
-        base.filter(col("day") >= to_date(lit(f)) && col("time") >= lit(f))
-      case (None, Some(t)) =>
-        base.filter(col("day") <= to_date(lit(t)) && col("time") <= lit(t))
-      case (None, None) => base
-    }
-    pruned.drop("day")
-  }
+                from: Option[Timestamp], to: Option[Timestamp]): DataFrame =
+    (from.map(f => col("day") >= to_date(lit(f)) && col("time") >= lit(f)) ++
+      to.map(t => col("day") <= to_date(lit(t)) && col("time") <= lit(t)))
+      .foldLeft(spark.read.schema(withDaySchema).parquet(path))(_ filter _)
+      .drop("day")
 
   // ---- day partitions ------------------------------------------------
 

@@ -17,6 +17,30 @@ class EngineSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
+  private def flagMatches(rowFlag: Long, queryFlag: Long) =
+    queryFlag == 0L || (rowFlag & queryFlag) != 0L
+
+  /** The interval answer computed on the driver from the whole-store
+    * merge-on-read view. */
+  private def intervalReference(engine: GraftEngine, q: QueryInterval): Seq[Seq[Any]] =
+    FacadeProbe.merged(engine)
+      .filter(m => q.ids.contains(m.id) && !m.time.before(q.from) && !m.time.after(q.to)
+        && flagMatches(m.flag, q.flag))
+      .sortBy(m => (m.id, m.time.getTime))
+      .map(m => Seq(m.id, m.time, m.value, m.flag, m.seq))
+
+  /** The as-of answer computed on the driver from the whole-store
+    * merge-on-read view: per requested (or, catalog-wide, stored) id,
+    * the latest matching row at or before the timepoint, else NO_DATA. */
+  private def asOfReference(engine: GraftEngine, q: QueryTimePoint): Seq[Seq[Any]] = {
+    val all = FacadeProbe.merged(engine)
+    (if (q.ids.isEmpty) all.map(_.id) else q.ids).distinct.sorted.map { id =>
+      all.filter(m => m.id == id && !m.time.after(q.timePoint) && flagMatches(m.flag, q.flag))
+        .sortBy(_.time.getTime).lastOption
+        .fold(Seq[Any](id, null, null, Meas.NO_DATA))(m => Seq(m.id, m.time, m.value, m.flag))
+    }
+  }
+
   test("full engine lifecycle: append, interval/point reads, stat, scheme, retention, compaction") {
     val engine = new GraftEngine(spark, tmpDir("graft-engine"), buckets = 4)
 
@@ -345,9 +369,14 @@ class EngineSpec extends SparkSpec {
     engine.append(Seq( // fresher rewrite of the day-5 key
       Meas(1L, ts("2024-03-05 10:00:00"), 20.0, Flags.ERROR, 4)))
 
-    def both(q: QueryInterval): (Seq[Seq[Any]], Seq[Seq[Any]]) =
-      (engine.readInterval(q).collect().toSeq.map(_.toSeq),
-        engine.readIntervalScan(q).collect().toSeq.map(_.toSeq))
+    // the index answer (its lookup observed), the scan answer; the index
+    // answer must also equal the whole-store merged view's
+    def both(q: QueryInterval): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+      val (indexed, qes) = FacadeProbe.executions(spark)(rows(engine.readInterval(q)))
+      assert(qes.exists(FacadeProbe.reads(_, "_stats")), s"the index answered $q")
+      assert(indexed === intervalReference(engine, q), s"index path vs merged view for $q")
+      (indexed, rows(engine.readIntervalScan(q)))
+    }
 
     // wide interval, one sparse id: indexed ≡ scan, rewrite wins
     val qWide = QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-10 00:00:00"))
@@ -378,10 +407,13 @@ class EngineSpec extends SparkSpec {
     engine.append(Seq( // fresher-seq rewrite of an existing key
       Meas(1L, ts("2024-03-03 09:00:00"), 20.0, 1L, 5)))
 
+    // the index answer (its lookup observed), the scan answer; the index
+    // answer must also equal the whole-store merged view's
     def both(q: QueryTimePoint): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
-      val indexed = engine.readTimePoint(q).collect().toSeq.map(_.toSeq)
-      val scan = engine.readTimePointScan(q).collect().toSeq.map(_.toSeq)
-      (indexed, scan)
+      val (indexed, qes) = FacadeProbe.executions(spark)(rows(engine.readTimePoint(q)))
+      assert(qes.exists(FacadeProbe.reads(_, "_stats")), s"the index answered $q")
+      assert(indexed === asOfReference(engine, q), s"index path vs merged view for $q")
+      (indexed, rows(engine.readTimePointScan(q)))
     }
     // mid-day timepoint BEFORE the cutoff day's first row: the index
     // must fall back to the previous resident day, not return NO_DATA
@@ -500,7 +532,7 @@ class EngineSpec extends SparkSpec {
     val qi = QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 23:00:00"))
     val qp = QueryTimePoint(Seq(1L), 0L, ts("2024-03-03 12:00:00"))
     val (interval, point) = (rows(engine.readIntervalScan(qi)), rows(engine.readTimePointScan(qp)))
-    // covered days 03-01 and 03-02 come from the index, 03-03 is a boundary scan
+    // series 1's index rows all lie inside [from, to]: the lookup answers every day
     val (from, to) = (ts("2024-03-01 00:00:00"), ts("2024-03-03 12:00:00"))
     val stat = rows(engine.statScan(1L, from, to))
     val span = Some((ts("2024-03-01 06:00:00"), ts("2024-03-03 06:00:00")))
@@ -574,34 +606,20 @@ class EngineSpec extends SparkSpec {
   }
 
   test("index-served reads: the lookup runs no exchange, the data query exactly one shuffle") {
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
-    val engine = new GraftEngine(spark, tmpDir("graft-read-plans"), buckets = 2)
+    val dir = tmpDir("graft-read-plans")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
     engine.append((0 until 60).map { i =>
       Meas(i % 4L, ts(f"2024-03-${1 + i % 5}%02d ${i % 24}%02d:00:00"), i.toDouble, 1L, i.toLong)
     })
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => s +: nodes(s.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     /** The final plan of every query the read call runs, in order. */
     def plans(read: => org.apache.spark.sql.DataFrame): Seq[Seq[SparkPlan]] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
-        def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen.add(qe)
-      }
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      spark.listenerManager.register(listener)
-      try {
-        assert(read.collect().nonEmpty)
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      } finally spark.listenerManager.unregister(listener)
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.map(qe => nodes(qe.executedPlan))
+      val (n, qes) = FacadeProbe.executions(spark)(read.collect().length)
+      assert(n > 0)
+      qes.map(qe => FacadeProbe.nodes(qe.executedPlan))
     }
+    def shuffles(plan: Seq[SparkPlan]) = plan.count(_.isInstanceOf[ShuffleExchangeLike])
     val reads: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "readInterval" -> (() => engine.readInterval(
         QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00")))),
@@ -613,9 +631,30 @@ class EngineSpec extends SparkSpec {
       assert(qs.size === 2, s"$name: one lookup, one data query")
       val (lookup, data) = (qs.head, qs(1))
       assert(!lookup.exists(_.isInstanceOf[Exchange]), s"$name lookup:\n${lookup.head.treeString}")
-      assert(data.count(_.isInstanceOf[ShuffleExchangeLike]) === 1, s"$name data:\n${data.head.treeString}")
+      assert(shuffles(data) === 1, s"$name data:\n${data.head.treeString}")
       assert(!data.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name data:\n${data.head.treeString}")
     }
+
+    // the index-free interval forms run no lookup and the same query
+    val q = QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00"))
+    def indexFree(name: String, read: => org.apache.spark.sql.DataFrame): Unit = {
+      val qs = plans(read)
+      assert(qs.size === 1, s"$name: no lookup")
+      assert(shuffles(qs.head) === 1, s"$name:\n${qs.head.head.treeString}")
+      assert(!qs.head.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name:\n${qs.head.head.treeString}")
+    }
+    indexFree("catalog-wide", engine.readInterval(q.copy(ids = Nil)))
+    graft.sources.TsdbStorage.markStatsOutOfSync(spark, s"$dir/_stats")
+    indexFree("uncertified index", engine.readInterval(q))
+    engine.reindex()
+    val hot = new GraftEngine(spark, dir, buckets = 2, hotCapacity = 1000L)
+    hot.append(Seq(Meas(1L, ts("2024-03-02 12:30:00"), 99.0, 1L, 1000L)))
+    indexFree("unflushed MEMORY rows", hot.readInterval(q))
+    // a flag filter needs the freshness merge before the as-of
+    // aggregate: one shuffle each
+    val flagged = plans(engine.readTimePoint(QueryTimePoint(Seq(1L, 2L, 9L), 1L, ts("2024-03-03 12:00:00"))))
+    assert(flagged.size === 1, "flag ≠ 0: no lookup")
+    assert(shuffles(flagged.head) <= 2, s"flag ≠ 0:\n${flagged.head.head.treeString}")
   }
 
   test("per-id eraseOld falls back to the full day list when the index is unusable") {

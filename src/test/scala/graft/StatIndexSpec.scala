@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Row
+
 import graft.core.{Flags, Meas}
 import graft.engine.{GraftEngine, QueryInterval}
 
@@ -18,10 +20,19 @@ class StatIndexSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** The index-served stat (its lookup observed) ≡ the scan ≡ the
+    * answer computed on the driver from the whole-store merged view. */
   private def assertPathsAgree(engine: GraftEngine, id: Long, from: String, to: String): Unit = {
-    val idx = engine.statIndexed(id, ts(from), ts(to)).collect().toSeq
+    val (idx, qes) = FacadeProbe.executions(spark)(engine.stat(id, ts(from), ts(to)).collect().toSeq)
+    assert(qes.exists(FacadeProbe.reads(_, "_stats")), s"the index answered id=$id [$from, $to]")
     val scan = engine.statScan(id, ts(from), ts(to)).collect().toSeq
     assert(idx === scan, s"stat index vs scan diverged for id=$id [$from, $to]")
+    val in = FacadeProbe.merged(engine)
+      .filter(m => m.id == id && !m.time.before(ts(from)) && !m.time.after(ts(to)))
+    val reference = if (in.isEmpty) Seq.empty else Seq(Row(id, in.size.toLong,
+      in.map(_.time).minBy(_.getTime), in.map(_.time).maxBy(_.getTime),
+      in.map(_.value).min, in.map(_.value).max, in.map(_.value).sum))
+    assert(idx === reference, s"stat index vs merged view diverged for id=$id [$from, $to]")
   }
 
   test("stat index agrees with the scan path across append, rewrite, compact, eraseOld") {
