@@ -330,10 +330,14 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * query over every day the time bounds admit. Holds across engine
     * instances: the marker lives in the store. The index covers only the
     * durable level, so unflushed hot rows answer None too. */
-  private def indexLookup[T](lookup: => T): Option[T] =
+  private def indexLookup[T](lookup: => T): Option[T] = indexLookupAt(_ => Some(lookup))
+
+  /** [[indexLookup]] for a lookup that is told the generation it runs
+    * under and may decline (None). */
+  private def indexLookupAt[T](lookup: String => Option[T]): Option[T] =
     if (hotSize != 0L) None
     else TsdbStorage.statsGeneration(spark, statsPath).flatMap { gen =>
-      val found = try Some(lookup) catch { case e: Exception if missingFile(e) => None }
+      val found = try lookup(gen) catch { case e: Exception if missingFile(e) => None }
       found.filter(_ => TsdbStorage.statsGeneration(spark, statsPath).contains(gen))
     }
 
@@ -410,13 +414,58 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   // ---- O4/O5 point reads -------------------------------------------
   /** O4 as-of read: one row per distinct requested id. With flag 0 (the
     * index doesn't know flags), no unflushed hot rows and a certified
-    * index, the index pinpoints each series' LAST RESIDENT day
-    * at-or-before the timepoint, so the query reads only those few
-    * partitions instead of every day up to the timepoint — the
-    * difference between "a few pruned partitions" and "half the store"
-    * on an aged store. */
+    * index, a timepoint at or after every requested series' latest time
+    * (every `currentValue`) is answered from the latest-value map with
+    * no Spark query; any other timepoint has the index pinpoint each
+    * series' LAST RESIDENT day at-or-before it, so the query reads only
+    * those few partitions instead of every day up to the timepoint —
+    * the difference between "a few pruned partitions" and "half the
+    * store" on an aged store. */
   def readTimePoint(q: QueryTimePoint): DataFrame =
-    asOfQuery(q, if (q.flag == 0L) indexLookup(lastResidentDays(q.ids.distinct, q.timePoint)) else None)
+    if (q.flag != 0L) asOfQuery(q, None)
+    else latestAnswer(q).getOrElse(
+      asOfQuery(q, indexLookup(lastResidentDays(q.ids.distinct, q.timePoint))))
+
+  // O5: dariadb answers currentValue from an in-memory map of each
+  // series' last value [U: engines/engine.cpp — currentValue]. Here the
+  // map is the stats index's per-id latest (max_time, last_value,
+  // last_flag), collected on the driver and keyed on the `_SYNCED`
+  // token it was built under — one entry per indexed series, the
+  // driver-size contract of the catalog memo `knownIds`. Any mutation
+  // changes the token, from this engine instance or another, so a
+  // cached map is served only while the store is exactly the one it
+  // was built from.
+  @volatile private var latest: Option[(String, Map[Long, Row])] = None
+
+  /** The as-of answer from the latest-value map, when every requested
+    * series' latest time is at or before the timepoint: an indexed id
+    * answers its latest row, an id absent from the index NO_DATA, and
+    * the catalog-wide request every indexed series. A miss (changed or
+    * new token) rebuilds the map. The rebuild runs inside
+    * [[indexLookupAt]]'s bracket and outside the append monitor; a
+    * token that changes under it caches nothing. */
+  private def latestAnswer(q: QueryTimePoint): Option[DataFrame] = {
+    val current = indexLookupAt(gen => Some(latest.filter(_._1 == gen).getOrElse(gen -> buildLatest())))
+    current.flatMap { built =>
+      latest = Some(built)
+      val m = built._2
+      val answer = (if (q.ids.isEmpty) m.keys.toSeq else q.ids.distinct).sorted
+        .map(id => m.getOrElse(id, Row(id, null, null, Meas.NO_DATA)))
+      if (answer.exists(r => !r.isNullAt(1) && r.getTimestamp(1).after(q.timePoint))) None
+      // one partition: the server's toLocalIterator runs a job per partition
+      else Some(spark.createDataFrame(java.util.Arrays.asList(answer: _*), GraftEngine.AsOfSchema)
+        .coalesce(1))
+    }
+  }
+
+  /** One grouped pass over the stats index, no data file: per id the
+    * row at its largest `max_time` (each (day, id) row's `max_time` lies
+    * in its own day, so the largest is unique). */
+  private def buildLatest(): Map[Long, Row] =
+    TsdbStorage.readStats(spark, statsPath).groupBy("id")
+      .agg(max("max_time"), max_by(col("last_value"), col("max_time")),
+        max_by(col("last_flag"), col("max_time")))
+      .collect().map(r => r.getLong(0) -> r).toMap
 
   /** The as-of query with no index answer. */
   def readTimePointScan(q: QueryTimePoint): DataFrame = asOfQuery(q, None)
@@ -556,7 +605,8 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
       val found = overlapping(Seq(id), from, to)
       val (inside, partial) = found.collect().partition(r =>
         !r.getAs[Timestamp]("min_time").before(from) && !r.getAs[Timestamp]("max_time").after(to))
-      (spark.createDataFrame(java.util.Arrays.asList(inside: _*), found.schema).drop("day"),
+      (spark.createDataFrame(java.util.Arrays.asList(inside: _*), found.schema)
+          .drop("day", "last_value", "last_flag"),
         partial.map(_.getAs[java.sql.Date]("day")).distinct.toSeq)
     })
 
@@ -878,7 +928,8 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     recoverSwap(schemePath)
     val listed = graft.sources.ParquetProbe.listParquet(spark, new Path(schemePath))
     if (listed.nonEmpty) TsdbStorage.replaceFiles(spark, schemePath, listed)(
-      spark.read.parquet(listed.map(_.toString): _*).distinct().coalesce(1).write.parquet(_))
+      spark.read.schema(GraftEngine.SchemeSchema).parquet(listed.map(_.toString): _*)
+        .distinct().coalesce(1).write.parquet(_))
   }
 
   /** O13 fsck: verify every data file — footer, every row group, and
@@ -1009,16 +1060,26 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     if (fresh.nonEmpty) appendScheme(fresh)
   }
 
-  /** ls(): the catalog (dedup view over the append-only log). */
+  /** ls(): the catalog (dedup view over the append-only log). The log
+    * is read with its schema, so building the view runs no
+    * footer-reading job. */
   def ls(): DataFrame = {
     recoverSwap(schemePath)
     if (!fs.exists(new Path(schemePath)))
       Seq.empty[(String, Long)].toDF("name", "series_id")
-    else spark.read.parquet(schemePath).distinct()
+    else spark.read.schema(GraftEngine.SchemeSchema).parquet(schemePath).distinct()
   }
 }
 
 object GraftEngine {
+  /** The as-of answer's columns, for an answer built on the driver. */
+  private val AsOfSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id BIGINT, time TIMESTAMP, value DOUBLE, flag BIGINT")
+
+  /** The scheme log's columns. */
+  private val SchemeSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "name STRING, series_id BIGINT")
+
   /** O9 function names [U: statistic/calculator.cpp — FunctionFactory]. */
   val CalculatorFunctions: Seq[String] =
     Seq("average", "median", "percentile90", "percentile99", "sigma", "minimum", "maximum", "count")

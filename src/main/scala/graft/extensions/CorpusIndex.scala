@@ -168,7 +168,7 @@ abstract class CorpusIndex[M <: CorpusMeta] {
     }
 
   /** True iff the index exists AND its last mutation committed. */
-  def usable(spark: SparkSession, dir: String): Boolean = TsdbStorage.statsUsable(spark, dir)
+  def usable(spark: SparkSession, dir: String): Boolean = TsdbStorage.markedInSync(spark, dir)
 
   /** Fail unless the index at `dir` is [[usable]]. */
   def certified(spark: SparkSession, dir: String): Unit =

@@ -78,6 +78,12 @@ import graft.engine.{GraftEngine, QueryInterval, QueryTimePoint}
   * flows executor → driver → socket in chunks; it is never
   * materialized whole on the server.
   *
+  * Both ends set `TCP_NODELAY` and flush each message once: a result
+  * after its `END` line, an APPEND after its last payload line. A flush
+  * per line with Nagle's algorithm on holds every line after the first
+  * until the peer's delayed ACK (about 40 ms on Linux) — a fixed stall
+  * on every multi-line message.
+  *
   * Trust model: by default the protocol has NO authentication — any
   * connected client can read, mutate, and subscribe (the reference's
   * server is the same), so the server binds the LOOPBACK interface
@@ -176,6 +182,7 @@ class GraftServer(engine: graft.engine.EngineApi, port: Int = 0, bindAddress: Op
     while (running) {
       try {
         val sock = server.accept()
+        sock.setTcpNoDelay(true)
         val t = new Thread(() => handle(sock), s"graft-server-conn-${sock.getPort}")
         t.setDaemon(true)
         t.start()
@@ -268,18 +275,18 @@ class GraftServer(engine: graft.engine.EngineApi, port: Int = 0, bindAddress: Op
             case "READ_INTERVAL" =>
               val q = QueryInterval(Wire.parseIds(parts(1)), parts(2).toLong,
                 Wire.usToTs(parts(3).toLong), Wire.usToTs(parts(4).toLong))
-              streamRows(engine.intervalReader(q), "MEAS", Wire.fmtMeas, reply)
+              streamRows(engine.intervalReader(q), "MEAS", Wire.fmtMeas, out)
             case "READ_TIMEPOINT" =>
               val q = QueryTimePoint(Wire.parseIds(parts(1)), parts(2).toLong,
                 Wire.usToTs(parts(3).toLong))
-              streamRows(engine.readTimePoint(q).toLocalIterator().asScala, "POINT", Wire.fmtPoint, reply)
+              streamRows(engine.readTimePoint(q).toLocalIterator().asScala, "POINT", Wire.fmtPoint, out)
             case "CURRENT_VALUE" =>
               streamRows(engine.currentValue(Wire.parseIds(parts(1)), parts(2).toLong)
-                .toLocalIterator().asScala, "POINT", Wire.fmtPoint, reply)
+                .toLocalIterator().asScala, "POINT", Wire.fmtPoint, out)
             case "READ_GRID" =>
               val df = engine.readGrid(Wire.usToTs(parts(1).toLong), Wire.usToTs(parts(2).toLong),
                 parts(3).toLong, parts(4).toLong)
-              streamRows(df.toLocalIterator().asScala, "GRID", Wire.fmtGrid, reply)
+              streamRows(df.toLocalIterator().asScala, "GRID", Wire.fmtGrid, out)
             case "SUBSCRIBE" =>
               // re-subscribing REPLACES this connection's filter: the
               // previous registration must be removed (and its writer
@@ -306,12 +313,15 @@ class GraftServer(engine: graft.engine.EngineApi, port: Int = 0, bindAddress: Op
     }
   }
 
-  /** One streamed result: a `<kind> <row>` line per row, then `END n`. */
+  /** One streamed result: a `<kind> <row>` line per row, then `END n`,
+    * flushed once after `END` (the writer's buffer still spills a long
+    * result to the socket as it fills, so nothing is held whole). */
   private def streamRows[T](rows: Iterator[T], kind: String, fmt: T => String,
-                            reply: String => Unit): Unit = {
+                            out: PrintWriter): Unit = out.synchronized {
     var n = 0
-    rows.foreach { r => reply(s"$kind ${fmt(r)}"); n += 1 }
-    reply(s"END $n")
+    rows.foreach { r => out.println(s"$kind ${fmt(r)}"); n += 1 }
+    out.println(s"END $n")
+    out.flush()
   }
 
   /** Runs inside the engine's append lock: filter + non-blocking
@@ -351,6 +361,7 @@ object GraftServer {
   */
 class GraftClient(host: String, port: Int, secret: Option[String] = None) extends AutoCloseable {
   private val sock = new Socket(host, port)
+  sock.setTcpNoDelay(true)
   private val in = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
   private val out = new PrintWriter(new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8"))
 
@@ -383,8 +394,8 @@ class GraftClient(host: String, port: Int, secret: Option[String] = None) extend
 
   def append(ms: Seq[Meas]): Int = {
     requireSync("append")
-    send(s"APPEND ${ms.size}")
-    ms.foreach(m => send(Wire.fmtMeas(m)))
+    out.println(s"APPEND ${ms.size}")
+    ms.foreach(m => out.println(Wire.fmtMeas(m)))
     out.flush()
     expect("OK ").stripPrefix("OK ").trim.toInt
   }

@@ -104,6 +104,14 @@ object TsdbStorage {
     if (fs.exists(p)) fs.delete(p, false)
   }
 
+  /** The stats-index row format the `_SYNCED` token records: v2 added
+    * `last_value` / `last_flag`. An index certified under another
+    * format (a bare token, as the format before v2 wrote) is
+    * uncertified for this reader — its reads run over every day the
+    * time bounds admit, and `maintain()` rebuilds it through
+    * `reindex()`. */
+  private val StatsFormat = "v2"
+
   def markStatsInSync(spark: SparkSession, statsPath: String): Unit = {
     val root = new Path(statsPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -115,83 +123,98 @@ object TsdbStorage {
     // [[statsGeneration]], and an unchanged token proves no mutation
     // committed (or began) in between
     val out = fs.create(new Path(root, SyncMarker), true)
-    try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+    try out.write(s"$StatsFormat:${java.util.UUID.randomUUID()}".getBytes("UTF-8"))
     finally out.close()
   }
 
+  /** True iff `dir` holds a `_SYNCED` marker, whatever format its token
+    * records — the artifact indexes' certification test (their rows do
+    * not carry the stats format). */
+  def markedInSync(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir, SyncMarker)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** The certified generation of the stats index: the `_SYNCED`
-    * marker's token, None when the index is uncertified (or the marker
-    * is being rewritten under the reader). */
+    * marker's token, None when the index is uncertified, was certified
+    * under another stats format, or the marker is being rewritten under
+    * the reader. */
   private[graft] def statsGeneration(spark: SparkSession, statsPath: String): Option[String] = {
     val p = new Path(statsPath, SyncMarker)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    val token = try {
       val in = fs.open(p)
       try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     } catch { case _: java.io.IOException => None }
+    token.filter(_.startsWith(s"$StatsFormat:"))
   }
 
-  /** True iff the stats index exists AND its last mutation committed —
-    * the serve-from-index precondition. */
-  def statsUsable(spark: SparkSession, statsPath: String): Boolean = {
-    val p = new Path(statsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.exists(new Path(p, SyncMarker))
-  }
+  /** True iff the stats index exists AND its last mutation committed
+    * under the current stats format — the serve-from-index
+    * precondition. */
+  def statsUsable(spark: SparkSession, statsPath: String): Boolean =
+    statsGeneration(spark, statsPath).isDefined
 
   /** Per-(day, id) MERGED stats from a frame that is bucket-partitioned
     * by id and sorted by (id, time) within partitions: one streaming
     * pass — duplicate (id, time) runs are adjacent (freshest `seq`
     * wins), every id lives in exactly one partition, so per-partition
     * partials are already global. Genuine per-partition imperative
-    * logic; no shuffle. */
+    * logic; no shuffle. A (day, id)'s runs arrive in time order, so its
+    * last run is the one at `max_time`: `last_value` / `last_flag`. */
   private def clusteredMergedStats(clustered: DataFrame): DataFrame = {
     val spark = clustered.sparkSession
     import spark.implicits._
     clustered
-      .select(col("id"), col("time"), col("value"), col("seq"), col("day"))
-      .as[(Long, java.sql.Timestamp, Double, Long, java.sql.Date)]
+      .select(col("id"), col("time"), col("value"), col("flag"), col("seq"), col("day"))
+      .as[(Long, java.sql.Timestamp, Double, Long, Long, java.sql.Date)]
       .mapPartitions { it =>
         final class Acc(var cnt: Long, var minT: java.sql.Timestamp, var maxT: java.sql.Timestamp,
-                        var minV: Double, var maxV: Double, var sumV: Double)
+                        var minV: Double, var maxV: Double, var sumV: Double,
+                        var lastV: Double, var lastF: Long)
         val acc = scala.collection.mutable.HashMap[(java.sql.Date, Long), Acc]()
         var runId = 0L; var runTime: java.sql.Timestamp = null
-        var runDay: java.sql.Date = null; var runSeq = 0L; var runValue = 0.0
+        var runDay: java.sql.Date = null; var runSeq = 0L; var runValue = 0.0; var runFlag = 0L
         def foldRun(): Unit = if (runTime != null) {
           val a = acc.getOrElseUpdate((runDay, runId),
-            new Acc(0L, runTime, runTime, runValue, runValue, 0.0))
+            new Acc(0L, runTime, runTime, runValue, runValue, 0.0, runValue, runFlag))
           a.cnt += 1
           if (runTime.compareTo(a.minT) < 0) a.minT = runTime
-          if (runTime.compareTo(a.maxT) > 0) a.maxT = runTime
+          if (runTime.compareTo(a.maxT) > 0) { a.maxT = runTime; a.lastV = runValue; a.lastF = runFlag }
           if (runValue < a.minV) a.minV = runValue
           if (runValue > a.maxV) a.maxV = runValue
           a.sumV += runValue
         }
-        it.foreach { case (id, time, value, seq, day) =>
+        it.foreach { case (id, time, value, flag, seq, day) =>
           if (runTime != null && id == runId && time.equals(runTime)) {
-            if (seq > runSeq) { runSeq = seq; runValue = value } // freshest wins
+            if (seq > runSeq) { runSeq = seq; runValue = value; runFlag = flag } // freshest wins
           } else {
             foldRun()
-            runId = id; runTime = time; runDay = day; runSeq = seq; runValue = value
+            runId = id; runTime = time; runDay = day; runSeq = seq; runValue = value; runFlag = flag
           }
         }
         foldRun()
         acc.iterator.map { case ((day, id), a) =>
-          (day, id, a.cnt, a.minT, a.maxT, a.minV, a.maxV, a.sumV)
+          (day, id, a.cnt, a.minT, a.maxT, a.minV, a.maxV, a.sumV, a.lastV, a.lastF)
         }
       }
-      .toDF("day", "id", "cnt", "min_time", "max_time", "min_value", "max_value", "sum_value")
+      .toDF("day", "id", "cnt", "min_time", "max_time", "min_value", "max_value", "sum_value",
+        "last_value", "last_flag")
   }
 
   // ---- per-(day, id) statistic index ---------------------------------
 
   /** Mergeable partial-stat columns: readers re-aggregate with
-    * sum/min/max, so per-day rows combine into any interval. */
+    * sum/min/max, so per-day rows combine into any interval. Over a
+    * merged frame `time` is unique per id, so `last_value` / `last_flag`
+    * are the row at `max_time`. */
   private val statAggs = Seq(
     count(lit(1)).as("cnt"),
     min("time").as("min_time"), max("time").as("max_time"),
     min("value").as("min_value"), max("value").as("max_value"),
-    sum("value").as("sum_value"))
+    sum("value").as("sum_value"),
+    max_by(col("value"), col("time")).as("last_value"),
+    max_by(col("flag"), col("time")).as("last_flag"))
 
   /** Recompute the index rows for `touchedDays` from the data store
     * (merge-on-read applied first, so the index always reflects the
@@ -244,6 +267,8 @@ object TsdbStorage {
     StructField("min_value", org.apache.spark.sql.types.DoubleType),
     StructField("max_value", org.apache.spark.sql.types.DoubleType),
     StructField("sum_value", org.apache.spark.sql.types.DoubleType),
+    StructField("last_value", org.apache.spark.sql.types.DoubleType),
+    StructField("last_flag", org.apache.spark.sql.types.LongType),
     StructField("day", DateType)))
 
   /** Read the stats index. Keeps the `day` column for partition pruning
@@ -417,13 +442,16 @@ object TsdbStorage {
 
   /** Merge-on-read dedup: exactly one (the freshest, by `seq`) row per
     * (id, time). Partial-aggregating max_by — no window, one shuffle on
-    * the dedup key. Public because the engine's MEMORY hot level unions
-    * into the same resolution (SURVEY.md §2.1 O16, §3.1 strategies). */
+    * the dedup key. One fixed-width max_by per payload column (`seq` is
+    * unique per measurement, so both pick the same row) keeps the
+    * aggregation buffer hashable: the merge plans as a HashAggregate,
+    * where a struct payload forces two sorts and a SortAggregate.
+    * Public because the engine's MEMORY hot level unions into the same
+    * resolution (SURVEY.md §2.1 O16, §3.1 strategies). */
   def mergeFreshest(df: DataFrame): DataFrame =
     df.groupBy("id", "time")
-      .agg(max_by(struct(col("value"), col("flag"), col("seq")), col("seq")).as("m"))
-      .select(col("id"), col("time"), col("m.value").as("value"),
-        col("m.flag").as("flag"), col("m.seq").as("seq"))
+      .agg(max_by(col("value"), col("seq")).as("value"), max_by(col("flag"), col("seq")).as("flag"),
+        max(col("seq")).as("seq"))
 
   /** fsck probe over a parquet artifact dir (data store, index, log):
     * distributed full-decompression check of every file under `path`;

@@ -486,6 +486,159 @@ class EngineSpec extends SparkSpec {
       === Seq(1L, 2L, 999L), "flagged (scan) path")
   }
 
+  /** Rows with every double as its string, so NaN equals NaN and -0.0
+    * differs from 0.0. */
+  private def exact(rs: Seq[Seq[Any]]): Seq[Seq[Any]] =
+    rs.map(_.map { case d: Double => java.lang.Double.toString(d); case v => v })
+
+  /** The current values of `ids` (all series when empty), served from
+    * the latest-value map: the call that (re)builds the map reads
+    * `_stats` and never `data`, a repeated call runs no query execution,
+    * and the answer equals the scan path's and the merged view's. */
+  private def mapServed(engine: GraftEngine, ids: Seq[Long]): Seq[Seq[Any]] = {
+    val (_, build) = FacadeProbe.executions(spark)(engine.currentValue(ids, 0L))
+    assert(build.forall(qe => FacadeProbe.reads(qe, "_stats") && !FacadeProbe.reads(qe, "data")),
+      s"currentValue($ids) reads the index only")
+    val (df, qes) = FacadeProbe.executions(spark)(engine.currentValue(ids, 0L))
+    assert(qes.isEmpty, s"a repeated currentValue($ids) ran ${qes.size} queries")
+    val served = rows(df)
+    val q = QueryTimePoint(ids, 0L, Meas.TIME_MAX)
+    assert(exact(served) === exact(asOfReference(engine, q)), s"map vs merged view for $ids")
+    assert(exact(served) === exact(rows(engine.readTimePointScan(q))), s"map vs scan path for $ids")
+    served
+  }
+
+  test("latest-value map ≡ scan ≡ merged view: in and out of order, rewrites, compact, retention, NaN, -0.0") {
+    val engine = new GraftEngine(spark, tmpDir("graft-latest-map"), buckets = 2)
+    val ids = Seq(1L, 2L, 3L, 4L, 5L, 999L, 2L)
+    engine.append(Seq(
+      Meas(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK, 1),
+      Meas(1L, ts("2024-03-02 10:00:00"), 2.0, Flags.ERROR, 2),
+      Meas(2L, ts("2024-03-01 12:00:00"), 3.0, Flags.CLICK, 3),
+      Meas(3L, ts("2024-03-02 08:00:00"), 4.0, Flags.SIGNUP, 4),
+      Meas(3L, ts("2024-03-02 08:00:00"), 4.5, Flags.CLICK, 5), // fresher seq at 3's max_time, same batch
+      Meas(4L, ts("2024-03-01 09:00:00"), 5.0, 1L, 6),
+      Meas(4L, ts("2024-03-02 09:00:00"), Double.NaN, 1L, 7),
+      Meas(5L, ts("2024-03-02 11:00:00"), -0.0, 2L, 8)))
+    val first = mapServed(engine, ids)
+    assert(first.map(_.head) === Seq(1L, 2L, 3L, 4L, 5L, 999L), "one row per distinct id, sorted")
+    assert(exact(first).map(r => r.head -> r(2)).toMap ===
+      Map(1L -> "2.0", 2L -> "3.0", 3L -> "4.5", 4L -> "NaN", 5L -> "-0.0", 999L -> null))
+    assert(first.last(3) === Meas.NO_DATA)
+    assert(mapServed(engine, Nil).map(_.head) === Seq(1L, 2L, 3L, 4L, 5L), "catalog-wide: every indexed series")
+    // any timepoint at or after every latest time is the same answer, with no query
+    val (later, qes) = FacadeProbe.executions(spark)(
+      engine.readTimePoint(QueryTimePoint(ids, 0L, ts("2024-03-05 00:00:00"))))
+    assert(qes.isEmpty && exact(rows(later)) === exact(first))
+
+    // in order: a new latest day for 1; out of order: an older row for 2
+    engine.append(Seq(
+      Meas(1L, ts("2024-03-03 10:00:00"), 6.0, Flags.CLICK, 9),
+      Meas(2L, ts("2024-03-01 06:00:00"), 7.0, Flags.ERROR, 10)))
+    val appended = mapServed(engine, ids)
+    assert(appended.find(_.head == 1L).get(2) === 6.0 && appended.find(_.head == 2L).get(2) === 3.0)
+    // stored days re-read: a later row inside 2's day, a fresher seq at 3's max_time
+    engine.append(Seq(
+      Meas(2L, ts("2024-03-01 13:00:00"), 8.0, Flags.CLICK, 11),
+      Meas(3L, ts("2024-03-02 08:00:00"), 40.0, Flags.ERROR, 12)))
+    val rewritten = mapServed(engine, ids)
+    assert(rewritten.find(_.head == 2L).get.slice(2, 4) === Seq(8.0, Flags.CLICK))
+    assert(rewritten.find(_.head == 3L).get.slice(2, 4) === Seq(40.0, Flags.ERROR))
+    engine.compact()
+    assert(exact(mapServed(engine, ids)) === exact(rewritten))
+    mapServed(engine, Nil)
+    // per-id retention erases series 5: NO_DATA, and it leaves the catalog-wide answer
+    engine.eraseOld(ts("2024-03-04 00:00:00"), Seq(5L))
+    assert(mapServed(engine, ids).find(_.head == 5L).get(3) === Meas.NO_DATA)
+    assert(!mapServed(engine, Nil).exists(_.head == 5L))
+    // whole-store retention drops day 1, which held all of series 2
+    engine.eraseOld(ts("2024-03-02 00:00:00"))
+    assert(mapServed(engine, ids).find(_.head == 2L).get(3) === Meas.NO_DATA)
+    assert(mapServed(engine, Nil).map(_.head) === Seq(1L, 3L, 4L))
+  }
+
+  test("an append from a second engine instance between two currentValue calls is seen by the second") {
+    val dir = tmpDir("graft-latest-two")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    engine.append(Seq(Meas(1L, ts("2024-03-01 10:00:00"), 1.0, 1L, 1)))
+    assert(mapServed(engine, Seq(1L)).head(2) === 1.0)
+    new GraftEngine(spark, dir, buckets = 2).append(Seq(Meas(1L, ts("2024-03-01 11:00:00"), 2.0, 1L, 2)))
+    assert(mapServed(engine, Seq(1L)).head(2) === 2.0)
+  }
+
+  test("flag ≠ 0, unflushed hot rows and a timepoint before a latest time are not served from the map") {
+    val dir = tmpDir("graft-latest-bypass")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    engine.append(Seq(
+      Meas(1L, ts("2024-03-01 10:00:00"), 1.0, Flags.CLICK, 1),
+      Meas(1L, ts("2024-03-02 10:00:00"), 2.0, Flags.ERROR, 2),
+      Meas(2L, ts("2024-03-02 08:00:00"), 3.0, Flags.CLICK, 3)))
+    mapServed(engine, Seq(1L, 2L)) // the map is built and cached
+    def ran(eng: GraftEngine, q: QueryTimePoint): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+      val (got, qes) = FacadeProbe.executions(spark)(rows(eng.readTimePoint(q)))
+      assert(got === asOfReference(eng, q), s"$q")
+      assert(qes.exists(FacadeProbe.reads(_, "data")), s"$q ran its data query")
+      qes
+    }
+    // a timepoint before series 1's latest time: the resident-day lookup, then the data query
+    assert(ran(engine, QueryTimePoint(Seq(1L, 2L), 0L, ts("2024-03-02 09:00:00")))
+      .exists(FacadeProbe.reads(_, "_stats")), "the resident-day lookup ran")
+    // flag ≠ 0: the flagged as-of query, which has no index lookup
+    ran(engine, QueryTimePoint(Seq(1L, 2L), Flags.CLICK, Meas.TIME_MAX))
+    // unflushed MEMORY rows: the index covers only the durable level
+    val hot = new GraftEngine(spark, dir, buckets = 2, hotCapacity = 1000L)
+    hot.append(Seq(Meas(2L, ts("2024-03-02 12:00:00"), 30.0, Flags.CLICK, 4)))
+    ran(hot, QueryTimePoint(Seq(1L, 2L), 0L, Meas.TIME_MAX))
+    assert(rows(hot.currentValue(Seq(2L), 0L)).head(2) === 30.0)
+  }
+
+  test("an index certified before last values were indexed reads through the scan path until maintain()") {
+    val dir = tmpDir("graft-latest-legacy")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    engine.append(Seq(
+      Meas(1L, ts("2024-03-01 10:00:00"), 1.0, 1L, 1),
+      Meas(2L, ts("2024-03-02 10:00:00"), 2.0, 1L, 2)))
+    val expected = asOfReference(engine, QueryTimePoint(Seq(1L, 2L), 0L, Meas.TIME_MAX))
+    // the store as the earlier format left it: index rows without
+    // last_value / last_flag, certified by a bare token
+    val stats = new org.apache.hadoop.fs.Path(s"$dir/_stats")
+    val fs = stats.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new org.apache.hadoop.fs.Path(tmpDir("graft-legacy-stats"), "stats")
+    spark.read.parquet(stats.toString).drop("last_value", "last_flag")
+      .write.partitionBy("day").parquet(staged.toString)
+    fs.delete(stats, true)
+    fs.rename(staged, stats)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$stats/_SYNCED"),
+      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+    assert(!graft.sources.TsdbStorage.statsUsable(spark, stats.toString))
+
+    val (got, qes) = FacadeProbe.executions(spark)(rows(engine.currentValue(Seq(1L, 2L), 0L)))
+    assert(got === expected)
+    assert(qes.nonEmpty && !qes.exists(FacadeProbe.reads(_, "_stats")), "the scan path answered")
+    assert(engine.maintain().reindexed, "maintain() rebuilds the earlier-format index")
+    assert(mapServed(engine, Seq(1L, 2L)) === expected)
+  }
+
+  test("building readGrid's DataFrame runs no Spark job") {
+    val engine = new GraftEngine(spark, tmpDir("graft-grid-jobs"), buckets = 2)
+    val id = engine.addParam("grid.jobs.a")
+    engine.append(Seq(Meas(id, ts("2024-03-01 10:00:00"), 1.0, 1L, 1)))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val grid = try {
+      val df = engine.readGrid(ts("2024-03-01 09:00:00"), ts("2024-03-01 12:00:00"), 3600L, 7200L)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0, "building the grid query ran a Spark job")
+    assert(grid.count() === 4)
+  }
+
   test("index lookups survive concurrent appends: an untouched series reads its fixed answer") {
     val dir = tmpDir("graft-concurrent-lookup")
     val engine = new GraftEngine(spark, dir, buckets = 2)
@@ -497,7 +650,8 @@ class EngineSpec extends SparkSpec {
     val qp = QueryTimePoint(Seq(1L), 0L, ts("2024-03-03 12:00:00"))
     val interval = rows(engine.readIntervalScan(qi))
     val point = rows(engine.readTimePointScan(qp))
-    assert(interval.size === 3 && point.head(2) === 2.0)
+    val current = rows(engine.readTimePointScan(QueryTimePoint(Seq(1L), 0L, Meas.TIME_MAX)))
+    assert(interval.size === 3 && point.head(2) === 2.0 && current === point)
 
     // appends of B to A's existing days refresh (delete + rewrite) the
     // index partitions A's lookups read; the appender is a second engine
@@ -513,10 +667,12 @@ class EngineSpec extends SparkSpec {
       try {
         if (rows(engine.readInterval(qi)) != interval) wrong += s"readInterval #$n"
         if (rows(engine.readTimePoint(qp)) != point) wrong += s"readTimePoint #$n"
+        if (rows(engine.currentValue(Seq(1L), 0L)) != current) wrong += s"currentValue #$n"
       } catch { case e: Exception => wrong += s"read #$n threw ${e.getClass.getSimpleName}: ${e.getMessage}" }
     } finally writer.join()
     assert(wrong.isEmpty, wrong.mkString("\n"))
     assert(rows(engine.readInterval(qi)) === interval && rows(engine.readTimePoint(qp)) === point)
+    assert(rows(engine.currentValue(Seq(1L), 0L)) === current)
   }
 
   test("an index lookup that a whole append interleaves answers from the scan path, not a torn index") {
@@ -532,6 +688,11 @@ class EngineSpec extends SparkSpec {
     val qi = QueryInterval(Seq(1L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 23:00:00"))
     val qp = QueryTimePoint(Seq(1L), 0L, ts("2024-03-03 12:00:00"))
     val (interval, point) = (rows(engine.readIntervalScan(qi)), rows(engine.readTimePointScan(qp)))
+    // qp is at or after series 1's latest time (the latest-value map's
+    // rebuild is the lookup); qpOld falls on an older day (the
+    // resident-day lookup, once the map is built at the current token)
+    val qpOld = QueryTimePoint(Seq(1L), 0L, ts("2024-03-02 12:00:00"))
+    val pointOld = rows(engine.readTimePointScan(qpOld))
     // series 1's index rows all lie inside [from, to]: the lookup answers every day
     val (from, to) = (ts("2024-03-01 00:00:00"), ts("2024-03-03 12:00:00"))
     val stat = rows(engine.statScan(1L, from, to))
@@ -575,6 +736,10 @@ class EngineSpec extends SparkSpec {
       armed = true
       assert(rows(engine.readTimePoint(qp)) === point)
       assert(!armed, "the append ran inside the point lookup")
+      engine.currentValue(Seq(1L), 0L)
+      armed = true
+      assert(rows(engine.readTimePoint(qpOld)) === pointOld)
+      assert(!armed, "the append ran inside the resident-day lookup")
       armed = true
       assert(rows(engine.stat(1L, from, to)) === stat)
       assert(!armed, "the append ran inside the stat lookup")
@@ -607,6 +772,7 @@ class EngineSpec extends SparkSpec {
 
   test("index-served reads: the lookup runs no exchange, the data query exactly one shuffle") {
     import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
     val dir = tmpDir("graft-read-plans")
     val engine = new GraftEngine(spark, dir, buckets = 2)
@@ -620,12 +786,22 @@ class EngineSpec extends SparkSpec {
       qes.map(qe => FacadeProbe.nodes(qe.executedPlan))
     }
     def shuffles(plan: Seq[SparkPlan]) = plan.count(_.isInstanceOf[ShuffleExchangeLike])
+    // the freshness merge hash-aggregates: no sort-based aggregate
+    def hashMerged(name: String, plan: Seq[SparkPlan]): Unit =
+      assert(!plan.exists(_.isInstanceOf[SortAggregateExec]), s"$name:\n${plan.head.treeString}")
+    // currentValue: the latest-value map's rebuild is one pass over the
+    // index
+    val (_, rebuild) = FacadeProbe.executions(spark)(engine.currentValue(Seq(3L, 1L), 0L))
+    assert(rebuild.size === 1 && FacadeProbe.reads(rebuild.head, "_stats")
+      && !FacadeProbe.reads(rebuild.head, "data"), "the rebuild reads the index only")
+    // with the map built at the store's token, and the readTimePoint
+    // timepoint before series 1's latest time, the read is the lookup and
+    // the data query alone
     val reads: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "readInterval" -> (() => engine.readInterval(
         QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00")))),
       "readTimePoint" -> (() => engine.readTimePoint(
-        QueryTimePoint(Seq(1L, 2L, 9L), 0L, ts("2024-03-03 12:00:00")))),
-      "currentValue" -> (() => engine.currentValue(Seq(3L, 1L), 0L)))
+        QueryTimePoint(Seq(1L, 2L, 9L), 0L, ts("2024-03-03 12:00:00")))))
     for ((name, read) <- reads) {
       val qs = plans(read())
       assert(qs.size === 2, s"$name: one lookup, one data query")
@@ -633,7 +809,14 @@ class EngineSpec extends SparkSpec {
       assert(!lookup.exists(_.isInstanceOf[Exchange]), s"$name lookup:\n${lookup.head.treeString}")
       assert(shuffles(data) === 1, s"$name data:\n${data.head.treeString}")
       assert(!data.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name data:\n${data.head.treeString}")
+      if (name == "readInterval") hashMerged(name, data)
     }
+    // served from the cached map, currentValue runs no query at all
+    val (current, served) = FacadeProbe.executions(spark)(engine.currentValue(Seq(3L, 1L), 0L))
+    assert(served.isEmpty, "the cached map answers with no query")
+    assert(current.rdd.getNumPartitions === 1, "the map answer is one partition")
+    // statScan's query hash-aggregates its merge too
+    hashMerged("statScan", plans(engine.statScan(1L, ts("2024-03-01 00:00:00"), ts("2024-03-03 00:00:00"))).head)
 
     // the index-free interval forms run no lookup and the same query
     val q = QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00"))
@@ -641,6 +824,7 @@ class EngineSpec extends SparkSpec {
       val qs = plans(read)
       assert(qs.size === 1, s"$name: no lookup")
       assert(shuffles(qs.head) === 1, s"$name:\n${qs.head.head.treeString}")
+      hashMerged(name, qs.head)
       assert(!qs.head.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name:\n${qs.head.head.treeString}")
     }
     indexFree("catalog-wide", engine.readInterval(q.copy(ids = Nil)))

@@ -147,6 +147,37 @@ class NetworkSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("one flush per message: a 1,000-line APPEND, a 2,500-row grid and a 10-id currentValue round-trip") {
+    val engine = new GraftEngine(spark, tmpDir("graft-net-flush"), buckets = 2)
+    val ids = engine.addParams((0 until 25).map(i => s"net.flush.$i")).values.toSeq.sorted
+    val server = new GraftServer(engine).start()
+    try {
+      val client = new GraftClient("127.0.0.1", server.boundPort)
+      val from = ts("2024-03-01 00:00:00")
+      val batch = (0 until 1000).map(i =>
+        Meas(ids(i % 25), new Timestamp(from.getTime + (i / 25) * 600000L), i * 0.5, 1L, i.toLong))
+      assert(client.append(batch) === 1000)
+      val q = QueryInterval(ids, 0L, from, ts("2024-03-02 00:00:00"))
+      assert(client.readInterval(q) === batch.sortBy(m => (m.id, m.time.getTime)))
+
+      // 25 catalog series × 100 grid points
+      val to = new Timestamp(from.getTime + 99 * 60000L)
+      val wireGrid = client.readGrid(from, to, 60L, 600L)
+      val localGrid = engine.readGrid(from, to, 60L, 600L).collect().map(r =>
+        (r.getLong(0), r.getTimestamp(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)),
+          if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSeq
+      assert(wireGrid.size === 2500 && wireGrid === localGrid)
+
+      val cur = client.currentValue(ids.take(10), 0L)
+      val curLocal = engine.currentValue(ids.take(10), 0L).collect().map(r =>
+        (r.getLong(0), Some(r.getTimestamp(1)), Some(r.getDouble(2)), r.getLong(3))).toSeq
+      assert(cur.size === 10 && cur === curLocal)
+      assert(cur.map(_._3.get) === ids.take(10).map(id => batch.filter(_.id == id).last.value))
+      client.close()
+    } finally server.stop()
+  }
+
   test("engine-API appends reach socket subscribers (observer fires for every append path)") {
     val engine = new GraftEngine(spark, tmpDir("graft-net-obs"), buckets = 4)
     val server = new GraftServer(engine).start()
