@@ -1382,15 +1382,12 @@ object DedupQueries {
   // are mostly cross-label). No LSH family can bucket tail pairs with
   // recall 1 while pruning: SRP 4×4-bit bands measured 8/14 recall at
   // sf0.01 with 23 % of all pairs as candidates. So the exact query
-  // keeps O(N²) compute but fixes the SHAPE: replicate one side across
-  // N_BLOCKS block keys and equi-join on the other side's block id —
-  // every (row, block) pair lands in exactly one task, the shuffle is
-  // even, no single-task BroadcastNestedLoopJoin. The sub-quadratic
-  // 100 TB path is `dedup_embed_lsh` below (and the MinHash/SimHash
-  // variants at realistic near-dup thresholds).
+  // keeps O(N²) compute but fixes the SHAPE with the family's block
+  // join (PairJoin.blockPairs). The sub-quadratic 100 TB path is
+  // `dedup_embed_lsh` below (and the MinHash/SimHash variants at
+  // realistic near-dup thresholds).
   // -------------------------------------------------------------------
   private[graft] val COSINE_MIN = 0.45
-  private val N_BLOCKS = 16
 
   // ------------------------------------------------------------------
   // Corpus-size gate on the exact all-pairs tiers (the O9 hot-series
@@ -1423,25 +1420,12 @@ object DedupQueries {
   private def exactTier(n: Long): Boolean = n <= EXACT_TIER_MAX_ROWS
 
   /** The exact block-partitioned all-pairs plan (the ≤ gate tier). */
-  private def embedCosineExact(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    val e = s.read.parquet(s"$d/embeddings.parquet")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("norm", sqrt(call_function("graft_dot", col("v"), col("v"))))
-    val left = e
-      .select(col("vec_id").as("vec_a"), col("v").as("va"), col("norm").as("na"),
-        explode(expr(s"sequence(0, ${N_BLOCKS - 1})")).as("blk"))
-      .repartition(col("blk"), col("vec_a"))
-    val right = e.select(pmod(col("vec_id"), lit(N_BLOCKS)).cast("int").as("blk"),
-      col("vec_id").as("vec_b"), col("v").as("vb"), col("norm").as("nb"))
-    left.join(right, Seq("blk"))
-      .filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos_sim",
-        round(call_function("graft_dot", col("va"), col("vb")) / (col("na") * col("nb")), 6))
+  private def embedCosineExact(s: SparkSession, d: String): DataFrame =
+    PairJoin.blockPairs(SimilarityQueries.emb(s, d), "vec_id")
+      .withColumn("cos_sim", PairJoin.cosine6)
       .filter(col("cos_sim") >= COSINE_MIN)
-      .select("vec_a", "vec_b", "cos_sim")
+      .select(col("vec_id_a").as("vec_a"), col("vec_id_b").as("vec_b"), col("cos_sim"))
       .orderBy("vec_a", "vec_b")
-  }
 
   val embedCosine: QueryDef = QueryDef(
     build = (s, d) => {
@@ -1488,16 +1472,15 @@ object DedupQueries {
   // collapsing to 22 at 0.99) — the threshold lives where the
   // distribution separates, not at the embed-family default.
   //
-  // 100 TB shape: identical to embedCosine — one-side block
-  // replication, equi-join on the block key, every pair in exactly one
-  // task; integer dots need no rounding step in the hot loop.
+  // 100 TB shape: identical to embedCosine — the family's block join
+  // (PairJoin.blockPairs); integer dots need no rounding step in the
+  // hot loop.
   // -------------------------------------------------------------------
-  private val DV_BLOCKS = 16
 
-  /** The (doc_id, vd, n2) double-view frame behind both docvec tiers —
-    * one definition so the session memo (QueryDef persist contract)
-    * and vecRanks' plan-canonicalization sharing keep working. */
-  private def docvecFrame(s: SparkSession, d: String): DataFrame =
+  /** The (doc_id, vd, n2) double-view frame behind both docvec tiers and
+    * hybrid_rrf's vector leg (RetrievalQueries.vecRanks) — one
+    * definition, one session memo (QueryDef persist contract). */
+  private[extensions] def docvecFrame(s: SparkSession, d: String): DataFrame =
     TextQueries.hashEmbedVecs(s, d)
       .withColumn("vd", expr("transform(vec, x -> CAST(x AS DOUBLE))"))
       .withColumn("n2", expr("aggregate(vec, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
@@ -1555,18 +1538,11 @@ object DedupQueries {
     // the cast back to BIGINT loses nothing; an interpreted
     // zip_with/aggregate lambda here measured 58 s at sf0.1 vs ~2 s
     // native (higher-order lambdas never enter whole-stage codegen)
-    val e = docvecFrame(s, d)
-    val left = e
-      .select(col("doc_id").as("doc_a"), col("vd").as("va"), col("n2").as("na2"),
-        explode(expr(s"sequence(0, ${DV_BLOCKS - 1})")).as("blk"))
-      .repartition(col("blk"), col("doc_a"))
-    val right = e.select(pmod(col("doc_id"), lit(DV_BLOCKS)).cast("int").as("blk"),
-      col("doc_id").as("doc_b"), col("vd").as("vb"), col("n2").as("nb2"))
-    left.join(right, Seq("blk"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("dot", call_function("graft_dot", col("va"), col("vb")).cast("long"))
+    PairJoin.blockPairs(docvecFrame(s, d), "doc_id")
+      .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        call_function("graft_dot", col("vd_a"), col("vd_b")).cast("long").as("dot"),
+        col("n2_a").as("na2"), col("n2_b").as("nb2"))
       .filter(docvecPredicate)
-      .select("doc_a", "doc_b", "dot", "na2", "nb2")
       .orderBy("doc_a", "doc_b")
   }
 
@@ -1615,10 +1591,7 @@ object DedupQueries {
     * the requested scheme (a foreign scheme would change results). */
   private[graft] def embedCosineLshBuild(s: SparkSession, d: String,
       planes: Int = LSH_PLANES, bandBits: Int = LSH_BAND_BITS): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    val e = s.read.parquet(s"$d/embeddings.parquet")
-      .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-      .withColumn("norm", sqrt(call_function("graft_dot", col("v"), col("v"))))
+    val e = SimilarityQueries.emb(s, d)
       .persist() // persists here: session-scoped memos (QueryDef cache contract)
     // Candidate generation runs on SLIM (id, band, bucket) rows — the
     // 64-double vectors never enter the self-join shuffle or the

@@ -52,8 +52,7 @@ object PqQueries {
   private val N_QUERIES = 10         // query set: vec_id < 10
   private val RERANK_R = 50          // ADC shortlist size for exact rerank
 
-  private def emb(s: SparkSession, d: String): DataFrame =
-    SimilarityQueries.prep(s, s.read.parquet(s"$d/embeddings.parquet"))
+  import SimilarityQueries.emb
 
   /** (vec_id, sub, sv) — the L2-normalized subvector view. Normalizing
     * FIRST makes the ADC sum approximate the cosine directly (the
@@ -660,20 +659,9 @@ object PqQueries {
   val ivfPq: QueryDef = QueryDef(
     build = (s, d) => {
       val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
-      val raw = s.read.parquet(s"$d/embeddings.parquet").drop("label")
       val (cb, codeRows0) = resolvePq(s, d, e)
-      // coarse quantizer: certified kmeans index when its quantizer is
-      // the default oracle-reproducible one, memoized recompute otherwise
-      // (the sim_ivf_kmeans resolve rule)
-      val (cent, assigned) = AnnIndex.resolveFor(s, e)
-        .filter(SimilarityQueries.defaultKmeans(s, _)) match {
-        case Some(dir) =>
-          (AnnIndex.readCentroids(s, dir),
-            AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
-        case None =>
-          val c = SimilarityQueries.kmeansCentroids(s, raw)
-          (c, SimilarityQueries.assignCells(e, c))
-      }
+      // coarse quantizer: the sim_ivf_kmeans cells
+      val (cent, assigned) = SimilarityQueries.kmeansCells(s, d, e)
       // probes via the graft_topk heap (the sim_pq rationale; heap tie
       // order = the window's ORDER BY)
       val probes = SimilarityQueries.cellSims(e.filter(col("vec_id") < N_QUERIES), cent)
@@ -747,17 +735,9 @@ object PqQueries {
     build = (s, d) => {
       val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
       val raw = s.read.parquet(s"$d/embeddings.parquet").drop("label")
-      // coarse quantizer: the sim_ivfpq resolve rule
-      val dirOpt = AnnIndex.resolveFor(s, e)
-        .filter(SimilarityQueries.defaultKmeans(s, _))
-      val (cent, assigned) = dirOpt match {
-        case Some(dir) =>
-          (AnnIndex.readCentroids(s, dir),
-            AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
-        case None =>
-          val c = SimilarityQueries.kmeansCentroids(s, raw)
-          (c, SimilarityQueries.assignCells(e, c))
-      }
+      // coarse quantizer: the sim_ivf_kmeans cells
+      val dirOpt = SimilarityQueries.kmeansIndex(s, e)
+      val (cent, assigned) = SimilarityQueries.kmeansCells(s, d, e, dirOpt)
       // residual component SERVED from the index when it persists one
       // (meta pq_res_m matches): books read frozen, codes come back by
       // unpacking the stored pqr bytes — no vector I/O, no per-session

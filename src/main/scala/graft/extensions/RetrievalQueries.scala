@@ -236,16 +236,9 @@ object RetrievalQueries {
     * rank from bit-identical cosines. */
   private def vecRanks(s: SparkSession, d: String, pool: Int): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    // VERBATIM dedup_docvec derivation (vd, then n2, then the narrow
-    // select): the canonicalized plans match, so the persist below and
-    // dedup_docvec's resolve to ONE session memo — and within this query
-    // the query/corpus legs share one embedding pass instead of two
-    val e = TextQueries.hashEmbedVecs(s, d)
-      .withColumn("vd", expr("transform(vec, x -> CAST(x AS DOUBLE))"))
-      .withColumn("n2", expr("aggregate(vec, CAST(0 AS BIGINT), (a, x) -> a + x * x)"))
-      .select("doc_id", "vd", "n2")
-      .persist() // session-scoped memo (QueryDef cache contract)
-    val c = e.filter(col("n2") > 0)
+    // dedup_docvec's persisted frame: one session memo, and the
+    // query/corpus legs share one embedding pass
+    val c = DedupQueries.docvecFrame(s, d).filter(col("n2") > 0)
     val q = c.filter(col("doc_id") < QUERY_DOCS)
       .select(col("doc_id").as("query_id"), col("vd").as("qv"), col("n2").as("qn2"))
     // graft_topk heap instead of the row_number window (the bm25Ranks

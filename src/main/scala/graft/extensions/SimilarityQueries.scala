@@ -28,9 +28,8 @@ object SimilarityQueries {
   private[graft] val BAND_BITS = 4
   private[extensions] val KMEANS_K = 10
   private[extensions] val KMEANS_ITERS = 3
-  private val SEM_BLOCKS = 8 // within-cell pair-join block keys (dedup_semantic)
 
-  private def emb(s: SparkSession, d: String): DataFrame =
+  private[extensions] def emb(s: SparkSession, d: String): DataFrame =
     prep(s, s.read.parquet(s"$d/embeddings.parquet"))
 
   /** Whether a certified index froze the quantizer these ORACLE-GATED
@@ -39,9 +38,43 @@ object SimilarityQueries {
     * legitimately buckets differently, so these queries fall back to the
     * always-correct recompute while the quantizer-free SRP paths keep
     * serving it; same for a legacy meta whose k is unknown (-1). */
-  private[extensions] def defaultKmeans(s: SparkSession, dir: String): Boolean = {
+  private def defaultKmeans(s: SparkSession, dir: String): Boolean = {
     val m = AnnIndex.readMeta(s, dir)
     m.quantizer == "kmeans" && m.kCells == KMEANS_K
+  }
+
+  /** The certified index that may serve the k-means cells of the prepped
+    * corpus `e`: fingerprint-matched and [[defaultKmeans]]. */
+  private[extensions] def kmeansIndex(s: SparkSession, e: DataFrame): Option[String] =
+    AnnIndex.resolveFor(s, e).filter(defaultKmeans(s, _))
+
+  /** The k-means cells of the prepped corpus `e` of dataset `d`:
+    * (centroids (clabel, cv, cnorm), assigned (vec_id, cell)). Served
+    * from `index` when it froze the quantizer, else the memoized
+    * deterministic [[kmeansCentroids]] + [[assignCells]] — the recompute
+    * is what the oracles unroll, so index-served ≡ recomputed
+    * (AnnIndexSpec pins it). sim_ivf and sim_recall's IVF leg serve
+    * LABEL cells and keep their own rule. */
+  private[extensions] def kmeansCells(s: SparkSession, d: String, e: DataFrame,
+      index: Option[String]): (DataFrame, DataFrame) = index match {
+    case Some(dir) =>
+      (AnnIndex.readCentroids(s, dir), AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
+    case None =>
+      val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
+      (c, assignCells(e, c))
+  }
+
+  private[extensions] def kmeansCells(s: SparkSession, d: String, e: DataFrame): (DataFrame, DataFrame) =
+    kmeansCells(s, d, e, kmeansIndex(s, e))
+
+  /** (vec_id, cell, v, norm): the corpus with its k-means cell. Persisted
+    * — one session memo for dedup_semantic, sem_recall(_sampled) and the
+    * knn_graph family, whose pair joins read it on both sides; without
+    * it each reader re-derives the corpus × k assignment pass. */
+  private def cellVecs(s: SparkSession, d: String): DataFrame = {
+    val e = emb(s, d)
+    val (_, assigned) = kmeansCells(s, d, e)
+    assigned.join(e, "vec_id").persist() // session-scoped memo (QueryDef cache contract)
   }
 
   /** Normalize a raw embeddings frame (vec_id, embedding, ...) into the
@@ -745,15 +778,7 @@ object SimilarityQueries {
       // label cells here would silently answer a different query; the
       // recompute derivation is deterministic, so index-served ≡
       // recomputed (AnnIndexSpec pins it)
-      val (cent, assigned) = AnnIndex.resolveFor(s, e)
-        .filter(defaultKmeans(s, _)) match {
-        case Some(dir) =>
-          (AnnIndex.readCentroids(s, dir),
-            AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
-        case None =>
-          val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-          (c, assignCells(e, c))
-      }
+      val (cent, assigned) = kmeansCells(s, d, e)
       ivfTopk(e, cent, assigned)
     },
     oracle = Some(
@@ -1002,11 +1027,8 @@ object SimilarityQueries {
   // a different question), the memoized deterministic k-means
   // otherwise, so the oracle reproduces the bucketing bit-for-bit and
   // the gate checks the whole pipeline: quantizer → cells → in-cell
-  // scoring → verdicts. Within a cell the pairwise join reuses
-  // dedup_embed's block-key shape (left side replicated across
-  // SEM_BLOCKS, right side keyed by pmod(id)): every pair lands in
-  // exactly one (cell, blk) task, so one hot cell cannot serialize
-  // into a single straggler task.
+  // scoring → verdicts. The in-cell pairs come from the family's
+  // block join (PairJoin.blockPairs keyed by cell).
   //
   // Honest approximation note (the SemDeDup trade, MEASURED): pairs
   // that STRADDLE a cell boundary are not scored — the price that makes
@@ -1024,33 +1046,12 @@ object SimilarityQueries {
   // -------------------------------------------------------------------
   val semanticDedup: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d)
-      val (_, assigned) = AnnIndex.resolveFor(s, e)
-        .filter(defaultKmeans(s, _)) match {
-        case Some(dir) =>
-          (AnnIndex.readCentroids(s, dir),
-            AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
-        case None =>
-          val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-          (c, assignCells(e, c))
-      }
-      // (vec_id, cell, v, norm); persisted: the frame feeds BOTH pair-join
-      // sides and the verdict spine — without the memo the plan re-derives
-      // the cell assignment (a corpus × k scoring pass) three times
-      val av = assigned.join(e, "vec_id")
-        .persist() // session-scoped memo (QueryDef cache contract)
-      val left = av.select(col("cell"), col("vec_id"), col("v"), col("norm"),
-        explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
-      val right = av.select(col("cell"),
-        pmod(col("vec_id"), lit(SEM_BLOCKS)).cast("int").as("blk"),
-        col("vec_id").as("o_id"), col("v").as("ov"), col("norm").as("onorm"))
-      val dup = left.join(right, Seq("cell", "blk"))
-        .filter(col("o_id") < col("vec_id"))
-        .withColumn("cs", round(
-          call_function("graft_dot", col("v"), col("ov")) / (col("norm") * col("onorm")), 6))
-        .filter(col("cs") >= DedupQueries.COSINE_MIN)
-        .groupBy("vec_id")
-        .agg(min("o_id").as("dup_of"), count(lit(1)).as("n_dups"))
+      // the cell frame feeds both pair-join sides and the verdict spine
+      val av = cellVecs(s, d)
+      val dup = PairJoin.blockPairs(av, "vec_id", within = Some("cell"))
+        .filter(PairJoin.cosine6 >= DedupQueries.COSINE_MIN)
+        .groupBy(col("vec_id_b").as("vec_id"))
+        .agg(min("vec_id_a").as("dup_of"), count(lit(1)).as("n_dups"))
       av.select(col("vec_id"), col("cell"))
         .join(dup, Seq("vec_id"), "left")
         .select(col("vec_id"), col("cell"),
@@ -1107,15 +1108,7 @@ object SimilarityQueries {
   val cellStats: QueryDef = QueryDef(
     build = (s, d) => {
       val e = emb(s, d)
-      val (cent, assigned) = AnnIndex.resolveFor(s, e)
-        .filter(defaultKmeans(s, _)) match {
-        case Some(dir) =>
-          (AnnIndex.readCentroids(s, dir),
-            AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
-        case None =>
-          val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-          (c, assignCells(e, c))
-      }
+      val (cent, assigned) = kmeansCells(s, d, e)
       assigned.join(e, "vec_id")
         .join(broadcast(cent.select(col("clabel").as("cell"), col("cv"), col("cnorm"))), "cell")
         .withColumn("csim", round(
@@ -1161,15 +1154,7 @@ object SimilarityQueries {
   val cellOutliers: QueryDef = QueryDef(
     build = (s, d) => {
       val e = emb(s, d)
-      val (cent, assigned) = AnnIndex.resolveFor(s, e)
-        .filter(defaultKmeans(s, _)) match {
-        case Some(dir) =>
-          (AnnIndex.readCentroids(s, dir),
-            AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell")))
-        case None =>
-          val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-          (c, assignCells(e, c))
-      }
+      val (cent, assigned) = kmeansCells(s, d, e)
       val w = Window.partitionBy("cell").orderBy(col("csim").asc, col("vec_id"))
       assigned.join(e, "vec_id")
         .join(broadcast(cent.select(col("clabel").as("cell"), col("cv"), col("cnorm"))), "cell")
@@ -1210,8 +1195,8 @@ object SimilarityQueries {
   // honest-approximation note. SemDeDup scores pairs only WITHIN a
   // quantizer cell; pairs whose ends land in different cells are never
   // scored. This query takes dedup_embed's EXACT ≥-threshold pair list
-  // (same block-partitioned equi-join shape, same 6dp-rounded cosine,
-  // same threshold) and buckets every pair by similarity decile and by
+  // (the same PairJoin.blockPairs join, 6dp-rounded cosine and
+  // threshold) and buckets every pair by similarity decile and by
   // whether its ends share a cell — so "the straddle miss is tail-only"
   // is a queryable number per band, not a comment: the top bands (the
   // pairs semantic dedup exists to drop) should be overwhelmingly
@@ -1226,27 +1211,8 @@ object SimilarityQueries {
   // -------------------------------------------------------------------
   val semStraddle: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d)
-      val assigned = AnnIndex.resolveFor(s, e)
-        .filter(defaultKmeans(s, _)) match {
-        case Some(dir) => AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell"))
-        case None =>
-          val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-          assignCells(e, c)
-      }
-      val av = assigned.join(e, "vec_id")
-        .persist() // session-scoped memo (QueryDef cache contract)
-      val left = av.select(col("vec_id").as("vec_a"), col("cell").as("cell_a"),
-        col("v").as("va"), col("norm").as("na"),
-        explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
-        .repartition(col("blk"), col("vec_a"))
-      val right = av.select(pmod(col("vec_id"), lit(SEM_BLOCKS)).cast("int").as("blk"),
-        col("vec_id").as("vec_b"), col("cell").as("cell_b"),
-        col("v").as("vb"), col("norm").as("nb"))
-      left.join(right, Seq("blk"))
-        .filter(col("vec_a") < col("vec_b"))
-        .withColumn("cs", round(
-          call_function("graft_dot", col("va"), col("vb")) / (col("na") * col("nb")), 6))
+      PairJoin.blockPairs(cellVecs(s, d), "vec_id")
+        .withColumn("cs", PairJoin.cosine6)
         .filter(col("cs") >= DedupQueries.COSINE_MIN)
         .withColumn("band", expr("CAST(floor(cs * 1000000 + 0.5D) AS BIGINT) div 100000"))
         .withColumn("within", (col("cell_a") === col("cell_b")).cast("long"))
@@ -1292,9 +1258,8 @@ object SimilarityQueries {
   // cluster analysis, and kNN-classification over a corpus. The full
   // O(N²) all-pairs graph is unbuildable at 100 TB; the IVF-cell bound
   // (same Σ|cell|² argument as dedup_semantic, same certified-index
-  // resolve rule, same block-key join so a hot cell spreads over
-  // SEM_BLOCKS tasks) makes it linear-ish in the corpus with k as the
-  // knob. Directed edges: the pair join keeps self out and emits (a→b)
+  // resolve rule, same PairJoin.blockPairs join keyed by cell) makes it
+  // linear-ish in the corpus with k as the knob. Directed edges: the pair join keeps self out and emits (a→b)
   // and (b→a) separately — each vector ranks its OWN neighborhood.
   // Boundary caveat: a true neighbor in an adjacent cell is unseen (the
   // same trade sem_recall measures for dedup_semantic).
@@ -1305,31 +1270,16 @@ object SimilarityQueries {
   // -------------------------------------------------------------------
   private val KNN_K = 3
 
-  /** The in-cell scored pair frame both knn_graph forms rank: every
-    * (vec, other-in-same-cell) pair with the 6dp-rounded cosine. The
-    * same block-key join as dedup_semantic spreads hot cells over
-    * SEM_BLOCKS tasks. */
-  private def knnPairFrame(s: SparkSession, d: String): DataFrame = {
-    val e = emb(s, d)
-    val assigned = AnnIndex.resolveFor(s, e)
-      .filter(defaultKmeans(s, _)) match {
-      case Some(dir) => AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell"))
-      case None =>
-        val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-        assignCells(e, c)
-    }
-    // persisted: feeds both pair-join sides (QueryDef cache contract;
-    // the agg form's canonically-equal plan reuses this same entry)
-    val av = assigned.join(e, "vec_id").persist()
-    val left = av.select(col("cell"), col("vec_id"), col("v"), col("norm"),
-      explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
-    val right = av.select(col("cell"),
-      pmod(col("vec_id"), lit(SEM_BLOCKS)).cast("int").as("blk"),
-      col("vec_id").as("nbr_id"), col("v").as("ov"), col("norm").as("onorm"))
-    left.join(right, Seq("cell", "blk"))
-      .filter(col("nbr_id") =!= col("vec_id"))
-      .withColumn("cs", round(
-        call_function("graft_dot", col("v"), col("ov")) / (col("norm") * col("onorm")), 6))
+  /** Each vector's top-KNN_K neighbors over a directed
+    * [[PairJoin.blockPairs]] frame of the prep columns: (vec_id, top),
+    * the graft_topk heap on the 6dp cosine (score DESC, id ASC). Both
+    * the cell-bounded graph and knn_recall's all-pairs truth rank here. */
+  private def knnTop(pairs: DataFrame): DataFrame = {
+    graft.functions.VectorFunctions.register(pairs.sparkSession)
+    pairs.select(col("vec_id_a").as("vec_id"), col("vec_id_b").as("nbr_id"),
+        PairJoin.cosine6.as("cs"))
+      .groupBy("vec_id")
+      .agg(expr(s"graft_topk(cs, nbr_id, $KNN_K)").as("top"))
   }
 
   val knnGraph: QueryDef = QueryDef(
@@ -1338,10 +1288,7 @@ object SimilarityQueries {
       // introduced (same oracle hash-gates both, so the swap is proven
       // output-identical) — the row_number window form shuffled and
       // sorted every scored pair; the heap partial-aggregates map-side
-      graft.functions.VectorFunctions.register(s)
-      knnPairFrame(s, d)
-        .groupBy("vec_id")
-        .agg(expr(s"graft_topk(cs, nbr_id, $KNN_K)").as("top"))
+      knnTop(PairJoin.blockPairs(cellVecs(s, d), "vec_id", within = Some("cell"), directed = true))
         .select(col("vec_id"), posexplode(col("top")))
         .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
           col("col.id").as("nbr_id"),
@@ -1375,54 +1322,17 @@ object SimilarityQueries {
     doc = "X3 kNN graph: per-vector top-K in-cell cosine neighbors (IVF-cell-bounded neighbor-graph build)")
 
   // -------------------------------------------------------------------
-  // X3g' kNN graph, aggregate form — the SAME graph as knn_graph, built
-  // with the graft_topk bounded-heap aggregate instead of a row_number
-  // window. The window form shuffles and sorts EVERY scored pair; the
+  // X3g' kNN graph, aggregate form — the registry name of the graft_topk
+  // bounded-heap build, which knn_graph itself adopted (one build, one
+  // oracle). The window form shuffled and sorted EVERY scored pair; the
   // heap partial-aggregates map-side, so the exchange carries at most
   // tasks × vectors × K tiny heap states and nothing ever sorts more
   // than K elements (ObjectHashAggregateExec, real map-side combine).
-  // At this SF both are instant; at 10⁸ pairs per vector-cell the
-  // window's sort is the wall — the 100M-row smoke's truth leg runs
-  // this shape. Identical output is a CONTRACT, not an accident: the
-  // heap's total order (score DESC, id ASC) is the window's ORDER BY,
-  // so the same DuckDB row_number oracle hash-gates both.
+  // Identical output is a CONTRACT, not an accident: the heap's total
+  // order (score DESC, id ASC) is the window's ORDER BY, so the DuckDB
+  // row_number oracle hash-gates it.
   // -------------------------------------------------------------------
-  val knnGraphAgg: QueryDef = QueryDef(
-    build = (s, d) => {
-      graft.functions.VectorFunctions.register(s)
-      knnPairFrame(s, d)
-        .groupBy("vec_id")
-        .agg(expr(s"graft_topk(cs, nbr_id, $KNN_K)").as("top"))
-        .select(col("vec_id"), posexplode(col("top")))
-        .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.id").as("nbr_id"),
-          floor(col("col.score") * lit(1000000.0) + lit(0.5)).as("cs_micro"))
-        .orderBy("vec_id", "rank")
-    },
-    oracle = Some(
-      s"""${kmeansOracleCtes(KMEANS_K, KMEANS_ITERS)}, sims AS (
-         |  SELECT e.vec_id, c.clabel,
-         |         round(list_dot_product(e.v, c.cv) / (e.norm * c.cnorm), 6) AS csim
-         |  FROM e CROSS JOIN c$KMEANS_ITERS c
-         |), assigned AS (
-         |  SELECT vec_id, clabel AS cell FROM (
-         |    SELECT vec_id, clabel,
-         |           row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, clabel) AS rk
-         |    FROM sims) WHERE rk = 1
-         |), av AS (
-         |  SELECT a.vec_id, a.cell, e.v, e.norm FROM assigned a JOIN e USING (vec_id)
-         |), pr AS (
-         |  SELECT l.vec_id, r.vec_id AS nbr_id,
-         |         round(list_dot_product(l.v, r.v) / (l.norm * r.norm), 6) AS cs
-         |  FROM av l JOIN av r ON l.cell = r.cell AND r.vec_id <> l.vec_id
-         |), rk AS (
-         |  SELECT vec_id, nbr_id, cs,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, nbr_id) AS rank
-         |  FROM pr
-         |)
-         |SELECT vec_id, rank::BIGINT AS rank, nbr_id,
-         |       CAST(floor(cs * 1000000.0 + 0.5) AS BIGINT) AS cs_micro
-         |FROM rk WHERE rank <= $KNN_K ORDER BY vec_id, rank""".stripMargin),
+  val knnGraphAgg: QueryDef = knnGraph.copy(
     doc = "X3 kNN graph via graft_topk bounded-heap aggregate: window-free top-K per vector, map-side partial agg (the 10⁸-row shape), same oracle as knn_graph")
 
   // -------------------------------------------------------------------
@@ -1671,28 +1581,18 @@ object SimilarityQueries {
   // always found (the in-cell candidate set is a subset of the global
   // one, so its in-cell rank can only improve), hence every miss IS a
   // boundary straddle — the number this query emits is exactly the
-  // SemDeDup trade measured for the graph. Truth is the all-pairs
-  // block-key join (dedup_embed's exact shape — every pair in one
-  // (blk, row) task) with a per-vector top-K window; the graph leg is
-  // the production knn_graph build itself.
+  // SemDeDup trade measured for the graph. Truth is the directed
+  // all-pairs PairJoin.blockPairs join ranked by the same top-K heap;
+  // the graph leg is the production knn_graph build itself.
   // -------------------------------------------------------------------
   val knnRecall: QueryDef = QueryDef(
     build = (s, d) => {
       val e = emb(s, d).persist() // session-scoped memo (QueryDef cache contract)
-      val left = e.select(col("vec_id"), col("v"), col("norm"),
-        explode(expr(s"sequence(0, ${SEM_BLOCKS - 1})")).as("blk"))
-      val right = e.select(pmod(col("vec_id"), lit(SEM_BLOCKS)).cast("int").as("blk"),
-        col("vec_id").as("nbr_id"), col("v").as("ov"), col("norm").as("onorm"))
       // truth top-K via the graft_topk heap (the sim_topk rationale);
       // persisted — BOTH consumers below (n_truth count + the hits
       // join) otherwise re-run the all-pairs block join, the single
       // most expensive leg of this audit
-      val truth = left.join(right, Seq("blk"))
-        .filter(col("nbr_id") =!= col("vec_id"))
-        .withColumn("cs", round(
-          call_function("graft_dot", col("v"), col("ov")) / (col("norm") * col("onorm")), 6))
-        .groupBy("vec_id")
-        .agg(expr(s"graft_topk(cs, nbr_id, $KNN_K)").as("top"))
+      val truth = knnTop(PairJoin.blockPairs(e, "vec_id", directed = true))
         .select(col("vec_id"), explode(col("top.id")).as("nbr_id"))
         .persist() // session-scoped memo (QueryDef cache contract)
       val graph = knnGraph.build(s, d).select("vec_id", "nbr_id")
@@ -1902,16 +1802,7 @@ object SimilarityQueries {
 
   val semStraddleSampled: QueryDef = QueryDef(
     build = (s, d) => {
-      val e = emb(s, d)
-      val assigned = AnnIndex.resolveFor(s, e)
-        .filter(defaultKmeans(s, _)) match {
-        case Some(dir) => AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell"))
-        case None =>
-          val c = kmeansCentroids(s, s.read.parquet(s"$d/embeddings.parquet").drop("label"))
-          assignCells(e, c)
-      }
-      val av = assigned.join(e, "vec_id")
-        .persist() // session-scoped memo (QueryDef cache contract)
+      val av = cellVecs(s, d)
       // DIRECTED anchor pairs: each sampled anchor a scores its whole
       // ≥-threshold neighborhood (sample × corpus, broadcast anchors) —
       // the sampled estimate of the straddle rate per similarity band

@@ -447,15 +447,7 @@ object TrainingQueries {
   // -------------------------------------------------------------------
   val topicMixture: QueryDef = QueryDef(
     build = (s, d) => {
-      val raw = s.read.parquet(s"$d/embeddings.parquet")
-      val e = SimilarityQueries.prep(s, raw)
-      val assigned = AnnIndex.resolveFor(s, e)
-        .filter(SimilarityQueries.defaultKmeans(s, _)) match {
-        case Some(dir) => AnnIndex.readCodes(s, dir).select(col("vec_id"), col("cell"))
-        case None =>
-          val c = SimilarityQueries.kmeansCentroids(s, raw.drop("label"))
-          SimilarityQueries.assignCells(e, c)
-      }
+      val (_, assigned) = SimilarityQueries.kmeansCells(s, d, SimilarityQueries.emb(s, d))
       val g = assigned.groupBy("cell").agg(count(lit(1)).as("n_vecs"))
         .withColumn("s_micro", expr(
           "CAST(floor(sqrt(CAST(n_vecs AS DOUBLE)) * 1000000 + 0.5D) AS BIGINT)"))

@@ -419,6 +419,11 @@ class AnnIndexSpec extends SparkSpec {
     val recomputedCs = collectAnn("ivf_cell_stats")
     val recomputedRec = collectAnn("sim_recall")
     val recomputedStr = collectAnn("sem_recall")
+    // one consumer per module of the shared kmeans-cell resolver
+    val recomputedKnn = collectAnn("knn_graph")
+    val recomputedPq = collectAnn("sim_ivfpq")
+    val recomputedPqRes = collectAnn("sim_ivfpq_res")
+    val recomputedTopic = collectAnn("topic_mixture")
     withIndex(dir) {
       assert(collectAnn("sim_ivf_kmeans") === recomputedKm,
         "kmeans-index-served ≡ recomputed")
@@ -431,6 +436,12 @@ class AnnIndexSpec extends SparkSpec {
           "must fall back (SRP leg may serve: codes are quantizer-free)")
       assert(collectAnn("sem_recall") === recomputedStr,
         "straddle audit cells from the index ≡ recomputed")
+      assert(collectAnn("knn_graph") === recomputedKnn, "kNN graph cells from the index ≡ recomputed")
+      assert(collectAnn("sim_ivfpq") === recomputedPq, "IVF-PQ coarse cells from the index ≡ recomputed")
+      assert(collectAnn("sim_ivfpq_res") === recomputedPqRes,
+        "IVFADC cells and residual books from the index ≡ recomputed")
+      assert(collectAnn("topic_mixture") === recomputedTopic,
+        "topic weights from index cells ≡ recomputed")
     }
     // a LABEL-built index must NOT serve the kmeans query paths
     val dirLabeled = tmpDir("graft-ann-labeled")
@@ -505,6 +516,7 @@ class AnnIndexSpec extends SparkSpec {
     // results), while the quantizer-free SRP path keeps serving
     val recomputedSem = collectAnn("dedup_semantic")
     val recomputedKm = collectAnn("sim_ivf_kmeans")
+    val recomputedTopic = collectAnn("topic_mixture")
     val dir = tmpDir("graft-ann-retuned")
     AnnIndex.build(spark, raw.drop("label"), dir, kCells = 20)
     assert(AnnIndex.readMeta(spark, dir).kCells === 20)
@@ -513,6 +525,8 @@ class AnnIndexSpec extends SparkSpec {
         "semantic dedup refuses the retuned k (a different bucketing)")
       assert(collectAnn("sim_ivf_kmeans") === recomputedKm,
         "sim_ivf_kmeans refuses the retuned k")
+      assert(collectAnn("topic_mixture") === recomputedTopic,
+        "topic_mixture refuses the retuned k")
       assert(SparkEntry.queries("sim_ann")(spark, sfDir).count() > 0,
         "the SRP path still serves the retuned index")
     }

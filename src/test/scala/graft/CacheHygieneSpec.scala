@@ -50,6 +50,34 @@ class CacheHygieneSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty, "clearCache releases every registry memo")
   }
 
+  test("memo groups: queries that share a persisted vector frame add no entry for it") {
+    // each group's queries persist the SAME frame through canonically
+    // equal plans (knn_graph/knn_graph_agg/knn_recall: the cell frame and
+    // the prepped corpus; dedup_semantic/sem_recall: the cell frame;
+    // dedup_docvec/hybrid_rrf: the docvec frame; dedup_embed_lsh/
+    // sim_ivfpq/knn_recall_sampled: the prepped corpus). A group run from
+    // an empty cache creates exactly the entries counted here (the same
+    // counts as when each query derived its frame inline); a derivation
+    // that drifts from its twin adds one
+    val groups = Seq(
+      Seq("knn_graph", "knn_graph_agg", "knn_recall"),
+      Seq("dedup_semantic", "sem_recall"),
+      Seq("dedup_docvec", "hybrid_rrf"),
+      Seq("dedup_embed_lsh", "sim_ivfpq", "knn_recall_sampled"))
+    val counts = groups.map { g =>
+      spark.sharedState.cacheManager.clearCache()
+      val baseline = ids
+      g.foreach(n => SparkEntry.queries(n)(spark, sfDir).collect())
+      g.mkString("+") -> (ids -- baseline).size
+    }
+    spark.sharedState.cacheManager.clearCache()
+    assert(counts.toMap === Map(
+      "knn_graph+knn_graph_agg+knn_recall" -> 3,
+      "dedup_semantic+sem_recall" -> 1,
+      "dedup_docvec+hybrid_rrf" -> 2,
+      "dedup_embed_lsh+sim_ivfpq+knn_recall_sampled" -> 4))
+  }
+
   test("registry persists follow spark.sql.defaultCacheStorageLevel") {
     // the cache level is Spark's built-in conf, read at persist() time —
     // no query pins its own level
