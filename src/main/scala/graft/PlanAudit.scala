@@ -135,7 +135,14 @@ object PlanAudit {
       val from = ts("2024-03-01 00:00:00"); val to = ts("2024-03-06 00:00:00")
       val facadePlans: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
         "facade:readInterval" -> (() => engine.readInterval(QueryInterval(Seq(1L, 2L), 0L, from, to))),
+        // a window of at most two days: no lookup, the same data query
+        "facade:readInterval.short" -> (() => engine.readInterval(
+          QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-02 23:00:00")))),
         "facade:readTimePoint" -> (() => engine.readTimePoint(QueryTimePoint(Seq.empty, 0L, to))),
+        // explicit ids before their latest times: the lookup, then the
+        // driver-combined answer
+        "facade:readTimePoint.ids" -> (() => engine.readTimePoint(
+          QueryTimePoint(Seq(1L, 2L, 9L), 0L, ts("2024-03-03 12:00:00")))),
         "facade:currentValue" -> (() => engine.currentValue(Seq(1L), 0L)),
         "facade:readGrid" -> (() => engine.readGrid(from, to, 3600L, 7200L)),
         "facade:stat" -> (() => engine.stat(1L, from, to)),

@@ -305,9 +305,9 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
 
   /** The unmerged rows of both levels. The durable store contributes
     * the day partitions an index lookup chose (`days`), else every day
-    * the time bounds admit — [[TsdbStorage.readRange]]'s partition
-    * predicate, so a one-day read of a 100-day store lists one
-    * directory. The hot level (bounded by hotCapacity, already in
+    * the time bounds admit ([[TsdbStorage.readRange]]); either way Spark
+    * lists only those day directories, so a one-day read of a 100-day
+    * store lists one directory. The hot level (bounded by hotCapacity, already in
     * memory) unions in whole: every caller filters `time` itself, and
     * the filter reaches both sides of the union. */
   private def levels(days: Option[Seq[java.sql.Date]],
@@ -360,22 +360,24 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   /** O2. An explicit id list with a certified index and no hot rows
     * reads only the ids' RESIDENT days inside the interval — a 300-day
     * read of a series that lived one week scans 7 partitions, not 300.
-    * Catalog-wide reads read every day the interval admits. */
+    * A window that admits at most two UTC days (every window of 24 h or
+    * less) reads them with no lookup: the lookup is a Spark job of its
+    * own and could drop one of the two days at most. Catalog-wide reads
+    * read every day the interval admits. */
   def readInterval(q: QueryInterval): DataFrame =
-    intervalQuery(q, if (q.ids.nonEmpty) indexLookup(residentDays(q)) else None)
+    intervalQuery(q, if (q.ids.nonEmpty && !GraftEngine.shortWindow(q)) indexLookup(residentDays(q)) else None)
 
   /** The interval query with no index answer. */
   def readIntervalScan(q: QueryInterval): DataFrame = intervalQuery(q, None)
 
   /** The per-(day, id) index rows of the ids whose [min_time, max_time]
-    * intersects the interval. The `day` bound is implied by the time
+    * intersects the interval. The day range is implied by the time
     * overlap (every index row's times fall inside its own day) and is
-    * what prunes the index's partitions: a 1-day read lists 2 index
-    * days, not all of them. */
+    * what limits the index read: a 3-day read lists 3 index days, not
+    * all of them. */
   private def overlapping(ids: Seq[Long], from: Timestamp, to: Timestamp): DataFrame =
-    TsdbStorage.readStats(spark, statsPath)
-      .filter(col("day").between(to_date(lit(from)), to_date(lit(to)))
-        && idPred(ids) && col("max_time") >= lit(from) && col("min_time") <= lit(to))
+    TsdbStorage.readStatsWithin(spark, statsPath, from, to)
+      .filter(idPred(ids) && col("max_time") >= lit(from) && col("min_time") <= lit(to))
 
   /** The ids' resident days inside the interval. The flag is NOT
     * consulted (the index doesn't know flags): the day set only needs
@@ -387,27 +389,33 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
   /** The interval query, with ONE exchange: the rows are
     * range-partitioned on (id, time), which both clusters the freshness
     * merge's keys and orders its output, so the merge and the final sort
-    * share it. The flag predicate stays above the merge — a fresher
-    * version whose flag fails must still hide the superseded one. */
-  private def intervalQuery(q: QueryInterval, days: Option[Seq[java.sql.Date]]): DataFrame =
+    * share it. An explicit id list targets one partition, for which
+    * Spark computes no range bounds and so runs no sampling job; the scan
+    * below the exchange stays parallel. Catalog-wide reads keep
+    * `spark.sql.shuffle.partitions`. The flag predicate stays above the
+    * merge — a fresher version whose flag fails must still hide the
+    * superseded one. */
+  private def intervalQuery(q: QueryInterval, days: Option[Seq[java.sql.Date]]): DataFrame = {
+    val rows = levels(days, Some(q.from), Some(q.to))
+      .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)))
     TsdbStorage.mergeFreshest(
-        levels(days, Some(q.from), Some(q.to))
-          .filter(idPred(q.ids) && col("time").between(lit(q.from), lit(q.to)))
-          .repartitionByRange(col("id"), col("time")))
+        if (q.ids.nonEmpty) rows.repartitionByRange(1, col("id"), col("time"))
+        else rows.repartitionByRange(col("id"), col("time")))
       .filter(flagPred(q.flag))
       .orderBy("id", "time")
+  }
 
   /** O3 cursor form: per-series iterator over the interval result —
     * the Id2Cursor analog [U: storage/cursors.h]. Streams through the
-    * driver; never materializes the full result. */
+    * driver one range partition at a time; an explicit-id answer is one
+    * partition. */
   def intervalReader(q: QueryInterval): Iterator[Meas] = {
     val it = readInterval(q).as[Meas].toLocalIterator()
     new Iterator[Meas] { def hasNext = it.hasNext; def next() = it.next() }
   }
 
   /** O7 foreach: push-based scan — the IReadCallback shape
-    * [U: interfaces/icallbacks.h]. Streams through the cursor; never
-    * materializes the result on the driver. */
+    * [U: interfaces/icallbacks.h]. Streams through the cursor. */
   def foreach(q: QueryInterval)(callback: Meas => Unit): Unit =
     intervalReader(q).foreach(callback)
 
@@ -450,13 +458,18 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
       latest = Some(built)
       val m = built._2
       val answer = (if (q.ids.isEmpty) m.keys.toSeq else q.ids.distinct).sorted
-        .map(id => m.getOrElse(id, Row(id, null, null, Meas.NO_DATA)))
+        .map(id => m.getOrElse(id, noData(id)))
       if (answer.exists(r => !r.isNullAt(1) && r.getTimestamp(1).after(q.timePoint))) None
-      // one partition: the server's toLocalIterator runs a job per partition
-      else Some(spark.createDataFrame(java.util.Arrays.asList(answer: _*), GraftEngine.AsOfSchema)
-        .coalesce(1))
+      else Some(localAnswer(answer))
     }
   }
+
+  private def noData(id: Long): Row = Row(id, null, null, Meas.NO_DATA)
+
+  /** An as-of answer built on the driver: a local relation, which
+    * collects with no Spark job. */
+  private def localAnswer(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), GraftEngine.AsOfSchema)
 
   /** One grouped pass over the stats index, no data file: per id the
     * row at its largest `max_time` (each (day, id) row's `max_time` lies
@@ -477,16 +490,32 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * (time, seq) at or before the timepoint IS the freshest version at
     * the latest time. A flag filter breaks that argument — a superseded
     * version can match a flag its fresher version does not, and must not
-    * answer — so only then the merge runs before the filter. */
+    * answer — so only then the merge runs before the filter. An explicit
+    * id list is its own universe and is answered by [[asOfOnDriver]];
+    * the catalog-wide request by the distributed [[asOf]]. */
   private def asOfQuery(q: QueryTimePoint,
                         index: Option[(Seq[Long], Seq[java.sql.Date])]): DataFrame = {
     val ids = q.ids.distinct
-    val universe = index.map(_._1.toDF("id")).getOrElse(
-      if (ids.nonEmpty) ids.toDF("id") else levels(None, None, None).select("id"))
     val rows = levels(index.map(_._2), None, Some(q.timePoint))
       .filter(col("time") <= lit(q.timePoint) && idPred(ids))
-    asOf(universe,
-      if (q.flag == 0L) rows else TsdbStorage.mergeFreshest(rows).filter(flagPred(q.flag)))
+    val candidates = if (q.flag == 0L) rows else TsdbStorage.mergeFreshest(rows).filter(flagPred(q.flag))
+    if (ids.nonEmpty) asOfOnDriver(ids, candidates)
+    else asOf(index.map(_._1.toDF("id")).getOrElse(levels(None, None, None).select("id")), candidates)
+  }
+
+  /** The explicit-id as-of answer, combined on the driver: each task
+    * keeps, per id, its candidate with the largest (time, seq) — the
+    * order of [[asOf]]'s `max_by` — and the driver keeps the largest of
+    * those at most tasks × |ids| partial rows, NO_DATA for an id with
+    * none. One Spark job, no exchange (at flag ≠ 0, the freshness
+    * merge's); the answer is a local relation sorted by id. */
+  private def asOfOnDriver(ids: Seq[Long], candidates: DataFrame): DataFrame = {
+    val cols = candidates.select("id", "time", "value", "flag", "seq")
+    val latest = cols.mapPartitions(GraftEngine.latestPerId)(org.apache.spark.sql.Encoders.row(cols.schema))
+      .collect()
+      .groupMapReduce(_.getLong(0))(identity)((a, b) => if (GraftEngine.later(b, a)) b else a)
+    localAnswer(ids.sorted.map(id => latest.get(id)
+      .fold(noData(id))(r => Row(id, r.get(1), r.get(2), r.get(3)))))
   }
 
   /** The as-of id universe, and per id the last day at-or-before the
@@ -504,7 +533,7 @@ class GraftEngine(val spark: SparkSession, val path: String, buckets: Int = 32,
     * Exactness: the index reflects the merged store (refreshed under the
     * _SYNCED marker at every mutation). */
   private def lastResidentDays(ids: Seq[Long], tp: Timestamp): (Seq[Long], Seq[java.sql.Date]) = {
-    val tpDay = java.sql.Date.valueOf(tp.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate)
+    val tpDay = java.sql.Date.valueOf(TsdbStorage.utcDay(tp))
     val resident = col("day") <= lit(tpDay) && (col("day") < lit(tpDay) || col("min_time") <= lit(tp))
     val stats = TsdbStorage.readStats(spark, statsPath)
     if (ids.nonEmpty)
@@ -1075,6 +1104,27 @@ object GraftEngine {
   /** The as-of answer's columns, for an answer built on the driver. */
   private val AsOfSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "id BIGINT, time TIMESTAMP, value DOUBLE, flag BIGINT")
+
+  /** Whether an interval admits at most two UTC day partitions. */
+  private def shortWindow(q: QueryInterval): Boolean =
+    java.time.temporal.ChronoUnit.DAYS.between(TsdbStorage.utcDay(q.from), TsdbStorage.utcDay(q.to)) < 2
+
+  /** Whether candidate row `a` (id, time, value, flag, seq) follows `b`
+    * in the as-of order: larger time, then larger seq — the order of
+    * `max_by(…, struct(time, seq))`, a NULL seq lowest. */
+  private def later(a: Row, b: Row): Boolean = {
+    val byTime = a.getTimestamp(1).compareTo(b.getTimestamp(1))
+    byTime > 0 || (byTime == 0 && !a.isNullAt(4) && (b.isNullAt(4) || a.getLong(4) > b.getLong(4)))
+  }
+
+  /** Per id, the partition's latest candidate row under [[later]]. */
+  private def latestPerId(rows: Iterator[Row]): Iterator[Row] = {
+    val best = scala.collection.mutable.HashMap[Long, Row]()
+    rows.foreach { r =>
+      if (best.get(r.getLong(0)).forall(later(r, _))) best(r.getLong(0)) = r
+    }
+    best.valuesIterator
+  }
 
   /** The scheme log's columns. */
   private val SchemeSchema = org.apache.spark.sql.types.StructType.fromDDL(

@@ -150,7 +150,8 @@ class ShardedEngine(spark: SparkSession, roots: Seq[String], buckets: Int = 32,
 
   /** O3/O7 cursor + push forms ride the routed interval read (same
     * merge/ordering as a single engine — readInterval re-orders the
-    * union), streamed through toLocalIterator, never materialized. */
+    * union), streamed through toLocalIterator one partition at a
+    * time. */
   def intervalReader(q: QueryInterval): Iterator[graft.core.Meas] = {
     import spark.implicits._
     val it = readInterval(q).as[graft.core.Meas].toLocalIterator()

@@ -56,9 +56,14 @@ object TopKHeap {
   * smoke's 5×10⁸-row window was already ~15 GB of shuffle). As a
   * TypedImperativeAggregate the same answer partial-aggregates
   * map-side: each task ships k entries per group it saw, the exchange
-  * carries ≤ tasks × groups × k tiny heap states, and nothing sorts
-  * more than k elements at once. ObjectHashAggregateExec runs it with
-  * real map-side combine; the window form's WindowExec cannot.
+  * carries ≤ tasks × groups × k tiny heap states, and no group's state
+  * holds more than k elements. ObjectHashAggregateExec runs it with
+  * real map-side combine; the window form's WindowExec cannot. It is
+  * not sort-free: past `spark.sql.objectHashAggregate.sortBased.
+  * fallbackThreshold` (128) group keys in one task, ObjectHashAggregate
+  * falls back to a sort-based aggregation that sorts the task's
+  * remaining input rows and buffered states by group key (not by
+  * score) — the "falling back to sort based aggregation" INFO line.
   *
   * Determinism contract: ties rank id-ASC — identical to the window
   * form's `ORDER BY s DESC, id` — so a query can swap between the two

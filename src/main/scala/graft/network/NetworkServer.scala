@@ -74,9 +74,13 @@ import graft.engine.{GraftEngine, QueryInterval, QueryTimePoint}
   * between `SubscribeLogic` in the server and the storage engine
   * underneath.
   *
-  * Reads stream through `toLocalIterator` — a large interval result
-  * flows executor → driver → socket in chunks; it is never
-  * materialized whole on the server.
+  * Interval and grid reads stream through `toLocalIterator`: the
+  * server holds one range partition of the result at a time, never the
+  * catalog-wide result whole. An explicit-id interval answer is one
+  * partition. As-of answers (READ_TIMEPOINT, CURRENT_VALUE) — one row
+  * per series — are collected: an answer the engine built on the driver
+  * is a local relation, which collects with no Spark job, where
+  * `toLocalIterator` would run one per partition.
   *
   * Both ends set `TCP_NODELAY` and flush each message once: a result
   * after its `END` line, an APPEND after its last payload line. A flush
@@ -279,10 +283,10 @@ class GraftServer(engine: graft.engine.EngineApi, port: Int = 0, bindAddress: Op
             case "READ_TIMEPOINT" =>
               val q = QueryTimePoint(Wire.parseIds(parts(1)), parts(2).toLong,
                 Wire.usToTs(parts(3).toLong))
-              streamRows(engine.readTimePoint(q).toLocalIterator().asScala, "POINT", Wire.fmtPoint, out)
+              streamRows(engine.readTimePoint(q).collect().iterator, "POINT", Wire.fmtPoint, out)
             case "CURRENT_VALUE" =>
               streamRows(engine.currentValue(Wire.parseIds(parts(1)), parts(2).toLong)
-                .toLocalIterator().asScala, "POINT", Wire.fmtPoint, out)
+                .collect().iterator, "POINT", Wire.fmtPoint, out)
             case "READ_GRID" =>
               val df = engine.readGrid(Wire.usToTs(parts(1).toLong), Wire.usToTs(parts(2).toLong),
                 parts(3).toLong, parts(4).toLong)

@@ -126,39 +126,44 @@ object CleanSmokes {
           lit("en").as("lang"),
           timestamp_seconds(lit(tsBase) + col("id") / lit(100000.0)).as("ingest_ts"))
         .coalesce(8)
+    // Each batch is written while no stream runs, then one stream run
+    // (same checkpoint, so one appId) admits it. A running stream that
+    // lists the source directory while a write is still moving its files
+    // in admits that write as two micro-batches, each extending the
+    // cached generation — seen for 2 of 30 four-file appends to a live
+    // stream.
+    def admitAll(label: String): Double = {
+      val q2 = StreamingClean.admitStream(spark, src2, owned, idxDir, vdir2, ckpt2)
+      try c.timed(label)(q2.processAllAvailable())._2 finally q2.stop()
+    }
     val (builds0, extends0) = (RefCache.buildCount.get(), RefCache.extendCount.get())
     loopBatch(novelA, doc(col("id") + novelA), 10000L).write.mode("append").parquet(src2)
-    val q2 = StreamingClean.admitStream(spark, src2, owned, idxDir, vdir2, ckpt2)
-    try {
-      val ba = c.timed(f"closed-loop batch A ($nBatch%,d novel docs: judged + admitted + indexed)")(
-        q2.processAllAvailable())._2
-      // batch B: half duplicates of batch A's ADMISSIONS (new ids, same
-      // texts — none of them in the seed corpus), half novel
-      loopBatch(novelB,
-        when(col("id") < nBatch / 2, doc(col("id") + novelA)).otherwise(doc(col("id") + novelB)),
-        20000L).write.mode("append").parquet(src2)
-      val bb = c.timed(f"closed-loop batch B ($nBatch%,d docs; ${nBatch / 2}%,d copy batch-A admissions)")(
-        q2.processAllAvailable())._2
-      val v2 = verdictsUnder(c, vdir2)
-      c.report("closed-loop verdicts", "verdicts" -> v2,
-        "batch_a_docs_per_s" -> nBatch / ba, "batch_b_docs_per_s" -> nBatch / bb)
-      assert(v2("near_dup") == nBatch / 2,
-        s"batch B's copies of batch-A admissions flag near_dup — the loop is closed: ${v2.get("near_dup")}")
-      assert(v2("kept") == nBatch + nBatch / 2, s"novel docs admitted: ${v2.get("kept")}")
-      assert(RefCache.buildCount.get() == builds0,
-        "no O(corpus) re-derive between batches: the cached reference rolled forward incrementally")
-      assert(RefCache.extendCount.get() == extends0 + 2,
-        "each admitting batch extended the cached generation")
-      val sigsN = TextIndex.readSigs(spark, idxDir).count()
-      assert(sigsN == nOwned + nBatch + nBatch / 2,
-        s"index covers seed + admissions exactly once: $sigsN")
-      // replay of batch A (same appId, batchId 0): returns before judging
-      StreamingClean.admitBatch(spark, loopBatch(novelA, doc(col("id") + novelA), 10000L),
-        owned, idxDir, vdir2, ckpt2, 0L)
-      assert(TextIndex.readSigs(spark, idxDir).count() == sigsN, "replayed batch is a no-op")
-      assert(StreamingClean.ownedCorpus(spark, owned).count() == sigsN,
-        "owned corpus and index agree row-for-row")
-    } finally q2.stop()
+    val ba = admitAll(f"closed-loop batch A ($nBatch%,d novel docs: judged + admitted + indexed)")
+    // batch B: half duplicates of batch A's ADMISSIONS (new ids, same
+    // texts — none of them in the seed corpus), half novel
+    loopBatch(novelB,
+      when(col("id") < nBatch / 2, doc(col("id") + novelA)).otherwise(doc(col("id") + novelB)),
+      20000L).write.mode("append").parquet(src2)
+    val bb = admitAll(f"closed-loop batch B ($nBatch%,d docs; ${nBatch / 2}%,d copy batch-A admissions)")
+    val v2 = verdictsUnder(c, vdir2)
+    c.report("closed-loop verdicts", "verdicts" -> v2,
+      "batch_a_docs_per_s" -> nBatch / ba, "batch_b_docs_per_s" -> nBatch / bb)
+    assert(v2("near_dup") == nBatch / 2,
+      s"batch B's copies of batch-A admissions flag near_dup — the loop is closed: ${v2.get("near_dup")}")
+    assert(v2("kept") == nBatch + nBatch / 2, s"novel docs admitted: ${v2.get("kept")}")
+    assert(RefCache.buildCount.get() == builds0,
+      "no O(corpus) re-derive between batches: the cached reference rolled forward incrementally")
+    assert(RefCache.extendCount.get() == extends0 + 2,
+      "each admitting batch extended the cached generation")
+    val sigsN = TextIndex.readSigs(spark, idxDir).count()
+    assert(sigsN == nOwned + nBatch + nBatch / 2,
+      s"index covers seed + admissions exactly once: $sigsN")
+    // replay of batch A (same appId, batchId 0): returns before judging
+    StreamingClean.admitBatch(spark, loopBatch(novelA, doc(col("id") + novelA), 10000L),
+      owned, idxDir, vdir2, ckpt2, 0L)
+    assert(TextIndex.readSigs(spark, idxDir).count() == sigsN, "replayed batch is a no-op")
+    assert(StreamingClean.ownedCorpus(spark, owned).count() == sigsN,
+      "owned corpus and index agree row-for-row")
   }
 
   /** The RefCache steady state at a segment count where the LSM

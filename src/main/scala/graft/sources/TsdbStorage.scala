@@ -3,7 +3,7 @@ package graft.sources
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
@@ -276,11 +276,44 @@ object TsdbStorage {
   def readStats(spark: SparkSession, statsPath: String): DataFrame =
     spark.read.schema(statsSchema).parquet(statsPath)
 
-  /** Read only the given day partitions of the data store. */
-  def readDays(spark: SparkSession, path: String, days: Seq[java.sql.Date]): DataFrame =
-    spark.read.schema(withDaySchema).parquet(path)
-      .filter(col("day").isin(days: _*))
-      .drop("day")
+  /** The stats index rows of the UTC days the inclusive interval spans,
+    * read from those day directories only (see [[readDayDirs]]). */
+  def readStatsWithin(spark: SparkSession, statsPath: String,
+                      from: Timestamp, to: Timestamp): DataFrame =
+    readDayDirs(spark, statsPath, statsSchema, daysWithin(spark, statsPath, Some(from), Some(to)))
+
+  /** Read only the given day partitions of the data store; a day
+    * without a directory reads nothing. */
+  def readDays(spark: SparkSession, path: String, days: Seq[java.sql.Date]): DataFrame = {
+    val present = this.days(spark, path).map(_.toString).toSet
+    readDayDirs(spark, path, withDaySchema, days.filter(d => present(d.toString))).drop("day")
+  }
+
+  /** Read exactly the given (existing) day directories of a
+    * day-partitioned parquet dir, with `basePath` so `day` stays a
+    * partition column. Spark lists these directories only: handed the
+    * dir's root it lists every day of the store at each read, and past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) day
+    * directories that listing is a Spark job of its own. */
+  private def readDayDirs(spark: SparkSession, path: String, schema: StructType,
+                          days: Seq[java.sql.Date]): DataFrame =
+    if (days.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.option("basePath", path).schema(schema)
+      .parquet(days.map(d => new Path(path, s"day=$d").toString): _*)
+
+  /** The day partition a time falls in. */
+  private[graft] def utcDay(t: Timestamp): java.time.LocalDate =
+    t.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate
+
+  /** The existing day partitions inside the UTC days of the inclusive
+    * bounds (the session TZ is pinned UTC, matching the writer's
+    * `to_date(time)`). */
+  private def daysWithin(spark: SparkSession, path: String,
+                         from: Option[Timestamp], to: Option[Timestamp]): Seq[java.sql.Date] =
+    days(spark, path).filter { d =>
+      val day = d.toLocalDate
+      from.forall(f => !day.isBefore(utcDay(f))) && to.forall(t => !day.isAfter(utcDay(t)))
+    }
 
   // ---- reads ---------------------------------------------------------
 
@@ -293,17 +326,15 @@ object TsdbStorage {
 
   /** Read only the day partitions intersecting the inclusive interval —
     * the partition-pruning analog of the reference's page index lookup
-    * [U: storage/pages/page_manager.cpp — chunksByIterval]. The `day`
-    * predicate is derived from the time bounds (session TZ is pinned
-    * UTC, matching the writer's `to_date(time)`) and is applied BEFORE
-    * the column is dropped, so it lands in the scan's PartitionFilters:
-    * a one-day read of a 100-day store lists one directory. The precise
-    * `time` bounds additionally prune parquet row groups. */
+    * [U: storage/pages/page_manager.cpp — chunksByIterval]. The days
+    * are chosen on the driver from one listing of the store's root, and
+    * Spark reads those day directories only: a one-day read of a
+    * 100-day store lists one directory. The precise `time` bounds
+    * additionally prune parquet row groups. */
   def readRange(spark: SparkSession, path: String,
                 from: Option[Timestamp], to: Option[Timestamp]): DataFrame =
-    (from.map(f => col("day") >= to_date(lit(f)) && col("time") >= lit(f)) ++
-      to.map(t => col("day") <= to_date(lit(t)) && col("time") <= lit(t)))
-      .foldLeft(spark.read.schema(withDaySchema).parquet(path))(_ filter _)
+    (from.map(f => col("time") >= lit(f)) ++ to.map(t => col("time") <= lit(t)))
+      .foldLeft(readDayDirs(spark, path, withDaySchema, daysWithin(spark, path, from, to)))(_ filter _)
       .drop("day")
 
   // ---- day partitions ------------------------------------------------

@@ -623,19 +623,9 @@ class EngineSpec extends SparkSpec {
     val engine = new GraftEngine(spark, tmpDir("graft-grid-jobs"), buckets = 2)
     val id = engine.addParam("grid.jobs.a")
     engine.append(Seq(Meas(id, ts("2024-03-01 10:00:00"), 1.0, 1L, 1)))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val grid = try {
-      val df = engine.readGrid(ts("2024-03-01 09:00:00"), ts("2024-03-01 12:00:00"), 3600L, 7200L)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      df
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get === 0, "building the grid query ran a Spark job")
+    val (grid, jobs) = FacadeProbe.jobs(spark)(
+      engine.readGrid(ts("2024-03-01 09:00:00"), ts("2024-03-01 12:00:00"), 3600L, 7200L))
+    assert(jobs === 0, "building the grid query ran a Spark job")
     assert(grid.count() === 4)
   }
 
@@ -678,7 +668,6 @@ class EngineSpec extends SparkSpec {
   test("an index lookup that a whole append interleaves answers from the scan path, not a torn index") {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.catalyst.rules.Rule
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val dir = tmpDir("graft-interleaved-lookup")
     val engine = new GraftEngine(spark, dir, buckets = 2)
     val appender = new GraftEngine(spark, dir, buckets = 2)
@@ -711,13 +700,7 @@ class EngineSpec extends SparkSpec {
     var seq = 100L
     object AppendMidLookup extends Rule[LogicalPlan] {
       def apply(plan: LogicalPlan): LogicalPlan = {
-        def reads(dir: String) = plan.exists {
-          case l: LogicalRelation => l.relation match {
-            case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == dir)
-            case _ => false
-          }
-          case _ => false
-        }
+        def reads(dir: String) = FacadeProbe.readsIn(plan, dir)
         if (armed && reads("_stats") && (!withData || reads("data"))
             && Thread.currentThread == reader) {
           armed = false
@@ -771,7 +754,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("index-served reads: the lookup runs no exchange, the data query exactly one shuffle") {
-    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
     val dir = tmpDir("graft-read-plans")
@@ -794,31 +777,41 @@ class EngineSpec extends SparkSpec {
     val (_, rebuild) = FacadeProbe.executions(spark)(engine.currentValue(Seq(3L, 1L), 0L))
     assert(rebuild.size === 1 && FacadeProbe.reads(rebuild.head, "_stats")
       && !FacadeProbe.reads(rebuild.head, "data"), "the rebuild reads the index only")
+    // a window of more than two days: the lookup, then the data query
+    val interval = plans(engine.readInterval(
+      QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-01 00:00:00"), ts("2024-03-03 12:00:00"))))
+    assert(interval.size === 2, "readInterval: one lookup, one data query")
+    val (lookup, data) = (interval.head, interval(1))
+    assert(!lookup.exists(_.isInstanceOf[Exchange]), s"readInterval lookup:\n${lookup.head.treeString}")
+    assert(shuffles(data) === 1, s"readInterval data:\n${data.head.treeString}")
+    assert(!data.exists(_.isInstanceOf[BroadcastExchangeLike]), s"readInterval data:\n${data.head.treeString}")
+    hashMerged("readInterval", data)
     // with the map built at the store's token, and the readTimePoint
-    // timepoint before series 1's latest time, the read is the lookup and
-    // the data query alone
-    val reads: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "readInterval" -> (() => engine.readInterval(
-        QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00")))),
-      "readTimePoint" -> (() => engine.readTimePoint(
-        QueryTimePoint(Seq(1L, 2L, 9L), 0L, ts("2024-03-03 12:00:00")))))
-    for ((name, read) <- reads) {
-      val qs = plans(read())
-      assert(qs.size === 2, s"$name: one lookup, one data query")
-      val (lookup, data) = (qs.head, qs(1))
-      assert(!lookup.exists(_.isInstanceOf[Exchange]), s"$name lookup:\n${lookup.head.treeString}")
-      assert(shuffles(data) === 1, s"$name data:\n${data.head.treeString}")
-      assert(!data.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name data:\n${data.head.treeString}")
-      if (name == "readInterval") hashMerged(name, data)
-    }
-    // served from the cached map, currentValue runs no query at all
+    // timepoint before series 1's latest time, the read is the lookup,
+    // the data query with no exchange, and the local answer it builds
+    def isLocal(plan: Seq[SparkPlan]) = plan.forall(_.isInstanceOf[LocalTableScanExec])
+    val qp = QueryTimePoint(Seq(1L, 2L, 9L), 0L, ts("2024-03-03 12:00:00"))
+    val point = plans(engine.readTimePoint(qp))
+    assert(point.size === 3, "readTimePoint: one lookup, one data query, the local answer")
+    assert(!point.head.exists(_.isInstanceOf[Exchange]), s"readTimePoint lookup:\n${point.head.head.treeString}")
+    assert(!point(1).exists(_.isInstanceOf[Exchange]), s"readTimePoint data:\n${point(1).head.treeString}")
+    assert(isLocal(point(2)), s"readTimePoint answer:\n${point(2).head.treeString}")
+    // in jobs: the lookup plus one data job; the answer collects with none
+    val (asOf, built) = FacadeProbe.jobs(spark)(engine.readTimePoint(qp))
+    assert(built === 2, "readTimePoint: the lookup job and one data job")
+    val (answer, collected) = FacadeProbe.jobs(spark)(rows(asOf))
+    assert(collected === 0 && answer === asOfReference(engine, qp), "readTimePoint: a local answer")
+    // served from the cached map, currentValue runs no query at all, and
+    // its answer collects with no Spark job
     val (current, served) = FacadeProbe.executions(spark)(engine.currentValue(Seq(3L, 1L), 0L))
     assert(served.isEmpty, "the cached map answers with no query")
-    assert(current.rdd.getNumPartitions === 1, "the map answer is one partition")
+    assert(FacadeProbe.jobs(spark)(current.collect())._2 === 0, "the map answer collects with no job")
     // statScan's query hash-aggregates its merge too
     hashMerged("statScan", plans(engine.statScan(1L, ts("2024-03-01 00:00:00"), ts("2024-03-03 00:00:00"))).head)
 
-    // the index-free interval forms run no lookup and the same query
+    // the index-free interval forms run no lookup and the same query: a
+    // window of at most two days with a certified index, the
+    // catalog-wide read, an uncertified index, unflushed hot rows
     val q = QueryInterval(Seq(1L, 2L), 0L, ts("2024-03-02 00:00:00"), ts("2024-03-03 12:00:00"))
     def indexFree(name: String, read: => org.apache.spark.sql.DataFrame): Unit = {
       val qs = plans(read)
@@ -827,6 +820,7 @@ class EngineSpec extends SparkSpec {
       hashMerged(name, qs.head)
       assert(!qs.head.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name:\n${qs.head.head.treeString}")
     }
+    indexFree("two-day window", engine.readInterval(q))
     indexFree("catalog-wide", engine.readInterval(q.copy(ids = Nil)))
     graft.sources.TsdbStorage.markStatsOutOfSync(spark, s"$dir/_stats")
     indexFree("uncertified index", engine.readInterval(q))
@@ -834,11 +828,53 @@ class EngineSpec extends SparkSpec {
     val hot = new GraftEngine(spark, dir, buckets = 2, hotCapacity = 1000L)
     hot.append(Seq(Meas(1L, ts("2024-03-02 12:30:00"), 99.0, 1L, 1000L)))
     indexFree("unflushed MEMORY rows", hot.readInterval(q))
-    // a flag filter needs the freshness merge before the as-of
-    // aggregate: one shuffle each
+    // a flag filter needs the freshness merge before the as-of: its one
+    // shuffle, then the driver-combined local answer
     val flagged = plans(engine.readTimePoint(QueryTimePoint(Seq(1L, 2L, 9L), 1L, ts("2024-03-03 12:00:00"))))
-    assert(flagged.size === 1, "flag ≠ 0: no lookup")
-    assert(shuffles(flagged.head) <= 2, s"flag ≠ 0:\n${flagged.head.head.treeString}")
+    assert(flagged.size === 2, "flag ≠ 0: no lookup, one data query, the local answer")
+    assert(shuffles(flagged.head) === 1, s"flag ≠ 0:\n${flagged.head.head.treeString}")
+    hashMerged("flag ≠ 0", flagged.head)
+    assert(isLocal(flagged(1)), s"flag ≠ 0 answer:\n${flagged(1).head.treeString}")
+  }
+
+  test("explicit-id reads run at most one lookup job and one data query; a 40-day store lists no day through a job") {
+    val dir = tmpDir("graft-read-jobs")
+    val engine = new GraftEngine(spark, dir, buckets = 2)
+    // 40 day partitions: past the 32-path threshold Spark lists a
+    // store root with a Spark job of its own
+    val start = java.time.LocalDate.parse("2024-03-01")
+    engine.append((0 until 40).flatMap { d =>
+      Seq(1L, 2L, 3L).map(id => Meas(id, Timestamp.valueOf(start.plusDays(d).atTime(id.toInt, 0)),
+        d * 10.0 + id, 1L, d * 10L + id))
+    })
+    val day = (d: Int) => start.plusDays(d).toString
+    def counted(read: => org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Int, Boolean) = {
+      val ((got, jobs), qes) = FacadeProbe.executions(spark)(FacadeProbe.jobs(spark)(rows(read)))
+      (got, jobs, qes.exists(FacadeProbe.reads(_, "_stats")))
+    }
+    // a window of at most two days: no index read, the shuffle map stage
+    // and the result stage
+    val short = QueryInterval(Seq(1L, 2L), 0L, ts(s"${day(38)} 00:00:00"), ts(s"${day(39)} 23:00:00"))
+    val (shortRows, shortJobs, shortIndex) = counted(engine.readInterval(short))
+    assert(!shortIndex, "a two-day window reads no index")
+    assert(shortJobs === 2, "a two-day window: the shuffle map stage and the result stage")
+    assert(shortRows === intervalReference(engine, short))
+    // a three-day window: the lookup job, then the same data shape
+    val long = short.copy(from = ts(s"${day(37)} 00:00:00"))
+    val (longRows, longJobs, longIndex) = counted(engine.readInterval(long))
+    assert(longIndex, "a three-day window runs the lookup")
+    assert(longJobs === 3, "a three-day window: the lookup, then the two data jobs")
+    assert(longRows === intervalReference(engine, long))
+    // an explicit as-of before the latest times, on the index path, the
+    // scan path and the flagged path: the same local answer
+    val q = QueryTimePoint(Seq(3L, 1L, 99L), 0L, ts(s"${day(20)} 02:30:00"))
+    val expected = asOfReference(engine, q)
+    assert(expected.map(_(2)) === Seq(201.0, 193.0, null), "series 3 answers day 19's row")
+    for ((name, df) <- Seq("index" -> engine.readTimePoint(q), "scan" -> engine.readTimePointScan(q),
+        "flagged" -> engine.readTimePoint(q.copy(flag = 1L)))) {
+      val (answer, collected) = FacadeProbe.jobs(spark)(rows(df))
+      assert(collected === 0 && answer === expected, s"$name: a local answer")
+    }
   }
 
   test("per-id eraseOld falls back to the full day list when the index is unusable") {

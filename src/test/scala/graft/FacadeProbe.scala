@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -30,6 +31,24 @@ object FacadeProbe {
     (out, seen.asScala.toSeq)
   }
 
+  /** Run `body` and return its result with the number of Spark jobs
+    * started while it ran — map-stage jobs that AQE submits, listing
+    * jobs and sampling jobs included. */
+  def jobs[T](spark: SparkSession)(body: => T): (T, Int) = {
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (r, started.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Every node of the final physical plan, through AQE's stages. */
   def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -39,9 +58,14 @@ object FacadeProbe {
 
   /** Whether the execution scans a parquet dir named `dir` (`_stats` is
     * the stats index, `data` the durable store). */
-  def reads(qe: QueryExecution, dir: String): Boolean = qe.analyzed.exists {
+  def reads(qe: QueryExecution, dir: String): Boolean = readsIn(qe.analyzed, dir)
+
+  /** Whether the plan scans the parquet dir named `dir`, given as its
+    * root or as some of its `day=` directories. */
+  def readsIn(plan: LogicalPlan, dir: String): Boolean = plan.exists {
     case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == dir)
+      case h: HadoopFsRelation => h.location.rootPaths.exists(p =>
+        p.getName == dir || (p.getName.startsWith("day=") && p.getParent.getName == dir))
       case _ => false
     }
     case _ => false

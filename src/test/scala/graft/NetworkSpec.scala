@@ -178,6 +178,26 @@ class NetworkSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("a CURRENT_VALUE or READ_TIMEPOINT served from the latest-value map runs no Spark job on the server") {
+    val engine = new GraftEngine(spark, tmpDir("graft-net-jobs"), buckets = 2)
+    val server = new GraftServer(engine).start()
+    try {
+      val client = new GraftClient("127.0.0.1", server.boundPort)
+      client.append(Seq(
+        Meas(1L, ts("2024-03-01 10:00:00"), 1.5, Flags.CLICK, 1),
+        Meas(2L, ts("2024-03-02 09:00:00"), 4.0, Flags.SIGNUP, 2)))
+      val ids = Seq(2L, 9L, 1L)
+      val first = client.currentValue(ids, 0L) // builds the map at the store's token
+      val (again, jobs) = FacadeProbe.jobs(spark)(client.currentValue(ids, 0L))
+      assert(jobs === 0, "CURRENT_VALUE ran Spark jobs on the server")
+      assert(again === first && again.map(_._1) === Seq(1L, 2L, 9L) && again(2)._4 === Meas.NO_DATA)
+      val (point, pointJobs) = FacadeProbe.jobs(spark)(
+        client.readTimePoint(QueryTimePoint(ids, 0L, ts("2024-03-03 00:00:00"))))
+      assert(pointJobs === 0 && point === first, "READ_TIMEPOINT at or after the latest times")
+      client.close()
+    } finally server.stop()
+  }
+
   test("engine-API appends reach socket subscribers (observer fires for every append path)") {
     val engine = new GraftEngine(spark, tmpDir("graft-net-obs"), buckets = 4)
     val server = new GraftServer(engine).start()
